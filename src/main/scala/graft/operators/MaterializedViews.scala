@@ -200,11 +200,13 @@ object MaterializedViews {
       case Some(stateV) =>
         graft.streaming.ChangeFeed.poll(spark, table, ledgerPath,
           initialVersion = stateV, failBeforeCommit = failBeforeCommit) { (changes, from, to) =>
-          val mv = spark.read.parquet(statePath(from))
+          val base = projGv(graft.sources.Lake.read(spark, table))
+          // the state's schema is the aggregate's: reading with it
+          // skips parquet schema inference (a Spark job per poll)
+          val mv = spark.read.schema(aggAll(base).schema).parquet(statePath(from))
           val (g, v) = gv(changes)
           val feed = changes.select(g.as("g"), v.as("v"), col("__change_type"))
-          val updated = applyDeltaMinMax(mv, feed,
-            projGv(graft.sources.Lake.read(spark, table)))
+          val updated = applyDeltaMinMax(mv, feed, base)
           // versioned state + pointer swap: a replayed window rewrites
           // state-v<to> identically, never corrupts state-v<from>
           updated.write.mode("overwrite").parquet(statePath(to))

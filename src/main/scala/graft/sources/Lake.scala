@@ -21,9 +21,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * {{{
   *   table/
   *     data/commit-N/part=...   immutable; never rewritten or deleted
+  *     deletes/dv-N-...          merge-on-read delete-vector sidecars:
+  *                               (data file, row position) parquet
   *     metadata/vN.json          snapshot manifest: schema, partition
   *                               cols, file list with partition values
-  *                               + per-file stats (rows, bytes)
+  *                               + per-file stats (rows, bytes), pending
+  *                               sidecars + their row/target-file record
   *     metadata/VERSION          current version pointer (rename-commit)
   * }}}
   *
@@ -45,9 +48,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * Concurrency: optimistic — the version-numbered manifest is created
   * with an EXCLUSIVE create, so racing writers conflict (second
   * committer gets ConcurrentModificationException and retries) instead
-  * of losing updates; see [[writeJson]]. Row-level deletes/updates are
-  * copy-on-write rewrites ([[delete]]/[[update]]/[[merge]]); schema is
-  * fixed per table (evolution = rewrite).
+  * of losing updates; see [[writeJson]]. Row-level deletes/updates come
+  * in two shapes: copy-on-write rewrites of the touched files
+  * ([[delete]]/[[update]]/[[merge]]) and merge-on-read delete vectors
+  * that mask positions at read time until a fold
+  * ([[deleteMor]]/[[updateMor]]/[[mergeMor]], [[foldDeletes]]). Schema
+  * evolution is metadata-only ([[addColumn]]/[[dropColumn]]/
+  * [[renameColumn]]).
   */
 object Lake {
 
@@ -82,13 +89,30 @@ object Lake {
     * Readers mask them out ([[read]]); [[foldDeletes]] rewrites the
     * affected data files and clears the list. Appends inherit the
     * sidecars (the kept files' deletes still apply); an overwrite
-    * resets them with everything else. */
+    * resets them with everything else.
+    *
+    * `dvRecords`: per-sidecar record written at commit time — the
+    * sidecar's row count and the decoded paths of the data files it
+    * names (the tablet-metadata delete vector of the reference, which
+    * tells a reader which segments carry deletes without a scan).
+    * Readers plan the clean/dirty split ([[read]], [[changes]],
+    * [[foldDeletes]]) and score compaction debt from it instead of
+    * running a Spark job over the sidecars. A sidecar in `dvFiles`
+    * without an entry (a manifest written before the record existed)
+    * falls back to the old sidecar scan / footer read. Only entries of
+    * sidecars still in `dvFiles` are serialized. */
   final case class Snapshot(version: Int, createdAtMs: Long, schemaJson: String,
       partitionCols: Seq[String], files: Seq[LakeFile],
       props: Map[String, String] = Map.empty,
-      dvFiles: Seq[String] = Nil) {
+      dvFiles: Seq[String] = Nil,
+      dvRecords: Map[String, DvRecord] = Map.empty) {
     def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
   }
+
+  /** A delete-vector sidecar's manifest record: how many positions it
+    * masks and which data files (decoded filesystem paths, the
+    * [[dvPathKey]] form) those positions fall in. */
+  final case class DvRecord(rows: Long, files: Set[String])
 
   /** Merge properties into the current snapshot as a metadata-only
     * commit (null value removes a key). OCC via [[commitAmended]];
@@ -224,7 +248,8 @@ object Lake {
     // files' deleted rows must stay deleted; a fresh overwrite resets.
     val snap = Snapshot(v, System.currentTimeMillis(), schema.json,
       partitionCols, files, inherited,
-      prevSnap.map(_.dvFiles).getOrElse(Nil))
+      prevSnap.map(_.dvFiles).getOrElse(Nil),
+      prevSnap.map(_.dvRecords).getOrElse(Map.empty))
     writeJson(spark, table, manifestFile(table, v), snapshotToJava(snap))
 
     commitVersion(spark, table, v)
@@ -305,13 +330,9 @@ object Lake {
   private def listCommitFiles(spark: SparkSession, commitDir: String): Seq[LakeFile] = {
     val f = fs(spark, commitDir)
     val conf = spark.sparkContext.hadoopConfiguration
-    val it = f.listFiles(new Path(commitDir), true)
-    val statuses = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
-    while (it.hasNext) {
-      val st = it.next()
+    val statuses = walkFiles(f, new Path(commitDir)).filter { st =>
       val name = st.getPath.getName
-      if (st.isFile && !name.startsWith("_") && !name.startsWith("."))
-        statuses += st
+      !name.startsWith("_") && !name.startsWith(".")
     }
     // Footer reads are independent metadata round-trips; at 100k-file
     // commits a serial loop is minutes of driver wall on an object
@@ -350,6 +371,14 @@ object Lake {
       pool.invokeAll(tasks.asJava).asScala.map(_.get()).toSeq
     } finally pool.shutdown()
   }
+
+  /** Regular files under `dir`, recursively. Walks with `listStatus`
+    * rather than `listFiles`: the latter builds a `LocatedFileStatus`,
+    * which loads permissions — on the local FS without native Hadoop
+    * that forks an `ls -ld` per file; `listStatus` never asks. */
+  private def walkFiles(f: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[FileStatus] =
+    f.listStatus(dir).toSeq.flatMap(st =>
+      if (st.isDirectory) walkFiles(f, st.getPath) else Seq(st))
 
   /** Per-column (min, max) over all row groups of a file footer,
     * string-encoded. Supported primitives: INT32/INT64/FLOAT/DOUBLE/
@@ -536,17 +565,13 @@ object Lake {
     val v = prev + 1
     val sidecar =
       s"$table/deletes/dv-$v-${java.util.UUID.randomUUID().toString.take(8)}"
-    // repartition(1): only the matched (file, pos) pairs shuffle — the
-    // predicate scan itself stays fully parallel
-    alive.filter(coalesce(predicate, lit(false)))
-      .select(col("__graft_dv_file"), col("__graft_dv_pos"))
-      .repartition(1)
-      .write.mode("errorifexists").parquet(sidecar)
-    val matched = listCommitFiles(spark, sidecar).map(_.rowCount).sum
+    val (matched, rec) = writeSidecar(spark,
+      alive.filter(coalesce(predicate, lit(false))), sidecar)
     if (matched == 0) { fs(spark, table).delete(new Path(sidecar), true); return prev }
     val snapNew = snap.copy(version = v,
       createdAtMs = System.currentTimeMillis(),
-      dvFiles = snap.dvFiles :+ sidecar)
+      dvFiles = snap.dvFiles :+ sidecar,
+      dvRecords = snap.dvRecords ++ rec.map(sidecar -> _))
     writeJson(spark, table, manifestFile(table, v), snapshotToJava(snapNew))
     commitVersion(spark, table, v)
     v
@@ -711,11 +736,8 @@ object Lake {
     val v = prev + 1
     val sidecar =
       s"$table/deletes/dv-$v-${java.util.UUID.randomUUID().toString.take(8)}"
-    touched.join(broadcast(dvKeys), keys, "left_semi")
-      .select(col("__graft_dv_file"), col("__graft_dv_pos"))
-      .repartition(1)
-      .write.mode("errorifexists").parquet(sidecar)
-    val matched = listCommitFiles(spark, sidecar).map(_.rowCount).sum
+    val (matched, rec) = writeSidecar(spark,
+      touched.join(broadcast(dvKeys), keys, "left_semi"), sidecar)
     if (matched == 0) fs(spark, table).delete(new Path(sidecar), true)
 
     // append the accepted rows as new data files (physical names)
@@ -731,6 +753,8 @@ object Lake {
       createdAtMs = System.currentTimeMillis(),
       files = snap.files ++ newFiles,
       dvFiles = if (matched == 0) snap.dvFiles else snap.dvFiles :+ sidecar,
+      dvRecords = if (matched == 0) snap.dvRecords
+        else snap.dvRecords ++ rec.map(sidecar -> _),
       // load-provided columns carry arbitrary values (upserted and
       // inserted rows alike) — specs over them are no longer promises
       props = invalidateGeneratedSpecs(snap.props, provided.toSet))
@@ -777,10 +801,7 @@ object Lake {
     val v = prev + 1
     val sidecar =
       s"$table/deletes/dv-$v-${java.util.UUID.randomUUID().toString.take(8)}"
-    matchedRows.select(col("__graft_dv_file"), col("__graft_dv_pos"))
-      .repartition(1)
-      .write.mode("errorifexists").parquet(sidecar)
-    val matched = listCommitFiles(spark, sidecar).map(_.rowCount).sum
+    val (matched, rec) = writeSidecar(spark, matchedRows, sidecar)
     if (matched == 0) { fs(spark, table).delete(new Path(sidecar), true); return prev }
     val images = matchedRows.select(snap.schema.fields.toSeq.map { fd =>
       val lg = logicalOf(fd.name)
@@ -797,6 +818,7 @@ object Lake {
       createdAtMs = System.currentTimeMillis(),
       files = snap.files ++ listCommitFiles(spark, commitDir),
       dvFiles = snap.dvFiles :+ sidecar,
+      dvRecords = snap.dvRecords ++ rec.map(sidecar -> _),
       props = invalidateGeneratedSpecs(snap.props, assignments.keySet))
     writeJson(spark, table, manifestFile(table, v), snapshotToJava(snapNew))
     commitVersion(spark, table, v)
@@ -826,6 +848,7 @@ object Lake {
       // every entry references an expired file — metadata-only clear
       val snapNew = snap.copy(version = v,
         createdAtMs = System.currentTimeMillis(), dvFiles = Nil,
+        dvRecords = Map.empty,
         props = snap.props + (s"commit.op.v$v" -> "fold"))
       writeJson(spark, table, manifestFile(table, v), snapshotToJava(snapNew))
       commitVersion(spark, table, v)
@@ -974,7 +997,8 @@ object Lake {
     writer.mode("errorifexists").parquet(commitDir)
     val snapNew = Snapshot(v, System.currentTimeMillis(), newSchema.json,
       snap.partitionCols, listCommitFiles(spark, commitDir),
-      snap.props.filterNot(_._1.startsWith("rename.")), snap.dvFiles)
+      snap.props.filterNot(_._1.startsWith("rename.")), snap.dvFiles,
+      snap.dvRecords)
     writeJson(spark, table, manifestFile(table, v), snapshotToJava(snapNew))
     commitVersion(spark, table, v)
     v
@@ -1120,8 +1144,10 @@ object Lake {
   def compactionScore(spark: SparkSession, table: String,
       smallFileBytes: Long = 32L << 20): CompactionScore = {
     val snap = currentSnap(spark, table)
-    val dvRows = snap.dvFiles.map(d =>
-      listCommitFiles(spark, d).map(_.rowCount).sum).sum
+    // recorded sidecars answer from the manifest; footers only for
+    // sidecars committed before the record existed
+    val dvRows = snap.dvFiles.map(d => snap.dvRecords.get(d).map(_.rows)
+      .getOrElse(listCommitFiles(spark, d).map(_.rowCount).sum)).sum
     CompactionScore(snap.files.size,
       snap.files.count(_.sizeBytes < smallFileBytes),
       dvRows, snap.files.map(_.rowCount).sum)
@@ -1180,7 +1206,7 @@ object Lake {
     // the mask anti-join simply never matches them, and foldDeletes
     // ignores entries whose file left the snapshot.
     val snapNew = Snapshot(v, System.currentTimeMillis(), snap.schemaJson,
-      snap.partitionCols, kept, snap.props, snap.dvFiles)
+      snap.partitionCols, kept, snap.props, snap.dvFiles, snap.dvRecords)
     writeJson(spark, table, manifestFile(table, v), snapshotToJava(snapNew))
     commitVersion(spark, table, v)
     v
@@ -1202,15 +1228,10 @@ object Lake {
     val dataDir = new Path(s"$table/data")
     var removed = 0
     if (f.exists(dataDir)) {
-      val it = f.listFiles(dataDir, true)
-      val toDelete = scala.collection.mutable.ArrayBuffer[Path]()
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet") &&
-            !referenced.contains(st.getPath.toString) &&
-            !referenced.contains(st.getPath.toUri.getPath))
-          toDelete += st.getPath
-      }
+      val toDelete = walkFiles(f, dataDir).map(_.getPath).filter(p =>
+        p.getName.endsWith(".parquet") &&
+          !referenced.contains(p.toString) &&
+          !referenced.contains(p.toUri.getPath))
       toDelete.foreach { p => if (f.delete(p, false)) removed += 1 }
     }
     // delete-vector sidecar GC: a sidecar dir referenced by no retained
@@ -1243,7 +1264,7 @@ object Lake {
     val snap = readSnapshot(spark, table, toVersion)
     val v = current + 1
     val snapNew = Snapshot(v, System.currentTimeMillis(), snap.schemaJson,
-      snap.partitionCols, snap.files, snap.props, snap.dvFiles)
+      snap.partitionCols, snap.files, snap.props, snap.dvFiles, snap.dvRecords)
     writeJson(spark, table, manifestFile(table, v), snapshotToJava(snapNew))
     commitVersion(spark, table, v)
     v
@@ -1287,20 +1308,26 @@ object Lake {
     // the metaRendering form of the roots, not the raw qualified
     // path, or a root containing URI-encodable characters would
     // never match and the cloned mask would silently drop nothing.
+    val metaSrc = IcebergRead.metaRendering(spark, src)
+    val metaDst = IcebergRead.metaRendering(spark, dst)
+    // recorded target paths are the decoded form of the same
+    // renderings: the same root substitution, applied decoded
+    val (keySrc, keyDst) = (dvPathKey(metaSrc), dvPathKey(metaDst))
     val dvCopied = snap.dvFiles.zipWithIndex.map { case (d, i) =>
       val out = s"$dst/deletes/dv-clone-1-$i"
-      val metaSrc = IcebergRead.metaRendering(spark, src)
-      val metaDst = IcebergRead.metaRendering(spark, dst)
       spark.read.schema(DvSchema).parquet(d)
         .withColumn("__graft_dv_file", org.apache.spark.sql.functions
           .regexp_replace(org.apache.spark.sql.functions.col("__graft_dv_file"),
             "^" + java.util.regex.Pattern.quote(metaSrc),
             java.util.regex.Matcher.quoteReplacement(metaDst)))
         .repartition(1).write.mode("errorifexists").parquet(out)
-      out
+      val rec = snap.dvRecords.get(d).map(r => r.copy(files = r.files.map(p =>
+        if (p.startsWith(keySrc)) keyDst + p.stripPrefix(keySrc) else p)))
+      (out, rec)
     }
     val snapNew = Snapshot(1, System.currentTimeMillis(), snap.schemaJson,
-      snap.partitionCols, copied, snap.props, dvCopied)
+      snap.partitionCols, copied, snap.props, dvCopied.map(_._1),
+      dvCopied.collect { case (out, Some(r)) => out -> r }.toMap)
     writeJson(spark, dst, manifestFile(dst, 1), snapshotToJava(snapNew))
     commitVersion(spark, dst, 1)
     1
@@ -1402,6 +1429,15 @@ object Lake {
       m.put("props", pm)
     }
     if (s.dvFiles.nonEmpty) m.put("dvFiles", s.dvFiles.asJava)
+    val recs = s.dvFiles.flatMap(d => s.dvRecords.get(d).map(d -> _))
+    if (recs.nonEmpty) {
+      val rm = new java.util.LinkedHashMap[String, Object]()
+      recs.foreach { case (d, r) =>
+        rm.put(d, java.util.Map.of("rows", Long.box(r.rows),
+          "files", r.files.toSeq.sorted.asJava))
+      }
+      m.put("dvRecords", rm)
+    }
     m.put("files", s.files.map { lf =>
       val fm = new java.util.LinkedHashMap[String, Object]()
       fm.put("path", lf.path)
@@ -1472,7 +1508,14 @@ object Lake {
         .getOrElse(Map.empty),
       Option(m.get("dvFiles"))
         .map(_.asInstanceOf[java.util.List[String]].asScala.toSeq)
-        .getOrElse(Nil))
+        .getOrElse(Nil),
+      Option(m.get("dvRecords"))
+        .map(_.asInstanceOf[java.util.Map[String, java.util.Map[String, Object]]]
+          .asScala.map { case (d, r) =>
+            d -> DvRecord(r.get("rows").asInstanceOf[Number].longValue(),
+              r.get("files").asInstanceOf[java.util.List[String]].asScala.toSet)
+          }.toMap)
+        .getOrElse(Map.empty))
   }
 
   /** Commit a METADATA-ONLY amendment — the given snapshot's files
@@ -1508,11 +1551,11 @@ object Lake {
       (applyRenames(df, snap), index)
     } else {
       // Split the scan at PLAN time using the vectors' distinct-file
-      // set (sidecar read + driver-resident manifest-scale set): files
-      // without deletes scan at full speed — no metadata column, no
-      // anti-join — and only the dirty subset pays the mask. At 100 TB
-      // with a 0.1% delete this keeps ~99.9% of the scan on the
-      // untouched fast path.
+      // set (the manifest's dvRecords, a driver-resident manifest-scale
+      // set): files without deletes scan at full speed — no metadata
+      // column, no anti-join — and only the dirty subset pays the mask.
+      // At 100 TB with a 0.1% delete this keeps ~99.9% of the scan on
+      // the untouched fast path.
       val dirtySet = dvDirtyPaths(spark, snap)
       val (dirty, clean) = snap.files.partition(fl =>
         dirtySet.contains(new Path(fl.path).toUri.getPath))
@@ -1534,13 +1577,53 @@ object Lake {
   }
 
   /** Decoded filesystem paths of every data file named by a pending
-    * delete vector — DV entries render as `_metadata.file_path`
-    * (URL-encoded URI), manifest paths as raw FileStatus strings;
-    * decode the DV side only (the rewriteTouched convention). */
-  private def dvDirtyPaths(spark: SparkSession, snap: Snapshot): Set[String] =
-    dvReader(spark, snap).select("__graft_dv_file").distinct()
-      .collect().map(r => java.net.URLDecoder.decode(
-        new Path(r.getString(0)).toUri.getPath, "UTF-8")).toSet
+    * delete vector, from the manifest's [[DvRecord]]s. Only sidecars
+    * without a record (manifests written before it existed) pay a
+    * distinct scan of their entries. */
+  private def dvDirtyPaths(spark: SparkSession, snap: Snapshot): Set[String] = {
+    val (recorded, legacy) = snap.dvFiles.partition(snap.dvRecords.contains)
+    val fromRecords = recorded.flatMap(snap.dvRecords(_).files).toSet
+    if (legacy.isEmpty) fromRecords
+    else fromRecords ++ dvReader(spark, snap.copy(dvFiles = legacy))
+      .select("__graft_dv_file").distinct()
+      .collect().map(r => dvPathKey(r.getString(0)))
+  }
+
+  /** A DV entry's target file as the manifest compares it: entries
+    * render as `_metadata.file_path` (URL-encoded URI), manifest paths
+    * as raw FileStatus strings — decode the DV side only (the
+    * rewriteTouched convention) and match on `toUri.getPath`. */
+  private def dvPathKey(metaPath: String): String =
+    java.net.URLDecoder.decode(new Path(metaPath).toUri.getPath, "UTF-8")
+
+  /** Write the (`__graft_dv_file`, `__graft_dv_pos`) columns of
+    * `positions` as one sidecar and return its row count plus its
+    * [[DvRecord]]. Both come from one `observe` on the write's own
+    * result stage (above the `repartition(1)`, so only the matched
+    * pairs shuffle and the metrics are applied once per task) — no
+    * extra job, no footer read. Should the observation come back
+    * without metrics, the count falls back to the sidecar footers and
+    * the sidecar is committed without a record (readers then scan it,
+    * as for a pre-record manifest). */
+  private def writeSidecar(spark: SparkSession, positions: DataFrame,
+      sidecar: String): (Long, Option[DvRecord]) = {
+    import org.apache.spark.sql.functions.{col, collect_set, count, lit}
+    val obs = org.apache.spark.sql.Observation()
+    positions.select(col("__graft_dv_file"), col("__graft_dv_pos"))
+      .repartition(1)
+      .observe(obs, count(lit(1)).as("rows"),
+        collect_set(col("__graft_dv_file")).as("files"))
+      .write.mode("errorifexists").parquet(sidecar)
+    val observed = scala.util.Try(scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration(60, "s"))).toOption.filter(_.length == 2)
+    observed match {
+      case Some(row) =>
+        val rec = DvRecord(row.getLong(0),
+          row.getSeq[String](1).map(dvPathKey).toSet)
+        (rec.rows, Some(rec))
+      case None => (listCommitFiles(spark, sidecar).map(_.rowCount).sum, None)
+    }
+  }
 
   /** Parquet schema of a delete-vector sidecar: the target data file
     * (as `_metadata.file_path` renders it) and the 0-based row position
@@ -1669,7 +1752,8 @@ object Lake {
           .withColumn("__change_type", lit("insert")))
       val del = if (newDvs.isEmpty) None else {
         val dv = spark.read.schema(DvSchema).parquet(newDvs: _*)
-        val dirtyNorm = dvDirtyPaths(spark, prev.copy(dvFiles = newDvs))
+        // the new vectors' record lives in `cur`, which committed them
+        val dirtyNorm = dvDirtyPaths(spark, cur.copy(dvFiles = newDvs))
         val dirty = prev.files.filter(f =>
           dirtyNorm.contains(new Path(f.path).toUri.getPath))
         val tagged = applyRenames(indexedDataFrame(spark, table,

@@ -260,4 +260,84 @@ class LakeDeletesSpec extends SparkSuite {
     val s = Lake.readSnapshot(spark, dir, 2)
     assert(s.dvFiles.size === 1 && s.dvFiles.head.contains("/deletes/dv-2-"))
   }
+
+  test("recorded vectors plan a masked read, a change feed and a score with no Spark job") {
+    val dir = tmp("mor_nojob")
+    Lake.write(mkOrders.repartitionByRange(4, $"k"), dir, Nil) // v1
+    Lake.deleteMor(spark, dir, $"k" < 100)                     // v2
+    Lake.mergeMor(spark, dir, spark.range(1900, 2100).select($"id".as("k"),
+      lit(1).as("grp"), lit(0.0).as("price")), Seq("k"))       // v3
+    val snap = Lake.readSnapshot(spark, dir, 3)
+    assert(snap.dvRecords.keySet === snap.dvFiles.toSet)
+    assert(snap.dvRecords.values.map(_.rows).sum === 200L)
+    val (read, readJobs) = jobsDuring(Lake.read(spark, dir))
+    val (feed, feedJobs) = jobsDuring(Lake.changes(spark, dir, 1, 3))
+    val (score, scoreJobs) = jobsDuring(Lake.compactionScore(spark, dir))
+    assert(readJobs.isEmpty && feedJobs.isEmpty && scoreJobs.isEmpty,
+      s"planning ran jobs: read $readJobs, changes $feedJobs, score $scoreJobs")
+    assert(score.dvRows === 200L)
+    assert(read.count() === 2000L)
+    assert(feed.groupBy($"__change_type").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap ===
+      Map("delete" -> 200L, "insert" -> 200L))
+    val before = read.orderBy($"k").collect().toSeq
+    // the fold plans from the record: its only SQL execution is the
+    // rewrite of the dirty files
+    val (_, foldJobs) = jobsDuring(Lake.foldDeletes(spark, dir))
+    assert(foldJobs.nonEmpty && foldJobs.distinct.size === 1,
+      s"fold ran jobs outside its rewrite: $foldJobs")
+    assert(Lake.read(spark, dir).orderBy($"k").collect().toSeq === before)
+  }
+
+  /** Rewrite every manifest of `dir` without its `dvRecords` — the
+    * shape of a table committed before the record existed. */
+  private def stripRecords(dir: String): Unit = {
+    val mapper = graft.functions.JsonKernel.mapper
+    new java.io.File(s"$dir/metadata").listFiles()
+      .filter(_.getName.matches("""v\d+\.json""")).foreach { f =>
+        val m = mapper.readValue(f, classOf[java.util.Map[String, Object]])
+        m.remove("dvRecords")
+        java.nio.file.Files.write(f.toPath, mapper.writeValueAsBytes(m))
+      }
+  }
+
+  test("a manifest without the record reads, folds and feeds changes like one with it") {
+    def build(tag: String): String = {
+      val dir = tmp(tag)
+      Lake.write(mkOrders.repartitionByRange(4, $"k"), dir, Nil)
+      Lake.deleteMor(spark, dir, $"k" % 10 === 3)
+      Lake.mergeMor(spark, dir, spark.range(1950, 2050).select($"id".as("k"),
+        lit(2).as("grp"), lit(5.0).as("price")), Seq("k"))
+      Lake.updateMor(spark, dir, $"k" >= 1500 && $"k" < 1600,
+        Map("price" -> lit(-1.0)))
+      dir
+    }
+    val recorded = build("mor_rec")
+    val legacy = build("mor_norec")
+    stripRecords(legacy)
+    assert(Lake.readSnapshot(spark, recorded, 4).dvRecords.size === 3)
+    assert(Lake.readSnapshot(spark, legacy, 4).dvRecords.isEmpty)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    def same(what: String): Unit = {
+      assert(rows(Lake.read(spark, legacy)) === rows(Lake.read(spark, recorded)),
+        s"$what: reads differ")
+      val to = Lake.currentVersion(spark, recorded)
+      assert(rows(Lake.changes(spark, legacy, 1, to)) ===
+        rows(Lake.changes(spark, recorded, 1, to)), s"$what: change feeds differ")
+      assert(Lake.compactionScore(spark, legacy) ===
+        Lake.compactionScore(spark, recorded), s"$what: scores differ")
+    }
+    same("pre-record vectors")
+    // a recorded vector stacked on the legacy ones
+    Seq(legacy, recorded).foreach(d => Lake.deleteMor(spark, d, $"k" === 1))
+    assert(Lake.readSnapshot(spark, legacy, 5).dvRecords.size === 1)
+    same("mixed vectors")
+    val folded = Seq(legacy, recorded).map { d =>
+      Lake.readSnapshot(spark, d, Lake.foldDeletes(spark, d)) }
+    assert(folded.map(_.files.size).distinct.size === 1,
+      "both folds must rewrite the same dirty files")
+    assert(folded.forall(s => s.dvFiles.isEmpty && s.dvRecords.isEmpty))
+    same("folded")
+  }
 }

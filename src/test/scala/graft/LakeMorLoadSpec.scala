@@ -382,4 +382,38 @@ class LakeMorLoadSpec extends SparkSuite {
     assert(out.filter($"grp" === 42).select(sum($"k")).as[Long].head() ===
       (0 until 70).map(_.toLong).sum)
   }
+
+  test("updateMor, expirePartitions, rollback and clone carry the vector record") {
+    val dir = tmp("mor_record")
+    Lake.write(mkOrders.withColumn("reg", ($"k" % 3).cast("string")),
+      dir, Seq("reg"))                                            // v1
+    Lake.deleteMor(spark, dir, $"k" < 300)                        // v2
+    Lake.updateMor(spark, dir, $"k" >= 1800, Map("price" -> lit(-1.0))) // v3
+    // every pending vector keeps its record, the record names files
+    // under this table's root, and the masked read plans from it alone
+    def check(d: String, keys: Seq[Long], updated: Long): Unit = {
+      val s = Lake.readSnapshot(spark, d, Lake.currentVersion(spark, d))
+      assert(s.dvFiles.nonEmpty && s.dvRecords.keySet === s.dvFiles.toSet)
+      val root = new org.apache.hadoop.fs.Path(d).toUri.getPath
+      assert(s.dvRecords.values.flatMap(_.files).forall(_.startsWith(s"$root/")),
+        s"record names files outside $root: ${s.dvRecords}")
+      val (out, jobs) = jobsDuring(Lake.read(spark, d))
+      assert(jobs.isEmpty, s"masked read planning ran jobs: $jobs")
+      assert(out.select($"k").as[Long].collect().sorted.toSeq === keys)
+      assert(out.filter($"price" === -1.0).count() === updated)
+    }
+    val alive = 300L until 2000L
+    check(dir, alive, 200L)
+    Lake.expirePartitions(spark, dir, "reg", _ != "0")            // v4
+    check(dir, alive.filter(_ % 3 != 0), (1800 until 2000).count(_ % 3 != 0).toLong)
+    Lake.rollback(spark, dir, 3)                                  // v5
+    check(dir, alive, 200L)
+    val dst = tmp("mor_record_clone") + "/t"
+    Lake.clone(spark, dir, dst)
+    check(dst, alive, 200L)
+    // the clone's fold rewrites the clone's own dirty files
+    Lake.foldDeletes(spark, dst)
+    assert(Lake.read(spark, dst).select($"k").as[Long].collect().sorted.toSeq === alive)
+    check(dir, alive, 200L)
+  }
 }

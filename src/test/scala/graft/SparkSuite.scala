@@ -1,5 +1,8 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,4 +15,22 @@ trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = "/root/testdata/sf0.001"
   def table(name: String) = Tables.load(spark, sf, name)
+
+  /** `body`'s result and the SQL execution id of every Spark job it
+    * submitted (None for a job run outside SQL), read after flushing
+    * the ordered listener bus so the list is exact. */
+  def jobsDuring[T](body: => T): (T, Seq[Option[String]]) = {
+    val ids = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        ids.add(Option(js.properties).flatMap(p =>
+          Option(p.getProperty("spark.sql.execution.id"))))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.grafttest.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+      (out, ids.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }

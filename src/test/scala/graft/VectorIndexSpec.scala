@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.grafttest.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Similarity, VectorIndex}
@@ -27,17 +23,8 @@ class VectorIndexSpec extends SparkSuite {
     d.getAbsolutePath
   }
 
-  /** Exact job count for `body`: listener + ordered-bus flush. */
-  private def countJobs(body: => Unit): Int = {
-    val n = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; ListenerBridge.waitUntilEmpty(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    n.get()
-  }
+  /** Exact job count for `body`. */
+  private def countJobs(body: => Unit): Int = jobsDuring(body)._2.size
 
   test("build → full-probe topK equals brute-force L2 exactly (model round-trip + spill dedup)") {
     val path = freshPath("exact")
