@@ -11,8 +11,10 @@ import org.apache.spark.sql.SparkSessionExtensions
   *
   * Injected functions are registered at session build time, so
   * `spark.sql("SELECT time_slice(...)")` works without touching
-  * graft.Engine — only MySQL-flavored conf defaults (ANSI off, UTC)
-  * still come from Engine/Session for sessions built elsewhere.
+  * graft.Engine. The result-defining settings (UTC, ANSI off, the
+  * parquet timestamp reading; `Engine.resultSettings`) are not set
+  * here: `Session.prepare`, which every gate calls, pins them on a
+  * session built elsewhere, and leaves its performance settings alone.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

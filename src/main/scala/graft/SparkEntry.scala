@@ -54,7 +54,7 @@ trait QueryArea {
 }
 
 /** Runtime session normalization for externally created sessions
-  * (the driver's Verify/Bench mains build their own SparkSession). */
+  * (perfbench, spark-shell, any caller's own builder). */
 object Session {
   // prepare() runs on EVERY gate invocation (the SparkEntry.queries
   // wrapper): re-registering ~200 compat functions and re-installing
@@ -65,20 +65,14 @@ object Session {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
+  /** Pin the result-defining settings (`Engine.resultSettings`) and
+    * install graft's functions and rules. Performance settings stay as
+    * whoever built the session chose them. */
   def prepare(spark: SparkSession): SparkSession = {
     if (prepared.containsKey(spark)) return spark
     prepared.put(spark, java.lang.Boolean.TRUE)
-    // runtime-settable knobs; static ones (memory, master) stay as built
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // testdata parquet carries naive timestamp[us]; read as
-    // session-TZ TIMESTAMP (UTC above), not TIMESTAMP_NTZ — event-time
-    // streaming requires LTZ and the DuckDB oracle reads naive
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    functions.Registry.registerAll(spark)
+    Engine.resultSettings.foreach { case (k, v) => spark.conf.set(k, v) }
+    functions.Compat.register(spark)
     plans.MvRewrite.install(spark) // no-op until an MV registers
     plans.TablePrune.install(spark) // no-op until conf-enabled
     plans.RangeJoinRewrite.install(spark) // no-op until conf-enabled

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types._
 
-/** Third tranche of reference function names (round-7 FnAudit sweep
+/** Third tranche of reference function names (round-7 `Gates fns` sweep
   * over `gensrc/script/functions.py`) — everything here composes
   * existing Catalyst expressions, so it stays inside whole-stage
   * codegen like [[CompatExtra]].
@@ -22,7 +22,7 @@ import org.apache.spark.sql.types._
   * XXH3-128; xx_hash3_64 is covered). `json_value` looks missing in a
   * naive functions.py scrape but its registry row is COMMENTED OUT in
   * the reference — not a real FE name. After the round-7 second pass
-  * below, FnAudit reports 27 misses over the 394 scraped names, all in
+  * below, `Gates fns` reported 27 misses over the 394 scraped names, all in
   * the documented-skip families above (plus blake3/sm3/md5sum_numeric/
   * get_variant_time from CompatExtra's list). */
 object CompatExtra2 {
@@ -203,7 +203,7 @@ object CompatExtra2 {
           lit(31)), lit(5)), StringType)), StringType)
     }
 
-    // --- round-7 second FnAudit pass: the last composable names ---
+    // --- round-7 second `Gates fns` pass: the last composable names ---
     // dlog1 — MathFunctions::ln under a Teradata-ism name
     // (functions.py:89 maps it straight to ln)
     f("dlog1") { es => call("ln", es.head) }

@@ -39,17 +39,11 @@ object Colocate {
     * then restores the conf. Queries that aggregate or join on the
     * bucket key keep the bucketed scan anyway and prune without help. */
   def pointLookup(bucketed: DataFrame, predicate: org.apache.spark.sql.Column): DataFrame = {
-    val spark = bucketed.sparkSession
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try {
+    graft.Engine.withConf(bucketed.sparkSession,
+        "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
       val df = bucketed.filter(predicate)
       df.queryExecution.executedPlan // plan under the pinned conf
       df
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 

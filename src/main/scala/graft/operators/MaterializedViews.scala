@@ -294,12 +294,8 @@ object MaterializedViews {
       // metadata), not rows.
       val live = recomputed.select(col(partCol).cast("string")).distinct()
         .collect().map(_.getString(0)).toSet
-      val saved = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try recomputed.write.mode("overwrite").partitionBy(partCol).parquet(mvPath)
-      finally saved match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      graft.Engine.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        recomputed.write.mode("overwrite").partitionBy(partCol).parquet(mvPath)
       }
       stale.filterNot(live).foreach { p =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$mvPath/$partCol=$p"), true)

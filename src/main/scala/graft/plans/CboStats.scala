@@ -36,16 +36,11 @@ object CboStats {
     * the reference's `ANALYZE TABLE ... WITH ... BUCKETS`. */
   def analyze(spark: SparkSession, name: String, cols: Seq[String] = Nil,
       histogram: Boolean = true): Unit = {
-    val prev = spark.conf.getOption("spark.sql.statistics.histogram.enabled")
-    spark.conf.set("spark.sql.statistics.histogram.enabled", histogram.toString)
-    try {
+    graft.Engine.withConf(spark, "spark.sql.statistics.histogram.enabled" -> histogram.toString) {
       val forCols =
         if (cols.isEmpty) "FOR ALL COLUMNS"
         else cols.mkString("FOR COLUMNS ", ", ", "")
       spark.sql(s"ANALYZE TABLE `$name` COMPUTE STATISTICS $forCols")
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.statistics.histogram.enabled", p)
-      case None => spark.conf.unset("spark.sql.statistics.histogram.enabled")
     }
   }
 

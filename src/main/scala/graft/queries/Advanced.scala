@@ -32,8 +32,7 @@ object Advanced extends graft.QueryArea {
     // prune preserves cardinality and duplication factor exactly.
     "prune_cardinality_joins" -> ((spark, dir) => {
       val root = s"${System.getProperty("java.io.tmpdir")}/graft_prune_${dir.replaceAll("[^0-9a-z]", "_")}"
-      spark.conf.set(graft.plans.TablePrune.EnabledKey, "true")
-      try {
+      graft.Engine.withConf(spark, graft.plans.TablePrune.EnabledKey -> "true") {
         val df = t(spark, dir, "lineitem")
           .join(t(spark, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
           .join(t(spark, dir, "part"), col("l_partkey") === col("p_partkey"))
@@ -44,7 +43,7 @@ object Advanced extends graft.QueryArea {
           _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]),
           "table pruning failed: a join survived the optimized plan")
         df.write.mode("overwrite").parquet(root) // materialize WITH pruning on
-      } finally spark.conf.unset(graft.plans.TablePrune.EnabledKey)
+      }
       spark.read.parquet(root).orderBy(col("l_returnflag"))
     }),
     // ANALYZE-driven CBO (reference FE statistic/ ANALYZE jobs +
@@ -69,9 +68,7 @@ object Advanced extends graft.QueryArea {
       require(graft.plans.CboStats.columnStats(spark, "cbo_orders")
         .filter(col("histogram_bins") > 0).count() >= 1,
         "ANALYZE did not persist histograms")
-      val prev = spark.conf.getOption("spark.sql.cbo.joinReorder.enabled")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      try {
+      graft.Engine.withConf(spark, "spark.sql.cbo.joinReorder.enabled" -> "true") {
         spark.sql(
           """SELECT n_name, count(*) AS n_orders,
             |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total
@@ -80,9 +77,6 @@ object Advanced extends graft.QueryArea {
             |WHERE o_totalprice > 150000
             |GROUP BY n_name""".stripMargin)
           .write.mode("overwrite").parquet(root) // plan + run INSIDE the conf window
-      } finally prev match {
-        case Some(p) => spark.conf.set("spark.sql.cbo.joinReorder.enabled", p)
-        case None => spark.conf.unset("spark.sql.cbo.joinReorder.enabled")
       }
       spark.read.parquet(root).orderBy(col("n_name"))
     }),

@@ -73,7 +73,7 @@ object CompatKernels extends graft.QueryArea {
         |  FROM events GROUP BY user_id)
         |ORDER BY user_id""".stripMargin)),
 
-    // Round-7 FnAudit tranche (functions/CompatExtra2.scala): the
+    // Round-7 `Gates fns` tranche (functions/CompatExtra2.scala): the
     // deterministic scalar surface evaluated on literals, one row —
     // oracle pins the exact values (DuckDB lacks parse_url/yearweek
     // etc., so the mirror is a literal VALUES row, each value

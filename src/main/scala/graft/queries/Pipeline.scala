@@ -66,7 +66,7 @@ object Pipeline extends graft.QueryArea {
   private def annVec(i: Int): Array[Float] =
     Array.tabulate(annDim)(j => ((i * 31 + j * 17) % 97) / 97.0f - 0.5f)
   /** The persisted-index gates' tmp paths, one per tag — shared with
-    * DumpPlans (which dumps the persisted gate's phase-1 shortlist
+    * `Gates plan` (which dumps the persisted gate's phase-1 shortlist
     * plan against the index that gate built), so path construction
     * lives in exactly one place and cannot drift. */
   private[graft] def vixGatePath(dir: String, tag: String = "gate"): String =

@@ -188,11 +188,8 @@ object Relational extends graft.QueryArea {
       val cust = t(spark, dir, "customer").select(col("c_custkey"), col("c_acctbal"))
       val bands = t(spark, dir, "supplier").select(col("s_suppkey"),
         (col("s_acctbal") - 500).as("lo"), (col("s_acctbal") + 500).as("hi"))
-      val saved = Seq(graft.plans.RangeJoinRewrite.EnabledKey,
-        graft.plans.RangeJoinRewrite.BinKey).map(k => k -> spark.conf.getOption(k))
-      spark.conf.set(graft.plans.RangeJoinRewrite.EnabledKey, "true")
-      spark.conf.set(graft.plans.RangeJoinRewrite.BinKey, "250")
-      try {
+      graft.Engine.withConf(spark, graft.plans.RangeJoinRewrite.EnabledKey -> "true",
+          graft.plans.RangeJoinRewrite.BinKey -> "250") {
         val df = cust.join(bands,
             col("c_acctbal") >= col("lo") && col("c_acctbal") <= col("hi"))
           .groupBy(col("s_suppkey"))
@@ -200,9 +197,6 @@ object Relational extends graft.QueryArea {
           .orderBy(col("s_suppkey"))
         df.queryExecution.executedPlan // plan under the pinned conf
         df
-      } finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
       }
     }),
     "subq_scalar" -> ((spark, dir) => sqlq(spark, dir)(

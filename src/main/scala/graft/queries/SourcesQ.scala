@@ -1768,8 +1768,7 @@ object SourcesQ extends graft.QueryArea {
       // enable only around THIS gate's planning + execution — the
       // result is pinned as collected rows, and the gate FAILS LOUDLY
       // if the substitution did not actually fire
-      spark.conf.set(graft.plans.GeneratedColumns.EnabledKey, "true")
-      try {
+      graft.Engine.withConf(spark, graft.plans.GeneratedColumns.EnabledKey -> "true") {
         val q = graft.sources.Lake.read(spark, table)
           .filter(month(col("o_orderdate")) === 3)
           .agg(count(lit(1)).as("n"),
@@ -1778,7 +1777,7 @@ object SourcesQ extends graft.QueryArea {
           "generated-column rewrite did not fire")
         val rows = q.collect()
         spark.createDataFrame(java.util.Arrays.asList(rows: _*), q.schema)
-      } finally spark.conf.unset(graft.plans.GeneratedColumns.EnabledKey)
+      }
     }),
     // Sort-key clustered write (reference Prefix_index_sort_key.md —
     // rows ordered by the key; the sparse prefix index serves leading-

@@ -56,13 +56,10 @@ object StreamingQ extends graft.QueryArea {
       // partition per batch, and that per-store checkpoint overhead —
       // not row volume — dominates a one-batch drain. State layout
       // sized to key cardinality is the durable 100 TB choice too.
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = stream.writeStream.format("memory").queryName(qn)
+      graft.streaming.Streams.runToEnd(spark, 120000, "spark.sql.shuffle.partitions" -> "4") {
+        stream.writeStream.format("memory").queryName(qn)
           .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination(120000)
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("day")).orderBy(col("n").desc, col("term"))
       spark.table(qn)
@@ -102,22 +99,18 @@ object StreamingQ extends graft.QueryArea {
       // overhead dominates two AvailableNow runs (the stream_join_enrich
       // lesson); state layout sized to key cardinality is also the
       // durable 100 TB choice, fixed at the stream's first run
-      def runOnce(): Unit = {
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try {
+      def runOnce(): Unit =
+        graft.streaming.Streams.runToEnd(spark, 120000, "spark.sql.shuffle.partitions" -> "4") {
           val stream = spark.readStream.schema(e.schema).parquet(s"$base/in")
             .withWatermark("ts", "36 hours")
             .groupBy(window(col("ts"), "1 day"), col("event_type"))
             .agg(count(lit(1)).as("n"))
             .select(col("window.start").as("wstart"), col("event_type"), col("n"))
-          val q = stream.writeStream.format("parquet")
+          stream.writeStream.format("parquet")
             .option("path", s"$base/out")
             .option("checkpointLocation", s"$base/chk")
             .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination(120000)
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
+        }
       run1.coalesce(2).write.mode("overwrite").parquet(s"$base/in")
       runOnce()
       run2.coalesce(2).write.mode("append").parquet(s"$base/in")
@@ -147,14 +140,11 @@ object StreamingQ extends graft.QueryArea {
       // store commits per partition per batch; duplicates are FULL row
       // copies, so which copy survives is value-identical regardless
       // of the partition layout
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = graft.streaming.Streams.streamingDedup(stream, Seq("event_id"))
+      graft.streaming.Streams.runToEnd(spark, 120000, "spark.sql.shuffle.partitions" -> "4") {
+        graft.streaming.Streams.streamingDedup(stream, Seq("event_id"))
           .writeStream.format("memory").queryName(qn)
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination(120000)
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       spark.table(qn)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -189,9 +179,10 @@ object StreamingQ extends graft.QueryArea {
       }
       val stream = spark.readStream.schema(e.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-      val q = graft.streaming.Streams.lakeUpsertSink(
-        stream, Seq("user_id"), "event_id", s"$base/table", s"$base/ckpt")
-      q.awaitTermination(180000)
+      graft.streaming.Streams.runToEnd(spark, 180000) {
+        graft.streaming.Streams.lakeUpsertSink(
+          stream, Seq("user_id"), "event_id", s"$base/table", s"$base/ckpt")
+      }
       require(graft.sources.Lake.currentVersion(spark, s"$base/table") >= 3,
         "expected one lake commit per micro-batch")
       graft.sources.Lake.read(spark, s"$base/table")
@@ -228,9 +219,10 @@ object StreamingQ extends graft.QueryArea {
       }
       val stream = spark.readStream.schema(e.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-      val q = graft.streaming.Streams.lakeMorUpsertSink(
-        stream, Seq("user_id"), "event_id", s"$base/table", s"$base/ckpt")
-      q.awaitTermination(180000)
+      graft.streaming.Streams.runToEnd(spark, 180000) {
+        graft.streaming.Streams.lakeMorUpsertSink(
+          stream, Seq("user_id"), "event_id", s"$base/table", s"$base/ckpt")
+      }
       val table = s"$base/table"
       val cur = graft.sources.Lake.currentVersion(spark, table)
       require(cur >= 2, "expected one lake commit per micro-batch")
@@ -367,10 +359,8 @@ object StreamingQ extends graft.QueryArea {
       // gate's wall. Sizing state partitions to key cardinality instead
       // of batch parallelism is also the right 100 TB shape (state
       // partitioning is a durable layout choice, fixed at first run).
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
       val qn = "sjoin_out_" + System.nanoTime()
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      graft.streaming.Streams.runToEnd(spark, 120000, "spark.sql.shuffle.partitions" -> "4") {
         val sA = spark.readStream.schema(e.schema).parquet(s"$base/in")
           .filter(col("value") > 100)
           .select(col("event_id").as("a_id"), col("ts").as("a_ts"),
@@ -380,13 +370,12 @@ object StreamingQ extends graft.QueryArea {
           .select(col("event_id").as("b_id"), col("ts").as("b_ts"),
             col("value"))
           .withWatermark("b_ts", "1 hour")
-        val q = sA.join(sB, col("a_id") === col("b_id") &&
+        sA.join(sB, col("a_id") === col("b_id") &&
             col("b_ts") >= col("a_ts") - expr("INTERVAL 1 HOUR") &&
             col("b_ts") <= col("a_ts") + expr("INTERVAL 1 HOUR"))
           .writeStream.format("memory").queryName(qn).outputMode("append")
           .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination(120000)
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       spark.table(qn).groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
         .orderBy(col("event_type"))
@@ -424,11 +413,6 @@ object StreamingQ extends graft.QueryArea {
       queries.repartition(1).write.mode("overwrite").parquet(s"$base/in")
       val stream = spark.readStream.schema(queries.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-      // micro-batch ANN state is query-count-sized, not scan-sized:
-      // 4 shuffle partitions keep the per-batch window/join overhead
-      // proportional to the work (see stream_join_enrich)
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
       // the corpus float side is read by every micro-batch's rerank —
       // cache it once across batches (the standing-state shape again)
       val cachedCorpus = corpus.cache()
@@ -436,8 +420,11 @@ object StreamingQ extends graft.QueryArea {
       // construction) — collect them instead of a parquet write+read
       // round trip per batch
       val results = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
-      try {
-        val q = stream.writeStream
+      // micro-batch ANN state is query-count-sized, not scan-sized:
+      // 4 shuffle partitions keep the per-batch window/join overhead
+      // proportional to the work (see stream_join_enrich)
+      try graft.streaming.Streams.runToEnd(spark, 120000, "spark.sql.shuffle.partitions" -> "4") {
+        stream.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             graft.operators.VectorIndex.topK(spark, idxPath,
                 cachedCorpus, "vec_id", "embedding", batch, "qid", "qvec",
@@ -446,11 +433,7 @@ object StreamingQ extends graft.QueryArea {
           }
           .option("checkpointLocation", s"$base/ckpt")
           .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination(120000)
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        cachedCorpus.unpersist()
-      }
+      } finally cachedCorpus.unpersist()
       import scala.jdk.CollectionConverters._
       val outSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("qid", org.apache.spark.sql.types.LongType),

@@ -256,4 +256,19 @@ object Streams {
       .option("path", outDir)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
+
+  /** Start a query with `conf` set on the session and run it to its
+    * end: throws when it has not terminated within `timeoutMs` (a
+    * partial sink must not pass for a result), and always stops it
+    * before the conf is restored. */
+  def runToEnd(spark: SparkSession, timeoutMs: Long, conf: (String, String)*)(
+      start: => StreamingQuery): Unit =
+    graft.Engine.withConf(spark, conf: _*) {
+      val q = start
+      try {
+        if (!q.awaitTermination(timeoutMs))
+          throw new java.util.concurrent.TimeoutException(
+            s"streaming query ${q.name} did not finish within $timeoutMs ms")
+      } finally q.stop()
+    }
 }

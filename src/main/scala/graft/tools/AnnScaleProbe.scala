@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-import graft.{Engine, Session}
+import graft.Engine
 import graft.operators.{Similarity, VectorIndex}
 
 /** Dev tool: the ANN scale story in one table — brute-force L2 top-k
@@ -30,7 +30,6 @@ object AnnScaleProbe {
 
     val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
-    Session.prepare(spark)
 
     def time(df: => DataFrame): Double = {
       def run(): Double = {

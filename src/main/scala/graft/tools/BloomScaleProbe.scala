@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{Engine, Session}
+import graft.Engine
 import graft.sources.{BloomIndex, Lake}
 
 /** Dev tool: the n-gram bloom skipping story in one table — a
@@ -29,7 +29,6 @@ object BloomScaleProbe {
 
     val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
-    Session.prepare(spark)
 
     def time(df: => DataFrame): Double = {
       def run(): Double = {

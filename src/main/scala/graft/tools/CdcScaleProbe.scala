@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.{Engine, Session}
+import graft.Engine
 import graft.sources.Lake
 
 /** Dev tool: row-level CDC-out cost at growing table scale —
@@ -22,7 +22,6 @@ object CdcScaleProbe {
 
     val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
-    Session.prepare(spark)
     import spark.implicits._
 
     def mk(n: Long) = spark.range(0, n)

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.{Engine, Session}
+import graft.Engine
 import graft.sources.{PaimonHashIndex, PaimonRead}
 
 /** Dev tool: DYNAMIC-BUCKET ('bucket' = '-1') paimon commit cost
@@ -25,7 +25,6 @@ object DynBucketScaleProbe {
 
     val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
-    Session.prepare(spark)
     import spark.implicits._
 
     def time[A](f: => A): Double = {

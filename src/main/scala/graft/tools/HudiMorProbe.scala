@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.{Engine, Session}
+import graft.Engine
 import graft.sources.HudiRead
 
 /** Dev tool: the Hudi merge-on-read READ cost story at growing base
@@ -33,7 +33,6 @@ object HudiMorProbe {
 
     val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
-    Session.prepare(spark)
     import spark.implicits._
 
     def time[A](f: => A): Double = {

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Engine, Session}
+import graft.Engine
 
 /** Dev tool: synthesize a larger scale factor from an existing one by
   * key-offset replication (the TPC-H scaling model: fact/dim key
@@ -38,7 +38,6 @@ object MakeScale {
     def wanted(name: String): Boolean = only.forall(_.contains(name))
     val spark = Engine.session()
     spark.sparkContext.setLogLevel("WARN")
-    Session.prepare(spark)
 
     def rd(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     def off(df: DataFrame, col0: String): Long =

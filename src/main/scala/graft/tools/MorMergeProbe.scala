@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.{Engine, Session}
+import graft.Engine
 import graft.sources.Lake
 
 /** Dev tool: merge-on-read vs copy-on-write UPSERT cost at growing
@@ -23,7 +23,6 @@ object MorMergeProbe {
 
     val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
-    Session.prepare(spark)
     import spark.implicits._
 
     def mk(n: Long) = spark.range(0, n)

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.{Engine, Session}
+import graft.Engine
 import graft.sources.Lake
 
 /** Dev tool: merge-on-read vs copy-on-write delete cost at growing
@@ -26,7 +26,6 @@ object MorScaleProbe {
 
     val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
-    Session.prepare(spark)
     import spark.implicits._
 
     def mk(n: Long) = spark.range(0, n)

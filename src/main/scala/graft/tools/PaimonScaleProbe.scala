@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.{Engine, Session}
+import graft.Engine
 import graft.sources.PaimonRead
 
 /** Dev tool: Paimon primary-key MERGE-ON-READ cost across a decade of
@@ -22,7 +22,6 @@ object PaimonScaleProbe {
 
     val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
-    Session.prepare(spark)
     import spark.implicits._
 
     def time[A](f: => A): Double = {

@@ -58,7 +58,7 @@ class CboSpec extends SparkSuite {
           |GROUP BY f.dk""".stripMargin).queryExecution.executedPlan
 
     val threshold = "1048576" // 1 MiB: raw dim ≫, truly-filtered dim ≫, mis-estimate ≪
-    withConf("spark.sql.autoBroadcastJoinThreshold" -> threshold,
+    Engine.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> threshold,
       "spark.sql.adaptive.enabled" -> "false") {
       // stats WITHOUT histogram: uniform selectivity ~0.1% -> tiny
       // estimate -> broadcasts (the mis-plan)
@@ -94,7 +94,7 @@ class CboSpec extends SparkSuite {
       """SELECT count(*) FROM cbo_r_a a
         |JOIN cbo_r_b b ON a.k1 = b.k1
         |JOIN cbo_r_c c ON a.k2 = c.k2 AND c.tag = 0""".stripMargin
-    withConf("spark.sql.cbo.joinReorder.enabled" -> "true") {
+    Engine.withConf(spark, "spark.sql.cbo.joinReorder.enabled" -> "true") {
       val opt = spark.sql(q).queryExecution.optimizedPlan
       val order = opt.collectLeaves().flatMap(
         _.collect { case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
@@ -113,15 +113,6 @@ class CboSpec extends SparkSuite {
       // and the result is still right
       val n = spark.sql(q).collect()(0).getLong(0)
       assert(n === (0 until 100000).count(_ % 1000 % 5 == 0).toLong)
-    }
-  }
-
-  private def withConf[A](kvs: (String, String)*)(f: => A): A = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -47,30 +47,30 @@ class GeneratedColumnsSpec extends SparkSuite {
       Seq("o_month" -> "month(o_orderdate)"),
       sortBy = Seq("o_month"), nFiles = 8)
     GeneratedColumns.register(spark, dir)
-    spark.conf.set(GeneratedColumns.EnabledKey, "true")
-    // the query writes the EXPRESSION; the optimized plan must carry
-    // the stored attribute instead (no month() call over o_orderdate)
-    val (df, idx) = Lake.readIndexed(spark, dir)
-    val q = df.filter(month($"o_orderdate") === 3)
-      .agg(count(lit(1)).as("n"),
-        sum($"o_totalprice".cast("decimal(18,6)")).cast("double").as("total"))
-    val optimized = q.queryExecution.optimizedPlan.toString
-    assert(!optimized.contains("month("),
-      s"month() survived the rewrite:\n$optimized")
-    // result identical to the un-rewritten computation
-    val want = mkOrders.filter(month($"o_orderdate") === 3)
-      .agg(count(lit(1)), sum($"o_totalprice".cast("decimal(18,6)")).cast("double"))
-      .head()
-    val got = q.head()
-    assert(got.getLong(0) === want.getLong(0) && got.getDouble(1) === want.getDouble(1))
-    // the month predicate, now an attribute on the sort key, PRUNES:
-    // one month ~ 1/12 of the data over 8 month-clustered files
-    assert(idx.lastStatsSkippedFileCount >= 5,
-      s"expected most files skipped via the generated sort key, got ${idx.lastStatsSkippedFileCount}")
+    Engine.withConf(spark, GeneratedColumns.EnabledKey -> "true") {
+      // the query writes the EXPRESSION; the optimized plan must carry
+      // the stored attribute instead (no month() call over o_orderdate)
+      val (df, idx) = Lake.readIndexed(spark, dir)
+      val q = df.filter(month($"o_orderdate") === 3)
+        .agg(count(lit(1)).as("n"),
+          sum($"o_totalprice".cast("decimal(18,6)")).cast("double").as("total"))
+      val optimized = q.queryExecution.optimizedPlan.toString
+      assert(!optimized.contains("month("),
+        s"month() survived the rewrite:\n$optimized")
+      // result identical to the un-rewritten computation
+      val want = mkOrders.filter(month($"o_orderdate") === 3)
+        .agg(count(lit(1)), sum($"o_totalprice".cast("decimal(18,6)")).cast("double"))
+        .head()
+      val got = q.head()
+      assert(got.getLong(0) === want.getLong(0) && got.getDouble(1) === want.getDouble(1))
+      // the month predicate, now an attribute on the sort key, PRUNES:
+      // one month ~ 1/12 of the data over 8 month-clustered files
+      assert(idx.lastStatsSkippedFileCount >= 5,
+        s"expected most files skipped via the generated sort key, got ${idx.lastStatsSkippedFileCount}")
+    }
     // the rule is OPT-IN: with the conf unset the same query keeps
     // its expression (inert outside its users, the sibling-rule
     // convention)
-    spark.conf.unset(GeneratedColumns.EnabledKey)
     val off = Lake.read(spark, dir).filter(month($"o_orderdate") === 3)
     assert(off.queryExecution.optimizedPlan.toString.contains("month("))
   }
@@ -80,18 +80,18 @@ class GeneratedColumnsSpec extends SparkSuite {
     GeneratedColumns.write(mkOrders, dir,
       Seq("o_month" -> "month(o_orderdate)"))
     GeneratedColumns.register(spark, dir)
-    spark.conf.set(GeneratedColumns.EnabledKey, "true")
-    val df = Lake.read(spark, dir)
-    // a DIFFERENT expression is untouched
-    val q1 = df.filter(year($"o_orderdate") === 1996)
-    assert(q1.queryExecution.optimizedPlan.toString.contains("year("))
-    assert(q1.count() === mkOrders.filter(year($"o_orderdate") === 1996).count())
-    // same expression over a NON-registered table is untouched
-    val plain = freshTable("plain")
-    Lake.write(mkOrders, plain, Nil)
-    val q2 = Lake.read(spark, plain).filter(month($"o_orderdate") === 3)
-    assert(q2.queryExecution.optimizedPlan.toString.contains("month("))
-    spark.conf.unset(GeneratedColumns.EnabledKey)
+    Engine.withConf(spark, GeneratedColumns.EnabledKey -> "true") {
+      val df = Lake.read(spark, dir)
+      // a DIFFERENT expression is untouched
+      val q1 = df.filter(year($"o_orderdate") === 1996)
+      assert(q1.queryExecution.optimizedPlan.toString.contains("year("))
+      assert(q1.count() === mkOrders.filter(year($"o_orderdate") === 1996).count())
+      // same expression over a NON-registered table is untouched
+      val plain = freshTable("plain")
+      Lake.write(mkOrders, plain, Nil)
+      val q2 = Lake.read(spark, plain).filter(month($"o_orderdate") === 3)
+      assert(q2.queryExecution.optimizedPlan.toString.contains("month("))
+    }
   }
 
   test("projection and grouping sites rewrite too") {
@@ -99,25 +99,24 @@ class GeneratedColumnsSpec extends SparkSuite {
     GeneratedColumns.write(mkOrders, dir,
       Seq("o_month" -> "month(o_orderdate)"))
     GeneratedColumns.register(spark, dir)
-    spark.conf.set(GeneratedColumns.EnabledKey, "true")
-    val df = Lake.read(spark, dir)
-    val q = df.groupBy(month($"o_orderdate").as("m"))
-      .agg(count(lit(1)).as("n")).orderBy($"m")
-    assert(!q.queryExecution.optimizedPlan.toString.contains("month("))
-    val want = mkOrders.groupBy(month($"o_orderdate").as("m"))
-      .agg(count(lit(1)).as("n")).orderBy($"m")
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    val got = q.collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    assert(got === want)
-    spark.conf.unset(GeneratedColumns.EnabledKey)
+    Engine.withConf(spark, GeneratedColumns.EnabledKey -> "true") {
+      val df = Lake.read(spark, dir)
+      val q = df.groupBy(month($"o_orderdate").as("m"))
+        .agg(count(lit(1)).as("n")).orderBy($"m")
+      assert(!q.queryExecution.optimizedPlan.toString.contains("month("))
+      val want = mkOrders.groupBy(month($"o_orderdate").as("m"))
+        .agg(count(lit(1)).as("n")).orderBy($"m")
+        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+      val got = q.collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+      assert(got === want)
+    }
   }
 
   test("plain append lacking the column drops the spec; re-register evicts; changed spec is honored") {
     val dir = freshTable("drop")
     GeneratedColumns.write(mkOrders, dir, Seq("o_month" -> "month(o_orderdate)"))
     GeneratedColumns.register(spark, dir)
-    spark.conf.set(GeneratedColumns.EnabledKey, "true")
-    try {
+    Engine.withConf(spark, GeneratedColumns.EnabledKey -> "true") {
       // GeneratedColumns.append keeps the spec materialized
       GeneratedColumns.append(mkOrders.limit(3), dir)
       assert(Lake.readSnapshot(spark, dir, Lake.currentVersion(spark, dir))
@@ -151,7 +150,7 @@ class GeneratedColumnsSpec extends SparkSuite {
       assert(qm.queryExecution.optimizedPlan.toString.contains("month("),
         "old spec still rewriting after the definition changed")
       assert(qy.count() === mkOrders.filter(year($"o_orderdate") === 1996).count())
-    } finally spark.conf.unset(GeneratedColumns.EnabledKey)
+    }
   }
 
   test("DML writing a spec's target or source column invalidates the spec") {

@@ -76,11 +76,10 @@ class GraphSpec extends SparkSuite {
     val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L)).toDF("s", "d")
     val plain = Graph.pageRank(e, "s", "d", iters = 4)
       .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
-    spark.conf.set("spark.graft.pins.replicated", "true")
-    val replicated =
-      try Graph.pageRank(e, "s", "d", iters = 4)
+    val replicated = Engine.withConf(spark, "spark.graft.pins.replicated" -> "true") {
+      Graph.pageRank(e, "s", "d", iters = 4)
         .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
-      finally spark.conf.unset("spark.graft.pins.replicated")
+    }
     assert(plain === replicated)
   }
 }

@@ -224,10 +224,8 @@ class PaimonDynamicBucketSpec extends SparkSuite {
         Seq("k"), assumeKeyUnique = true)
     }
     ingest(dirA) // default: empty-prior skip on c1, broadcast join on c2
-    spark.conf.set("spark.graft.paimon.dynamicBucket.broadcastKeyLimit", "0")
-    try ingest(dirB) // forced: shuffle join on c2
-    finally spark.conf
-      .unset("spark.graft.paimon.dynamicBucket.broadcastKeyLimit")
+    // forced: shuffle join on c2
+    Engine.withConf(spark, "spark.graft.paimon.dynamicBucket.broadcastKeyLimit" -> "0")(ingest(dirB))
     assert(assignmentOf(dirA, 2L) === assignmentOf(dirB, 2L))
     val a = PaimonRead.read(spark, dirA).orderBy($"k").collect().toSeq
     val b = PaimonRead.read(spark, dirB).orderBy($"k").collect().toSeq

@@ -204,12 +204,9 @@ class PaimonMaintSpec extends SparkSuite {
       p.substring(p.indexOf(root) + root.length)
     val serial = PaimonRead.removeOrphanFiles(spark, a, olderThanMillis = 0L)
       .map(rel(a)).sorted
-    spark.conf.set("spark.graft.paimon.gc.distributedRootWalkThreshold", "0")
-    val dist =
-      try PaimonRead.removeOrphanFiles(spark, b, olderThanMillis = 0L)
-        .map(rel(b)).sorted
-      finally spark.conf
-        .unset("spark.graft.paimon.gc.distributedRootWalkThreshold")
+    val dist = Engine.withConf(spark, "spark.graft.paimon.gc.distributedRootWalkThreshold" -> "0") {
+      PaimonRead.removeOrphanFiles(spark, b, olderThanMillis = 0L).map(rel(b)).sorted
+    }
     assert(dist === serial, "distributed and serial sweeps diverged")
     // branch + main still read after the distributed sweep
     assert(PaimonRead.read(spark, b).count() === 40)

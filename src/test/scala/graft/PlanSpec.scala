@@ -258,9 +258,7 @@ class PlanSpec extends SparkSuite {
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val saved = conf.map { case (k, _) => k -> spark.conf.get(k) }
-    try {
-      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    Engine.withConf(spark, conf: _*) {
       import spark.implicits._
       val left = spark.range(200000)
         .select((when($"id" % 100 === 0, $"id").otherwise(lit(7L))).as("k"),
@@ -272,7 +270,7 @@ class PlanSpec extends SparkSuite {
       j.collect()
       val plan = j.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"), s"AQE did not mark/split the skewed join:\n$plan")
-    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
   }
 
   test("query profile exposes per-operator runtime metrics (EXPLAIN ANALYZE parity)") {
@@ -292,9 +290,8 @@ class PlanSpec extends SparkSuite {
     val base = java.nio.file.Files.createTempDirectory("graft-bucket").toString
     graft.operators.Colocate.saveBucketed(o, "orders_colo", s"$base/o", Seq("o_custkey"), 8)
     graft.operators.Colocate.saveBucketed(c, "cust_colo", s"$base/c", Seq("c_custkey"), 8)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force non-broadcast
+    // force non-broadcast
+    try Engine.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = spark.table("orders_colo")
         .join(spark.table("cust_colo"), $"o_custkey" === $"c_custkey")
         .groupBy($"c_mktsegment").count()
@@ -306,7 +303,6 @@ class PlanSpec extends SparkSuite {
         !plan.contains("Exchange hashpartitioning(c_custkey"),
         s"bucketed join still exchanges:\n$plan")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS orders_colo")
       spark.sql("DROP TABLE IF EXISTS cust_colo")
     }

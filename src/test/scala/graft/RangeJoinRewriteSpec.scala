@@ -9,15 +9,6 @@ import graft.plans.RangeJoinRewrite
 class RangeJoinRewriteSpec extends SparkSuite {
   import spark.implicits._
 
-  private def withConf(pairs: (String, String)*)(body: => Unit): Unit = {
-    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private val points = (1 to 400).map(i => (i.toLong, (i * 7 % 1000).toDouble))
     .toDF("pid", "p")
   private val intervals = (1 to 50).map(i =>
@@ -32,7 +23,7 @@ class RangeJoinRewriteSpec extends SparkSuite {
     val naive = joined.collect().toSeq
     assert(joined.queryExecution.executedPlan.toString
       .contains("BroadcastNestedLoopJoin"), "baseline should nested-loop")
-    withConf(RangeJoinRewrite.EnabledKey -> "true",
+    Engine.withConf(spark, RangeJoinRewrite.EnabledKey -> "true",
         RangeJoinRewrite.BinKey -> "100") {
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastNestedLoopJoin") &&
@@ -49,7 +40,7 @@ class RangeJoinRewriteSpec extends SparkSuite {
     def q = points.join(intervals, $"lo" < $"p" && $"hi" > $"p")
       .select($"pid", $"iid").orderBy($"pid", $"iid")
     val naive = q.collect().toSeq
-    withConf(RangeJoinRewrite.EnabledKey -> "true",
+    Engine.withConf(spark, RangeJoinRewrite.EnabledKey -> "true",
         RangeJoinRewrite.BinKey -> "37") {
       val plan = q.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
@@ -68,7 +59,7 @@ class RangeJoinRewriteSpec extends SparkSuite {
     def q = evts.join(spans, $"ed" >= $"lo" && $"ed" <= $"hi")
       .select($"eid", $"sid").orderBy($"eid", $"sid")
     val naive = q.collect().toSeq
-    withConf(RangeJoinRewrite.EnabledKey -> "true",
+    Engine.withConf(spark, RangeJoinRewrite.EnabledKey -> "true",
         RangeJoinRewrite.BinKey -> "15") { // 15-day bins
       val plan = q.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
@@ -81,7 +72,7 @@ class RangeJoinRewriteSpec extends SparkSuite {
     val l = Seq((1L, 5.0), (2L, 6.0)).toDF("k", "v")
     val r = Seq((1L, 0.0, 10.0)).toDF("k", "lo", "hi")
     val q = l.join(r, l("k") === r("k") && $"v" >= $"lo" && $"v" <= $"hi")
-    withConf(RangeJoinRewrite.EnabledKey -> "true") {
+    Engine.withConf(spark, RangeJoinRewrite.EnabledKey -> "true") {
       val plan = q.queryExecution.optimizedPlan.toString
       assert(!plan.contains("__p_bin"), "equi join was needlessly rewritten")
       assert(q.count() === 1) // only k=1 matches the single interval row
@@ -105,7 +96,7 @@ class RangeJoinRewriteSpec extends SparkSuite {
     def q = pts.join(ivs, $"p" >= $"lo" && $"p" <= $"hi")
       .select($"pid", $"iid").orderBy($"pid", $"iid")
     val naive = q.collect().toSeq
-    withConf(RangeJoinRewrite.EnabledKey -> "true",
+    Engine.withConf(spark, RangeJoinRewrite.EnabledKey -> "true",
         RangeJoinRewrite.BinKey -> "64") {
       val plan = q.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
@@ -122,7 +113,7 @@ class RangeJoinRewriteSpec extends SparkSuite {
     // it would replicate into 10M bin rows without the cap
     val ivs = Seq((10L, 0.0, 1.0e7)).toDF("iid", "lo", "hi")
     def q = pts.join(ivs, $"p" >= $"lo" && $"p" <= $"hi").select($"pid", $"iid")
-    withConf(RangeJoinRewrite.EnabledKey -> "true",
+    Engine.withConf(spark, RangeJoinRewrite.EnabledKey -> "true",
         RangeJoinRewrite.BinKey -> "1",
         RangeJoinRewrite.MaxBinsKey -> "1000") {
       val e = intercept[Exception] { q.collect() }
@@ -132,7 +123,7 @@ class RangeJoinRewriteSpec extends SparkSuite {
         s"expected the cap message naming the confs, got: $e")
     }
     // under the cap the same query runs and matches the nested loop
-    withConf(RangeJoinRewrite.EnabledKey -> "true",
+    Engine.withConf(spark, RangeJoinRewrite.EnabledKey -> "true",
         RangeJoinRewrite.BinKey -> "100000") {
       assert(q.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((1L, 10L)))
     }

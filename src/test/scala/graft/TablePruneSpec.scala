@@ -15,10 +15,7 @@ class TablePruneSpec extends SparkSuite {
   private def joins(df: DataFrame): Int =
     df.queryExecution.optimizedPlan.collect { case j: Join => j }.size
 
-  private def withPrune[T](body: => T): T = {
-    spark.conf.set(TablePrune.EnabledKey, "true")
-    try body finally spark.conf.unset(TablePrune.EnabledKey)
-  }
+  private def withPrune[T](body: => T): T = Engine.withConf(spark, TablePrune.EnabledKey -> "true")(body)
 
   private def chainAgg = {
     val li = table("lineitem")

@@ -12,7 +12,11 @@ cd "$(dirname "$0")/.."
 MAIN="${1:-graft.Bench}"
 CLASSES="target/scala-2.13/classes"
 JAR=$(ls -t target/scala-2.13/*.jar 2>/dev/null | head -1 || true)
-if [[ -d "$CLASSES" ]]; then CP="$CLASSES"; elif [[ -n "$JAR" ]]; then CP="$JAR";
+# `sbt compile` does not copy src/main/resources into the classes dir, so
+# the source tree's resources go on the classpath after it: without them
+# the graft-lake-cdc DataSourceRegister service file is missing and the
+# stream_lake_cdc_source gate fails with DATA_SOURCE_NOT_FOUND.
+if [[ -d "$CLASSES" ]]; then CP="$CLASSES:src/main/resources"; elif [[ -n "$JAR" ]]; then CP="$JAR";
 else echo "no build output under target/scala-2.13 — run: sbt -batch package" >&2; exit 1; fi
 
 ADD_OPENS=""
@@ -27,6 +31,5 @@ done
 exec java $ADD_OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing \
-  -Dspark.ui.enabled=false -Dspark.ui.showConsoleProgress=false \
-  -Dspark.sql.session.timeZone=UTC \
+  -Dspark.ui.showConsoleProgress=false \
   -cp "$CP:/opt/spark/jars/*" "$MAIN" "${@:2}"
