@@ -35,6 +35,15 @@ object Compat {
   private val unitSeconds: Map[String, Long] =
     Map("second" -> 1L, "minute" -> 60L, "hour" -> 3600L, "day" -> 86400L, "week" -> 604800L)
 
+  /** The Spark builtins graft deliberately replaces, each with why;
+    * every other graft name is new to Spark (CompatFunctionsSpec
+    * checks both). */
+  val builtinOverrides: Map[String, String] = Map(
+    "dayname" -> "full day names (Monday), not Spark's 3-letter ones",
+    "monthname" -> "full month names (March), not Spark's 3-letter ones",
+    "bitmap_count" -> "cardinality of graft's serialized Roaring bitmaps, not Spark's bit-position bitmaps",
+    "approx_top_k" -> "the reference's (item, k) form, sorted by (count desc, item asc), as its gates pin")
+
   /** (name, builder) pairs — consumed by both session-level `register`
     * and the `GraftExtensions` SparkSessionExtensions entry point. */
   lazy val injections: Seq[(String, Seq[Expression] => Expression)] = {
@@ -135,9 +144,6 @@ object Compat {
     f("money_format") { es => call("format_number", Cast(es.head, DoubleType), lit(2)) }
     f("strleft") { es => call("left", es: _*) }
     f("strright") { es => call("right", es: _*) }
-    f("lcase") { es => call("lower", es: _*) }
-    f("ucase") { es => call("upper", es: _*) }
-    f("char_length") { es => call("length", es: _*) }
     f("ends_with") { es => call("endswith", es: _*) }
     f("starts_with") { es => call("startswith", es: _*) }
     f("null_or_empty") { es => Or(IsNull(es.head), EqualTo(es.head, lit(""))) }
@@ -294,7 +300,6 @@ object Compat {
     f("array_sum") { es => ArraySumAvg(es.head, isAvg = false) }
     f("array_avg") { es => ArraySumAvg(es.head, isAvg = true) }
     f("array_length") { es => call("size", es.head) }
-    f("cardinality") { es => call("size", es.head) }
     f("array_cum_sum") { es => ArrayCumSum(es.head) }
     f("array_difference") { es => ArrayDifference(es.head) }
     f("array_contains_all") { es => ArrayContainsAll(es.head, es(1)) }
@@ -382,7 +387,6 @@ object Compat {
     f("dceil") { es => call("ceil", es: _*) }
     f("dfloor") { es => call("floor", es: _*) }
     f("dpow") { es => call("pow", es: _*) }
-    f("dexp") { es => call("exp", es: _*) }
 
     // --- JSON compat (reference json_functions.cpp typed getters) ---
     f("get_json_string") { es => call("get_json_object", es: _*) }

@@ -310,8 +310,6 @@ object CompatExtra {
     // bitmap_functions.cpp bitmap_hash64) — Roaring64 stores the full
     // signed range, so the xxhash64 value goes in directly
     f("bitmap_hash64") { es => graft.functions.agg.ToBitmap(call("xxhash64", es.head)) }
-    // bitmap_from_binary: parse-and-revalidate our serialized format
-    f("bitmap_from_binary") { es => call("bitmap_and", es.head, es.head) }
 
     // --- aggregate kernels (agg/EventAggs.scala) ---
     f("retention") { es => graft.functions.agg.RetentionAgg(es.head) }

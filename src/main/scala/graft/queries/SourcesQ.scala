@@ -627,11 +627,11 @@ object SourcesQ extends graft.QueryArea {
       }
       reads.reduce(_ unionByName _).orderBy(col("version"))
     }),
-    // Iceberg WRITE-path interop (sources/IcebergExport.scala;
+    // Iceberg WRITE-path interop (sources/IcebergWrite.scala;
     // reference ICEBERG_TABLE_SINK): Lake commits export spec-shaped
     // Iceberg metadata over the SAME data files (no copies); the
     // protocol reader replays latest + snapshot-id time travel.
-    // REAL-SPEC Iceberg v2 interop (IcebergReal): manifests with the
+    // REAL-SPEC Iceberg v2 interop (IcebergWrite): manifests with the
     // Java implementation's exact Avro schemas — field-ids 500-519 /
     // 0-4 / 100-142, ["null",T] optionals, typed r102 partition
     // records (date = logicalType-date day ordinals), k*_v* bounds
@@ -646,18 +646,18 @@ object SourcesQ extends graft.QueryArea {
       val o = t(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"),
           trunc(to_date(col("o_orderdate")), "year").as("o_year"))
-      graft.sources.IcebergReal.commitAppend(
-        o.filter(col("o_orderkey") % 2 === 0), table, Seq("o_year"))
-      graft.sources.IcebergReal.commitAppend(
-        o.filter(col("o_orderkey") % 2 === 1), table, Seq("o_year"))
+      graft.sources.IcebergWrite.append(
+        o.filter(col("o_orderkey") % 2 === 0), table, Seq("o_year" -> "identity"))
+      graft.sources.IcebergWrite.append(
+        o.filter(col("o_orderkey") % 2 === 1), table, Seq("o_year" -> "identity"))
       graft.sources.IcebergRead.read(spark, table)
         .groupBy(year(col("o_year")).cast("int").as("y"))
         .agg(count(lit(1)).as("n"),
           sum(col("o_totalprice").cast("decimal(18,6)")).cast("double").as("total"))
         .orderBy(col("y"))
     }),
-    // REAL-SPEC Iceberg v2 MERGE-ON-READ (IcebergReal
-    // .commitPositionDeletes): content=1 DELETE manifests whose
+    // REAL-SPEC Iceberg v2 MERGE-ON-READ (IcebergWrite
+    // .positionDeletes): content=1 DELETE manifests whose
     // entries are full v2 data_file structs (content=1, typed
     // partition records), position-delete parquet with the spec's
     // reserved field-ids, sequence-number scoping — a LATER append's
@@ -672,14 +672,14 @@ object SourcesQ extends graft.QueryArea {
         .select(col("o_orderkey"), col("o_totalprice"),
           trunc(to_date(col("o_orderdate")), "year").as("o_year"))
       val late = col("o_orderkey") % 2 === 1 && col("o_orderkey") % 5 === 2
-      graft.sources.IcebergReal.commitAppend(
-        o.filter(col("o_orderkey") % 2 === 0), table, Seq("o_year"))
-      graft.sources.IcebergReal.commitAppend(
-        o.filter(col("o_orderkey") % 2 === 1 && !late), table, Seq("o_year"))
-      graft.sources.IcebergReal.commitPositionDeletes(spark, table,
+      graft.sources.IcebergWrite.append(
+        o.filter(col("o_orderkey") % 2 === 0), table, Seq("o_year" -> "identity"))
+      graft.sources.IcebergWrite.append(
+        o.filter(col("o_orderkey") % 2 === 1 && !late), table, Seq("o_year" -> "identity"))
+      graft.sources.IcebergWrite.positionDeletes(spark, table,
         col("o_orderkey") % 3 === 0)
-      graft.sources.IcebergReal.commitAppend(
-        o.filter(late), table, Seq("o_year"))
+      graft.sources.IcebergWrite.append(
+        o.filter(late), table, Seq("o_year" -> "identity"))
       graft.sources.IcebergRead.read(spark, table)
         .groupBy(year(col("o_year")).cast("int").as("y"))
         .agg(count(lit(1)).as("n"),
@@ -687,7 +687,7 @@ object SourcesQ extends graft.QueryArea {
         .orderBy(col("y"))
     }),
     // REAL-SPEC Iceberg v2 EQUALITY deletes (the Flink-CDC encoding;
-    // IcebergReal.commitEqualityDeletes): content=1 DELETE manifest
+    // IcebergWrite.equalityDeletes): content=1 DELETE manifest
     // whose data_file is content=2 with equality_ids naming the
     // TABLE field-ids; the delete parquet carries exactly the
     // equality columns under those footer ids. Scoping is STRICT
@@ -705,16 +705,16 @@ object SourcesQ extends graft.QueryArea {
         .select(col("o_orderkey"), col("o_totalprice"),
           trunc(to_date(col("o_orderdate")), "year").as("o_year"))
       val upsert = col("o_orderkey") % 2 === 1 && col("o_orderkey") % 7 === 3
-      graft.sources.IcebergReal.commitAppend(
-        o.filter(col("o_orderkey") % 2 === 0), table, Seq("o_year"))
-      graft.sources.IcebergReal.commitAppend(
-        o.filter(col("o_orderkey") % 2 === 1 && !upsert), table, Seq("o_year"))
-      graft.sources.IcebergReal.commitEqualityDeletes(spark, table,
+      graft.sources.IcebergWrite.append(
+        o.filter(col("o_orderkey") % 2 === 0), table, Seq("o_year" -> "identity"))
+      graft.sources.IcebergWrite.append(
+        o.filter(col("o_orderkey") % 2 === 1 && !upsert), table, Seq("o_year" -> "identity"))
+      graft.sources.IcebergWrite.equalityDeletes(spark, table,
         o.filter(col("o_orderkey") % 5 === 0)
           .select(col("o_orderkey"), col("o_year")),
         Seq("o_orderkey", "o_year"))
-      graft.sources.IcebergReal.commitAppend(
-        o.filter(upsert), table, Seq("o_year"))
+      graft.sources.IcebergWrite.append(
+        o.filter(upsert), table, Seq("o_year" -> "identity"))
       graft.sources.IcebergRead.read(spark, table)
         .groupBy(year(col("o_year")).cast("int").as("y"))
         .agg(count(lit(1)).as("n"),
@@ -728,7 +728,7 @@ object SourcesQ extends graft.QueryArea {
       graft.sources.Lake.write(o.filter(col("o_orderkey") % 3 === 0), table, Nil)
       graft.sources.Lake.write(o.filter(col("o_orderkey") % 3 === 1), table, Nil, mode = "append")
       graft.sources.Lake.delete(spark, table, col("o_orderkey") % 6 === 1)
-      graft.sources.IcebergExport.exportIcebergMeta(spark, table)
+      graft.sources.IcebergWrite.exportLake(spark, table)
       val reads = Seq(1L -> Some(2L), 2L -> None).map { case (tag, v) =>
         graft.sources.IcebergRead.read(spark, table, v)
           .agg(count(lit(1)).as("n"),
@@ -751,7 +751,7 @@ object SourcesQ extends graft.QueryArea {
         table, Seq("o_orderpriority"))
       graft.sources.Lake.write(o.filter(col("o_orderkey") % 2 === 1),
         table, Seq("o_orderpriority"), mode = "append")
-      graft.sources.IcebergExport.exportIcebergMeta(spark, table)
+      graft.sources.IcebergWrite.exportLake(spark, table)
       graft.sources.IcebergRead.read(spark, table)
         .filter(col("o_orderpriority").isin("1-URGENT", "3-MEDIUM"))
         .groupBy(col("o_orderpriority"))
@@ -796,7 +796,7 @@ object SourcesQ extends graft.QueryArea {
           col("o_orderdate"))
         .filter(col("o_orderdate") >= lit("1996-03-01") &&
           col("o_orderdate") < lit("1996-03-16"))
-      graft.sources.IcebergExport.commitTransformSnapshot(o.coalesce(1),
+      graft.sources.IcebergWrite.append(o.coalesce(1),
         table, Seq("o_orderdate" -> "day", "o_custkey" -> "bucket[4]"))
       val minKey = o.agg(min(col("o_custkey"))).head.getLong(0)
       val rangeProbe = graft.sources.IcebergRead.readPruned(spark, table,
@@ -829,7 +829,7 @@ object SourcesQ extends graft.QueryArea {
             .otherwise(col("o_totalprice")).as("o_totalprice"),
           col("o_orderpriority"))
       graft.sources.Lake.mergeMor(spark, table, src, Seq("o_orderkey"))
-      graft.sources.IcebergExport.exportIcebergMeta(spark, table)
+      graft.sources.IcebergWrite.exportLake(spark, table)
       graft.sources.IcebergRead.read(spark, table)
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"),
@@ -837,7 +837,7 @@ object SourcesQ extends graft.QueryArea {
           min(col("o_orderkey")).as("min_key"), max(col("o_orderkey")).as("max_key"))
         .orderBy(col("o_orderpriority"))
     }),
-    // Iceberg v2 CDC upserts: three commitCdcBatch batches (the
+    // Iceberg v2 CDC upserts: three IcebergWrite.cdcBatch batches (the
     // Flink-upsert-sink shape — per batch one data file + one
     // equality-delete file of the batch's keys at the same sequence
     // number), read back with sequence-aware equality-delete masking:
@@ -847,15 +847,15 @@ object SourcesQ extends graft.QueryArea {
       graft.sources.Formats.deleteDir(spark, table)
       val o = t(spark, dir, "orders").select(col("o_orderkey"),
         col("o_totalprice"), col("o_orderpriority"))
-      graft.sources.IcebergRead.commitCdcBatch(o, table, Seq("o_orderkey"))
-      graft.sources.IcebergRead.commitCdcBatch(
+      graft.sources.IcebergWrite.cdcBatch(o, table, Seq("o_orderkey"))
+      graft.sources.IcebergWrite.cdcBatch(
         o.filter(col("o_orderkey") % 7 === 3)
           .select(col("o_orderkey"), (col("o_totalprice") * 10).as("o_totalprice"),
             col("o_orderpriority")),
         table, Seq("o_orderkey"),
         deleteKeys = Some(o.filter(col("o_orderkey") % 7 === 5)
           .select(col("o_orderkey"))))
-      graft.sources.IcebergRead.commitCdcBatch(
+      graft.sources.IcebergWrite.cdcBatch(
         o.filter(col("o_orderkey") % 14 === 5)
           .select(col("o_orderkey"), lit(1.0).as("o_totalprice"),
             col("o_orderpriority")),
@@ -917,13 +917,13 @@ object SourcesQ extends graft.QueryArea {
       val table = tmpDir(dir, "iceberg_ext")
       graft.sources.Formats.deleteDir(spark, table)
       val o = t(spark, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
-      graft.sources.IcebergRead.commitSnapshot(
+      graft.sources.IcebergWrite.append(
         o.filter(col("o_orderkey") % 3 === 0).coalesce(1), table)
-      val s2 = graft.sources.IcebergRead.commitSnapshot(
+      val s2 = graft.sources.IcebergWrite.append(
         o.filter(col("o_orderkey") % 3 === 1).coalesce(1), table)
-      graft.sources.IcebergRead.commitSnapshot(
+      graft.sources.IcebergWrite.append(
         o.filter(col("o_orderkey") % 3 === 2).coalesce(1), table,
-        carryForward = false)
+        overwrite = true)
       val reads = Seq(1 -> Some(s2), 2 -> None).map { case (tag, snap) =>
         graft.sources.IcebergRead.read(spark, table, snap)
           .agg(count(lit(1)).as("n"),

@@ -18,8 +18,9 @@ import org.apache.spark.sql.SparkSession
   * readers cannot open an un-completed file).
   *
   * Used by every commit record in the repo: Lake manifests, LakeTx
-  * catalog versions, Delta/Iceberg/Hudi export metadata, and the
-  * VectorIndex model publish. */
+  * catalog versions, Delta/Hudi export metadata, every Iceberg
+  * metadata version ([[IcebergWrite]]), and the VectorIndex model
+  * publish. */
 object AtomicPublish {
 
   def publish(spark: SparkSession, path: Path, bytes: Array[Byte]): Unit = {

@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   * i zero-padded, so instant-asOf time travel through [[HudiRead]]
   * replays the same history [[Lake.read]] serves.
   *
-  * Idempotent + incremental like [[DeltaExport]]/[[IcebergExport]]:
+  * Idempotent + incremental like [[DeltaExport]]/[[IcebergWrite.exportLake]]:
   * existing instants are skipped; O(changed files) metadata, no data
   * copies. */
 object HudiExport {
@@ -61,7 +61,7 @@ object HudiExport {
     require(snapOf(cur).dvFiles.isEmpty,
       s"current Lake snapshot v$cur carries pending delete vectors — " +
         s"run Lake.foldDeletes before Hudi export (or export via " +
-        s"IcebergExport, which emits format v2 position deletes)")
+        s"IcebergWrite.exportLake, which emits format v2 position deletes)")
     val cleanVs = (1 to cur).filter(v => snapOf(v).dvFiles.isEmpty)
     var last = ""
     cleanVs.zipWithIndex.foreach { case (v, i) =>

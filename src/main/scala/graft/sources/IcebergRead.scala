@@ -1,9 +1,10 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.avro.{Schema, SchemaBuilder}
-import org.apache.avro.file.{DataFileStream, DataFileWriter}
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.avro.file.DataFileStream
+import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -18,50 +19,47 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Field access is BY NAME off each Avro record's writer schema
   * (`manifest_path`, `status`, `data_file.file_path`), so the reader
   * accepts real Iceberg files regardless of the extra fields real
-  * writers emit. Status 2 (DELETED) drops an entry; position/equality
-  * delete files (format v2 row-level deletes) are out of scope —
-  * append/overwrite snapshots only. Metadata is KBs on the driver;
-  * the data scan is a plain pruned parquet read.
+  * writers emit. Status 2 (DELETED) drops an entry. Format v2
+  * row-level deletes are applied at read time: position deletes by
+  * (file, row) anti-join, equality deletes by key anti-join scoped to
+  * data files sequenced strictly below the delete — both only on the
+  * files they can touch. Metadata is KBs on the driver; the data scan
+  * is a pruned parquet read. This object only reads; graft's Iceberg
+  * writer is [[IcebergWrite]].
   */
 object IcebergRead {
 
   private def fs(spark: SparkSession, p: String) =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private[sources] def latestMetadata(spark: SparkSession, table: String): Path = {
-    val dir = new Path(s"$table/metadata")
-    val f = fs(spark, table)
-    if (!f.exists(dir)) throw new IllegalArgumentException(
-      s"not an iceberg table (no metadata/): $table")
-    val metas = f.listStatus(dir).map(_.getPath)
-      .filter(_.getName.endsWith(".metadata.json"))
-    require(metas.nonEmpty, s"no *.metadata.json under $table/metadata")
-    // HadoopCatalog names are v1.metadata.json, v2... UNPADDED, so a
-    // lexicographic max serves v9 over v10 — parse the numeric version
-    // and fall back to name order for UUID-style metadata names.
-    def versionOf(p: Path): Option[Long] = {
-      val stem = p.getName.stripSuffix(".metadata.json")
-      val digits = if (stem.startsWith("v")) stem.drop(1) else stem.takeWhile(_.isDigit)
-      if (digits.nonEmpty && digits.forall(_.isDigit)) Some(digits.toLong) else None
-    }
-    metas.maxBy(p => (versionOf(p).getOrElse(-1L), p.getName))
+  /** Version of a metadata file name: HadoopCatalog names are
+    * v1.metadata.json, v2... UNPADDED, so a lexicographic max would
+    * serve v9 over v10; UUID-style names of foreign writers parse to
+    * their digit prefix or None. */
+  private[sources] def metadataVersion(p: Path): Option[Long] = {
+    val stem = p.getName.stripSuffix(".metadata.json")
+    val digits = if (stem.startsWith("v")) stem.drop(1) else stem.takeWhile(_.isDigit)
+    if (digits.nonEmpty && digits.forall(_.isDigit)) Some(digits.toLong) else None
   }
 
-  /** Next commit version: max over PARSEABLE metadata versions + 1.
-    * UUID-style metadata names (foreign writers) parse to None and are
-    * ignored rather than crashing the append — same digit tolerance as
-    * [[latestMetadata]]. */
-  private[sources] def nextVersion(f: org.apache.hadoop.fs.FileSystem, table: String): Long = {
+  /** The newest metadata.json by parsed version (name order for
+    * unparseable names); None when the table has none yet. */
+  private[sources] def latestMetadataOpt(spark: SparkSession, table: String): Option[Path] = {
     val dir = new Path(s"$table/metadata")
-    if (!f.exists(dir)) 1L
-    else f.listStatus(dir).map(_.getPath.getName)
-      .filter(_.endsWith(".metadata.json"))
-      .flatMap { n =>
-        val stem = n.stripSuffix(".metadata.json")
-        val digits = if (stem.startsWith("v")) stem.drop(1) else stem.takeWhile(_.isDigit)
-        if (digits.nonEmpty && digits.forall(_.isDigit)) Some(digits.toLong) else None
-      }
-      .foldLeft(0L)(math.max) + 1
+    val f = fs(spark, table)
+    if (!f.exists(dir)) None
+    else f.listStatus(dir).map(_.getPath)
+      .filter(_.getName.endsWith(".metadata.json"))
+      .maxByOption(p => (metadataVersion(p).getOrElse(-1L), p.getName))
+  }
+
+  private[sources] def latestMetadata(spark: SparkSession, table: String): Path =
+    latestMetadataOpt(spark, table).getOrElse(throw new IllegalArgumentException(
+      s"not an iceberg table (no metadata/*.metadata.json): $table"))
+
+  private def latestMetadataJson(spark: SparkSession, table: String): JsonNode = {
+    val in = fs(spark, table).open(latestMetadata(spark, table))
+    try new ObjectMapper().readTree(in) finally in.close()
   }
 
   private[graft] def readAvroRecords(spark: SparkSession, path: String): Seq[GenericRecord] = {
@@ -98,11 +96,7 @@ object IcebergRead {
     * sequence 0. */
   private def manifestsOf(spark: SparkSession, table: String,
       snapshotId: Option[Long]): Seq[(String, Int, Long)] = {
-    val mapper = new ObjectMapper()
-    val f = fs(spark, table)
-    val metaPath = latestMetadata(spark, table)
-    val in = f.open(metaPath)
-    val meta = try mapper.readTree(in) finally in.close()
+    val meta = latestMetadataJson(spark, table)
     val snaps = meta.get("snapshots")
     require(snaps != null && snaps.size() > 0, "metadata has no snapshots")
     val wanted = snapshotId.getOrElse(meta.get("current-snapshot-id").asLong)
@@ -161,12 +155,6 @@ object IcebergRead {
     manifestsOf(spark, table, snapshotId).filter(_._2 == 0)
       .flatMap(m => entriesOf(spark, m._1, m._3))
 
-  /** [[manifestsOf]] for sibling writers that carry prior manifests
-    * forward ([[IcebergExport.commitTransformSnapshot]]). */
-  private[sources] def manifestTriples(spark: SparkSession, table: String,
-      snapshotId: Option[Long]): Seq[(String, Int, Long)] =
-    manifestsOf(spark, table, snapshotId)
-
   /** Position-delete files of a snapshot (format v2 merge-on-read:
     * parquet files of (`file_path`, `pos`) rows recording deleted
     * row ordinals, listed by content=1 delete manifests). Entries
@@ -190,82 +178,59 @@ object IcebergRead {
       .flatMap(m => entriesOf(spark, m._1, m._3))
       .filter(_.fileContent == 2).map(e => (e.path, e.seq))
 
-  /** The default partition spec's (name, iceberg-type) fields from the
-    * latest metadata.json; empty for unpartitioned tables. */
-  def partitionSpecFields(spark: SparkSession, table: String): Seq[(String, String)] = {
-    val mapper = new ObjectMapper()
-    val f = fs(spark, table)
-    val in = f.open(latestMetadata(spark, table))
-    val meta = try mapper.readTree(in) finally in.close()
-    val specs = meta.get("partition-specs")
-    if (specs == null || specs.size() == 0) return Nil
-    val specId = Option(meta.get("default-spec-id")).map(_.asInt).getOrElse(0)
-    val buf = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    specs.forEach { sp =>
-      if (Option(sp.get("spec-id")).map(_.asInt).getOrElse(0) == specId)
-        sp.get("fields").forEach { fl =>
-          val tr = Option(fl.get("transform")).map(_.asText).getOrElse("identity")
-          if (tr == "identity")
-            buf += fl.get("name").asText ->
-              Option(fl.get("type")).map(_.asText).getOrElse("string")
-        }
-    }
-    buf.toSeq
+  /** The default partition spec's fields from the latest
+    * metadata.json, each with its source column's (name, iceberg type)
+    * resolved through the current schema (`source-id` → `schemas`);
+    * empty for unpartitioned tables. */
+  private def defaultSpec(spark: SparkSession,
+      table: String): Seq[(JsonNode, Option[(String, String)])] = {
+    val meta = latestMetadataJson(spark, table)
+    def idOf(n: JsonNode, key: String) = Option(n.get(key)).map(_.asInt).getOrElse(0)
+    def all(n: JsonNode): Seq[JsonNode] = Option(n).toSeq.flatMap(_.asScala)
+    val sources = all(meta.get("schemas"))
+      .filter(idOf(_, "schema-id") == idOf(meta, "current-schema-id"))
+      .flatMap(sc => all(sc.get("fields")))
+      .map(fl => fl.get("id").asInt -> (fl.get("name").asText, fl.get("type").asText))
+      .toMap
+    all(meta.get("partition-specs"))
+      .filter(idOf(_, "spec-id") == idOf(meta, "default-spec-id"))
+      .flatMap(sp => all(sp.get("fields")))
+      .map(fl => fl -> Option(fl.get("source-id")).map(_.asInt).flatMap(sources.get))
   }
+
+  private def transformOf(field: JsonNode): String =
+    Option(field.get("transform")).map(_.asText).getOrElse("identity")
+
+  /** The default partition spec's identity fields as (name, iceberg
+    * type): the type of the `source-id` column in the current schema,
+    * else the field's own `type` key, else string. */
+  def partitionSpecFields(spark: SparkSession, table: String): Seq[(String, String)] =
+    defaultSpec(spark, table).collect { case (fl, src) if transformOf(fl) == "identity" =>
+      fl.get("name").asText -> src.map(_._2)
+        .orElse(Option(fl.get("type")).map(_.asText)).getOrElse("string")
+    }
 
   /** One field of the default partition spec, TRANSFORM-AWARE:
     * `sourceName` resolves through the metadata's `schemas` section
-    * (source-id → field name); identity fields without a schemas
-    * section (this repo's Lake export predates it) fall back to the
-    * spec-field name, which identity makes equal by construction. */
+    * (source-id → field name); identity fields without one fall back
+    * to the spec-field name, which identity makes equal by
+    * construction. */
   final case class SpecField(name: String,
-      transform: IcebergTransforms.Transform,
-      sourceName: Option[String], resultType: String)
+      transform: IcebergTransforms.Transform, sourceName: Option[String])
 
   /** The full default partition spec — every field including
     * year/month/day/hour/bucket/truncate transforms (the identity-only
-    * view is [[partitionSpecFields]], kept for the Lake-export read
-    * path whose data files lack the partition columns). */
-  def partitionSpecFull(spark: SparkSession, table: String): Seq[SpecField] = {
-    val mapper = new ObjectMapper()
-    val f = fs(spark, table)
-    val in = f.open(latestMetadata(spark, table))
-    val meta = try mapper.readTree(in) finally in.close()
-    val specs = meta.get("partition-specs")
-    if (specs == null || specs.size() == 0) return Nil
-    // schemas: field id -> name (current schema)
-    val idToName = scala.collection.mutable.Map[Int, String]()
-    val schemas = meta.get("schemas")
-    if (schemas != null) {
-      val curId = Option(meta.get("current-schema-id")).map(_.asInt).getOrElse(0)
-      schemas.forEach { sc =>
-        if (Option(sc.get("schema-id")).map(_.asInt).getOrElse(0) == curId) {
-          val flds = sc.get("fields")
-          if (flds != null) flds.forEach(fl =>
-            idToName(fl.get("id").asInt) = fl.get("name").asText)
-        }
+    * view is [[partitionSpecFields]]); void and unknown transforms are
+    * skipped (unprunable, every file kept). */
+  def partitionSpecFull(spark: SparkSession, table: String): Seq[SpecField] =
+    defaultSpec(spark, table).flatMap { case (fl, src) =>
+      val name = fl.get("name").asText
+      val tr = try Some(IcebergTransforms.parse(transformOf(fl))) catch {
+        case _: IllegalArgumentException => None
       }
+      tr.map(t => SpecField(name, t, src.map(_._1)
+        .orElse(if (t.kind == "identity") Some(name) else None)))
     }
-    val specId = Option(meta.get("default-spec-id")).map(_.asInt).getOrElse(0)
-    val buf = scala.collection.mutable.ArrayBuffer[SpecField]()
-    specs.forEach { sp =>
-      if (Option(sp.get("spec-id")).map(_.asInt).getOrElse(0) == specId)
-        sp.get("fields").forEach { fl =>
-          val trStr = Option(fl.get("transform")).map(_.asText).getOrElse("identity")
-          val tr = try Some(IcebergTransforms.parse(trStr)) catch {
-            case _: IllegalArgumentException => None // void etc: unprunable, keep files
-          }
-          tr.foreach { t =>
-            val name = fl.get("name").asText
-            val src = Option(fl.get("source-id")).map(_.asInt).flatMap(idToName.get)
-              .orElse(if (t.kind == "identity") Some(name) else None)
-            buf += SpecField(name, t, src,
-              Option(fl.get("type")).map(_.asText).getOrElse("string"))
-          }
-        }
-    }
-    buf.toSeq
-  }
 
   /** Spark DataType for an iceberg primitive type name, restricted to
     * the types the manifest-backed FileIndex can cast a partition
@@ -444,7 +409,7 @@ object IcebergRead {
     val dataSchema = spark.read.parquet(entries.head.path).schema
     // the Iceberg NORM keeps identity source columns IN the data files
     // (partition values are derivable metadata) — real-engine tables
-    // and [[IcebergReal]] look like this; attaching manifest values on
+    // and [[IcebergWrite]]'s look like this; attaching manifest values on
     // top would duplicate the columns. Prune through the transform
     // index (identity is a transform) instead of re-attaching; the
     // attach path below remains for the Lake export's stripped layout.
@@ -458,6 +423,14 @@ object IcebergRead {
       org.apache.spark.sql.types.StructField(c, sparkTypeOf(t)) }
     val fullSchema = org.apache.spark.sql.types.StructType(
       dataSchema.fields.toSeq ++ partFields)
+    // a real-shape date partition value is a day ordinal; the index
+    // casts the ISO form
+    val dateCols = specFields.collect { case (c, "date") => c }.toSet
+    def typed(pv: Map[String, String]) = pv.map {
+      case (c, s) if dateCols(c) && s.matches("-?\\d+") =>
+        c -> java.time.LocalDate.ofEpochDay(s.toLong).toString
+      case kv => kv
+    }
     val lakeFiles = entries.map { e =>
       val (size, mod) = e.sizeBytes match {
         case Some(s) => (s, 0L)
@@ -466,7 +439,7 @@ object IcebergRead {
           (st.getLen, st.getModificationTime)
       }
       Lake.LakeFile(e.path, size, mod, e.recordCount.getOrElse(0L),
-        e.partitionValues)
+        typed(e.partitionValues))
     }
     val snap = Lake.Snapshot(
       snapshotId.getOrElse(0L).toInt, 0L, fullSchema.json,
@@ -575,8 +548,8 @@ object IcebergRead {
     * shapes keep all files, and the FULL predicate is re-applied to
     * the surviving rows — pruning can only skip I/O, never change
     * results (the BloomIndex contract). Data files must carry the
-    * source columns (true for [[IcebergExport.commitTransformSnapshot]]
-    * and ecosystem writers; the Lake identity export reads through
+    * source columns (true for [[IcebergWrite.append]] and ecosystem
+    * writers; the Lake identity export reads through
     * [[readIndexed]]'s manifest-backed index instead). */
   def readPruned(spark: SparkSession, table: String,
       predicate: org.apache.spark.sql.Column,
@@ -744,204 +717,5 @@ object IcebergRead {
         rangePreds(a.name, v, +1)
       case _ => Nil
     }
-  }
-
-  // ---- minimal spec-shaped layout writer (tests + gate) ----
-
-  /** Entry schema for exports: data_file carries the spec's
-    * `file_size_in_bytes` / `record_count` stats (so a reader plans
-    * splits without stat-ing the filesystem) and, when partitioned, a
-    * `partition` struct (identity values as nullable strings, one
-    * field per partition column) — the spec's partition-struct shape. */
-  private[sources] def manifestEntrySchemaFor(partitionCols: Seq[String]): Schema = {
-    var db = SchemaBuilder.record("data_file").fields()
-      .requiredString("file_path")
-      .optionalLong("file_size_in_bytes")
-      .optionalLong("record_count")
-    if (partitionCols.nonEmpty) {
-      var pb = SchemaBuilder.record("r102").fields()
-      partitionCols.foreach(c => pb = pb.optionalString(c))
-      db = db.name("partition").`type`(pb.endRecord()).noDefault()
-    }
-    SchemaBuilder.record("manifest_entry").fields()
-      .requiredInt("status")
-      .name("data_file").`type`(db.endRecord()).noDefault()
-      .endRecord()
-  }
-
-  /** Manifest-list entry: `content` distinguishes data (0/absent)
-    * from delete (1) manifests, `sequence_number` orders commits for
-    * equality-delete application — both format v2 fields; writers
-    * that never emit deletes leave them null and readers default to
-    * data / sequence 0. */
-  private[sources] val manifestFileSchema: Schema = SchemaBuilder.record("manifest_file")
-    .fields().requiredString("manifest_path").optionalInt("content")
-    .optionalLong("sequence_number").endRecord()
-
-  private[sources] def writeAvro(spark: SparkSession, path: String, schema: Schema,
-      records: Seq[GenericRecord]): Unit = {
-    val f = fs(spark, path)
-    val out = f.create(new Path(path), true)
-    val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
-    w.create(schema, out)
-    try records.foreach(w.append) finally w.close()
-  }
-
-  /** Commit a CDC upsert batch in the format v2 merge-on-read shape a
-    * Flink/Iceberg upsert sink produces: the batch's rows land as a
-    * NEW data file at the next sequence number, and the batch's KEY
-    * VALUES land as an EQUALITY-DELETE file at the same sequence —
-    * erasing any older image of each key, while the batch's own rows
-    * survive because the spec applies an equality delete only to
-    * sequences strictly BELOW its own. Optional `deleteKeys` rows are
-    * tombstones: keys erased without replacement. The batch should be
-    * key-distinct (duplicate keys in one batch both land). Prior
-    * manifests carry forward verbatim at their recorded sequences.
-    * Cost is O(batch) metadata + data per commit at any table size.
-    * Returns the snapshot id. */
-  def commitCdcBatch(upserts: DataFrame, table: String,
-      keyCols: Seq[String],
-      deleteKeys: Option[DataFrame] = None): Long = {
-    val spark = upserts.sparkSession
-    keyCols.foreach(k => require(upserts.columns.contains(k),
-      s"upsert batch missing key column $k"))
-    val f = fs(spark, table)
-    f.mkdirs(new Path(s"$table/data"))
-    f.mkdirs(new Path(s"$table/metadata"))
-    val version = nextVersion(f, table)
-    val seq = version
-    def onefile(df: DataFrame, dest: String): (String, Long) = {
-      val staging = s"$table/_staging_cdc_$version"
-      df.coalesce(1).write.mode("overwrite").parquet(staging)
-      val part = f.listStatus(new Path(staging))
-        .filter(_.getPath.getName.endsWith(".parquet")).head
-      require(f.rename(part.getPath, new Path(dest)),
-        s"failed to install $dest")
-      // rename preserves length — carry the staging stat, no re-stat
-      f.delete(new Path(staging), true); (dest, part.getLen)
-    }
-    val (dataPath, dataLen) = onefile(upserts, s"$table/data/cdc-$version.parquet")
-    val delKeys = {
-      val fromUpserts = upserts.select(keyCols.map(org.apache.spark.sql.functions.col): _*)
-      deleteKeys.fold(fromUpserts)(d =>
-        fromUpserts.unionByName(d.select(
-          keyCols.map(org.apache.spark.sql.functions.col): _*))).distinct()
-    }
-    val (delPath, delLen) = onefile(delKeys, s"$table/data/cdc-eqdel-$version.parquet")
-    // rich v2 schemas: per-entry sequence numbers + data_file content
-    val dfSchema = SchemaBuilder.record("data_file").fields()
-      .requiredString("file_path").optionalInt("content")
-      .optionalLong("file_size_in_bytes").endRecord()
-    val entrySchema = SchemaBuilder.record("manifest_entry").fields()
-      .requiredInt("status").optionalLong("sequence_number")
-      .name("data_file").`type`(dfSchema).noDefault().endRecord()
-    val listSchema = SchemaBuilder.record("manifest_file").fields()
-      .requiredString("manifest_path").optionalInt("content")
-      .optionalLong("sequence_number").endRecord()
-    def entry(file: String, len: Long, content: Int) = {
-      val d = new GenericData.Record(dfSchema)
-      d.put("file_path", file); d.put("content", Int.box(content))
-      d.put("file_size_in_bytes", Long.box(len))
-      val e = new GenericData.Record(entrySchema)
-      e.put("status", 1); e.put("sequence_number", Long.box(seq))
-      e.put("data_file", d); e
-    }
-    val mData = s"$table/metadata/cdc-m$version.avro"
-    writeAvro(spark, mData, entrySchema, Seq(entry(dataPath, dataLen, 0)))
-    val mDel = s"$table/metadata/cdc-dm$version.avro"
-    writeAvro(spark, mDel, entrySchema, Seq(entry(delPath, delLen, 2)))
-    // carry prior manifests verbatim at their recorded (content, seq)
-    val prior: Seq[(String, Int, Long)] =
-      if (version == 1) Nil else manifestsOf(spark, table, None)
-    def listEntry(m: String, content: Int, s: Long) = {
-      val r = new GenericData.Record(listSchema)
-      r.put("manifest_path", m); r.put("content", Int.box(content))
-      r.put("sequence_number", Long.box(s)); r
-    }
-    val listPath = s"$table/metadata/snap-cdc-$version.avro"
-    writeAvro(spark, listPath, listSchema,
-      prior.map(p => listEntry(p._1, p._2, p._3)) :+
-        listEntry(mData, 0, seq) :+ listEntry(mDel, 1, seq))
-    val mapper = new ObjectMapper()
-    val priorSnaps = if (version == 1) "" else {
-      val in = f.open(latestMetadata(spark, table))
-      val meta = try mapper.readTree(in) finally in.close()
-      val sb = new StringBuilder
-      meta.get("snapshots").forEach(s =>
-        sb.append(mapper.writeValueAsString(s)).append(','))
-      sb.toString
-    }
-    val json = s"""{"format-version":2,"current-snapshot-id":$version,"snapshots":[$priorSnaps{"snapshot-id":$version,"manifest-list":${mapper.writeValueAsString(listPath)}}]}"""
-    val out = f.create(new Path(f"$table/metadata/v$version%05d.metadata.json"), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    version
-  }
-
-  /** Append a snapshot: the DataFrame's rows become data files listed
-    * by a fresh manifest + manifest list + metadata.json version.
-    * `carryForward` keeps previous snapshots' files live (append);
-    * without it the new snapshot replaces the table (overwrite). */
-  def commitSnapshot(df: DataFrame, table: String,
-      carryForward: Boolean = true): Long = {
-    val spark = df.sparkSession
-    val f = fs(spark, table)
-    val version = nextVersion(f, table)
-    val snapId = version
-    val staging = s"$table/_staging_v$version"
-    df.write.mode("overwrite").parquet(staging)
-    val parts = f.listStatus(new Path(staging))
-      .filter(_.getPath.getName.endsWith(".parquet"))
-    val dataPaths = parts.zipWithIndex.map { case (st, i) =>
-      val dest = s"$table/data/f$version-$i.parquet"
-      f.mkdirs(new Path(s"$table/data"))
-      require(f.rename(st.getPath, new Path(dest)),
-        s"failed to install $dest")
-      (dest, st.getLen) // rename preserves length — no re-stat
-    }.toSeq
-    f.delete(new Path(staging), true)
-    // the new manifest lists ONLY this commit's files; carried state
-    // rides the PRIOR manifest-list entries verbatim — flattening
-    // prior data files into a fresh manifest would silently DROP any
-    // delete manifests (and their sequence numbers) a CDC writer
-    // (commitCdcBatch) produced, resurrecting deleted rows
-    val priorManifests: Seq[(String, Int, Long)] =
-      if (!carryForward) Nil
-      else try manifestsOf(spark, table, None)
-      catch { case _: Exception => Nil }
-    val seq = priorManifests.map(_._3).foldLeft(0L)(math.max) + 1
-    val entrySchema = manifestEntrySchemaFor(Nil)
-    val entries = dataPaths.map { case (p, len) =>
-      val dfRec = new GenericData.Record(
-        entrySchema.getField("data_file").schema())
-      dfRec.put("file_path", p)
-      dfRec.put("file_size_in_bytes", Long.box(len))
-      val e = new GenericData.Record(entrySchema)
-      e.put("status", 1); e.put("data_file", dfRec); e
-    }
-    val manifestPath = s"$table/metadata/m$version.avro"
-    writeAvro(spark, manifestPath, entrySchema, entries)
-    def listEntry(m: String, content: Int, s: Long) = {
-      val r = new GenericData.Record(manifestFileSchema)
-      r.put("manifest_path", m); r.put("content", Int.box(content))
-      r.put("sequence_number", Long.box(s)); r
-    }
-    val listPath = s"$table/metadata/snap-$snapId.avro"
-    writeAvro(spark, listPath, manifestFileSchema,
-      priorManifests.map(p => listEntry(p._1, p._2, p._3)) :+
-        listEntry(manifestPath, 0, seq))
-    val mapper = new ObjectMapper()
-    // keep prior snapshots in the metadata so snapshotId time travel works
-    val priorSnaps = try {
-      val in = f.open(latestMetadata(spark, table))
-      val meta = try mapper.readTree(in) finally in.close()
-      val sb = new StringBuilder
-      meta.get("snapshots").forEach(s => sb.append(mapper.writeValueAsString(s)).append(','))
-      sb.toString
-    } catch { case _: Exception => "" }
-    val json =
-      s"""{"format-version":2,"current-snapshot-id":$snapId,"snapshots":[$priorSnaps{"snapshot-id":$snapId,"manifest-list":${mapper.writeValueAsString(listPath)}}]}"""
-    val out = f.create(new Path(f"$table/metadata/v$version%05d.metadata.json"), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    snapId
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
   * ecosystem's default table layouts partition by `days(ts)`,
   * `bucket(N, id)`, `truncate(W, s)` rather than raw column values,
   * and both sides of the interop need the SAME definition —
-  * [[IcebergExport.commitTransformSnapshot]] computes the transform
+  * [[IcebergWrite.append]] computes the transform
   * per row at write time (a Spark Column), and [[IcebergRead]]'s
   * transform-aware pruning computes it for predicate LITERALS at plan
   * time (driver-side Scala) to decide which files can match. The
@@ -54,14 +54,6 @@ object IcebergTransforms {
     case "bucket" => s"${src}_bucket"
     case "truncate" => s"${src}_trunc"
     case k => s"${src}_$k"
-  }
-
-  /** Iceberg result type of the transform (what metadata.json records
-    * for the spec field). */
-  def resultType(t: Transform, srcIcebergType: String): String = t.kind match {
-    case "identity" | "truncate" => srcIcebergType
-    case "day" => "date" // spec: day() result is date-comparable; int ordinal
-    case _ => "int"
   }
 
   /** Order-preserving transforms admit range pruning; bucket does not. */

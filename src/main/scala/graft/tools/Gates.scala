@@ -193,15 +193,17 @@ object Gates {
       once() // warm
       (once() + once()) / 2
     }
-    println(dirs.map(d => s" ${d.split('/').last} s |").mkString("| gate | what |", "", " last/first × |"))
-    println("|---|---|" + "---|" * dirs.size + "---|")
+    // the table carries '×': encode it as UTF-8 whatever stdout's charset
+    val out = new java.io.PrintStream(Console.out, true, "UTF-8")
+    out.println(dirs.map(d => s" ${d.split('/').last} s |").mkString("| gate | what |", "", " last/first × |"))
+    out.println("|---|---|" + "---|" * dirs.size + "---|")
     val sums = Array.fill(dirs.size)(0.0)
     for ((name, what) <- gates) {
       val ts = dirs.map(time(name, _))
       ts.indices.foreach(i => sums(i) += ts(i))
-      println(ts.map(t => f" $t%.3f |").mkString(s"| $name | $what |", "", f" ${ts.last / ts.head}%.1f× |"))
+      out.println(ts.map(t => f" $t%.3f |").mkString(s"| $name | $what |", "", f" ${ts.last / ts.head}%.1f× |"))
     }
-    println(sums.map(t => f" $t%.3f |").mkString("| **total** | |", "", f" ${sums.last / sums.head}%.1f× |"))
+    out.println(sums.map(t => f" $t%.3f |").mkString("| **total** | |", "", f" ${sums.last / sums.head}%.1f× |"))
   }
 
   /** SCALING.md's flagship table, with what each gate stresses. */

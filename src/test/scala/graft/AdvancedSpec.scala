@@ -45,12 +45,14 @@ class AdvancedSpec extends SparkSuite {
     }
     flatten("d1")
     def stream = spark.readStream.schema(e.schema).parquet(watch)
-    MaterializedViews.refreshIncremental(stream, mv, base, ckpt).awaitTermination(120000)
+    graft.streaming.Streams.runToEnd(spark, 120000)(
+      MaterializedViews.refreshIncremental(stream, mv, base, ckpt))
     val afterFirst = MaterializedViews.read(spark, base, "purchases").count()
 
     e.filter($"event_id" % 2 === 1).coalesce(1).write.parquet(s"$watch/d2")
     flatten("d2")
-    MaterializedViews.refreshIncremental(stream, mv, base, ckpt).awaitTermination(120000)
+    graft.streaming.Streams.runToEnd(spark, 120000)(
+      MaterializedViews.refreshIncremental(stream, mv, base, ckpt))
     val mvDf = MaterializedViews.read(spark, base, "purchases")
 
     val expected = mv.define(e)

@@ -114,6 +114,26 @@ class CompatFunctionsSpec extends SparkSuite {
       .toString === "2024-01-03")
   }
 
+  test("graft names register once and replace exactly the listed Spark builtins") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    val names = graft.functions.Compat.injections.map(_._1)
+    assert(names.diff(names.distinct).isEmpty, "registered twice")
+    assert(names.filter(n => FunctionRegistry.builtin.functionExists(FunctionIdentifier(n)))
+      .toSet === graft.functions.Compat.builtinOverrides.keySet)
+    // the Spark builtins behind graft's former copies answer exactly as
+    // the copies did (lower/upper/length/size) on null, empty, non-ASCII
+    val rows = spark.sql("""SELECT lcase(s), lower(s), ucase(s), upper(s),
+        |  char_length(s), length(s), cardinality(a), size(a)
+        |FROM VALUES (CAST(NULL AS STRING), CAST(NULL AS ARRAY<STRING>)),
+        |  ('', array()), ('Ärger STRASSE straße 😀', array('é', 'ß', '😀')) AS t(s, a)""".stripMargin)
+      .collect()
+    rows.foreach(r => (0 until 8 by 2).foreach(i =>
+      assert(r.get(i) == r.get(i + 1), s"column $i of $r")))
+    assert(rows.last.getString(0) === "ärger strasse straße 😀")
+    assert(rows.last.getInt(4) === 22 && rows.last.getInt(6) === 3)
+  }
+
   test("dayname / monthname") {
     assert(one("dayname(timestamp '2024-01-01')") === "Monday")
     assert(one("monthname(timestamp '2024-03-15')") === "March")

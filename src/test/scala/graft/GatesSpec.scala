@@ -10,11 +10,15 @@ class GatesSpec extends SparkSuite {
 
   private val gate = "q6_forecast_revenue"
 
-  private def out(args: String*): String = {
+  /** `Gates.run`'s stdout through a stream of the given charset, read
+    * back as UTF-8. */
+  private def outAs(charset: String)(args: String*): String = {
     val buf = new java.io.ByteArrayOutputStream()
-    Console.withOut(new java.io.PrintStream(buf, true, "UTF-8"))(Gates.run(spark, args.toArray))
+    Console.withOut(new java.io.PrintStream(buf, true, charset))(Gates.run(spark, args.toArray))
     buf.toString("UTF-8")
   }
+
+  private def out(args: String*): String = outAs("UTF-8")(args: _*)
 
   test("time reports cold, min and median for a gate and for SQL") {
     assert(out("time", sf, gate).matches(s"(?s)\\s*[0-9.]+ s median +[0-9.]+ s min +[0-9.]+ s cold \\| $gate\\s*"))
@@ -50,11 +54,22 @@ class GatesSpec extends SparkSuite {
     assert(o.head === "| gate | what | sf0.001 s | sf0.001 s | last/first × |", o)
     assert(o.exists(_.startsWith(s"| $gate |")) && o.last.startsWith("| **total** |"), o)
     intercept[IllegalArgumentException](Gates.run(spark, Array("scale", "no_such_set", sf)))
+    // a stdout that cannot encode '×' still receives it as UTF-8
+    assert(outAs("US-ASCII")("scale", s"only:$gate", sf).linesIterator.next()
+      === "| gate | what | sf0.001 s | last/first × |")
   }
 
   test("count agrees with the gate and oracle maps") {
     assert(out("count").linesIterator.next() === s"gates=${SparkEntry.queries.size} " +
       s"oracles=${SparkEntry.oracleSql.size} benchOnly=${graft.queries.Pipeline.benchOnly.size}")
+  }
+
+  test("README's oracle count is the one Gates count reports") {
+    val readme = new String(Files.readAllBytes(java.nio.file.Paths.get("README.md")), "UTF-8")
+    val counted = " oracles=(\\d+) ".r.findFirstMatchIn(out("count")).get.group(1).toInt
+    val claimed = "(\\d+) oracles total".r.findAllMatchIn(readme).map(_.group(1).toInt).toSeq
+    assert(claimed.nonEmpty, "README names no oracle count")
+    assert(claimed.toSet === Set(counted), s"README says ${claimed.mkString(", ")}")
   }
 
   test("fns lists only the names that do not resolve") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.IcebergRead
+import graft.sources.{IcebergRead, IcebergWrite}
 import org.apache.spark.sql.functions.{lit, sum}
 
 /** Iceberg metadata→manifest-list→manifest→files replay: appends,
@@ -13,9 +13,9 @@ class IcebergReadSpec extends SparkSuite {
     val a = Seq((1L, "a")).toDF("id", "v")
     val b = Seq((2L, "b")).toDF("id", "v")
     val c = Seq((3L, "c")).toDF("id", "v")
-    val s1 = IcebergRead.commitSnapshot(a.coalesce(1), table)
-    val s2 = IcebergRead.commitSnapshot(b.coalesce(1), table)
-    IcebergRead.commitSnapshot(c.coalesce(1), table, carryForward = false)
+    val s1 = IcebergWrite.append(a.coalesce(1), table)
+    val s2 = IcebergWrite.append(b.coalesce(1), table)
+    IcebergWrite.append(c.coalesce(1), table, overwrite = true)
     def ids(snap: Option[Long]) = IcebergRead.read(spark, table, snap)
       .select($"id").collect().map(_.getLong(0)).toSet
     assert(ids(None) === Set(3L))          // overwrite replaced the table
@@ -28,12 +28,12 @@ class IcebergReadSpec extends SparkSuite {
   }
 
   test("Lake write -> Iceberg metadata export -> Iceberg read round trip") {
-    import graft.sources.{IcebergExport, Lake}
+    import graft.sources.Lake
     val table = java.nio.file.Files.createTempDirectory("graft-iexp").toString
     Lake.write(Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v"), table, Nil)
     Lake.write(Seq((3L, 30.0)).toDF("id", "v"), table, Nil, mode = "append")
     Lake.delete(spark, table, $"id" === 2L)
-    assert(IcebergExport.exportIcebergMeta(spark, table) === 3L)
+    assert(IcebergWrite.exportLake(spark, table) === 3L)
     def ids(snap: Option[Long]) = IcebergRead.read(spark, table, snap)
       .select($"id").collect().map(_.getLong(0)).toSet
     assert(ids(None) === Set(1L, 3L))
@@ -41,7 +41,7 @@ class IcebergReadSpec extends SparkSuite {
     assert(ids(Some(2L)) === Set(1L, 2L, 3L))
     // incremental + idempotent: another Lake commit, re-export
     Lake.write(Seq((4L, 40.0)).toDF("id", "v"), table, Nil, mode = "append")
-    assert(IcebergExport.exportIcebergMeta(spark, table) === 4L)
+    assert(IcebergWrite.exportLake(spark, table) === 4L)
     assert(ids(None) === Set(1L, 3L, 4L))
     // same files, zero data copies: lake read agrees
     assert(Lake.read(spark, table).select($"id").collect().map(_.getLong(0)).toSet
@@ -49,13 +49,13 @@ class IcebergReadSpec extends SparkSuite {
   }
 
   test("partitioned export: typed partition column restored from manifest, pruning from the manifest") {
-    import graft.sources.{IcebergExport, Lake}
+    import graft.sources.Lake
     val table = java.nio.file.Files.createTempDirectory("graft-icepart").toString + "/t"
     val df = Seq((1L, 10.0, "a"), (2L, 20.0, "a"), (3L, 30.0, "b"),
       (4L, 40.0, "b"), (5L, 50.0, "c")).toDF("id", "v", "p")
     Lake.write(df, table, Seq("p"))
     Lake.write(Seq((6L, 60.0, "c")).toDF("id", "v", "p"), table, Seq("p"), mode = "append")
-    IcebergExport.exportIcebergMeta(spark, table)
+    IcebergWrite.exportLake(spark, table)
     // spec fields recorded with identity transform + source type
     assert(IcebergRead.partitionSpecFields(spark, table) === Seq("p" -> "string"))
     // full read restores the typed partition column from the manifest
@@ -76,7 +76,7 @@ class IcebergReadSpec extends SparkSuite {
     // the sf-typed case: a LONG partition column round-trips typed
     val t2 = java.nio.file.Files.createTempDirectory("graft-icepart2").toString + "/t"
     Lake.write(Seq((1L, "x", 7L), (2L, "y", 8L)).toDF("id", "s", "k"), t2, Seq("k"))
-    IcebergExport.exportIcebergMeta(spark, t2)
+    IcebergWrite.exportLake(spark, t2)
     assert(IcebergRead.partitionSpecFields(spark, t2) === Seq("k" -> "long"))
     val r2 = IcebergRead.read(spark, t2)
     assert(r2.schema("k").dataType === org.apache.spark.sql.types.LongType)
@@ -84,7 +84,7 @@ class IcebergReadSpec extends SparkSuite {
   }
 
   test("MoR export: delete vectors land as format v2 position deletes") {
-    import graft.sources.{IcebergExport, Lake}
+    import graft.sources.Lake
     // a path WITH SPACES: the delete-row translation must bridge the
     // percent-encoded _metadata rendering and the raw manifest form
     val table = java.nio.file.Files.createTempDirectory("graft-ice mor").toString + "/t 1"
@@ -95,7 +95,7 @@ class IcebergReadSpec extends SparkSuite {
     Lake.mergeMor(spark, table,
       spark.range(0, 50).select($"id".as("k"), lit(9).cast("int").as("g"),
         lit(-1.0).as("x")), Seq("k"))
-    IcebergExport.exportIcebergMeta(spark, table)
+    IcebergWrite.exportLake(spark, table)
     assert(IcebergRead.positionDeleteFiles(spark, table).size === 1)
     // current snapshot: Iceberg read equals the masked Lake read
     val ice = IcebergRead.read(spark, table)
@@ -113,13 +113,13 @@ class IcebergReadSpec extends SparkSuite {
   }
 
   test("MoR export: partitioned table masks through the manifest index") {
-    import graft.sources.{IcebergExport, Lake}
+    import graft.sources.Lake
     val table = java.nio.file.Files.createTempDirectory("graft-icemp").toString + "/t"
     val df = spark.range(0, 600).select($"id".as("k"),
       ($"id" % 3).cast("string").as("p"), ($"id" * 2).cast("double").as("x"))
     Lake.write(df, table, Seq("p"))
     Lake.deleteMor(spark, table, $"k" < 100)
-    IcebergExport.exportIcebergMeta(spark, table)
+    IcebergWrite.exportLake(spark, table)
     val ice = IcebergRead.read(spark, table)
     assert(ice.count() === 500L)
     assert(ice.filter($"k" < 100).count() === 0L)
@@ -232,10 +232,10 @@ class IcebergReadSpec extends SparkSuite {
   test("commitCdcBatch: upsert stream converges to latest image per key") {
     val table = java.nio.file.Files.createTempDirectory("graft-icecdc").toString + "/t"
     // batch 1: keys 1..5 v=10x; batch 2: upsert 2,3 v=99, tombstone 5
-    IcebergRead.commitCdcBatch(
+    IcebergWrite.cdcBatch(
       spark.range(1, 6).select($"id", ($"id" * 10).as("v")), table, Seq("id"))
     assert(IcebergRead.read(spark, table).count() === 5L)
-    IcebergRead.commitCdcBatch(
+    IcebergWrite.cdcBatch(
       Seq((2L, 99L), (3L, 99L)).toDF("id", "v"), table, Seq("id"),
       deleteKeys = Some(Seq(5L).toDF("id")))
     val got = IcebergRead.read(spark, table)
@@ -246,21 +246,21 @@ class IcebergReadSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(v1 === Set(1L -> 10L, 2L -> 20L, 3L -> 30L, 4L -> 40L, 5L -> 50L))
     // batch 3 re-inserts a tombstoned key
-    IcebergRead.commitCdcBatch(Seq((5L, 7L)).toDF("id", "v"), table, Seq("id"))
+    IcebergWrite.cdcBatch(Seq((5L, 7L)).toDF("id", "v"), table, Seq("id"))
     assert(IcebergRead.read(spark, table).filter($"id" === 5L)
       .select($"v").head.getLong(0) === 7L)
   }
 
   test("commitSnapshot append preserves a CDC table's delete manifests") {
     val table = java.nio.file.Files.createTempDirectory("graft-icemix").toString + "/t"
-    IcebergRead.commitCdcBatch(
+    IcebergWrite.cdcBatch(
       spark.range(1, 6).select($"id", ($"id" * 10).as("v")), table, Seq("id"))
-    IcebergRead.commitCdcBatch(
+    IcebergWrite.cdcBatch(
       Seq((2L, 99L)).toDF("id", "v"), table, Seq("id"),
       deleteKeys = Some(Seq(5L).toDF("id")))
     // a plain append by the OTHER writer must not resurrect the
     // erased images (old id=2 at v=20, tombstoned id=5)
-    IcebergRead.commitSnapshot(Seq((9L, 90L)).toDF("id", "v").coalesce(1), table)
+    IcebergWrite.append(Seq((9L, 90L)).toDF("id", "v").coalesce(1), table)
     val got = IcebergRead.read(spark, table)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === Set(1L -> 10L, 2L -> 99L, 3L -> 30L, 4L -> 40L, 9L -> 90L))
@@ -268,8 +268,8 @@ class IcebergReadSpec extends SparkSuite {
 
   test("unpadded HadoopCatalog metadata names: v10 beats v9 numerically") {
     val table = java.nio.file.Files.createTempDirectory("graft-ice10").toString
-    IcebergRead.commitSnapshot(Seq((1L, "old")).toDF("id", "v").coalesce(1), table)
-    IcebergRead.commitSnapshot(Seq((2L, "new")).toDF("id", "v").coalesce(1), table)
+    IcebergWrite.append(Seq((1L, "old")).toDF("id", "v").coalesce(1), table)
+    IcebergWrite.append(Seq((2L, "new")).toDF("id", "v").coalesce(1), table)
     // rename the padded writer names to real HadoopCatalog unpadded
     // names where lexicographic order inverts ("v9" > "v10")
     val f = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
@@ -336,7 +336,6 @@ class IcebergReadSpec extends SparkSuite {
   }
 
   test("transform-partitioned write -> pruned read: days + bucket skip files, lose no rows") {
-    import graft.sources.{IcebergExport, IcebergTransforms}
     val table = java.nio.file.Files.createTempDirectory("graft-icetr").toString + "/t"
     val df = spark.range(0, 3000).select(
       $"id".as("k"),
@@ -344,7 +343,7 @@ class IcebergReadSpec extends SparkSuite {
         "timestamp_micros(86400000000 * cast(id % 30 as long) + 1500000000000000)").as("ts"),
       ($"id" % 100).as("cust"),
       ($"id" * 2).cast("double").as("x"))
-    val snap = IcebergExport.commitTransformSnapshot(df.coalesce(1), table,
+    val snap = IcebergWrite.append(df.coalesce(1), table,
       Seq("ts" -> "day", "cust" -> "bucket[8]"))
     assert(snap === 1L)
     // unpruned read sees everything, source columns intact
@@ -394,15 +393,14 @@ class IcebergReadSpec extends SparkSuite {
   }
 
   test("transform-partitioned append carries prior snapshots; truncate prunes strings by code points") {
-    import graft.sources.{IcebergExport, IcebergTransforms}
     val table = java.nio.file.Files.createTempDirectory("graft-icetr2").toString + "/t"
     def batch(tag: String, lo: Long, hi: Long) = spark.range(lo, hi).select(
       $"id".as("k"),
       org.apache.spark.sql.functions.concat(
         org.apache.spark.sql.functions.lit(tag), $"id" % 5).as("name"))
-    val s1 = IcebergExport.commitTransformSnapshot(
+    val s1 = IcebergWrite.append(
       batch("alpha", 0, 100), table, Seq("name" -> "truncate[3]"))
-    val s2 = IcebergExport.commitTransformSnapshot(
+    val s2 = IcebergWrite.append(
       batch("beta", 100, 200), table, Seq("name" -> "truncate[3]"))
     assert((s1, s2) === ((1L, 2L)))
     assert(IcebergRead.read(spark, table).count() === 200)
@@ -421,15 +419,14 @@ class IcebergReadSpec extends SparkSuite {
   }
 
   test("string RANGE predicates prune lexicographically through truncate, losing no rows") {
-    import graft.sources.IcebergExport
     val table = java.nio.file.Files.createTempDirectory("graft-icesr").toString + "/t"
     def batch(tag: String, lo: Long, hi: Long) = spark.range(lo, hi).select(
       $"id".as("k"),
       org.apache.spark.sql.functions.concat(
         org.apache.spark.sql.functions.lit(tag), $"id" % 5).as("name"))
-    IcebergExport.commitTransformSnapshot(
+    IcebergWrite.append(
       batch("alpha", 0, 100), table, Seq("name" -> "truncate[3]"))
-    IcebergExport.commitTransformSnapshot(
+    IcebergWrite.append(
       batch("beta", 100, 200), table, Seq("name" -> "truncate[3]"))
     val all = IcebergRead.read(spark, table)
     // >= "beta" must keep every beta file (alp < bet prunes) — the
@@ -453,14 +450,13 @@ class IcebergReadSpec extends SparkSuite {
   }
 
   test("identity date/timestamp partitions prune eq + ranges via render-aware parsing") {
-    import graft.sources.IcebergExport
     import org.apache.spark.sql.functions.expr
     val table = java.nio.file.Files.createTempDirectory("graft-iceid").toString + "/t"
     val df = spark.range(0, 300).select(
       $"id".as("k"),
       expr("date_add(date '2024-01-01', cast(id % 10 as int))").as("d"),
       expr("timestamp_micros(1700000000000000 + 3600000000 * cast(id % 6 as long))").as("ts"))
-    IcebergExport.commitTransformSnapshot(df.coalesce(1), table,
+    IcebergWrite.append(df.coalesce(1), table,
       Seq("d" -> "identity"))
     val all = IcebergRead.read(spark, table)
     assert(all.count() === 300)
@@ -480,7 +476,7 @@ class IcebergReadSpec extends SparkSuite {
     assert(rg.df.count() === all.filter($"d" >= lo).count())
     // identity TIMESTAMP partitions (hive-rendered `yyyy-MM-dd HH:mm:ss`)
     val t2 = java.nio.file.Files.createTempDirectory("graft-iceidts").toString + "/t"
-    IcebergExport.commitTransformSnapshot(df.coalesce(1), t2,
+    IcebergWrite.append(df.coalesce(1), t2,
       Seq("ts" -> "identity"))
     val allTs = IcebergRead.read(spark, t2)
     val oneTs = new java.sql.Timestamp(1700000000000L + 2L * 3600000L)
@@ -493,17 +489,17 @@ class IcebergReadSpec extends SparkSuite {
 
   test("appending to a table with UUID-style metadata names commits instead of crashing") {
     val table = java.nio.file.Files.createTempDirectory("graft-iceuuid").toString
-    IcebergRead.commitSnapshot(Seq((1L, "a")).toDF("id", "v").coalesce(1), table)
+    IcebergWrite.append(Seq((1L, "a")).toDF("id", "v").coalesce(1), table)
     // a foreign writer's metadata name: no v-prefix, not numeric
     val f = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
-    val src = new org.apache.hadoop.fs.Path(s"$table/metadata/v00001.metadata.json")
+    val src = new org.apache.hadoop.fs.Path(s"$table/metadata/v1.metadata.json")
     val alien = new org.apache.hadoop.fs.Path(
       s"$table/metadata/00000-8a9f1c2e-dead-beef-cafe-123456789abc.metadata.json")
     org.apache.hadoop.fs.FileUtil.copy(f, src, f, alien, false,
       spark.sparkContext.hadoopConfiguration)
     // pre-fix: NumberFormatException on the UUID stem
-    val s2 = IcebergRead.commitSnapshot(
+    val s2 = IcebergWrite.append(
       Seq((2L, "b")).toDF("id", "v").coalesce(1), table)
     assert(s2 === 2L)
     assert(IcebergRead.read(spark, table).count() === 2)

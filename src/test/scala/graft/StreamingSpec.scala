@@ -43,7 +43,7 @@ class StreamingSpec extends SparkSuite {
       .outputMode(outputMode)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(120000)
+    Streams.runToEnd(spark, 120000)(q)
     spark.table(q.name)
   }
 
@@ -86,7 +86,7 @@ class StreamingSpec extends SparkSuite {
     val q = Streams.streamingDedup(stream, Seq("event_id")).writeStream
       .format("memory").queryName("dedup_out_" + System.nanoTime())
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    Streams.runToEnd(spark, 120000)(q)
     val n = spark.table(q.name).count()
     assert(n === Tables.load(spark, sf, "events").count())
   }
@@ -100,7 +100,7 @@ class StreamingSpec extends SparkSuite {
       .toDF("user_id", "mn", "mx", "n")
       .writeStream.format("memory").queryName("retract_out_" + System.nanoTime())
       .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    Streams.runToEnd(spark, 120000)(q)
     // latest update per key (state evolves across micro-batches; the
     // memory sink keeps every update — last one wins)
     val latest = spark.table(q.name)
@@ -125,7 +125,7 @@ class StreamingSpec extends SparkSuite {
     val schema = Tables.load(spark, sf, "events").schema
     val stream = spark.readStream.schema(schema).parquet(dir)
     val q = Streams.mvWriter(Streams.tumblingAgg(stream), out, ckpt).start()
-    q.awaitTermination(120000)
+    Streams.runToEnd(spark, 120000)(q)
     val mv = spark.read.parquet(out)
     assert(mv.count() > 0)
     assert(mv.columns.toSet === Set("wstart", "event_type", "n", "total"))
@@ -148,7 +148,7 @@ class StreamingSpec extends SparkSuite {
     val q = joined.select($"p", $"s").writeStream
       .format("memory").queryName("ssj_out_" + System.nanoTime())
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    Streams.runToEnd(spark, 120000)(q)
     val got = spark.table(q.name).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
     val e = Tables.load(spark, sf, "events")
@@ -183,7 +183,7 @@ class StreamingSpec extends SparkSuite {
     val q = TextAnalysis.chunk(stream, "doc_id", "text", 40, 8).writeStream
       .format("memory").queryName(sinkName)
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    Streams.runToEnd(spark, 120000)(q)
     val streamed = spark.table(sinkName)
       .collect().map(_.toString).sorted
     val batch = TextAnalysis.chunk(docs, "doc_id", "text", 40, 8)
@@ -216,7 +216,7 @@ class StreamingSpec extends SparkSuite {
     val q = clean(stream).writeStream
       .format("memory").queryName(sinkName)
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    Streams.runToEnd(spark, 120000)(q)
     val streamed = spark.table(sinkName).collect().map(_.toString).sorted
     val batch = clean(docs).collect().map(_.toString).sorted
     assert(streamed.toSeq === batch.toSeq)
@@ -264,7 +264,7 @@ class StreamingSpec extends SparkSuite {
       val q = Streams.upsertSink(
         spark.readStream.schema(schema).parquet(watch),
         Seq("user_id"), "v", tableDir, ckpt)
-      q.awaitTermination(120000)
+      Streams.runToEnd(spark, 120000)(q)
     }
     runOnce()
     val afterFirst = spark.read.parquet(tableDir).count()
@@ -298,7 +298,7 @@ class StreamingSpec extends SparkSuite {
       val q = Streams.lakeUpsertSink(
         spark.readStream.schema(schema).parquet(s"$watch/in"),
         Seq("user_id"), "v", tableDir, ckpt)
-      q.awaitTermination(120000)
+      Streams.runToEnd(spark, 120000)(q)
     }
     runOnce(tmp() + "/c1")
     val v1 = graft.sources.Lake.currentVersion(spark, tableDir)
@@ -316,7 +316,7 @@ class StreamingSpec extends SparkSuite {
     val q2 = Streams.lakeUpsertSink(
       spark.readStream.schema(schema).parquet(s"$watch/in2"),
       Seq("user_id"), "v", tableDir, tmp() + "/c3")
-    q2.awaitTermination(120000)
+    Streams.runToEnd(spark, 120000)(q2)
     val got = graft.sources.Lake.read(spark, tableDir)
       .select($"user_id", $"v").collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val expected = e.groupBy($"user_id").agg(max($"v").as("v"))
@@ -389,7 +389,7 @@ class StreamingSpec extends SparkSuite {
       .toDF("user_id", "event_id", "balance")
       .writeStream.format("memory").queryName("clamp_out_" + System.nanoTime())
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    Streams.runToEnd(spark, 120000)(q)
     val got = spark.table(q.name).collect()
       .map(r => r.getLong(1) -> r.getDouble(2)).toMap
     val batch = graft.plans.BoundedAccumulate.boundedRunningSum(
