@@ -1144,11 +1144,11 @@ object SourcesQ extends graft.QueryArea {
         .select(col("uuid"), col("name"), col("price"))
         .orderBy(col("uuid"))
     }),
-    // WRITE interop: manifest.flavor=paimon emits the REAL paimon
-    // manifest schemas (BinaryRow partitions, footer key bounds, full
-    // snapshot JSON) — the layout a real paimon reader replays; our
-    // read of it goes through the same real-flavor parse path as the
-    // foreign fixture.
+    // WRITE interop: every table the writer produces has the REAL
+    // paimon manifest schemas (BinaryRow partitions, footer key bounds,
+    // full snapshot JSON) — the layout a real paimon reader replays;
+    // our read of it goes through the same parse path as the foreign
+    // fixture.
     "src_paimon_write_real" -> ((spark, dir) => {
       val table = tmpDir(dir, "paimon_wrl")
       graft.sources.Formats.deleteDir(spark, table)
@@ -1157,7 +1157,7 @@ object SourcesQ extends graft.QueryArea {
         .select(col("o_orderkey"), col("o_totalprice"),
           (col("o_orderkey") % 3).cast("string").as("p"))
       graft.sources.PaimonRead.commitPk(o, table, Seq("o_orderkey"), Seq("p"),
-        assumeKeyUnique = true, options = Map("manifest.flavor" -> "paimon"))
+        assumeKeyUnique = true)
       graft.sources.PaimonRead.commitPk(
         o.filter(col("o_orderkey") % 7 === 1).withColumn("o_totalprice", lit(0.0)),
         table, Seq("o_orderkey"), assumeKeyUnique = true)

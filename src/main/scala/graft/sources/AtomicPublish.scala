@@ -17,9 +17,9 @@ import org.apache.spark.sql.SparkSession
   * style filesystems keep the stream path (create is exclusive and
   * readers cannot open an un-completed file).
   *
-  * Used by every commit record in the repo: Lake manifests, LakeTx
-  * catalog versions, Delta/Hudi export metadata, every Iceberg
-  * metadata version ([[IcebergWrite]]), and the VectorIndex model
+  * Used by Lake manifests, LakeTx catalog versions, Delta/Hudi export
+  * metadata, every Iceberg metadata version ([[IcebergWrite]]), every
+  * Paimon snapshot ([[PaimonRead]]), and the VectorIndex model
   * publish. */
 object AtomicPublish {
 
@@ -63,4 +63,16 @@ object AtomicPublish {
         } finally { val _ = f.delete(tmp, false) }
     }
   }
+
+  /** [[publish]], or — when a racing committer won — delete `staged`
+    * (the files this commit wrote, which nothing references yet) and
+    * rethrow the `ConcurrentModificationException`. */
+  def publishOrDiscard(spark: SparkSession, path: Path, bytes: Array[Byte],
+      staged: Seq[Path]): Unit =
+    try publish(spark, path, bytes)
+    catch { case e: java.util.ConcurrentModificationException =>
+      val f = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      staged.foreach(p => f.delete(p, false))
+      throw e
+    }
 }

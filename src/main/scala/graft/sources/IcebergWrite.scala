@@ -362,7 +362,9 @@ object IcebergWrite {
     * forward (none when `overwrite`), and publish `v<N>.metadata.json`
     * with every prior snapshot, the snapshot- and metadata-logs and
     * cumulative summary totals. `lakeVersion` pins N for the Lake
-    * export. Returns the snapshot id. */
+    * export, whose data files are the Lake's own: a commit that loses
+    * the race deletes its manifests, its manifest list and the files it
+    * installed, never those. Returns the snapshot id. */
   private def commit(spark: SparkSession, table: String, schema: StructType,
       parts: Seq[Part], files: Seq[FileEntry], overwrite: Boolean,
       lakeVersion: Option[Long] = None): Long = {
@@ -492,8 +494,10 @@ object IcebergWrite {
          |"snapshots":[${pr.fold("")(_.joined("snapshots"))}{"sequence-number":$v,"snapshot-id":$v,"timestamp-ms":$nowMs,"summary":$summary,"manifest-list":${mapper.writeValueAsString(listPath)},"schema-id":0}],
          |"snapshot-log":[${pr.fold("")(_.joined("snapshot-log"))}{"timestamp-ms":$nowMs,"snapshot-id":$v}],
          |"metadata-log":[$metadataLog]}""".stripMargin.replace("\n", "")
-    AtomicPublish.publish(spark, new Path(s"$table/metadata/v$v.metadata.json"),
-      json.getBytes("UTF-8"))
+    val installed = if (lakeVersion.isDefined) files.filter(_.content != 0) else files
+    AtomicPublish.publishOrDiscard(spark, new Path(s"$table/metadata/v$v.metadata.json"),
+      json.getBytes("UTF-8"), (installed.map(_.path) ++
+        listed.map(_.get("manifest_path").toString) :+ listPath).map(new Path(_)))
     val hint = f.create(new Path(s"$table/metadata/version-hint.text"), true)
     try hint.write(v.toString.getBytes("UTF-8")) finally hint.close()
     v

@@ -28,8 +28,13 @@ object PaimonHashIndex {
 
   val IndexType = "HASH"
 
-  final case class HashEntry(partitionJson: String, bucket: Int,
+  /** `partition` is the hex of the entry's BinaryRow partition tuple —
+    * the same bytes the data manifests carry — so it can key a Spark
+    * join. */
+  final case class HashEntry(partition: String, bucket: Int,
       fileName: String, rowCount: Long)
+
+  private val hex = java.util.HexFormat.of()
 
   // ---- hash index file io ---------------------------------------------
 
@@ -56,12 +61,12 @@ object PaimonHashIndex {
     indexManifest.map(n => PaimonDv.readIndexManifest(spark, table, n))
       .getOrElse(Nil)
       .filter(_.indexType == IndexType)
-      .map(e => HashEntry(new String(e.partitionBytes, "UTF-8"), e.bucket,
+      .map(e => HashEntry(hex.formatHex(e.partitionBytes), e.bucket,
         e.fileName, e.rowCount))
 
   /** Assign a bucket to every row of `sys` (the system-column-staged
     * batch) per the dynamic-bucket contract, and return the pending
-    * index delta: per changed (partitionJson, bucket), the NEW key
+    * index delta: per changed (partition, bucket), the NEW key
     * hashes. Call [[writeIndex]] with it after the data files stage. */
   /** Returns (bucketed rows, index delta, cached lookup frame). The
     * caller MUST unpersist the third element once the bucketed rows
@@ -69,15 +74,15 @@ object PaimonHashIndex {
     * consumed by three downstream branches and would otherwise
     * re-read and re-join the whole index per branch. */
   def assignBuckets(spark: SparkSession, table: String,
-      partitionKeys: Seq[String], sys: DataFrame, primaryKeys: Seq[String],
+      partitions: PaimonRead.RowCodec, sys: DataFrame, primaryKeys: Seq[String],
       targetRows: Long, snapshotIdPrior: Option[Long]):
       (DataFrame, Map[(String, Int), Seq[Int]], DataFrame) = {
-    import org.apache.spark.sql.functions.{coalesce, col, hash, lit, map_from_arrays, array, to_json, udf}
+    import org.apache.spark.sql.functions.{col, hash, lit, array, udf}
     val pjCol =
-      if (partitionKeys.isEmpty) lit("{}")
-      else to_json(map_from_arrays(
-        array(partitionKeys.sorted.map(lit): _*),
-        array(partitionKeys.sorted.map(k => col(k).cast("string")): _*)))
+      if (partitions.names.isEmpty) lit(hex.formatHex(partitions.encode(Map.empty)))
+      else udf((vals: Seq[String]) =>
+          hex.formatHex(partitions.encode(partitions.names.zip(vals).toMap)))
+        .apply(array(partitions.names.map(k => col(k).cast("string")): _*))
     val khash = hash(primaryKeys.map(col): _*)
     val withKey = sys.withColumn("__pj", pjCol).withColumn("__khash", khash)
     val prior: Seq[HashEntry] = snapshotIdPrior
@@ -94,7 +99,7 @@ object PaimonHashIndex {
           new org.apache.spark.util.SerializableConfiguration(
             spark.sparkContext.hadoopConfiguration))
         spark.sparkContext.parallelize(
-            prior.map(e => (e.partitionJson, e.bucket, e.fileName)),
+            prior.map(e => (e.partition, e.bucket, e.fileName)),
             math.min(prior.size, 32))
           .flatMap { case (pj, b, file) =>
             val p = new Path(s"${PaimonRead.dataRoot(table)}/index/$file")
@@ -146,7 +151,7 @@ object PaimonHashIndex {
     // holds only O(partitions) tail state; a 16M-key base ingest never
     // materializes keys driver-side.
     val tailState: Map[String, (Int, Long)] = prior
-      .groupBy(_.partitionJson).map { case (pj, es) =>
+      .groupBy(_.partition).map { case (pj, es) =>
         val counts = es.groupBy(_.bucket).view
           .mapValues(_.map(_.rowCount).sum).toMap
         val mb = counts.keys.max
@@ -199,10 +204,10 @@ object PaimonHashIndex {
     val oldHash = old.filter(_.indexType == IndexType)
     val others = old.filterNot(_.indexType == IndexType)
     val oldByKey = oldHash.map(e =>
-      (new String(e.partitionBytes, "UTF-8"), e.bucket) -> e).toMap
+      (hex.formatHex(e.partitionBytes), e.bucket) -> e).toMap
     val changedKeys = delta.keySet
     val kept = oldHash.filterNot(e => changedKeys.contains(
-      (new String(e.partitionBytes, "UTF-8"), e.bucket)))
+      (hex.formatHex(e.partitionBytes), e.bucket)))
     val rewritten = delta.toSeq.sortBy(_._1.toString).zipWithIndex.map {
       case (((pj, bucket), newHashes), i) =>
         val oldHashes: Seq[Int] = oldByKey.get((pj, bucket))
@@ -217,7 +222,7 @@ object PaimonHashIndex {
           .map(b => s"b$b-").getOrElse("")
         val name = f"index-$branchTag$id%05d-$i"
         writeHashFile(f, new Path(s"${PaimonRead.dataRoot(table)}/index/$name"), all)
-        PaimonDv.IndexEntry(0, pj.getBytes("UTF-8"), bucket, IndexType,
+        PaimonDv.IndexEntry(0, hex.parseHex(pj), bucket, IndexType,
           name, f.getFileStatus(new Path(s"${PaimonRead.dataRoot(table)}/index/$name")).getLen,
           all.size.toLong, Nil)
     }

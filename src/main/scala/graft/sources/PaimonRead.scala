@@ -1,7 +1,6 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.avro.SchemaBuilder
 import org.apache.avro.file.{DataFileStream, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.Path
@@ -40,16 +39,17 @@ import org.apache.spark.sql.types._
   * adds a file, 1 deletes it). Time travel = read `snapshot-<id>`
   * directly; `snapshot/LATEST` is the hint file.
   *
-  * TWO manifest flavors read interchangeably (per record, so mixed
-  * tables — e.g. a foreign table this writer compacted — replay fine):
-  * real Paimon manifests (`org.apache.paimon.avro.generated.record`,
-  * BinaryRow partition tuples decoded by [[PaimonBinaryRow]], the full
-  * `_FILE` struct with unknown fields tolerated, hive-escaped
-  * partition dirs) and this writer's simplified rendering
-  * (`_PARTITION` as JSON column → string, URL-encoded dirs). The
-  * WRITER still emits only the simplified flavor — a real
-  * paimon/Flink reader of tables this repo writes would need the
-  * simplified schema, which is the remaining documented deviation.
+  * ONE manifest format, read and written: real Paimon manifests
+  * (`org.apache.paimon.avro.generated.record`, BinaryRow partition
+  * tuples through [[RowCodec]], the full `_FILE` struct with unknown
+  * fields tolerated on read, hive-escaped partition dirs). Every table
+  * this writer produces is replayable by a real paimon reader: data
+  * files carry `_KEY_` columns for the TRIMMED key (primary key minus
+  * partition columns) and manifest entries carry its BinaryRow
+  * bounds. Commits name their files uniquely (`data-<id>-<uuid>-<n>`,
+  * `manifest-<uuid>-<n>`) and publish the snapshot through
+  * [[AtomicPublish]]: a writer that loses the race for an id deletes
+  * what it wrote and throws `ConcurrentModificationException`.
   *
   * 100 TB: manifests are O(files) driver metadata; the PK merge is one
   * hash-partitioned window keyed by the primary key (the LSM
@@ -66,9 +66,10 @@ object PaimonRead {
   // forked from a snapshot or tag; DATA files (and the DV / hash index
   // files beside them) are SHARED under the MAIN table root — branch
   // manifests reference them by the same partition/bucket paths, and
-  // branch commits stage new data there too, with branch-prefixed file
-  // names so the deterministic-name contract stays collision-free
-  // across main and branches. Manifest names resolve branch-first with
+  // branch commits stage new data there too (data file names are
+  // unique per commit; DV and hash index files carry a branch prefix
+  // so their id-derived names stay collision-free across main and
+  // branches). Manifest names resolve branch-first with
   // main fallback, so a fresh branch reads its fork point without
   // copying manifests. (The reference routes `table$branch_xxx`
   // identifiers — fe/.../connector/paimon/PaimonMetadata.java:610-616.)
@@ -87,12 +88,8 @@ object PaimonRead {
   /** Resolve a manifest FILE name: branch-local when present, else the
     * main tree (the fork point's manifests are never copied). */
   private[sources] def manifestPath(spark: SparkSession, table: String,
-      name: String): String = {
-    val local = s"$table/manifest/$name"
-    if (dataRoot(table) == table) local
-    else if (fs(spark, table).exists(new Path(local))) local
-    else s"${dataRoot(table)}/manifest/$name"
-  }
+      name: String): String =
+    manifestPathWithConf(spark.sparkContext.hadoopConfiguration, table, name)
 
   private val SeqCol = "_SEQUENCE_NUMBER"
   private val KindCol = "_VALUE_KIND"
@@ -185,29 +182,45 @@ object PaimonRead {
 
   // ---- snapshots (snapshot/snapshot-<id> JSON + LATEST hint) --------
 
+  /** Ids of the `<prefix><id>` files in `dir`, unsorted (empty when the
+    * directory is absent). */
+  private def idsIn(f: org.apache.hadoop.fs.FileSystem, dir: String,
+      prefix: String): Seq[Long] =
+    if (!f.exists(new Path(dir))) Nil
+    else f.listStatus(new Path(dir)).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith(prefix))
+      .flatMap(n => scala.util.Try(n.stripPrefix(prefix).toLong).toOption)
+
+  private def snapshotIds(f: org.apache.hadoop.fs.FileSystem,
+      table: String): Seq[Long] = {
+    if (!f.exists(new Path(s"$table/snapshot"))) throw new IllegalArgumentException(
+      s"not a paimon table (no snapshot/): $table")
+    idsIn(f, s"$table/snapshot", "snapshot-").sorted
+  }
+
   final case class Snap(id: Long, schemaId: Long, baseManifestList: String,
       deltaManifestList: String, commitKind: String, timeMillis: Long,
       changelogManifestList: Option[String] = None,
       indexManifest: Option[String] = None,
       totalRecordCount: Option[Long] = None)
 
-  /** Latest snapshot id: the LATEST hint when present and valid, else
-    * max over snapshot-<id> names (hints are advisory per the spec). */
+  /** Latest snapshot id: the LATEST hint when present and valid, walked
+    * forward over any newer consecutive snapshots (a racing writer may
+    * land its hint after a later commit's), else max over snapshot-<id>
+    * names (hints are advisory per the spec). */
   def latestSnapshotId(spark: SparkSession, table: String): Long = {
     val f = fs(spark, table)
-    val dir = new Path(s"$table/snapshot")
-    if (!f.exists(dir)) throw new IllegalArgumentException(
-      s"not a paimon table (no snapshot/): $table")
-    val ids = f.listStatus(dir).map(_.getPath.getName)
-      .filter(_.startsWith("snapshot-"))
-      .flatMap(n => scala.util.Try(n.stripPrefix("snapshot-").toLong).toOption)
+    val ids = snapshotIds(f, table)
     require(ids.nonEmpty, s"no snapshots under $table/snapshot")
     val hinted = scala.util.Try {
       val in = f.open(new Path(s"$table/snapshot/LATEST"))
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
       finally in.close()
     }.toOption
-    hinted.filter(ids.contains).getOrElse(ids.max)
+    val idSet = ids.toSet
+    hinted.filter(idSet).map(h =>
+      Iterator.iterate(h)(_ + 1).takeWhile(idSet).toSeq.last)
+      .getOrElse(ids.max)
   }
 
   private def snapshotOf(spark: SparkSession, table: String, id: Long): Snap = {
@@ -232,18 +245,22 @@ object PaimonRead {
       Option(n.get("totalRecordCount")).filterNot(_.isNull).map(_.asLong))
   }
 
+  /** The snapshot JSONs under `<root>/<sub>` named `<prefix>…`: a
+    * table's or branch's snapshots, or its tags. */
+  private def snapsIn(f: org.apache.hadoop.fs.FileSystem, root: String,
+      sub: String, prefix: String): Seq[Snap] = {
+    val dir = new Path(s"$root/$sub")
+    if (!f.exists(dir)) Nil
+    else f.listStatus(dir).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith(prefix)).map(snapFromFile(f, _))
+  }
+
   /** Newest snapshot committed at or before `epochMillis` — the
     * reference's timestamp time travel (`PaimonMetadata`'s
     * `earlierOrEqualTimeMills`). None when every snapshot is newer. */
   def snapshotAsOfTime(spark: SparkSession, table: String,
       epochMillis: Long): Option[Long] = {
-    val f = fs(spark, table)
-    val dir = new Path(s"$table/snapshot")
-    if (!f.exists(dir)) throw new IllegalArgumentException(
-      s"not a paimon table (no snapshot/): $table")
-    f.listStatus(dir).map(_.getPath.getName)
-      .filter(_.startsWith("snapshot-"))
-      .flatMap(n => scala.util.Try(n.stripPrefix("snapshot-").toLong).toOption)
+    snapshotIds(fs(spark, table), table)
       .map(id => snapshotOf(spark, table, id))
       .filter(_.timeMillis <= epochMillis)
       .sortBy(_.id).lastOption.map(_.id)
@@ -253,39 +270,17 @@ object PaimonRead {
 
   /** One manifest entry: _KIND 0 add / 1 delete of `fileName` in
     * (`partition`, `bucket`); stats + LSM metadata from _FILE.
-    * `hiveDirs` marks entries parsed from REAL paimon manifests, whose
-    * partition dirs use hive path escaping rather than this writer's
-    * URL-encoded rendering. */
+    * `minKey`/`maxKey` are the file's trimmed-key bounds as serialized
+    * BinaryRows (empty when the manifest did not record them). */
   final case class FileEntry(kind: Int, partition: Map[String, String],
       bucket: Int, fileName: String, sizeBytes: Long, rowCount: Long,
-      minSeq: Long, maxSeq: Long, level: Int, hiveDirs: Boolean = false)
+      minSeq: Long, maxSeq: Long, level: Int,
+      minKey: Array[Byte] = Array.emptyByteArray,
+      maxKey: Array[Byte] = Array.emptyByteArray)
 
-  private[sources] val manifestEntrySchema: org.apache.avro.Schema =
-    SchemaBuilder.record("manifest_entry").fields()
-      .requiredInt("_KIND")
-      .requiredString("_PARTITION") // JSON col->value (see deviation note)
-      .requiredInt("_BUCKET")
-      .name("_FILE").`type`(SchemaBuilder.record("data_file_meta").fields()
-        .requiredString("_FILE_NAME")
-        .requiredLong("_FILE_SIZE")
-        .requiredLong("_ROW_COUNT")
-        .requiredLong("_MIN_SEQUENCE_NUMBER")
-        .requiredLong("_MAX_SEQUENCE_NUMBER")
-        .requiredInt("_LEVEL")
-        .endRecord()).noDefault()
-      .endRecord()
-
-  private[sources] val manifestListSchema: org.apache.avro.Schema =
-    SchemaBuilder.record("manifest_file_meta").fields()
-      .requiredString("_FILE_NAME")
-      .requiredLong("_FILE_SIZE")
-      .endRecord()
-
-  // ---- REAL paimon manifest schemas (the published rendering a
-  // paimon-0.4+ reader/writer produces; field-for-field the schema a
-  // real fixture carries). Tables created with the option
-  // `manifest.flavor = paimon` write THESE, so foreign paimon readers
-  // can replay tables this repo writes. -------------------------------
+  // ---- manifest schemas: the published rendering a paimon-0.4+
+  // reader/writer produces, field-for-field the schema a real fixture
+  // carries ------------------------------------------------------------
 
   private val simpleStatsJson = (name: String) => s"""
     {"type":"record","name":"$name","fields":[
@@ -293,7 +288,7 @@ object PaimonRead {
       {"name":"_MAX_VALUES","type":"bytes"},
       {"name":"_NULL_COUNTS","type":["null",{"type":"array","items":["null","long"]}],"default":null}]}"""
 
-  private[sources] val realManifestEntrySchema: org.apache.avro.Schema =
+  private[sources] val manifestEntrySchema: org.apache.avro.Schema =
     new org.apache.avro.Schema.Parser().parse(s"""
     {"type":"record","name":"record","namespace":"org.apache.paimon.avro.generated","fields":[
       {"name":"_VERSION","type":"int"},
@@ -317,7 +312,7 @@ object PaimonRead {
         {"name":"_CREATION_TIME","type":["null",{"type":"long","logicalType":"timestamp-millis"}],"default":null}
       ]}],"default":null}]}""")
 
-  private[sources] val realManifestListSchema: org.apache.avro.Schema =
+  private[sources] val manifestListSchema: org.apache.avro.Schema =
     new org.apache.avro.Schema.Parser().parse(s"""
     {"type":"record","name":"record","namespace":"org.apache.paimon.avro.generated","fields":[
       {"name":"_VERSION","type":"int"},
@@ -333,8 +328,8 @@ object PaimonRead {
   private def nullableUnion(s: org.apache.avro.Schema): org.apache.avro.Schema =
     org.apache.avro.Schema.createUnion(
       org.apache.avro.Schema.create(org.apache.avro.Schema.Type.NULL), s)
-  private[sources] val realManifestEntryFileSchema = nullableUnion(realManifestEntrySchema)
-  private[sources] val realManifestListFileSchema = nullableUnion(realManifestListSchema)
+  private[sources] val manifestEntryFileSchema = nullableUnion(manifestEntrySchema)
+  private[sources] val manifestListFileSchema = nullableUnion(manifestListSchema)
 
   private[graft] def readAvroFile(spark: SparkSession,
       path: String): Seq[GenericRecord] = readAvro(spark, path)
@@ -384,24 +379,56 @@ object PaimonRead {
     try records.foreach(w.append) finally w.close()
   }
 
-  private def parsePartitionJson(s: String): Map[String, String] = {
-    if (s.isEmpty || s == "{}") return Map.empty
-    val n = new ObjectMapper().readTree(s)
-    val m = scala.collection.mutable.LinkedHashMap[String, String]()
-    n.fields().forEachRemaining(e =>
-      m += e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText()))
-    m.toMap
+  /** The BinaryRow codec of some of a table's columns (its partition
+    * tuple, or its trimmed key): types and timestamp precisions come
+    * from the schema, so encode and decode agree for every table. */
+  private[sources] final case class RowCodec(names: Seq[String],
+      types: Seq[DataType], precisions: Seq[Int]) {
+    private def precision(i: Int): Int = precisions(i)
+    def encodeValues(values: Seq[Any]): Array[Byte] =
+      PaimonBinaryRow.encode(values, types, precision)
+    /** Rendered strings (the partition-map form) → BinaryRow. */
+    def encode(rendered: Map[String, String]): Array[Byte] =
+      encodeValues(names.zip(types).map { case (k, dt) =>
+        coerce(rendered.getOrElse(k, null), dt) })
+    def decode(bytes: Array[Byte]): Map[String, String] =
+      if (names.isEmpty) Map.empty
+      else names.zip(PaimonBinaryRow.decode(bytes, types, precision)).toMap
+    /** The rendering a manifest round-trip yields: staged entries use
+      * it too, so a file's directory is the same whether its entry was
+      * just staged or decoded from a manifest. */
+    def canonical(rendered: Map[String, String]): Map[String, String] =
+      if (names.isEmpty) Map.empty else decode(encode(rendered))
   }
 
-  /** Parse one manifest entry, dispatching on the record's FLAVOR:
-    * this writer's simplified rendering carries `_PARTITION` as a JSON
-    * string; REAL paimon manifests (`org.apache.paimon.avro.generated
-    * .record`) carry a serialized BinaryRow plus the full ~15-field
+  private[sources] def rowCodec(sch: TableSchema,
+      names: Seq[String]): RowCodec = RowCodec(names,
+    names.map(k => sch.fields.find(_.name == k).map(_.dataType)
+      .getOrElse(StringType)),
+    names.map(k => sch.rawTypeOf(k)
+      .collect { case TimestampRe(p) => p.toInt }.getOrElse(6)))
+
+  private[sources] def partitionCodec(sch: TableSchema): RowCodec =
+    rowCodec(sch, sch.partitionKeys)
+
+  /** Real Paimon keys a data file by the primary key minus the
+    * partition columns: the `_KEY_` columns and the manifest bounds
+    * cover these only. Merges keep full-key semantics through
+    * [[keyColsOf]], whose fallback for a partition column is the
+    * literal [[partitionScans]] attaches. */
+  private def trimmedKey(sch: TableSchema): Seq[String] =
+    sch.primaryKeys.filterNot(sch.partitionKeys.contains)
+
+  private def withKeyCols(df: DataFrame, sch: TableSchema): DataFrame =
+    trimmedKey(sch).foldLeft(df)((d, k) =>
+      d.withColumn(s"$KeyPrefix$k", org.apache.spark.sql.functions.col(k)))
+
+  /** Parse one manifest entry (`org.apache.paimon.avro.generated
+    * .record`): a serialized BinaryRow partition plus the full ~15-field
     * `_FILE` struct — the known metadata fields are read, unknown ones
-    * (key bounds, stats, extra files, creation time, …) are tolerated
-    * and ignored. `schemaOf` resolves the entry's own `_SCHEMA_ID` so
-    * the partition tuple decodes against the schema it was written
-    * under. */
+    * (stats, extra files, creation time, …) are tolerated and ignored.
+    * `schemaOf` resolves the entry's own `_SCHEMA_ID` so the partition
+    * tuple decodes against the schema it was written under. */
   private def parseEntry(e: GenericRecord,
       schemaOf: Long => TableSchema): FileEntry = {
     val fileRec = e.get("_FILE").asInstanceOf[GenericRecord]
@@ -412,32 +439,22 @@ object PaimonRead {
         case i: java.lang.Integer => i.longValue()
         case _ => dflt
       }
-    val kind = e.get("_KIND").asInstanceOf[Int]
-    val bucket = e.get("_BUCKET").asInstanceOf[Int]
-    val fileName = fileRec.get("_FILE_NAME").toString
-    val size = fld("_FILE_SIZE", 0L)
-    val rows = fld("_ROW_COUNT", 0L)
-    val minSeq = fld("_MIN_SEQUENCE_NUMBER", 0L)
-    val maxSeq = fld("_MAX_SEQUENCE_NUMBER", 0L)
-    val level = fld("_LEVEL", 0L).toInt
-    e.get("_PARTITION") match {
-      case bb: java.nio.ByteBuffer => // REAL paimon: BinaryRow bytes
-        val bytes = new Array[Byte](bb.remaining()); bb.duplicate().get(bytes)
-        val sch = schemaOf(fld("_SCHEMA_ID", 0L))
-        val pTypes = sch.partitionKeys.map(k =>
-          sch.fields.find(_.name == k).map(_.dataType).getOrElse(StringType))
-        val pPrec = sch.partitionKeys.map(k =>
-          sch.rawTypeOf(k).collect { case TimestampRe(p) => p.toInt }.getOrElse(6))
-        val values =
-          if (sch.partitionKeys.isEmpty) Nil
-          else PaimonBinaryRow.decode(bytes, pTypes,
-            (i: Int) => pPrec.lift(i).getOrElse(6))
-        FileEntry(kind, sch.partitionKeys.zip(values).toMap, bucket,
-          fileName, size, rows, minSeq, maxSeq, level, hiveDirs = true)
-      case other => // this writer's rendering: JSON col → value
-        FileEntry(kind, parsePartitionJson(other.toString), bucket,
-          fileName, size, rows, minSeq, maxSeq, level)
+    def bytesOf(v: Any): Array[Byte] = v match {
+      case bb: java.nio.ByteBuffer =>
+        val b = new Array[Byte](bb.remaining()); bb.duplicate().get(b); b
+      case _ => Array.emptyByteArray
     }
+    def keyBound(name: String): Array[Byte] =
+      if (fileRec.getSchema.getField(name) == null) Array.emptyByteArray
+      else bytesOf(fileRec.get(name))
+    val sch = schemaOf(fld("_SCHEMA_ID", 0L))
+    FileEntry(e.get("_KIND").asInstanceOf[Int],
+      partitionCodec(sch).decode(bytesOf(e.get("_PARTITION"))),
+      e.get("_BUCKET").asInstanceOf[Int],
+      fileRec.get("_FILE_NAME").toString, fld("_FILE_SIZE", 0L),
+      fld("_ROW_COUNT", 0L), fld("_MIN_SEQUENCE_NUMBER", 0L),
+      fld("_MAX_SEQUENCE_NUMBER", 0L), fld("_LEVEL", 0L).toInt,
+      keyBound("_MIN_KEY"), keyBound("_MAX_KEY"))
   }
 
   private def entriesOf(spark: SparkSession, table: String,
@@ -460,35 +477,96 @@ object PaimonRead {
       snapshotId.getOrElse(latestSnapshotId(spark, table))))
 
   private def liveFilesOf(spark: SparkSession, table: String,
-      snap: Snap): Seq[FileEntry] = {
+      snap: Snap): Seq[FileEntry] =
+    foldLive(entriesOf(spark, table, snap.baseManifestList) ++
+      entriesOf(spark, table, snap.deltaManifestList))
+
+  /** Entries folded in order: an add installs its (partition, bucket,
+    * name) key, a delete retires it. */
+  private def foldLive(entries: Seq[FileEntry]): Seq[FileEntry] = {
     val live = scala.collection.mutable.LinkedHashMap[(String, Int, String), FileEntry]()
-    (entriesOf(spark, table, snap.baseManifestList) ++
-      entriesOf(spark, table, snap.deltaManifestList)).foreach { e =>
+    entries.foreach { e =>
       val key = (e.partition.toSeq.sorted.mkString(","), e.bucket, e.fileName)
       if (e.kind == 0) live(key) = e else live.remove(key)
     }
     live.values.toSeq
   }
 
-  /** Row count from the parquet FOOTER — a driver-side metadata read;
-    * a `spark.read.parquet(file).count()` per staged file would spend
-    * a full Spark job on each (measured ~80 s/commit of pure overhead
-    * in PaimonScaleProbe before this). */
-  private def footerRowCount(spark: SparkSession, path: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new Path(path), conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
+  /** Row count and trimmed-key bounds from ONE open of a staged
+    * file's parquet FOOTER — a driver-side metadata read; a
+    * `spark.read.parquet(file).count()` per staged file would spend a
+    * full Spark job on each (measured ~80 s/commit of pure overhead in
+    * PaimonScaleProbe before this). Per-column min/max across row
+    * groups (picked by the column's own parquet comparator) is a sound
+    * — possibly loose — lexicographic bound. */
+  private def footerStats(conf: org.apache.hadoop.conf.Configuration,
+      path: String, key: RowCodec): (Long, Array[Byte], Array[Byte]) = {
+    import scala.jdk.CollectionConverters._
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(path), conf))
+    try {
+      val footer = r.getFooter
+      val bounds = key.names.map { k =>
+        val c = s"$KeyPrefix$k"
+        val chunks = footer.getBlocks.asScala.toSeq
+          .flatMap(_.getColumns.asScala.find(_.getPath.toDotString == c))
+        val stats = chunks.map(_.getStatistics)
+          .filter(s => s != null && s.hasNonNullValue)
+        if (stats.isEmpty) {
+          require(r.getRecordCount == 0,
+            s"no footer statistics for key column $k in $path")
+          (null, null)
+        } else {
+          val cmp = stats.head.comparator()
+            .asInstanceOf[java.util.Comparator[Any]]
+          def pick(xs: Seq[Any], takeMin: Boolean): Any = xs.reduce((a, b) =>
+            if ((cmp.compare(a, b) <= 0) == takeMin) a else b)
+          val t = chunks.head.getPrimitiveType
+          (statValue(pick(stats.map(_.genericGetMin: Any), takeMin = true), t),
+            statValue(pick(stats.map(_.genericGetMax: Any), takeMin = false), t))
+        }
+      }
+      (r.getRecordCount, key.encodeValues(bounds.map(_._1)),
+        key.encodeValues(bounds.map(_._2)))
+    } finally r.close()
+  }
+
+  /** A parquet statistic → the JVM value [[PaimonBinaryRow.encode]]
+    * takes, by the column's logical type (decimals arrive unscaled,
+    * timestamps as epoch units, narrow ints widened). */
+  private def statValue(v: Any,
+      t: org.apache.parquet.schema.PrimitiveType): Any = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation._
+    import org.apache.parquet.io.api.Binary
+    (t.getLogicalTypeAnnotation, v) match {
+      case (d: DecimalLogicalTypeAnnotation, n: java.lang.Number) =>
+        java.math.BigDecimal.valueOf(n.longValue, d.getScale)
+      case (d: DecimalLogicalTypeAnnotation, b: Binary) =>
+        new java.math.BigDecimal(new java.math.BigInteger(b.getBytes), d.getScale)
+      case (ts: TimestampLogicalTypeAnnotation, n: java.lang.Long) =>
+        ts.getUnit match {
+          case TimeUnit.MILLIS => java.time.Instant.ofEpochMilli(n)
+          case TimeUnit.MICROS => java.time.Instant.EPOCH
+            .plus(n, java.time.temporal.ChronoUnit.MICROS)
+          case TimeUnit.NANOS => java.time.Instant.EPOCH.plusNanos(n)
+        }
+      case (_: DateLogicalTypeAnnotation, n: java.lang.Integer) =>
+        java.time.LocalDate.ofEpochDay(n.longValue)
+      case (i: IntLogicalTypeAnnotation, n: java.lang.Integer) if i.getBitWidth == 8 =>
+        n.byteValue
+      case (i: IntLogicalTypeAnnotation, n: java.lang.Integer) if i.getBitWidth == 16 =>
+        n.shortValue
+      case (_: StringLogicalTypeAnnotation, b: Binary) => b.toStringUsingUTF8
+      case (_, b: Binary) => b.getBytes
+      case (_, other) => other
+    }
   }
 
   private def partitionDir(partition: Map[String, String],
-      partitionKeys: Seq[String], hiveDirs: Boolean = false): String =
+      partitionKeys: Seq[String]): String =
     partitionKeys.map { k =>
       val v = partition.getOrElse(k, null)
-      s"$k=${if (v == null) "__DEFAULT__" else
-        if (hiveDirs) hiveEscapePathName(v)
-        else java.net.URLEncoder.encode(v, "UTF-8").replace("+", "%20")}"
+      s"$k=${if (v == null) "__DEFAULT__" else hiveEscapePathName(v)}"
     }.mkString("/")
 
   /** Hive's partition-dir escaping (what real paimon uses): only the
@@ -503,7 +581,7 @@ object PaimonRead {
   private def dataPath(table: String, e: FileEntry,
       partitionKeys: Seq[String]): String = {
     val root = dataRoot(table) // branch data lives in the shared tree
-    val pd = partitionDir(e.partition, partitionKeys, e.hiveDirs)
+    val pd = partitionDir(e.partition, partitionKeys)
     val prefix = if (pd.isEmpty) root else s"$root/$pd"
     s"$prefix/bucket-${e.bucket}/${e.fileName}"
   }
@@ -590,6 +668,9 @@ object PaimonRead {
     val valueFields = schema.fields.map(_.name)
       .filterNot(schema.primaryKeys.contains)
       .filterNot(schema.partitionKeys.contains)
+    // partition columns outside the key resolve like values; one inside
+    // it is a grouping column already
+    val partitionOnly = schema.partitionKeys.filterNot(schema.primaryKeys.contains)
     schema.options.getOrElse("merge-engine", "deduplicate") match {
       case "deduplicate" =>
         // newest image per key wins; winning -U/-D retracts the key
@@ -607,38 +688,18 @@ object PaimonRead {
         all.withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1)
           .select(fieldCols: _*)
-      case "partial-update" =>
-        // per key, each value column resolves to its LAST NON-NULL
-        // write in sequence order (null = "no update" — the
-        // partial-update contract; deletes are refused at write).
-        // max_by skips rows whose ordering value is null, so gating
-        // the seq on non-nullness IS the last-non-null fold — one
-        // hash aggregation, no window.
-        val keyAgg = keyCols.zip(schema.primaryKeys)
-        val partAgg = schema.partitionKeys.map(p =>
-          max_by(col(p), col(SeqCol)).as(p))
-        val valAgg = valueFields.map(v =>
-          max_by(col(v), when(col(v).isNotNull, col(SeqCol))).as(v))
-        val aggs = partAgg ++ valAgg
-        // a key-only table has nothing to fold — the image is the key set
-        if (aggs.isEmpty)
-          all.select(keyAgg.map { case (kc, pk) => col(kc).as(pk) }: _*)
-            .distinct()
-            .select(schema.fields.map(f =>
-              col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-        else all.groupBy(keyCols.map(col): _*)
-          .agg(aggs.head, aggs.tail: _*)
-          .select(keyAgg.map { case (kc, pk) => col(kc).as(pk) } ++
-            schema.fields.filterNot(f => schema.primaryKeys.contains(f.name))
-              .map(f => col(f.name)): _*)
-          .select(schema.fields.map(f =>
-            col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-      case "aggregation" =>
-        // per-field aggregate from `fields.<name>.aggregate-function`
-        // (default last_non_null_value); key-grouped hash aggregation
+      case engine @ ("partial-update" | "aggregation") =>
+        // per key, each value column folds by its aggregate function in
+        // one key-grouped hash aggregation, no window. partial-update
+        // resolves every column to its LAST NON-NULL write in sequence
+        // order (null = "no update"; deletes are refused at write);
+        // aggregation reads `fields.<name>.aggregate-function` (same
+        // default). max_by skips rows whose ordering value is null, so
+        // gating the seq on non-nullness IS the last-non-null fold.
         val valAgg = valueFields.map { v =>
-          schema.options.getOrElse(s"fields.$v.aggregate-function",
-            "last_non_null_value") match {
+          (if (engine == "partial-update") "last_non_null_value"
+           else schema.options.getOrElse(s"fields.$v.aggregate-function",
+             "last_non_null_value")) match {
             case "sum" => sum(col(v)).as(v)
             case "max" => max(col(v)).as(v)
             case "min" => min(col(v)).as(v)
@@ -657,7 +718,7 @@ object PaimonRead {
               s"unsupported paimon aggregate-function $other for field $v")
           }
         }
-        val partAgg = schema.partitionKeys.map(p =>
+        val partAgg = partitionOnly.map(p =>
           max_by(col(p), col(SeqCol)).as(p))
         val keyAgg = keyCols.zip(schema.primaryKeys)
         val aggs = partAgg ++ valAgg
@@ -1058,24 +1119,12 @@ object PaimonRead {
   // ---- minimal spec-shaped layout writer (tests + gates) -------------
 
   private def nextSnapshotId(f: org.apache.hadoop.fs.FileSystem,
-      table: String): Long = {
-    val dir = new Path(s"$table/snapshot")
-    if (!f.exists(dir)) 1L
-    else f.listStatus(dir).map(_.getPath.getName)
-      .filter(_.startsWith("snapshot-"))
-      .flatMap(n => scala.util.Try(n.stripPrefix("snapshot-").toLong).toOption)
-      .foldLeft(0L)(math.max) + 1
-  }
+      table: String): Long =
+    idsIn(f, s"$table/snapshot", "snapshot-").foldLeft(0L)(math.max) + 1
 
   private def latestSchemaId(f: org.apache.hadoop.fs.FileSystem,
-      table: String): Option[Long] = {
-    val dir = new Path(s"$table/schema")
-    if (!f.exists(dir)) None
-    else f.listStatus(dir).map(_.getPath.getName)
-      .filter(_.startsWith("schema-"))
-      .flatMap(n => scala.util.Try(n.stripPrefix("schema-").toLong).toOption)
-      .sorted.lastOption
-  }
+      table: String): Option[Long] =
+    idsIn(f, s"$table/schema", "schema-").maxOption
 
   private def writeSchemaFile(spark: SparkSession, table: String, id: Long,
       fields: Seq[StructField], partitionKeys: Seq[String],
@@ -1117,88 +1166,26 @@ object PaimonRead {
         s"cannot coerce partition value to $other")
     }
 
-  /** Per-column (min, max) across a parquet file's row groups, from
-    * FOOTER statistics — a driver metadata read, no Spark job. */
-  private def footerColumnBounds(spark: SparkSession, path: String,
-      cols: Seq[String]): (Seq[Any], Seq[Any]) = {
-    if (cols.isEmpty) return (Nil, Nil)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new Path(path), conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      import scala.jdk.CollectionConverters._
-      def toJvm(v: Any): Any = v match {
-        case b: org.apache.parquet.io.api.Binary => b.toStringUsingUTF8
-        case other => other
-      }
-      val perCol = cols.map { c =>
-        val stats = r.getFooter.getBlocks.asScala.flatMap { blk =>
-          blk.getColumns.asScala.find(_.getPath.toDotString == c)
-            .map(_.getStatistics)
-        }.filter(s => s != null && s.hasNonNullValue)
-        require(stats.nonEmpty,
-          s"no footer statistics for key column $c in $path — " +
-            "manifest.flavor=paimon needs stats-bearing key types")
-        val mins = stats.map(s => toJvm(s.genericGetMin)).toSeq
-        val maxs = stats.map(s => toJvm(s.genericGetMax)).toSeq
-        def pick(xs: Seq[Any], takeMin: Boolean): Any = xs.reduce { (a, b) =>
-          val cmp = (a, b) match {
-            case (x: Comparable[_], y) =>
-              x.asInstanceOf[Comparable[Any]].compareTo(y)
-            case _ => 0
-          }
-          if ((cmp <= 0) == takeMin) a else b
-        }
-        (pick(mins, takeMin = true), pick(maxs, takeMin = false))
-      }
-      (perCol.map(_._1), perCol.map(_._2))
-    } finally r.close()
-  }
-
-  /** One REAL-flavor manifest entry record: BinaryRow partition tuple,
-    * trimmed-key bounds from the data file's footer stats (per-column
-    * min/max is a sound — possibly loose — lexicographic bound),
-    * _KEY_STATS carrying the same bounds, _VALUE_STATS honestly null. */
-  private def realEntryRecord(spark: SparkSession, table: String,
-      sch: TableSchema, e: FileEntry, totalBuckets: Int): GenericRecord = {
-    val pTypes = sch.partitionKeys.map(k =>
-      sch.fields.find(_.name == k).map(_.dataType).getOrElse(StringType))
-    val pPrec = sch.partitionKeys.map(k =>
-      sch.rawTypeOf(k).collect { case TimestampRe(p) => p.toInt }.getOrElse(6))
-    val pVals = sch.partitionKeys.zip(pTypes).map { case (k, dt) =>
-      coerce(e.partition.getOrElse(k, null), dt) }
-    val partBytes = PaimonBinaryRow.encode(pVals, pTypes,
-      (i: Int) => pPrec.lift(i).getOrElse(6))
-    val keyNames = sch.primaryKeys // disjoint from partition keys (validated)
-    val keyTypes = keyNames.map(k =>
-      sch.fields.find(_.name == k).map(_.dataType).getOrElse(StringType))
-    // RETIRE entries (kind 1) skip the footer read: readers fold
-    // deletes by (partition, bucket, name) identity, and recomputing
-    // bounds for every retired file made compaction pay N sequential
-    // footer opens for files it is about to drop
-    val (minK, maxK) =
-      if (keyNames.isEmpty || e.kind == 1) (Nil, Nil)
-      else footerColumnBounds(spark,
-        dataPath(table, e, sch.partitionKeys),
-        keyNames.map(k => s"$KeyPrefix$k"))
-    val boundTypes = if (minK.isEmpty) Nil else keyTypes
-    val minKey = PaimonBinaryRow.encode(minK, boundTypes)
-    val maxKey = PaimonBinaryRow.encode(maxK, boundTypes)
-    val fileSchema = realManifestEntrySchema.getField("_FILE").schema()
+  /** One manifest entry record: BinaryRow partition tuple, the file's
+    * trimmed-key bounds (read from its footer at staging, or carried
+    * from the manifest a retired entry was parsed from), _KEY_STATS
+    * carrying the same bounds, _VALUE_STATS honestly null. */
+  private def entryRecord(sch: TableSchema, partitions: RowCodec,
+      e: FileEntry, totalBuckets: Int): GenericRecord = {
+    val fileSchema = manifestEntrySchema.getField("_FILE").schema()
       .getTypes.get(1)
     val statsSchema = fileSchema.getField("_KEY_STATS").schema().getTypes.get(1)
     val keyStats = new GenericData.Record(statsSchema)
-    keyStats.put("_MIN_VALUES", java.nio.ByteBuffer.wrap(minKey))
-    keyStats.put("_MAX_VALUES", java.nio.ByteBuffer.wrap(maxKey))
-    keyStats.put("_NULL_COUNTS",
-      java.util.Arrays.asList(keyNames.map(_ => java.lang.Long.valueOf(0L)): _*))
+    keyStats.put("_MIN_VALUES", java.nio.ByteBuffer.wrap(e.minKey))
+    keyStats.put("_MAX_VALUES", java.nio.ByteBuffer.wrap(e.maxKey))
+    keyStats.put("_NULL_COUNTS", java.util.Arrays.asList(
+      trimmedKey(sch).map(_ => java.lang.Long.valueOf(0L)): _*))
     val fileRec = new GenericData.Record(fileSchema)
     fileRec.put("_FILE_NAME", e.fileName)
     fileRec.put("_FILE_SIZE", e.sizeBytes)
     fileRec.put("_ROW_COUNT", e.rowCount)
-    fileRec.put("_MIN_KEY", java.nio.ByteBuffer.wrap(minKey))
-    fileRec.put("_MAX_KEY", java.nio.ByteBuffer.wrap(maxKey))
+    fileRec.put("_MIN_KEY", java.nio.ByteBuffer.wrap(e.minKey))
+    fileRec.put("_MAX_KEY", java.nio.ByteBuffer.wrap(e.maxKey))
     fileRec.put("_KEY_STATS", keyStats)
     fileRec.put("_VALUE_STATS", null)
     fileRec.put("_MIN_SEQUENCE_NUMBER", e.minSeq)
@@ -1207,43 +1194,24 @@ object PaimonRead {
     fileRec.put("_LEVEL", e.level)
     fileRec.put("_EXTRA_FILES", java.util.Collections.emptyList[String]())
     fileRec.put("_CREATION_TIME", System.currentTimeMillis())
-    val r = new GenericData.Record(realManifestEntrySchema)
+    val r = new GenericData.Record(manifestEntrySchema)
     r.put("_VERSION", 2)
     r.put("_KIND", e.kind)
-    r.put("_PARTITION", java.nio.ByteBuffer.wrap(partBytes))
+    r.put("_PARTITION", java.nio.ByteBuffer.wrap(partitions.encode(e.partition)))
     r.put("_BUCKET", e.bucket)
     r.put("_TOTAL_BUCKETS", totalBuckets)
     r.put("_FILE", fileRec)
     r
   }
 
-  private def entryRecord(e: FileEntry): GenericRecord = {
-    val mapper = graft.functions.JsonKernel.mapper
-    val fileRec = new GenericData.Record(
-      manifestEntrySchema.getField("_FILE").schema())
-    fileRec.put("_FILE_NAME", e.fileName)
-    fileRec.put("_FILE_SIZE", e.sizeBytes)
-    fileRec.put("_ROW_COUNT", e.rowCount)
-    fileRec.put("_MIN_SEQUENCE_NUMBER", e.minSeq)
-    fileRec.put("_MAX_SEQUENCE_NUMBER", e.maxSeq)
-    fileRec.put("_LEVEL", e.level)
-    val r = new GenericData.Record(manifestEntrySchema)
-    r.put("_KIND", e.kind)
-    val pm = new java.util.LinkedHashMap[String, String]()
-    e.partition.foreach { case (k, v) => pm.put(k, v) }
-    r.put("_PARTITION", mapper.writeValueAsString(pm))
-    r.put("_BUCKET", e.bucket)
-    r.put("_FILE", fileRec)
-    r
-  }
-
   /** Commit `entries` as snapshot `id`: one delta manifest, a base
-    * list referencing every PRIOR manifest (the spec's reuse — base
-    * state is the fold of earlier manifests, never rewritten). Tables
-    * created with `manifest.flavor = paimon` write the REAL paimon
-    * manifest schemas (BinaryRow partitions, footer-derived key
-    * bounds, carried-forward list counts, the full snapshot JSON field
-    * set) so a real paimon reader can replay them. */
+    * list carrying every PRIOR manifest's list record forward verbatim
+    * (the spec's reuse — base state is the fold of earlier manifests,
+    * never rewritten) and the full real snapshot field set, published
+    * through [[AtomicPublish]]. Manifests and lists are named by a
+    * per-commit uuid, so a racing writer of the same id never touches
+    * them; the loser deletes them and the data files it installed
+    * (every ADD entry of a commit was staged by it) and rethrows. */
   private def commitEntries(spark: SparkSession, table: String, id: Long,
       schemaId: Long, entries: Seq[FileEntry], commitKind: String,
       changelogEntries: Seq[FileEntry] = Nil,
@@ -1255,114 +1223,99 @@ object PaimonRead {
     f.mkdirs(new Path(s"$table/manifest"))
     f.mkdirs(new Path(s"$table/snapshot"))
     val sch = schemaById(spark, table, schemaId)
-    val realFlavor = sch.options.get("manifest.flavor").contains("paimon")
+    val partitions = partitionCodec(sch)
     val totalBuckets = sch.options.get("bucket").map(_.toInt).getOrElse(1)
-    def entryRec(e: FileEntry): GenericRecord =
-      if (realFlavor) realEntryRecord(spark, table, sch, e, totalBuckets)
-      else entryRecord(e)
-    val entrySchema =
-      if (realFlavor) realManifestEntryFileSchema else manifestEntrySchema
-    val listSchema =
-      if (realFlavor) realManifestListFileSchema else manifestListSchema
-    val manifestName = f"manifest-$id%05d-0"
-    writeAvro(spark, s"$table/manifest/$manifestName", entrySchema,
-      entries.map(entryRec))
-    def listRec(name: String, nAdded: Long, nDeleted: Long): GenericRecord = {
-      val r = new GenericData.Record(
-        if (realFlavor) realManifestListSchema else manifestListSchema)
-      if (realFlavor) {
-        r.put("_VERSION", 2)
-        r.put("_NUM_ADDED_FILES", nAdded)
-        r.put("_NUM_DELETED_FILES", nDeleted)
-        r.put("_PARTITION_STATS", null)
-        r.put("_SCHEMA_ID", schemaId)
-      }
+    val uid = java.util.UUID.randomUUID().toString
+    val written = scala.collection.mutable.ArrayBuffer[Path]()
+    def write(name: String, schema: org.apache.avro.Schema,
+        records: Seq[GenericRecord]): Long = {
+      val p = new Path(s"$table/manifest/$name")
+      written += p
+      writeAvro(spark, p.toString, schema, records)
+      f.getFileStatus(p).getLen
+    }
+    def manifest(n: Int, es: Seq[FileEntry]): GenericRecord = {
+      val name = s"manifest-$uid-$n"
+      val size = write(name, manifestEntryFileSchema,
+        es.map(entryRecord(sch, partitions, _, totalBuckets)))
+      val r = new GenericData.Record(manifestListSchema)
+      r.put("_VERSION", 2)
       r.put("_FILE_NAME", name)
-      r.put("_FILE_SIZE",
-        f.getFileStatus(new Path(manifestPath(spark, table, name))).getLen)
+      r.put("_FILE_SIZE", size)
+      r.put("_NUM_ADDED_FILES", es.count(_.kind == 0).toLong)
+      r.put("_NUM_DELETED_FILES", es.count(_.kind == 1).toLong)
+      r.put("_PARTITION_STATS", null)
+      r.put("_SCHEMA_ID", schemaId)
       r
     }
-    // prior manifests in commit order = the base state; real flavor
-    // carries each prior list record's counts forward verbatim
-    val prior: Seq[GenericRecord] =
-      if (id == 1) Nil
-      else {
-        val prevSnap = snapshotOf(spark, table, id - 1)
-        val prevRecs =
-          readAvro(spark, manifestPath(spark, table, prevSnap.baseManifestList)) ++
-          readAvro(spark, manifestPath(spark, table, prevSnap.deltaManifestList))
-        if (realFlavor) prevRecs
-        else prevRecs.map(p => listRec(p.get("_FILE_NAME").toString, 0L, 0L))
-      }
-    val baseList = f"manifest-list-$id%05d-base"
-    val deltaList = f"manifest-list-$id%05d-delta"
-    writeAvro(spark, s"$table/manifest/$baseList", listSchema, prior)
-    writeAvro(spark, s"$table/manifest/$deltaList", listSchema,
-      Seq(listRec(manifestName,
-        entries.count(_.kind == 0).toLong, entries.count(_.kind == 1).toLong)))
+    val prevSnap = if (id == 1) None else Some(snapshotOf(spark, table, id - 1))
+    val baseList = s"manifest-list-$uid-0"
+    val deltaList = s"manifest-list-$uid-1"
+    write(baseList, manifestListFileSchema, prevSnap.toSeq.flatMap(s =>
+      Seq(s.baseManifestList, s.deltaManifestList))
+      .flatMap(l => readAvro(spark, manifestPath(spark, table, l))))
+    write(deltaList, manifestListFileSchema, Seq(manifest(0, entries)))
     // the spec's changelog chain: a separate manifest + list, named in
     // the snapshot, NEVER folded into the live data state
     val changelogJson = if (changelogEntries.isEmpty) "null" else {
-      val clManifest = f"manifest-$id%05d-cl"
-      writeAvro(spark, s"$table/manifest/$clManifest", entrySchema,
-        changelogEntries.map(entryRec))
-      val clList = f"manifest-list-$id%05d-changelog"
-      writeAvro(spark, s"$table/manifest/$clList", listSchema,
-        Seq(listRec(clManifest, changelogEntries.size.toLong, 0L)))
+      val clList = s"manifest-list-$uid-2"
+      write(clList, manifestListFileSchema, Seq(manifest(1, changelogEntries)))
       "\"" + clList + "\""
     }
     val rows = entries.filter(_.kind == 0).map(_.rowCount).sum
-    val extraFields = if (!realFlavor) "" else {
-      // the full real-snapshot field set a paimon reader expects.
-      // totalRecordCount is INCREMENTAL — prior total + this commit's
-      // adds − retires — so commit cost stays O(this commit), not a
-      // full live-fold per commit (O(table files), quadratic over the
-      // table's life). A prior snapshot without the field (a table
-      // converted to real flavor mid-life) pays the fold once.
-      val total = (if (id == 1) Some(0L)
-        else snapshotOf(spark, table, id - 1).totalRecordCount) match {
-        case Some(prevTotal) =>
-          prevTotal + entries.filter(_.kind == 0).map(_.rowCount).sum -
-            entries.filter(_.kind == 1).map(_.rowCount).sum
-        case None =>
-          val live = scala.collection.mutable.LinkedHashMap[(String, Int, String), FileEntry]()
-          (liveFiles(spark, table, Some(id - 1)) ++ entries).foreach { e =>
-            val key = (e.partition.toSeq.sorted.mkString(","), e.bucket, e.fileName)
-            if (e.kind == 0) live(key) = e else live.remove(key)
-          }
-          live.values.map(_.rowCount).sum
-      }
-      val clRows = changelogEntries.filter(_.kind == 0).map(_.rowCount).sum
-      s""","commitUser":"${java.util.UUID.randomUUID()}","commitIdentifier":9223372036854775807,"logOffsets":{},"totalRecordCount":$total,"changelogRecordCount":$clRows,"watermark":null"""
+    // totalRecordCount is INCREMENTAL — prior total + this commit's
+    // adds − retires — so commit cost stays O(this commit), not a full
+    // live-fold per commit (O(table files), quadratic over the table's
+    // life). A prior snapshot without the field (a foreign table) pays
+    // the fold once.
+    val total = prevSnap.fold(Option(0L))(_.totalRecordCount) match {
+      case Some(prevTotal) =>
+        prevTotal + rows - entries.filter(_.kind == 1).map(_.rowCount).sum
+      case None =>
+        foldLive(liveFiles(spark, table, Some(id - 1)) ++ entries)
+          .map(_.rowCount).sum
     }
-    val effIndex: Option[String] = indexManifest.getOrElse(
-      if (id == 1) None else snapshotOf(spark, table, id - 1).indexManifest)
+    val clRows = changelogEntries.filter(_.kind == 0).map(_.rowCount).sum
+    val effIndex: Option[String] =
+      indexManifest.getOrElse(prevSnap.flatMap(_.indexManifest))
     val indexJson = effIndex.map("\"" + _ + "\"").getOrElse("null")
     val json =
-      s"""{"version":3,"id":$id,"schemaId":$schemaId,"baseManifestList":"$baseList","deltaManifestList":"$deltaList","changelogManifestList":$changelogJson,"indexManifest":$indexJson,"commitKind":"$commitKind","timeMillis":${System.currentTimeMillis()},"deltaRecordCount":$rows$extraFields}"""
-    val out = f.create(new Path(s"$table/snapshot/snapshot-$id"), false)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+      s"""{"version":3,"id":$id,"schemaId":$schemaId,"baseManifestList":"$baseList","deltaManifestList":"$deltaList","changelogManifestList":$changelogJson,"indexManifest":$indexJson,"commitKind":"$commitKind","timeMillis":${System.currentTimeMillis()},"deltaRecordCount":$rows,"commitUser":"$uid","commitIdentifier":9223372036854775807,"logOffsets":{},"totalRecordCount":$total,"changelogRecordCount":$clRows,"watermark":null}"""
+    val installed = (entries ++ changelogEntries).filter(_.kind == 0)
+      .map(e => new Path(dataPath(table, e, sch.partitionKeys)))
+    AtomicPublish.publishOrDiscard(spark,
+      new Path(s"$table/snapshot/snapshot-$id"), json.getBytes("UTF-8"),
+      installed ++ written)
     val hint = f.create(new Path(s"$table/snapshot/LATEST"), true)
     try hint.write(id.toString.getBytes("UTF-8")) finally hint.close()
     id
   }
 
   /** Stage `df` partitioned by (partition dirs, bucket), walk the hive
-    * layout, move each part under `<p=v>/bucket-<n>/` and return its
-    * manifest entries. `seqRangeOf` overrides the recorded
+    * layout, move each part under `<p=v>/bucket-<n>/` as
+    * `<namePrefix>-<id>-<uuid>-<i>.parquet` and return its manifest
+    * entries: row count and trimmed-key bounds come from one footer
+    * open per file, and partition values take the rendering a
+    * manifest round-trip yields. Timestamps stage as TIMESTAMP_MICROS
+    * (the shape real Paimon writes; Spark's default INT96 carries no
+    * footer statistics). `seqRangeOf` overrides the recorded
     * (minSeq, maxSeq) per (partition, bucket) group — compaction
     * stamps each rewritten run with the seq range it absorbed. */
-  private def stageDataFiles(df: DataFrame, table: String, id: Long,
-      partitionKeys: Seq[String], bucketCol: Option[String],
-      seq: Long, level: Int,
+  private def stageDataFiles(df: DataFrame, table: String, sch: TableSchema,
+      id: Long, bucketCol: Option[String], seq: Long, level: Int,
       seqRangeOf: Option[(Map[String, String], Int) => (Long, Long)] = None,
-      namePrefix: String = "data", hiveDirs: Boolean = false): Seq[FileEntry] = {
+      namePrefix: String = "data"): Seq[FileEntry] = {
     val spark = df.sparkSession
     val f = fs(spark, table)
-    val staging = s"$table/_staging_${namePrefix}_$id"
+    val uid = java.util.UUID.randomUUID().toString
+    val staging = s"$table/_staging_$uid"
+    val partitionKeys = sch.partitionKeys
     val layoutCols = partitionKeys ++ bucketCol.toSeq
-    if (layoutCols.isEmpty) df.coalesce(1).write.mode("overwrite").parquet(staging)
-    else df.write.partitionBy(layoutCols: _*).mode("overwrite").parquet(staging)
+    graft.Engine.withConf(spark,
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      if (layoutCols.isEmpty) df.coalesce(1).write.parquet(staging)
+      else df.write.partitionBy(layoutCols: _*).parquet(staging)
+    }
     // %XX-only decode: Spark's dir-name escaping leaves '+' literal,
     // URLDecoder would turn it into a space
     def unescape(s: String) = PathNames.unescapePathName(s)
@@ -1376,45 +1329,44 @@ object PaimonRead {
         else if (name.endsWith(".parquet")) found += ((st.getPath, st.getLen, vals))
       }
     walk(new Path(staging), Map.empty)
-    val installed = found.zipWithIndex.map { case ((part, len, vals), i) =>
-      val partition = partitionKeys.map(k => k ->
-        vals.get(k).filter(_ != "__HIVE_DEFAULT_PARTITION__").orNull).toMap
+    val partitions = partitionCodec(sch)
+    val root = dataRoot(table)
+    val installed = found.toSeq.zipWithIndex.map { case ((part, len, vals), i) =>
+      val partition = partitions.canonical(partitionKeys.map(k => k ->
+        vals.get(k).filter(_ != "__HIVE_DEFAULT_PARTITION__").orNull).toMap)
       val bucket = bucketCol.flatMap(vals.get).map(_.toInt).getOrElse(0)
-      val branchTag = branchNameOf(table).map(b => s"b$b-").getOrElse("")
-      val fileName = f"$namePrefix-$branchTag$id%05d-$i.parquet"
-      val root = dataRoot(table)
-      val pd = partitionDir(partition, partitionKeys, hiveDirs)
+      val fileName = f"$namePrefix-$id%05d-$uid-$i.parquet"
+      val pd = partitionDir(partition, partitionKeys)
       val destDir = (if (pd.isEmpty) root else s"$root/$pd") + s"/bucket-$bucket"
       f.mkdirs(new Path(destDir))
       val dest = s"$destDir/$fileName"
-      f.delete(new Path(dest), false)
-      require(f.rename(part, new Path(dest)),
-        s"staging rename $part -> $dest failed — refusing to commit a " +
-          "manifest entry over whatever file sits at the destination")
+      require(f.rename(part, new Path(dest)), s"staging rename $part -> $dest failed")
       // rename preserves length — the staging stat is the file's stat
       (dest, len, partition, bucket, fileName)
-    }.toSeq
-    // footer row counts in ONE bounded-pool pass (each open is an
+    }
+    // footer stats in ONE bounded-pool pass (each open is an
     // independent metadata round-trip; serial per-file reads are
     // minutes of driver wall at 100k-file commits on an object store)
-    val rowCounts: Map[String, Long] =
-      if (installed.isEmpty) Map.empty
+    val key = rowCodec(sch, trimmedKey(sch))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val stats: Seq[(Long, Array[Byte], Array[Byte])] =
+      if (installed.isEmpty) Nil
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
           math.min(16, installed.size))
         try {
           import scala.jdk.CollectionConverters._
-          val tasks: Seq[java.util.concurrent.Callable[(String, Long)]] =
-            installed.map { case (dest, _, _, _, _) =>
-              (() => dest -> footerRowCount(spark, dest)): java.util.concurrent.Callable[(String, Long)]
-            }
-          pool.invokeAll(tasks.asJava).asScala.map(_.get()).toMap
+          val tasks = installed.map { case (dest, _, _, _, _) =>
+            (() => footerStats(conf, dest, key)): java.util.concurrent.Callable[(Long, Array[Byte], Array[Byte])]
+          }
+          pool.invokeAll(tasks.asJava).asScala.map(_.get()).toSeq
         } finally pool.shutdown()
       }
-    val entries = installed.map { case (dest, len, partition, bucket, fileName) =>
-      val (mn, mx) = seqRangeOf.map(_(partition, bucket)).getOrElse((seq, seq))
-      FileEntry(0, partition, bucket, fileName, len, rowCounts(dest), mn, mx, level,
-        hiveDirs = hiveDirs)
+    val entries = installed.zip(stats).map {
+      case ((_, len, partition, bucket, fileName), (rows, minKey, maxKey)) =>
+        val (mn, mx) = seqRangeOf.map(_(partition, bucket)).getOrElse((seq, seq))
+        FileEntry(0, partition, bucket, fileName, len, rows, mn, mx, level,
+          minKey, maxKey)
     }
     f.delete(new Path(staging), true)
     entries
@@ -1441,8 +1393,7 @@ object PaimonRead {
     require(partitionKeys.isEmpty || partitionKeys == schKeys,
       s"table partition keys are $schKeys, not $partitionKeys")
     val id = nextSnapshotId(f, table)
-    val entries = stageDataFiles(df, table, id, schKeys, None, id, 0,
-      hiveDirs = sch.options.get("manifest.flavor").contains("paimon"))
+    val entries = stageDataFiles(df, table, sch, id, None, id, 0)
     commitEntries(spark, table, id, schemaId, entries, "APPEND")
   }
 
@@ -1489,24 +1440,6 @@ object PaimonRead {
         !sch.options.contains("changelog-producer"),
       s"changelog-producer is supported for the deduplicate engine " +
         s"(a $engine changelog needs old/new RESOLVED images, not batch rows)")
-    val realFlavor = sch.options.get("manifest.flavor").contains("paimon")
-    if (realFlavor) {
-      // real paimon's file key = pk trimmed of partition keys; this
-      // writer's _KEY_ columns are the FULL pk, so the two only agree
-      // when they're disjoint — and key bounds need footer stats
-      require(primaryKeys.intersect(sch.partitionKeys).isEmpty,
-        "manifest.flavor=paimon requires primary keys disjoint from " +
-          "partition keys (trimmed-key file schema)")
-      primaryKeys.foreach { k =>
-        val dt = sch.fields.find(_.name == k).map(_.dataType)
-        require(dt.exists {
-          case IntegerType | LongType | ShortType | ByteType | StringType |
-               DateType | DoubleType | FloatType | BooleanType => true
-          case _ => false
-        }, s"manifest.flavor=paimon: key column $k type $dt has no " +
-          "footer-stats bound encoding")
-      }
-    }
     primaryKeys.foreach(k => require(df.columns.contains(k),
       s"batch missing key column $k"))
     require(assumeKeyUnique || df.groupBy(primaryKeys.map(col): _*).count()
@@ -1536,8 +1469,7 @@ object PaimonRead {
         d.withColumn(fd.name, lit(null).cast(fd.dataType))
       }
     }
-    val sys = primaryKeys.foldLeft(valued) { (d, k) =>
-      d.withColumn(s"$KeyPrefix$k", col(k)) }
+    val sys = withKeyCols(valued, sch)
       .withColumn(SeqCol, lit(id))
       .withColumn(KindCol, lit(if (deletes) 3 else 2).cast("tinyint"))
     // bucket routing: fixed tables hash-mod; DYNAMIC tables
@@ -1555,12 +1487,11 @@ object PaimonRead {
         val target = sch.options.get("dynamic-bucket.target-row-num")
           .map(_.toLong).getOrElse(2000000L)
         val (assigned, delta, cache) = PaimonHashIndex.assignBuckets(spark,
-          table, sch.partitionKeys, sys, primaryKeys, target,
+          table, partitionCodec(sch), sys, primaryKeys, target,
           if (id == 1) None else Some(id - 1))
         (assigned.drop("__pj", "__khash"), delta, Some(cache))
       }
-    val entries = stageDataFiles(sysB, table, id, sch.partitionKeys,
-      Some("__bucket"), id, 0, hiveDirs = realFlavor)
+    val entries = stageDataFiles(sysB, table, sch, id, Some("__bucket"), id, 0)
     // dynamic commits with NEW keys publish a rewritten full-state
     // index manifest (changed buckets' hash files rewritten, unchanged
     // HASH + all DV entries carried forward); otherwise inherit
@@ -1589,8 +1520,8 @@ object PaimonRead {
         // (disjoint-key appends, or upstream CDC with retractions);
         // an update emits only its new image (+U) here, where lookup
         // would also emit the -U pre-image.
-        stageDataFiles(sysB, table, id, sch.partitionKeys, Some("__bucket"),
-          id, 0, namePrefix = "changelog", hiveDirs = realFlavor)
+        stageDataFiles(sysB, table, sch, id, Some("__bucket"), id, 0,
+          namePrefix = "changelog")
       case _ => Nil
     }
     // after BOTH consumers of sysB (data staging and an input-producer
@@ -1650,14 +1581,12 @@ object PaimonRead {
     (pre.toSeq ++ post.toSeq)
       .reduceOption(_ unionByName _)
       .map { rows =>
-        val sys = primaryKeys.foldLeft(rows) { (d, k) =>
-          d.withColumn(s"$KeyPrefix$k", col(k)) }
+        val sys = withKeyCols(rows, sch)
           .withColumn(SeqCol, lit(id))
           .withColumn("__bucket",
             pmod(fabs(hash(primaryKeys.map(col): _*)), lit(buckets)))
-        stageDataFiles(sys, table, id, sch.partitionKeys, Some("__bucket"),
-          id, 0, namePrefix = "changelog",
-          hiveDirs = sch.options.get("manifest.flavor").contains("paimon"))
+        stageDataFiles(sys, table, sch, id, Some("__bucket"), id, 0,
+          namePrefix = "changelog")
       }.getOrElse(Nil)
   }
 
@@ -1679,13 +1608,7 @@ object PaimonRead {
     val mapper = graft.functions.JsonKernel.mapper
     name match {
       case "snapshots" =>
-        val dir = new Path(s"$table/snapshot")
-        require(f.exists(dir), s"not a paimon table (no snapshot/): $table")
-        val ids = f.listStatus(dir).map(_.getPath.getName)
-          .filter(_.startsWith("snapshot-"))
-          .flatMap(n => scala.util.Try(
-            n.stripPrefix("snapshot-").toLong).toOption).sorted.toSeq
-        val rows = ids.map { id =>
+        val rows = snapshotIds(f, table).map { id =>
           val in = f.open(new Path(s"$table/snapshot/snapshot-$id"))
           val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
             finally in.close()
@@ -1715,13 +1638,8 @@ object PaimonRead {
           StructField("changelog_record_count", LongType),
           StructField("watermark", LongType))), rows)
       case "schemas" =>
-        val dir = new Path(s"$table/schema")
-        require(f.exists(dir), s"no schema/ under $table")
-        val ids = f.listStatus(dir).map(_.getPath.getName)
-          .filter(_.startsWith("schema-"))
-          .flatMap(n => scala.util.Try(
-            n.stripPrefix("schema-").toLong).toOption).sorted.toSeq
-        val rows = ids.map { id =>
+        require(f.exists(new Path(s"$table/schema")), s"no schema/ under $table")
+        val rows = idsIn(f, s"$table/schema", "schema-").sorted.map { id =>
           val sch = schemaById(spark, table, id)
           Row(id,
             mapper.writeValueAsString(sch.fields.map(fd => Map(
@@ -1873,23 +1791,7 @@ object PaimonRead {
       }
     val id = nextSnapshotId(f, table)
     val byFile = files.map(e => e.fileName -> e).toMap
-    val realFlavor = sch.options.get("manifest.flavor").contains("paimon")
-    def partBytes(p: Map[String, String]): Array[Byte] =
-      if (!realFlavor) {
-        val m = new java.util.LinkedHashMap[String, String]()
-        p.toSeq.sortBy(_._1).foreach { case (k, v) => m.put(k, v) }
-        graft.functions.JsonKernel.mapper.writeValueAsBytes(m)
-      } else {
-        val pTypes = sch.partitionKeys.map(k =>
-          sch.fields.find(_.name == k).map(_.dataType).getOrElse(StringType))
-        val pPrec = sch.partitionKeys.map(k =>
-          sch.rawTypeOf(k).collect { case TimestampRe(pr) => pr.toInt }
-            .getOrElse(6))
-        PaimonBinaryRow.encode(
-          sch.partitionKeys.zip(pTypes).map { case (k, dt) =>
-            coerce(p.getOrElse(k, null), dt) }, pTypes,
-          (i: Int) => pPrec.lift(i).getOrElse(6))
-      }
+    val partitions = partitionCodec(sch)
     f.mkdirs(new Path(s"${dataRoot(table)}/index"))
     val newEntries = merged
       .groupBy { case (fn, _, _) =>
@@ -1900,7 +1802,7 @@ object PaimonRead {
         val ranges = PaimonDv.writeDvFile(f,
           new Path(s"${dataRoot(table)}/index/$name"),
           bms.sortBy(_._1).map { case (fn, bytes, _) => (fn, bytes) })
-        PaimonDv.IndexEntry(0, partBytes(part), bucket, PaimonDv.IndexType,
+        PaimonDv.IndexEntry(0, partitions.encode(part), bucket, PaimonDv.IndexType,
           name, f.getFileStatus(new Path(s"${dataRoot(table)}/index/$name")).getLen,
           bms.map(_._3).sum, ranges)
       }
@@ -1925,8 +1827,8 @@ object PaimonRead {
     * the files ONLY the rolled-back commits added. Tags at or before
     * the target stay retention roots; a tag PAST the target REFUSES
     * the rollback — the next commit reuses the rolled snapshot ids,
-    * and this writer's deterministic file names (`data-<id>-<i>`,
-    * `manifest-<id>-…`) would silently overwrite the tag's retained
+    * and the id-derived DV and hash index names (`index-<id>-<i>`,
+    * `index-manifest-<id>`) would silently overwrite the tag's retained
     * files. Delete such tags first. The next commit continues from the
     * target. */
   def rollbackTo(spark: SparkSession, table: String,
@@ -1943,34 +1845,20 @@ object PaimonRead {
     // references rolled-back data files this reclaim would delete
     // (and reused main ids would overwrite). Branches forked at or
     // before the target only reference surviving snapshots' files —
-    // and their own branch-tagged files are untouchable by main names.
-    val blockingBranches = branches(spark, table).filter { b =>
-      val sd = new Path(s"${branchRoot(table, b)}/snapshot")
-      val fork = f.listStatus(sd).map(_.getPath.getName)
-        .filter(_.startsWith("snapshot-"))
-        .flatMap(n => scala.util.Try(
-          n.stripPrefix("snapshot-").toLong).toOption)
-        .foldLeft(Long.MaxValue)(math.min)
-      fork > snapshotId
-    }
+    // and their own files are untouchable by main names.
+    val blockingBranches = branches(spark, table).filter(b =>
+      idsIn(f, s"${branchRoot(table, b)}/snapshot", "snapshot-")
+        .foldLeft(Long.MaxValue)(math.min) > snapshotId)
     require(blockingBranches.isEmpty,
       s"cannot roll back past branches forked after snapshot " +
         s"$snapshotId: ${blockingBranches.mkString(", ")} — their fork " +
         "points reference files this rollback would reclaim; delete " +
         "those branches first")
-    val ids = f.listStatus(new Path(s"$table/snapshot"))
-      .map(_.getPath.getName).filter(_.startsWith("snapshot-"))
-      .flatMap(n => scala.util.Try(n.stripPrefix("snapshot-").toLong).toOption)
-      .sorted.toSeq
-    val rolled = ids.filter(_ > snapshotId)
+    val rolled = snapshotIds(f, table).filter(_ > snapshotId)
     if (rolled.isEmpty) return Nil
     // reachable from the target view and from tags
-    val tagDir = new Path(s"$table/tag")
     val roots: Seq[Snap] = snapshotOf(spark, table, snapshotId) +:
-      (if (!f.exists(tagDir)) Nil
-       else f.listStatus(tagDir).map(_.getPath)
-         .filter(_.getName.startsWith("tag-"))
-         .map(p => snapFromFile(f, p)).toSeq)
+      snapsIn(f, table, "tag", "tag-")
     val keepData = scala.collection.mutable.Set[String]()
     val keepIndex = scala.collection.mutable.Set[String]()
     roots.foreach { s =>
@@ -2024,12 +1912,7 @@ object PaimonRead {
         "sweep shared data files without counting main's snapshots as " +
         "retention roots)")
     val f = fs(spark, table)
-    val dir = new Path(s"$table/snapshot")
-    require(f.exists(dir), s"not a paimon table (no snapshot/): $table")
-    val ids = f.listStatus(dir).map(_.getPath.getName)
-      .filter(_.startsWith("snapshot-"))
-      .flatMap(n => scala.util.Try(n.stripPrefix("snapshot-").toLong).toOption)
-      .sorted.toSeq
+    val ids = snapshotIds(f, table)
     val expire = ids.dropRight(retainLast)
     if (expire.isEmpty) return Nil
     val keep = ids.takeRight(retainLast)
@@ -2038,32 +1921,18 @@ object PaimonRead {
     val keepManifests = scala.collection.mutable.Set[String]()
     val keepData = scala.collection.mutable.Set[String]()
     val keepIndex = scala.collection.mutable.Set[String]()
-    // retention roots: the newest `retainLast` snapshots plus every
-    // TAGGED snapshot (tags carry their own JSON copy; their files
-    // must survive expiry — the paimon tag contract)
-    def tagSnapsOf(root: String): Seq[(String, Snap)] = {
-      val tagDir = new Path(s"$root/tag")
-      if (!f.exists(tagDir)) Nil
-      else f.listStatus(tagDir).map(_.getPath)
-        .filter(_.getName.startsWith("tag-"))
-        .map(p => root -> snapFromFile(f, p)).toSeq
-    }
-    def branchSnapsOf(root: String): Seq[(String, Snap)] = {
-      val sd = new Path(s"$root/snapshot")
-      if (!f.exists(sd)) Nil
-      else f.listStatus(sd).map(_.getPath)
-        .filter(_.getName.startsWith("snapshot-"))
-        .map(p => root -> snapFromFile(f, p)).toSeq
-    }
-    // retention roots: kept snapshots + tags + EVERY branch's
+    // retention roots: the newest `retainLast` snapshots, every TAGGED
+    // snapshot (tags carry their own JSON copy; their files must
+    // survive expiry — the paimon tag contract) and EVERY branch's
     // snapshots and tags (branch metadata is its own tree; the data
     // files it references live in the shared tree expiry collects)
     val roots: Seq[(String, Snap)] =
       keep.map(id => table -> snapshotOf(spark, table, id)) ++
-        tagSnapsOf(table) ++
+        snapsIn(f, table, "tag", "tag-").map(table -> _) ++
         branches(spark, table).flatMap { b =>
           val br = branchRoot(table, b)
-          branchSnapsOf(br) ++ tagSnapsOf(br)
+          (snapsIn(f, br, "snapshot", "snapshot-") ++
+            snapsIn(f, br, "tag", "tag-")).map(br -> _)
         }
     roots.foreach { case (root, s) =>
       val pKeys = schemaById(spark, root, s.schemaId).partitionKeys
@@ -2144,7 +2013,7 @@ object PaimonRead {
     *
     * Files younger than `olderThanMillis` are NEVER swept: a concurrent
     * writer's staged-but-not-yet-committed data or manifest files
-    * (between the staging rename and the snapshot-JSON create) must
+    * (between the staging rename and the snapshot publish) must
     * survive the sweep — real paimon gates `remove_orphan_files` on an
     * `older_than` timestamp for exactly this race. Pass 0 only when the
     * table provably has a single writer (the specs do).
@@ -2165,19 +2034,9 @@ object PaimonRead {
     val f = fs(spark, table)
     val snapDir = new Path(s"$table/snapshot")
     require(f.exists(snapDir), s"not a paimon table (no snapshot/): $table")
-    def rootsOf(root: String): Seq[(String, Snap)] = {
-      val sd = new Path(s"$root/snapshot")
-      val snaps = if (!f.exists(sd)) Nil
-        else f.listStatus(sd).map(_.getPath).toSeq
-          .filter(_.getName.startsWith("snapshot-"))
-          .map(p => root -> snapFromFile(f, p))
-      val tagDir = new Path(s"$root/tag")
-      val tags = if (!f.exists(tagDir)) Nil
-        else f.listStatus(tagDir).map(_.getPath).toSeq
-          .filter(_.getName.startsWith("tag-"))
-          .map(p => root -> snapFromFile(f, p))
-      snaps ++ tags
-    }
+    def rootsOf(root: String): Seq[(String, Snap)] =
+      (snapsIn(f, root, "snapshot", "snapshot-") ++
+        snapsIn(f, root, "tag", "tag-")).map(root -> _)
     // BRANCHES are retention roots too: their metadata lives in their
     // own trees (never swept here), but the DATA files they reference
     // live in the shared tree this sweep covers
@@ -2367,8 +2226,7 @@ object PaimonRead {
         val dt = sch.fields.find(_.name == k).map(_.dataType).getOrElse(StringType)
         df.withColumn(k, col(s"__p_$k").cast(dt)).drop(s"__p_$k")
       }
-      val keyCols = sch.primaryKeys.map(k =>
-        if (all.columns.contains(s"$KeyPrefix$k")) s"$KeyPrefix$k" else k)
+      val keyCols = keyColsOf(sch, all)
       val groupCols = sch.partitionKeys ++ Seq("__bucket")
       val engine = sch.options.getOrElse("merge-engine", "deduplicate")
       val merged0 =
@@ -2401,8 +2259,7 @@ object PaimonRead {
           val buckets = sch.options.get("bucket").map(_.toInt).getOrElse(1)
           val resolved = mergedImages(spark, table, sch,
             typed.drop("__fname", "__bucket"))
-          val imaged = sch.primaryKeys.foldLeft(resolved) { (d, k) =>
-              d.withColumn(s"$KeyPrefix$k", col(k)) }
+          val imaged = withKeyCols(resolved, sch)
             .withColumn(SeqCol, lit(files.map(_.maxSeq).foldLeft(0L)(math.max)))
             .withColumn(KindCol, lit(2).cast("tinyint"))
           if (buckets != -1)
@@ -2423,10 +2280,8 @@ object PaimonRead {
       val tableMaxSeq = files.map(_.maxSeq).foldLeft(0L)(math.max)
       // a typed→dir→string round-trip that renders differently than the
       // manifest keeps the table-wide bound rather than throwing
-      stageDataFiles(merged, table, id, sch.partitionKeys, Some("__bucket"),
-        0L, maxLevel,
-        seqRangeOf = Some((p, b) => (0L, groupMaxSeq.getOrElse((p, b), tableMaxSeq))),
-        hiveDirs = sch.options.get("manifest.flavor").contains("paimon"))
+      stageDataFiles(merged, table, sch, id, Some("__bucket"), 0L, maxLevel,
+        seqRangeOf = Some((p, b) => (0L, groupMaxSeq.getOrElse((p, b), tableMaxSeq))))
     }
     val retires = files.map(_.copy(kind = 1))
     // the COMPACT snapshot clears the DELETION VECTORS (it applied

@@ -90,6 +90,25 @@ class IcebergWriteSpec extends SparkSuite {
     assert(results.collect { case (_, scala.util.Success(v)) => v }.distinct.size === won.size)
     assert(IcebergRead.read(spark, table).select($"id").collect().map(_.getLong(0)).toSet
       === won + 0L)
+    // a losing append leaves nothing behind: the data files, manifests
+    // and manifest lists on disk are exactly those the final metadata
+    // references
+    def names(dir: String, keep: String => Boolean) =
+      Option(new java.io.File(s"$table/$dir").list()).toSeq.flatten.filter(keep).toSet
+    def base(p: String) = new java.io.File(new java.net.URI(p).getPath).getName
+    val meta = metaJson(table, won.size + 1)
+    val lists = meta.get("snapshots").elements().asScala
+      .map(_.get("manifest-list").asText()).toSeq
+    val current = lists.last
+    val manifests = new DataFileStream(new java.io.FileInputStream(
+        new java.net.URI(current).getPath),
+      new GenericDatumReader[GenericRecord]())
+    val manifestPaths = try manifests.iterator().asScala
+      .map(_.get("manifest_path").toString).toSeq finally manifests.close()
+    assert(names("data", _.endsWith(".parquet")) ===
+      IcebergRead.dataFileEntries(spark, table).map(e => base(e.path)).toSet)
+    assert(names("metadata", _.endsWith(".avro")) ===
+      (lists ++ manifestPaths).map(base).toSet)
   }
 
   test("an append whose prior metadata cannot be read throws instead of overwriting") {

@@ -221,8 +221,7 @@ class PaimonDvSpec extends SparkSuite {
     val dir = freshTable("real")
     PaimonRead.commitPk(spark.range(0, 120).select($"id".as("k"),
       ($"id" % 3).cast("int").as("p"), $"id".cast("double").as("x")),
-      dir, Seq("k"), partitionKeys = Seq("p"), numBuckets = 2,
-      options = Map("manifest.flavor" -> "paimon"))
+      dir, Seq("k"), partitionKeys = Seq("p"), numBuckets = 2)
     PaimonRead.deleteWhereDv(spark, dir, col("k") % 4 === 1)
     assert(PaimonRead.read(spark, dir).count() ===
       (0L until 120L).count(_ % 4 != 1))

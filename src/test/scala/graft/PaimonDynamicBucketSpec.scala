@@ -69,6 +69,31 @@ class PaimonDynamicBucketSpec extends SparkSuite {
     assert(got.find(_._1 === 1L).get._2 === 1.0)
   }
 
+  test("partitioned dynamic table: the hash-index manifest's partitions are BinaryRows") {
+    import org.apache.spark.sql.types.IntegerType
+    val dir = fresh("binrow")
+    def rows(from: Long, until: Long, x: Double) = spark.range(from, until)
+      .select($"id".as("k"), ($"id" % 3).cast("int").as("p"), (lit(x) + $"id").as("x"))
+    PaimonRead.commitPk(rows(0, 30, 0.0), dir, Seq("k"), Seq("p"), numBuckets = -1,
+      options = Map("dynamic-bucket.target-row-num" -> "4"))
+    PaimonRead.commitPk(rows(25, 35, 100.0), dir, Seq("k"), assumeKeyUnique = true)
+    val im = PaimonRead.snapshotIndexManifest(spark, dir, 2L)
+    val hashEntries = PaimonDv.readIndexManifest(spark, dir, im.get)
+      .filter(_.indexType == PaimonHashIndex.IndexType)
+    // the same bytes the data manifests carry for the partition
+    val byPartition = hashEntries.groupBy(e =>
+      graft.sources.PaimonBinaryRow.decode(e.partitionBytes, Seq(IntegerType)).head)
+    assert(byPartition.keySet === Set("0", "1", "2"))
+    byPartition.foreach { case (p, es) => es.foreach(e => assert(e.partitionBytes.toSeq ===
+      graft.sources.PaimonBinaryRow.encode(Seq(p.toInt), Seq(IntegerType)).toSeq)) }
+    // each partition's buckets hold exactly its distinct keys
+    assert(byPartition.map { case (p, es) => p -> es.map(_.rowCount).sum } ===
+      Map("0" -> 12L, "1" -> 12L, "2" -> 11L))
+    val back = PaimonRead.read(spark, dir).collect()
+      .map(r => r.getAs[Long]("k") -> r.getAs[Double]("x")).toMap
+    assert(back.size === 35 && back(26L) === 126.0 && back(24L) === 24.0)
+  }
+
   test("CDC: feed bit-equal to a fixed-bucket twin; prior set pruned to touched buckets") {
     val dirD = fresh("cdc-dyn"); val dirF = fresh("cdc-fix")
     def feed(dir: String, buckets: Int) = {

@@ -114,8 +114,7 @@ class PaimonMaintSpec extends SparkSuite {
     // commit — adds minus retires must still equal the live row count
     val dir3 = fresh("totals")
     PaimonRead.commitPk(spark.range(0, 60).select($"id".as("k"),
-      $"id".cast("double").as("x")), dir3, Seq("k"),
-      options = Map("manifest.flavor" -> "paimon"))
+      $"id".cast("double").as("x")), dir3, Seq("k"))
     PaimonRead.commitPk(spark.range(0, 10).select($"id".as("k"),
       lit(1.5).as("x")), dir3, Seq("k"), assumeKeyUnique = true)
     PaimonRead.compact(spark, dir3)

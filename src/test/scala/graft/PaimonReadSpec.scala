@@ -165,6 +165,13 @@ class PaimonReadSpec extends SparkSuite {
     assert(back2.schema("d").dataType === org.apache.spark.sql.types.DateType)
     assert(back2.select("k", "d").exceptAll(df.select("k", "d")).isEmpty)
     assert(back2.filter($"d" === java.sql.Date.valueOf("2024-03-03")).count() === 8)
+    // a TIMESTAMP partition: the staged directory and the manifest's
+    // decoded value name the same file
+    val dir3 = freshTable("typespartts")
+    PaimonRead.commitAppend(df, dir3, Seq("ts"))
+    val back3 = PaimonRead.read(spark, dir3)
+    assert(back3.count() === 40)
+    assert(back3.select("k", "ts").exceptAll(df.select("k", "ts")).isEmpty)
   }
 
   test("FOREIGN interop: a real paimon-written table reads (BinaryRow partitions, full _FILE struct)") {
@@ -245,29 +252,29 @@ class PaimonReadSpec extends SparkSuite {
       "123456789012345678.90", "true"))
   }
 
-  test("manifest.flavor=paimon: real manifest schemas, byte-identical to the fixture's; reads equal the simplified twin") {
+  test("manifest schemas match the real fixture; state and feed match the batches") {
     val fixtureManifest = graft.sources.Fixtures.dir(spark,
       "test_paimon_reader/paimon_test.db/" +
         "spark_sql_created_hive_catalog_paimon_partitioned/manifest/" +
         "manifest-4e7bd2da-30b4-4003-9818-dd61d15c3157-0")
-    val (dReal, dTwin) = (freshTable("realfl"), freshTable("realtw"))
-    def build(dir: String, opts: Map[String, String]): Unit = {
-      val base = spark.range(0, 60).select($"id".as("k"),
-        ($"id" % 3).cast("string").as("p"), ($"id" * 2.0).as("x"))
-      PaimonRead.commitPk(base, dir, Seq("k"), Seq("p"), numBuckets = 2,
-        options = opts)
-      PaimonRead.commitPk(spark.range(0, 10).select($"id".as("k"),
-        ($"id" % 3).cast("string").as("p"), lit(-1.0).as("x")), dir, Seq("k"))
-      PaimonRead.commitPk(spark.range(50, 55).select($"id".as("k"),
-        ($"id" % 3).cast("string").as("p")), dir, Seq("k"), deletes = true)
-      PaimonRead.compact(spark, dir)
-    }
-    build(dReal, Map("manifest.flavor" -> "paimon"))
-    build(dTwin, Map.empty)
-    def state(dir: String) = PaimonRead.read(spark, dir).collect()
+    val dReal = freshTable("realfl")
+    val base = spark.range(0, 60).select($"id".as("k"),
+      ($"id" % 3).cast("string").as("p"), ($"id" * 2.0).as("x"))
+    PaimonRead.commitPk(base, dReal, Seq("k"), Seq("p"), numBuckets = 2)
+    PaimonRead.commitPk(spark.range(0, 10).select($"id".as("k"),
+      ($"id" % 3).cast("string").as("p"), lit(-1.0).as("x")), dReal, Seq("k"))
+    PaimonRead.commitPk(spark.range(50, 55).select($"id".as("k"),
+      ($"id" % 3).cast("string").as("p")), dReal, Seq("k"), deletes = true)
+    PaimonRead.compact(spark, dReal)
+    // batch 1 writes k*2.0, batch 2 rewrites k < 10 to -1.0, batch 3
+    // deletes 50..54
+    def x(k: Long) = if (k < 10) -1.0 else k * 2.0
+    val expected = ((0L until 50L) ++ (55L until 60L))
+      .map(k => (k, (k % 3).toString, x(k))).toSet
+    val state = PaimonRead.read(spark, dReal).collect()
       .map(r => (r.getAs[Long]("k"), r.getAs[String]("p"), r.getAs[Double]("x"))).toSet
-    assert(state(dReal) === state(dTwin), "real-flavor read != simplified twin")
-    assert(state(dReal).size === 55)
+    assert(state === expected)
+    assert(state.size === 55)
     // the written manifest's embedded avro schema EQUALS the schema a
     // real paimon wrote (field-for-field, fixture-pinned)
     if (new java.io.File(fixtureManifest).isFile) {
@@ -290,14 +297,143 @@ class PaimonReadSpec extends SparkSuite {
     }
     for (field <- Seq("commitUser", "totalRecordCount", "logOffsets", "watermark"))
       assert(snapText.contains(field), s"snapshot missing $field")
-    // change feeds agree across flavors too
-    def feed(dir: String) = PaimonRead.changes(spark, dir, 1, 3).collect()
+    // the change feed: batch 2 retracts and re-inserts 0..9, batch 3
+    // retracts 50..54's prior images
+    val feed = PaimonRead.changes(spark, dReal, 1, 3).collect()
       .map(r => (r.getAs[Long]("__commit_version"), r.getAs[String]("__change_type"),
-        r.getAs[Long]("k"))).toSet
-    assert(feed(dReal) === feed(dTwin))
-    // key bounds recorded: liveFiles round-trips minSeq/maxSeq + levels
+        r.getAs[Long]("k"), r.getAs[Double]("x"))).toSet
+    assert(feed === (0L until 10L).flatMap(k =>
+      Seq((2L, "delete", k, k * 2.0), (2L, "insert", k, -1.0))).toSet ++
+      (50L until 55L).map(k => (3L, "delete", k, k * 2.0)))
+    // every live file sits in its hive-escaped partition dir
     val files = PaimonRead.liveFiles(spark, dReal)
-    assert(files.nonEmpty && files.forall(_.hiveDirs))
+    assert(files.nonEmpty && files.forall(e => new java.io.File(
+      s"$dReal/p=${e.partition("p")}/bucket-${e.bucket}/${e.fileName}").isFile))
+  }
+
+  test("pk (p, k) partitioned by p: upsert, delete, compact and change feed keep full-key semantics") {
+    import org.apache.spark.sql.types.LongType
+    val dir = freshTable("overlap")
+    // the same k lives in both partitions: (p, k) is the key
+    PaimonRead.commitPk(spark.range(0, 40).select(($"id" % 20).as("k"),
+      floor($"id" / 20).cast("string").as("p"), $"id".cast("double").as("x")),
+      dir, Seq("p", "k"), Seq("p"), numBuckets = 2)
+    PaimonRead.commitPk(spark.range(0, 5).select($"id".as("k"), lit("1").as("p"),
+      lit(-1.0).as("x")), dir, Seq("p", "k"))
+    PaimonRead.commitPk(spark.range(15, 20).select($"id".as("k"), lit("0").as("p")),
+      dir, Seq("p", "k"), deletes = true)
+    val expected = ((0L until 15L).map(k => ("0", k, k.toDouble)) ++
+      (0L until 20L).map(k => ("1", k, if (k < 5) -1.0 else 20.0 + k))).toSet
+    def state() = PaimonRead.read(spark, dir).collect()
+      .map(r => (r.getAs[String]("p"), r.getAs[Long]("k"), r.getAs[Double]("x"))).toSet
+    assert(state() === expected)
+    // data files key by the TRIMMED key: _KEY_k only; its bounds are
+    // arity-1 rows holding the file's true min and max
+    def checkBounds(): Unit = PaimonRead.liveFiles(spark, dir).foreach { e =>
+      val path = s"$dir/p=${e.partition("p")}/bucket-${e.bucket}/${e.fileName}"
+      val data = spark.read.parquet(path)
+      assert(data.columns.contains("_KEY_k") && !data.columns.contains("_KEY_p"))
+      val mm = data.agg(min($"_KEY_k"), max($"_KEY_k")).head()
+      def dec(b: Array[Byte]) =
+        graft.sources.PaimonBinaryRow.decode(b, Seq(LongType)).head.toLong
+      assert((dec(e.minKey), dec(e.maxKey)) === ((mm.getLong(0), mm.getLong(1))))
+    }
+    checkBounds()
+    val feed = Set(
+      (0L until 5L).flatMap(k => Seq((2L, "delete", "1", k, 20.0 + k),
+        (2L, "insert", "1", k, -1.0))),
+      (15L until 20L).map(k => (3L, "delete", "0", k, k.toDouble))).flatten
+    def feedOf(to: Long) = PaimonRead.changes(spark, dir, 1, to).collect()
+      .map(r => (r.getAs[Long]("__commit_version"), r.getAs[String]("__change_type"),
+        r.getAs[String]("p"), r.getAs[Long]("k"), r.getAs[Double]("x"))).toSet
+    assert(feedOf(3) === feed)
+    PaimonRead.compact(spark, dir)
+    assert(state() === expected)
+    checkBounds()
+    assert(feedOf(4) === feed, "COMPACT emits nothing")
+    PaimonRead.commitPk(Seq((3L, "0", 9.5)).toDF("k", "p", "x"), dir, Seq("p", "k"))
+    assert(state() === expected - (("0", 3L, 3.0)) + (("0", 3L, 9.5)))
+    // partial-update resolves per (p, k) too
+    val dir2 = freshTable("overlappu")
+    PaimonRead.commitPk(Seq((1L, "a", 1.0, "x"), (1L, "b", 2.0, "y")).toDF("k", "p", "x", "s"),
+      dir2, Seq("p", "k"), Seq("p"),
+      options = Map("merge-engine" -> "partial-update"))
+    PaimonRead.commitPk(Seq((1L, "a", 5.0)).toDF("k", "p", "x"), dir2, Seq("p", "k"))
+    assert(PaimonRead.read(spark, dir2).collect()
+      .map(r => (r.getAs[String]("p"), r.getAs[Double]("x"), r.getAs[String]("s"))).toSet ===
+      Set(("a", 5.0, "x"), ("b", 2.0, "y")))
+  }
+
+  test("DECIMAL and TIMESTAMP keys: manifest bounds decode to the true min and max") {
+    import org.apache.spark.sql.types._
+    val dir = freshTable("typedkey")
+    // decimals of every parquet shape (INT32, INT64, FIXED_LEN_BYTE_ARRAY)
+    // and a microsecond timestamp, negatives included
+    val df = spark.range(0, 50).selectExpr(
+      "cast(id - 25 AS decimal(5,2)) AS s",
+      "cast(id * 1.25 - 20 AS decimal(12,2)) AS d",
+      "cast(id * 3.5 - 7 AS decimal(25,4)) AS w",
+      "timestamp_micros(1700000000000000 + id * 1500000 + 7) AS ts",
+      "cast(id * 2 AS double) AS x")
+    val keys = Seq("s", "d", "w", "ts")
+    PaimonRead.commitPk(df, dir, keys, numBuckets = 1)
+    val types = Seq(DecimalType(5, 2), DecimalType(12, 2), DecimalType(25, 4), TimestampType)
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
+    def render(v: Any): String = v match {
+      case b: java.math.BigDecimal => b.toPlainString
+      case t: java.sql.Timestamp => render(t.toInstant)
+      case i: java.time.Instant =>
+        java.time.LocalDateTime.ofInstant(i, java.time.ZoneOffset.UTC).format(fmt)
+    }
+    import graft.sources.PaimonBinaryRow.decode
+    val files = PaimonRead.liveFiles(spark, dir)
+    assert(files.nonEmpty)
+    files.foreach { e =>
+      val data = spark.read.parquet(s"$dir/bucket-${e.bucket}/${e.fileName}")
+      val agg = data.agg(min($"_KEY_s"), min($"_KEY_d"), min($"_KEY_w"), min($"_KEY_ts"),
+        max($"_KEY_s"), max($"_KEY_d"), max($"_KEY_w"), max($"_KEY_ts")).head()
+      val (mins, maxs) = (0 until 8).map(i => render(agg.get(i))).splitAt(4)
+      assert(decode(e.minKey, types) === mins)
+      assert(decode(e.maxKey, types) === maxs)
+    }
+    // the keys still merge: an upsert and a delete by key resolve
+    PaimonRead.commitPk(df.filter($"x" < 10).withColumn("x", lit(-1.0)), dir, keys,
+      assumeKeyUnique = true)
+    PaimonRead.commitPk(df.filter($"x" >= 90).select(keys.map(col): _*), dir, keys,
+      deletes = true)
+    val back = PaimonRead.read(spark, dir)
+    assert(back.count() === 45)
+    assert(back.filter($"x" === -1.0).count() === 5)
+    assert(back.select(keys.map(col): _*).exceptAll(df.filter($"x" < 90)
+      .select(keys.map(col): _*)).isEmpty)
+  }
+
+  test("racing commits: every commit that returned is visible, the others conflicted, nothing is left unreferenced") {
+    val dir = freshTable("race")
+    PaimonRead.commitPk(Seq((0L, "seed")).toDF("k", "v"), dir, Seq("k"), numBuckets = 2)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val results = try {
+      val fs = (1L to 4L).map(i => pool.submit(() => {
+        start.await()
+        scala.util.Try(PaimonRead.commitPk(Seq((i, s"r$i")).toDF("k", "v"), dir,
+          Seq("k"), assumeKeyUnique = true))
+      }))
+      start.countDown()
+      (1L to 4L).zip(fs.map(_.get()))
+    } finally pool.shutdown()
+    val won = results.collect { case (i, scala.util.Success(_)) => i }.toSet
+    results.collect { case (_, scala.util.Failure(e)) => e }.foreach(e =>
+      assert(e.isInstanceOf[java.util.ConcurrentModificationException], e.toString))
+    assert(won.nonEmpty)
+    info(s"${won.size} of 4 racing commits published")
+    assert(results.collect { case (_, scala.util.Success(v)) => v }.distinct.size === won.size)
+    assert(PaimonRead.read(spark, dir).select($"k").as[Long].collect().toSet === won + 0L)
+    // the losers deleted their data files, manifests and lists: an
+    // orphan sweep without an age grace finds nothing, and no staging
+    // directory survives
+    assert(PaimonRead.removeOrphanFiles(spark, dir, olderThanMillis = 0) === Nil)
+    assert(!new java.io.File(dir).list().exists(_.startsWith("_staging")))
   }
 
   test("partition values with '+' and '%' round-trip; later commits validate keys") {
@@ -312,6 +448,9 @@ class PaimonReadSpec extends SparkSuite {
       === Array(1L, 4L, 5L), "literal '+' must survive the dir round-trip")
     assert(back.filter($"p" === "c d").count() === 1)
     assert(back.filter($"p" === "50%").count() === 1)
+    // hive path escaping: '%' escapes, '+' and ' ' stay literal
+    assert(Seq("p=a+b", "p=c d", "p=50%25").forall(d =>
+      new java.io.File(s"$dir/$d").isDirectory))
     // mismatched keys on a later commit refuse instead of mis-staging
     intercept[IllegalArgumentException] {
       PaimonRead.commitAppend(Seq((6L, "x")).toDF("k", "p"), dir, Seq("k"))
