@@ -385,7 +385,7 @@ object SourcesQ extends graft.QueryArea {
     // and manifests are per-version. The output reads all three
     // versions; the oracle recomputes each version's expected content
     // from the commit definitions.
-    // Delta Lake protocol interop (sources/DeltaRead.scala): build a
+    // Delta Lake protocol interop (sources/DeltaWrite.scala writes, sources/DeltaRead.scala reads): build a
     // REAL _delta_log layout (protocol/metaData/add/remove JSON
     // actions), then time-travel-read it back without any delta jar —
     // v1 holds keys %3∈{0,1}; commit 2 tombstones the %3==0 files and
@@ -394,10 +394,10 @@ object SourcesQ extends graft.QueryArea {
       val table = tmpDir(dir, "delta_ext")
       graft.sources.Formats.deleteDir(spark, table)
       val o = t(spark, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
-      graft.sources.DeltaRead.commit(o.filter(col("o_orderkey") % 3 === 0).coalesce(1), table)
-      graft.sources.DeltaRead.commit(o.filter(col("o_orderkey") % 3 === 1).coalesce(1), table)
+      graft.sources.DeltaWrite.append(o.filter(col("o_orderkey") % 3 === 0).coalesce(1), table)
+      graft.sources.DeltaWrite.append(o.filter(col("o_orderkey") % 3 === 1).coalesce(1), table)
       val v0 = graft.sources.DeltaRead.liveFiles(spark, table, Some(0L))
-      graft.sources.DeltaRead.commit(o.filter(col("o_orderkey") % 3 === 2).coalesce(1),
+      graft.sources.DeltaWrite.append(o.filter(col("o_orderkey") % 3 === 2).coalesce(1),
         table, removePaths = v0)
       val reads = Seq(1L -> Some(1L), 2L -> None).map { case (tag, v) =>
         graft.sources.DeltaRead.read(spark, table, v)
@@ -469,7 +469,7 @@ object SourcesQ extends graft.QueryArea {
             .otherwise(col("o_totalprice")).as("o_totalprice"))
       graft.sources.Lake.mergeMor(spark, table, src, Seq("o_orderkey"))
       graft.sources.Lake.deleteMor(spark, table, col("o_orderkey") % 10 === 6)
-      graft.sources.DeltaExport.exportDeltaLog(spark, table)
+      graft.sources.DeltaWrite.exportLake(spark, table)
       graft.sources.DeltaRead.changes(spark, table, 0L, 2L)
         .groupBy(col("__change_type").as("change_type"))
         .agg(count(lit(1)).as("n"),
@@ -496,7 +496,7 @@ object SourcesQ extends graft.QueryArea {
             .otherwise(col("o_totalprice")).as("o_totalprice"))
       graft.sources.Lake.mergeMor(spark, table, src, Seq("o_orderkey"))
       graft.sources.Lake.deleteMor(spark, table, col("o_orderkey") % 10 === 7)
-      graft.sources.DeltaExport.exportDeltaLog(spark, table, withCdf = true)
+      graft.sources.DeltaWrite.exportLake(spark, table, withCdf = true)
       graft.sources.DeltaRead.changesCdf(spark, table, 0L, 2L)
         .groupBy(col("__change_type").as("change_type"))
         .agg(count(lit(1)).as("n"),
@@ -517,8 +517,8 @@ object SourcesQ extends graft.QueryArea {
       val o = t(spark, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
       graft.sources.Lake.write(o, table, Nil)
       graft.sources.Lake.deleteMor(spark, table, col("o_orderkey") % 7 === 0)
-      graft.sources.DeltaExport.exportDeltaLog(spark, table)
-      val ck = graft.sources.DeltaRead.writeCheckpoint(spark, table)
+      graft.sources.DeltaWrite.exportLake(spark, table)
+      val ck = graft.sources.DeltaWrite.checkpoint(spark, table)
       val f = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
       (0L to ck).foreach(v => f.delete(new org.apache.hadoop.fs.Path(
         f"$table/_delta_log/$v%020d.json"), false))
@@ -553,8 +553,8 @@ object SourcesQ extends graft.QueryArea {
       val o = t(spark, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
       graft.sources.Lake.write(o, table, Nil)
       graft.sources.Lake.deleteMor(spark, table, col("o_orderkey") % 9 === 2)
-      graft.sources.DeltaExport.exportDeltaLog(spark, table)
-      val ck = graft.sources.DeltaRead.writeCheckpointV2(spark, table)
+      graft.sources.DeltaWrite.exportLake(spark, table)
+      val ck = graft.sources.DeltaWrite.checkpoint(spark, table, v2 = true)
       val f = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
       (0L to ck).foreach(v => f.delete(new org.apache.hadoop.fs.Path(
         f"$table/_delta_log/$v%020d.json"), false))
@@ -605,7 +605,7 @@ object SourcesQ extends graft.QueryArea {
           min(col("o_orderkey")).as("min_key"), max(col("o_orderkey")).as("max_key"))
         .orderBy(col("o_orderpriority"))
     }),
-    // Delta WRITE-path interop (sources/DeltaExport.scala; reference
+    // Delta WRITE-path interop (sources/DeltaWrite.scala; reference
     // ICEBERG/HIVE_TABLE_SINK, DataSinks.thrift:45-65): native Lake
     // commits (append + CoW delete) export an incremental _delta_log,
     // and the protocol reader replays it — latest AND time travel —
@@ -618,7 +618,7 @@ object SourcesQ extends graft.QueryArea {
       graft.sources.Lake.write(o.filter(col("o_orderkey") % 3 === 0), table, Nil)
       graft.sources.Lake.write(o.filter(col("o_orderkey") % 3 === 1), table, Nil, mode = "append")
       graft.sources.Lake.delete(spark, table, col("o_orderkey") % 6 === 1)
-      graft.sources.DeltaExport.exportDeltaLog(spark, table)
+      graft.sources.DeltaWrite.exportLake(spark, table)
       val reads = Seq(1L -> Some(1L), 2L -> None).map { case (tag, v) =>
         graft.sources.DeltaRead.read(spark, table, v)
           .agg(count(lit(1)).as("n"),
@@ -880,7 +880,7 @@ object SourcesQ extends graft.QueryArea {
         table, Seq("o_orderpriority"))
       graft.sources.Lake.write(o.filter(col("o_orderkey") % 2 === 1),
         table, Seq("o_orderpriority"), mode = "append")
-      graft.sources.HudiExport.exportHudiTimeline(spark, table)
+      graft.sources.HudiWrite.exportLake(spark, table)
       graft.sources.HudiRead.read(spark, table)
         .filter(col("o_orderpriority").isin("2-HIGH", "5-LOW"))
         .groupBy(col("o_orderpriority"))
@@ -889,7 +889,7 @@ object SourcesQ extends graft.QueryArea {
           min(col("o_orderkey")).as("min_key"), max(col("o_orderkey")).as("max_key"))
         .orderBy(col("o_orderpriority"))
     }),
-    // Hudi WRITE-path interop (sources/HudiExport.scala): Lake
+    // Hudi WRITE-path interop (sources/HudiWrite.scala): Lake
     // commits export a .hoodie COW timeline over the SAME data files;
     // CoW deletes become replacecommit instants retiring file groups.
     "src_hudi_write_read" -> ((spark, dir) => {
@@ -899,7 +899,7 @@ object SourcesQ extends graft.QueryArea {
       graft.sources.Lake.write(o.filter(col("o_orderkey") % 3 === 0), table, Nil)
       graft.sources.Lake.write(o.filter(col("o_orderkey") % 3 === 1), table, Nil, mode = "append")
       graft.sources.Lake.delete(spark, table, col("o_orderkey") % 6 === 1)
-      graft.sources.HudiExport.exportHudiTimeline(spark, table)
+      graft.sources.HudiWrite.exportLake(spark, table)
       val reads = Seq(1L -> Some(f"${2}%014d"), 2L -> None).map { case (tag, v) =>
         graft.sources.HudiRead.read(spark, table, v)
           .agg(count(lit(1)).as("n"),
@@ -932,7 +932,7 @@ object SourcesQ extends graft.QueryArea {
       }
       reads.reduce(_ unionByName _).orderBy(col("snap"))
     }),
-    // Hudi COW timeline interop (sources/HudiRead.scala): two file
+    // Hudi COW timeline interop (sources/HudiWrite.scala, HudiRead.scala): two file
     // groups; commit 2 REWRITES group g0 (copy-on-write slice
     // replacement: %3==0 rows swap to %3==2). Snapshot at commit 1 =
     // {0,1}; latest = {2,1}. Oracle from the base table.
@@ -947,17 +947,17 @@ object SourcesQ extends graft.QueryArea {
       graft.sources.Formats.deleteDir(spark, table)
       val o = t(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      graft.sources.HudiRead.commit(table, Map(
+      graft.sources.HudiWrite.commit(table, Map(
         "g0" -> o.filter(col("o_orderkey") % 2 === 0),
         "g1" -> o.filter(col("o_orderkey") % 2 === 1)))
       // delta 1: zero out the price of keys % 10 == 0, delete % 10 == 4
-      graft.sources.HudiRead.deltaCommit(table, "g0", "o_orderkey",
+      graft.sources.HudiWrite.deltaCommit(table, "g0", "o_orderkey",
         Some(o.filter(col("o_orderkey") % 10 === 0)
           .withColumn("o_totalprice", lit(0.0))),
         o.filter(col("o_orderkey") % 10 === 4)
           .select(col("o_orderkey")).collect().map(_.getLong(0).toString).toSeq)
       // delta 2: re-insert half the deleted keys at price -1
-      graft.sources.HudiRead.deltaCommit(table, "g0", "o_orderkey",
+      graft.sources.HudiWrite.deltaCommit(table, "g0", "o_orderkey",
         Some(o.filter(col("o_orderkey") % 20 === 4)
           .withColumn("o_totalprice", lit(-1.0))))
       graft.sources.HudiRead.read(spark, table)
@@ -977,19 +977,19 @@ object SourcesQ extends graft.QueryArea {
         .select(col("o_orderkey"), col("o_totalprice"),
           (col("o_orderkey") % 3).cast("string").as("p"))
       graft.sources.Lake.write(o.coalesce(1), table, Seq("p"))
-      graft.sources.HudiExport.exportHudiTimeline(spark, table)
+      graft.sources.HudiWrite.exportLake(spark, table)
       val byPart = graft.sources.HudiRead.liveGroups(spark, table).toSeq
         .groupBy(_._2.base.partitionPath)
       val g0 = byPart("p=0").head._1
       val g1 = byPart("p=1").head._1
       val base = t(spark, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
       // p=0 group: zero out %30==0, delete %30==6; p=1 group: %30==1 -> -1
-      graft.sources.HudiRead.deltaCommit(table, g0, "o_orderkey",
+      graft.sources.HudiWrite.deltaCommit(table, g0, "o_orderkey",
         Some(base.filter(col("o_orderkey") % 30 === 0)
           .withColumn("o_totalprice", lit(0.0))),
         base.filter(col("o_orderkey") % 30 === 6)
           .select(col("o_orderkey")).collect().map(_.getLong(0).toString).toSeq)
-      graft.sources.HudiRead.deltaCommit(table, g1, "o_orderkey",
+      graft.sources.HudiWrite.deltaCommit(table, g1, "o_orderkey",
         Some(base.filter(col("o_orderkey") % 30 === 1)
           .withColumn("o_totalprice", lit(-1.0))))
       graft.sources.HudiRead.read(spark, table)
@@ -1453,10 +1453,10 @@ object SourcesQ extends graft.QueryArea {
       val table = tmpDir(dir, "hudi_ext")
       graft.sources.Formats.deleteDir(spark, table)
       val o = t(spark, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
-      val i1 = graft.sources.HudiRead.commit(table, Map(
+      val i1 = graft.sources.HudiWrite.commit(table, Map(
         "g0" -> o.filter(col("o_orderkey") % 3 === 0),
         "g1" -> o.filter(col("o_orderkey") % 3 === 1)))
-      graft.sources.HudiRead.commit(table, Map(
+      graft.sources.HudiWrite.commit(table, Map(
         "g0" -> o.filter(col("o_orderkey") % 3 === 2)))
       val reads = Seq(1 -> Some(i1), 2 -> None).map { case (tag, inst) =>
         graft.sources.HudiRead.read(spark, table, inst)

@@ -17,10 +17,11 @@ import org.apache.spark.sql.SparkSession
   * style filesystems keep the stream path (create is exclusive and
   * readers cannot open an un-completed file).
   *
-  * Used by Lake manifests, LakeTx catalog versions, Delta/Hudi export
-  * metadata, every Iceberg metadata version ([[IcebergWrite]]), every
-  * Paimon snapshot ([[PaimonRead]]), and the VectorIndex model
-  * publish. */
+  * Used by Lake manifests, LakeTx catalog versions, every Delta log
+  * version and V2 checkpoint manifest ([[DeltaWrite]]), every Hudi
+  * instant and `hoodie.properties` ([[HudiWrite]]), every Iceberg
+  * metadata version ([[IcebergWrite]]), every Paimon snapshot
+  * ([[PaimonRead]]), and the VectorIndex model publish. */
 object AtomicPublish {
 
   def publish(spark: SparkSession, path: Path, bytes: Array[Byte]): Unit = {

@@ -165,17 +165,20 @@ object DeltaDv {
     d.storageType match {
       case "i" => deserialize(z85Decode(d.pathOrInlineDv))
       case "p" => deserialize(readDvFile(spark, d.pathOrInlineDv, d.offset, d.sizeInBytes))
-      case "u" =>
-        require(d.pathOrInlineDv.length >= 20, s"bad uuid dv ${d.pathOrInlineDv}")
-        val prefix = d.pathOrInlineDv.dropRight(20)
-        val uuidBytes = z85Decode(d.pathOrInlineDv.takeRight(20))
-        val bb = ByteBuffer.wrap(uuidBytes)
-        val uuid = new java.util.UUID(bb.getLong, bb.getLong)
-        val dir = if (prefix.isEmpty) table else s"$table/$prefix"
-        deserialize(readDvFile(spark, s"$dir/deletion_vector_$uuid.bin",
-          d.offset, d.sizeInBytes))
+      case "u" => deserialize(readDvFile(spark, uuidPath(table, d), d.offset, d.sizeInBytes))
       case other => throw new IllegalArgumentException(s"unknown DV storageType $other")
     }
+
+  /** The file a `u`-stored descriptor names: `deletion_vector_<uuid>.bin`
+    * under the table root (or the descriptor's relative prefix). */
+  def uuidPath(table: String, d: Descriptor): String = {
+    require(d.pathOrInlineDv.length >= 20, s"bad uuid dv ${d.pathOrInlineDv}")
+    val prefix = d.pathOrInlineDv.dropRight(20)
+    val bb = ByteBuffer.wrap(z85Decode(d.pathOrInlineDv.takeRight(20)))
+    val uuid = new java.util.UUID(bb.getLong, bb.getLong)
+    val dir = if (prefix.isEmpty) table else s"$table/$prefix"
+    s"$dir/deletion_vector_$uuid.bin"
+  }
 
   /** Write positions as a `u`-stored deletion vector under the table
     * root; returns the descriptor for the `add` action. */

@@ -12,14 +12,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * is the Spark-native equivalent built directly on the public log
   * format, no delta-spark jar required: replay the actions up to the
   * requested version, reconstruct the live file set, scan those
-  * parquet files.
+  * parquet files. Replay enters at the newest checkpoint (classic,
+  * multi-part or V2) and replays the JSON tail. [[DeltaWrite]] writes
+  * the logs this reads; this object only reads.
   *
   * Scale shape: the log is KBs of JSON read ONCE on the driver (the
   * same listing work Delta's own reader does); the data scan is a
   * plain pruned parquet read over exactly the live files — pushdown,
-  * column pruning and AQE all apply as usual. Checkpoint parquet
-  * files (protocol optimization for 10k+ commit logs) are not needed
-  * at this log size and are documented out of scope.
+  * column pruning and AQE all apply as usual.
   */
 object DeltaRead {
 
@@ -46,7 +46,7 @@ object DeltaRead {
     * protocol; decode BEFORE set membership so an encoded add and its
     * remove cancel, and before scan-path construction so files with
     * spaces/special chars resolve. Malformed escapes fall back to the
-    * raw string (our own writer never encodes). */
+    * raw string. */
   private def decodePath(raw: String): String =
     try {
       val u = new java.net.URI(raw)
@@ -89,7 +89,7 @@ object DeltaRead {
     * instead of placeholders — and the deletion-vector descriptor
     * when the writer attached one (a re-add of the same path replaces
     * the previous descriptor, the protocol's DV-upgrade shape). */
-  private case class LiveAdd(path: String, pvals: Map[String, String],
+  private[sources] case class LiveAdd(path: String, pvals: Map[String, String],
       size: Long, modTime: Long, dv: Option[DeltaDv.Descriptor] = None,
       stats: Option[String] = None)
 
@@ -126,7 +126,7 @@ object DeltaRead {
     * null). Starts from the newest checkpoint at or below
     * `versionAsOf` when one exists (required once old JSON commits
     * are vacuumed), then replays the JSON tail. */
-  private def replay(spark: SparkSession, table: String,
+  private[sources] def replay(spark: SparkSession, table: String,
       versionAsOf: Option[Long]): (Seq[LiveAdd], Seq[String], String) = {
     val f = fs(spark, table)
     val mapper = new ObjectMapper()
@@ -402,7 +402,7 @@ object DeltaRead {
     * emit as `insert`; true `remove`s (path gone from the live set)
     * emit their previously-visible rows as `delete`; a DV-UPGRADED
     * re-add (remove+add of the same path with a wider vector — the
-    * shape [[DeltaExport]] writes for merge-on-read commits) emits
+    * shape [[DeltaWrite.exportLake]] writes for merge-on-read commits) emits
     * only the NEWLY-masked positions as `delete`. Retraction model:
     * an update is delete(old) + insert(new); consumers fold by key.
     * Cost is O(changed rows + dirty files) per commit — nothing
@@ -633,198 +633,5 @@ object DeltaRead {
           .withColumn("__change_type", lit("insert"))
           .withColumn("__commit_version", lit(toVersion))
           .filter(lit(false)))
-  }
-
-  /** Write a protocol checkpoint at `version` (default: latest): one
-    * parquet snapshot of the live action set (add rows + metaData +
-    * protocol) plus the `_last_checkpoint` pointer. After this, JSON
-    * commits ≤ version are no longer needed to reconstruct the table
-    * — the reader enters at the checkpoint and replays only the tail,
-    * which is how real Delta tables survive log cleanup. */
-  private lazy val dvT = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("storageType", StringType),
-      StructField("pathOrInlineDv", StringType),
-      StructField("offset", IntegerType),
-      StructField("sizeInBytes", IntegerType),
-      StructField("cardinality", LongType)))
-  }
-  // add actions carry their deletionVector descriptor per
-  // PROTOCOL.md §Checkpoints — a DV-live version checkpoints
-  // losslessly (pre-r9 this refused; a reader bootstrapping a
-  // DV-bearing export had to replay the full JSON log)
-  private lazy val addT = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("path", StringType),
-      StructField("partitionValues", MapType(StringType, StringType)),
-      StructField("size", LongType),
-      StructField("modificationTime", LongType),
-      StructField("dataChange", BooleanType),
-      StructField("deletionVector", dvT)))
-  }
-
-  def writeCheckpoint(spark: SparkSession, table: String,
-      version: Option[Long] = None): Long = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val v = version.getOrElse(versions(spark, table).last)
-    val (adds, partCols, schemaJson) = replay(spark, table, Some(v))
-    val mdT = StructType(Seq(
-      StructField("id", StringType),
-      StructField("schemaString", StringType),
-      StructField("partitionColumns", ArrayType(StringType))))
-    val hasDv = adds.exists(_.dv.exists(_.cardinality > 0))
-    val protoT = StructType(Seq(
-      StructField("minReaderVersion", IntegerType),
-      StructField("minWriterVersion", IntegerType),
-      StructField("readerFeatures", ArrayType(StringType)),
-      StructField("writerFeatures", ArrayType(StringType))))
-    val schema = StructType(Seq(
-      StructField("add", addT), StructField("metaData", mdT),
-      StructField("protocol", protoT)))
-    // paths go back in percent-ENCODED form — the same form the JSON
-    // log stores — so replay's single decodePath pass is correct for
-    // both sources and external Delta readers see spec-conformant
-    // paths; absolute URIs (shallow clones) are kept verbatim, as in
-    // the log. size/modificationTime carry the replayed real values.
-    def reencode(p: String): String =
-      if (p.contains(":/")) p else DeltaExport.encodePath(p)
-    def dvRow(a: LiveAdd): Row = a.dv.filter(_.cardinality > 0).map(d =>
-      Row(d.storageType, d.pathOrInlineDv, d.offset, d.sizeInBytes,
-        d.cardinality)).orNull
-    val protoRow =
-      if (hasDv) Row(3, 7, Seq("deletionVectors"), Seq("deletionVectors"))
-      else Row(1, 2, null, null)
-    val rows: Seq[Row] =
-      Seq(Row(null, Row(s"graft-${Integer.toHexString(table.hashCode)}",
-          schemaJson, partCols.toList), null),
-        Row(null, null, protoRow)) ++
-      adds.map(a =>
-        Row(Row(reencode(a.path), a.pvals, a.size, a.modTime, true, dvRow(a)),
-          null, null))
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), schema)
-    val f = fs(spark, table)
-    val staging = s"$table/_delta_log/.ckpt_stage_$v"
-    df.coalesce(1).write.mode("overwrite").parquet(staging)
-    val part = f.listStatus(new Path(staging))
-      .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-    val ckptPath = new Path(f"$table/_delta_log/$v%020d.checkpoint.parquet")
-    f.delete(ckptPath, false)
-    require(f.rename(part, ckptPath),
-      s"failed to install checkpoint $part -> $ckptPath")
-    f.delete(new Path(staging), true)
-    val lp = f.create(new Path(s"$table/_delta_log/_last_checkpoint"), true)
-    try lp.write(s"""{"version":$v,"size":${rows.size}}""".getBytes("UTF-8"))
-    finally lp.close()
-    v
-  }
-
-  /** Write a V2 CHECKPOINT at `version` (PROTOCOL.md §V2 Spec): the
-    * add actions land in ONE parquet SIDECAR under
-    * `_delta_log/_sidecars/`, and a UUID-named JSON manifest
-    * (`<v>.checkpoint.<uuid>.json`) carries `checkpointMetadata`,
-    * `metaData`, a protocol with the `v2Checkpoint` table feature, and
-    * one `sidecar` action per sidecar file. V2 is how large real
-    * tables checkpoint incrementally — sidecars can be reused across
-    * checkpoints, so the manifest stays O(sidecars) while classic
-    * checkpoints rewrite every add row each time. */
-  def writeCheckpointV2(spark: SparkSession, table: String,
-      version: Option[Long] = None): Long = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val v = version.getOrElse(versions(spark, table).last)
-    val (adds, partCols, schemaJson) = replay(spark, table, Some(v))
-    val hasDv = adds.exists(_.dv.exists(_.cardinality > 0))
-    def reencode(p: String): String =
-      if (p.contains(":/")) p else DeltaExport.encodePath(p)
-    def dvRow(a: LiveAdd): Row = a.dv.filter(_.cardinality > 0).map(d =>
-      Row(d.storageType, d.pathOrInlineDv, d.offset, d.sizeInBytes,
-        d.cardinality)).orNull
-    val f = fs(spark, table)
-    val uuid = java.util.UUID.randomUUID().toString
-    // sidecar parquet: top-level `add` struct rows (the sidecar file
-    // schema — readers select add.* exactly as from a classic file)
-    val sidecarSchema = StructType(Seq(StructField("add", addT)))
-    val sidecarRows = adds.map(a => Row(
-      Row(reencode(a.path), a.pvals, a.size, a.modTime, true, dvRow(a))))
-    val staging = s"$table/_delta_log/.ckpt2_stage_$v"
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(sidecarRows, 1), sidecarSchema)
-      .coalesce(1).write.mode("overwrite").parquet(staging)
-    val part = f.listStatus(new Path(staging))
-      .filter(_.getPath.getName.endsWith(".parquet")).head
-    val sidecarName = s"$uuid.parquet"
-    f.mkdirs(new Path(s"$table/_delta_log/_sidecars"))
-    val sidecarPath = new Path(s"$table/_delta_log/_sidecars/$sidecarName")
-    f.delete(sidecarPath, false)
-    require(f.rename(part.getPath, sidecarPath),
-      s"failed to install checkpoint sidecar ${part.getPath} -> $sidecarPath")
-    f.delete(new Path(staging), true)
-    val sidecarLen = part.getLen // rename preserves length — no re-stat
-    // JSON manifest
-    val mapper = new ObjectMapper()
-    def js(s: String) = mapper.writeValueAsString(s)
-    val feats = (Seq("v2Checkpoint") ++ (if (hasDv) Seq("deletionVectors")
-      else Nil)).map(js).mkString("[", ",", "]")
-    val lines = Seq(
-      s"""{"checkpointMetadata":{"version":$v}}""",
-      s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":$feats,"writerFeatures":$feats}}""",
-      s"""{"metaData":{"id":${js(s"graft-${Integer.toHexString(table.hashCode)}")},"schemaString":${js(schemaJson)},"partitionColumns":${partCols.map(js).mkString("[", ",", "]")},"format":{"provider":"parquet","options":{}},"configuration":{}}}""",
-      s"""{"sidecar":{"path":${js(sidecarName)},"sizeInBytes":$sidecarLen,"modificationTime":${System.currentTimeMillis()}}}""")
-    val manifest = f.create(
-      new Path(f"$table/_delta_log/$v%020d.checkpoint.$uuid.json"), true)
-    try manifest.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally manifest.close()
-    val lp = f.create(new Path(s"$table/_delta_log/_last_checkpoint"), true)
-    try lp.write(
-      s"""{"version":$v,"size":${adds.size + 3},"sizeInBytes":$sidecarLen,"checkpointSchema":null}"""
-        .getBytes("UTF-8"))
-    finally lp.close()
-    v
-  }
-
-  /** Minimal protocol-conformant writer (commit granularity): write
-    * the DataFrame as parquet files and append one log commit adding
-    * them (plus `removePaths` tombstones). Exists so tests and the
-    * gate can build REAL protocol layouts; production writes stay on
-    * the engine's own lake format. */
-  def commit(df: DataFrame, table: String,
-      removePaths: Seq[String] = Nil): Long = {
-    val spark = df.sparkSession
-    val f = fs(spark, table)
-    val version = if (f.exists(new Path(s"$table/_delta_log")))
-      versions(spark, table).lastOption.map(_ + 1).getOrElse(0L) else 0L
-    val staging = s"$table/_staging_v$version"
-    df.write.mode("overwrite").parquet(staging)
-    val parts = f.listStatus(new Path(staging))
-      .filter(_.getPath.getName.endsWith(".parquet"))
-    val named = parts.zipWithIndex.map { case (st, i) =>
-      val dest = s"part-$version-$i.snappy.parquet"
-      require(f.rename(st.getPath, new Path(s"$table/$dest")),
-        s"failed to install data file $dest")
-      // rename preserves length and mtime — carry the staging stat
-      (dest, st.getLen, st.getModificationTime)
-    }
-    f.delete(new Path(staging), true)
-    val mapper = new ObjectMapper()
-    val sb = new StringBuilder
-    if (version == 0L) {
-      sb.append("""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""").append('\n')
-      val schemaJson = mapper.writeValueAsString(df.schema.json)
-      sb.append(s"""{"metaData":{"id":"graft-${table.hashCode}","format":{"provider":"parquet"},"schemaString":$schemaJson,"partitionColumns":[]}}""").append('\n')
-    }
-    removePaths.foreach { p =>
-      sb.append(s"""{"remove":{"path":${mapper.writeValueAsString(p)},"deletionTimestamp":0,"dataChange":true}}""").append('\n')
-    }
-    named.foreach { case (p, len, mtime) =>
-      sb.append(s"""{"add":{"path":${mapper.writeValueAsString(p)},"partitionValues":{},"size":$len,"modificationTime":$mtime,"dataChange":true}}""").append('\n')
-    }
-    val logPath = new Path(f"$table/_delta_log/$version%020d.json")
-    val out = f.create(logPath, false)
-    try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
-    version
   }
 }

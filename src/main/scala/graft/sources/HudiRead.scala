@@ -30,7 +30,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * base-only rows silently. Log deltas are load-batch scale by the
   * MoR contract (the Delta-DV / Iceberg-position-delete bound), so
   * the per-group fold is driver-resident metadata work, and the base
-  * scan stays a plain pruned parquet read at any table size. */
+  * scan stays a plain pruned parquet read at any table size.
+  * [[HudiWrite]] writes the timelines this reads; this object only
+  * reads. */
 object HudiRead {
 
   private def fs(spark: SparkSession, p: String) =
@@ -40,17 +42,19 @@ object HudiRead {
     * (replacecommit = Hudi's insert_overwrite/clustering action: its
     * partitionToReplaceFileIds retires whole file groups — the only
     * way a group disappears in the timeline format.) */
-  def instants(spark: SparkSession, table: String): Seq[String] = {
+  def instants(spark: SparkSession, table: String): Seq[String] =
+    timeline(spark, table).map(_._1)
+
+  private val Completed = "(.+)\\.(commit|deltacommit|replacecommit)".r
+
+  /** (instant, timeline file name) per completed instant, ascending. */
+  private def timeline(spark: SparkSession, table: String): Seq[(String, String)] = {
     val dir = new Path(s"$table/.hoodie")
     val f = fs(spark, table)
     if (!f.exists(dir)) throw new IllegalArgumentException(
       s"not a hudi table (no .hoodie): $table")
     f.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.endsWith(".commit") || n.endsWith(".replacecommit") ||
-        n.endsWith(".deltacommit"))
-      .map(_.stripSuffix(".replacecommit").stripSuffix(".deltacommit")
-        .stripSuffix(".commit"))
-      .sorted.toSeq
+      .collect { case n @ Completed(i, _) => i -> n }.sorted.toSeq
   }
 
   /** A live file slice: table-relative path, the timeline's
@@ -81,13 +85,11 @@ object HudiRead {
       instantAsOf: Option[String] = None): Map[String, GroupState] = {
     val f = fs(spark, table)
     val mapper = new ObjectMapper()
-    val upTo = instantAsOf.getOrElse(instants(spark, table).last)
+    val instantFiles = timeline(spark, table)
+    val upTo = instantAsOf.getOrElse(instantFiles.last._1)
     val live = scala.collection.mutable.LinkedHashMap[String, GroupState]()
-    instants(spark, table).filter(_ <= upTo).foreach { i =>
-      val p = Seq(s"$i.commit", s"$i.deltacommit", s"$i.replacecommit")
-        .map(n => new Path(s"$table/.hoodie/$n")).find(f.exists)
-        .getOrElse(throw new IllegalStateException(s"instant $i vanished"))
-      val in = f.open(p)
+    instantFiles.filter(_._1 <= upTo).foreach { case (i, name) =>
+      val in = f.open(new Path(s"$table/.hoodie/$name"))
       val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
       val node = mapper.readTree(text)
@@ -461,83 +463,4 @@ object HudiRead {
       }
     (foldDf.select(col("__hk")).distinct(), upsertDf, false)
   }
-
-  /** MoR WRITE: append an upsert/delete batch to a file group as a
-    * log file + `.deltacommit` instant (the streaming-ingest shape a
-    * Hudi upsert sink produces). Also stamps
-    * `hoodie.properties`' record-key field on first use (and refuses
-    * a conflicting one later). Returns the instant. */
-  def deltaCommit(table: String, fileId: String, keyField: String,
-      upserts: Option[DataFrame], deleteKeys: Seq[String] = Nil): String = {
-    require(upserts.nonEmpty || deleteKeys.nonEmpty, "empty delta batch")
-    val spark = upserts.map(_.sparkSession)
-      .getOrElse(org.apache.spark.sql.SparkSession.active)
-    val f = fs(spark, table)
-    val groups = liveGroups(spark, table, None)
-    val g = groups.getOrElse(fileId, throw new IllegalArgumentException(
-      s"unknown file group $fileId at $table"))
-    recordKeyField(spark, table) match {
-      case Some(k) => require(k == keyField,
-        s"table record key is $k, not $keyField")
-      case None =>
-        val props = new java.util.Properties()
-        props.setProperty("hoodie.table.recordkey.fields", keyField)
-        props.setProperty("hoodie.table.type", "MERGE_ON_READ")
-        val out = f.create(new Path(s"$table/.hoodie/hoodie.properties"), false)
-        try props.store(out, null) finally out.close()
-    }
-    val instant = f"${instants0(spark, table).size + 1}%014d"
-    val blocks = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
-    upserts.foreach { df =>
-      require(df.columns.contains(keyField), s"batch missing key $keyField")
-      val dataSchema = spark.read.parquet(s"$table/${g.base.path}").schema
-      val avro = HudiLog.avroSchemaFor(dataSchema)
-      val rows = df.select(dataSchema.fieldNames.map(
-        org.apache.spark.sql.functions.col).toIndexedSeq: _*).collect()
-      blocks += HudiLog.dataBlockBytes(instant, avro,
-        rows.toSeq.map(HudiLog.rowToAvro(avro, dataSchema, _)))
-    }
-    if (deleteKeys.nonEmpty)
-      blocks += HudiLog.deleteBlockBytes(instant, deleteKeys)
-    val dir = Option(new Path(g.base.path).getParent)
-      .map(_.toString).filterNot(_ == "").map(_ + "/").getOrElse("")
-    val rel = s"$dir.${fileId}_$instant.log.${g.logs.size + 1}_0-0-0"
-    HudiLog.writeLogFile(spark, s"$table/$rel", blocks.toSeq)
-    val mapper = new ObjectMapper()
-    val stat = s"""{"fileId":${mapper.writeValueAsString(fileId)},"path":${mapper.writeValueAsString(rel)},"fileSizeInBytes":${f.getFileStatus(new Path(s"$table/$rel")).getLen}}"""
-    val json = s"""{"partitionToWriteStats":{${mapper.writeValueAsString(g.base.partitionPath)}:[$stat]}}"""
-    val out = f.create(new Path(s"$table/.hoodie/$instant.deltacommit"), false)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    instant
-  }
-
-  /** Minimal layout writer (one commit): each DataFrame partition of
-    * `groups` becomes/replaces one file group. Exists so tests and
-    * the gate can build real timeline layouts. */
-  def commit(table: String, groups: Map[String, DataFrame]): String = {
-    require(groups.nonEmpty, "commit needs at least one file group")
-    val spark = groups.head._2.sparkSession
-    val f = fs(spark, table)
-    val instant = f"${instants0(spark, table).size + 1}%014d"
-    val mapper = new ObjectMapper()
-    val stats = groups.map { case (fileId, df) =>
-      val staging = s"$table/_staging_$instant$fileId"
-      df.coalesce(1).write.mode("overwrite").parquet(staging)
-      val part = f.listStatus(new Path(staging))
-        .filter(_.getPath.getName.endsWith(".parquet")).head.getPath
-      val dest = s"${fileId}_0-0-0_$instant.parquet"
-      require(f.rename(part, new Path(s"$table/$dest")),
-        s"failed to install $table/$dest")
-      f.delete(new Path(staging), true)
-      s"""{"fileId":${mapper.writeValueAsString(fileId)},"path":${mapper.writeValueAsString(dest)}}"""
-    }
-    val json =
-      s"""{"partitionToWriteStats":{"":[${stats.mkString(",")}]}}"""
-    val out = f.create(new Path(s"$table/.hoodie/$instant.commit"), false)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    instant
-  }
-
-  private def instants0(spark: SparkSession, table: String): Seq[String] =
-    try instants(spark, table) catch { case _: IllegalArgumentException => Nil }
 }

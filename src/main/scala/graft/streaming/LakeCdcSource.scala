@@ -189,7 +189,7 @@ class DeltaCdcSource(spark: SparkSession, table: String,
 
   override protected def currentVersion(): Long = {
     // a checkpoint-only log (all covered JSON commits vacuumed —
-    // exactly what writeCheckpointV2 leaves behind) has no JSON
+    // exactly what a V2 DeltaWrite.checkpoint leaves behind) has no JSON
     // versions; the newest checkpoint IS the table version then,
     // mirroring replay()'s upTo resolution.
     val vs = DeltaRead.versions(spark, table) ++

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.Engine
-import graft.sources.HudiRead
+import graft.sources.{HudiRead, HudiWrite}
 
 /** Dev tool: the Hudi merge-on-read READ cost story at growing base
   * scale — a fixed-size delta batch (upserts + deletes in log files)
@@ -47,12 +47,12 @@ object HudiMorProbe {
       val base = spark.range(0, n).select($"id".as("k"),
         ($"id" % 997).as("grp"), ($"id" * 31 % 100000).cast("double").as("price"))
       // 4 file groups so the dirty/clean split exercises both sides
-      HudiRead.commit(table, (0 until 4).map(g =>
+      HudiWrite.commit(table, (0 until 4).map(g =>
         s"g$g" -> base.filter($"k" % 4 === g)).toMap)
       val clean = time(HudiRead.read(spark, table)
         .agg(count(lit(1)), sum($"price")).collect())
       // one load-batch-scale delta: 15k upserts + 5k deletes on g0
-      HudiRead.deltaCommit(table, "g0", "k",
+      HudiWrite.deltaCommit(table, "g0", "k",
         Some(spark.range(0, 60000).filter($"id" % 4 === 0)
           .select($"id".as("k"), ($"id" % 997).as("grp"), lit(-1.0).as("price"))),
         (60000L until 80000L).filter(_ % 4 == 0).map(_.toString))
@@ -70,10 +70,10 @@ object HudiMorProbe {
       graft.sources.Formats.deleteDir(spark, table)
       val base = spark.range(0, n).select($"id".as("k"),
         ($"id" % 997).as("grp"), ($"id" * 31 % 100000).cast("double").as("price"))
-      HudiRead.commit(table, Map("g0" -> base))
+      HudiWrite.commit(table, Map("g0" -> base))
       val t0 = System.nanoTime()
       (0 until batches).foreach { i =>
-        HudiRead.deltaCommit(table, "g0", "k",
+        HudiWrite.deltaCommit(table, "g0", "k",
           Some(spark.range(i * perBatch, (i + 1) * perBatch)
             .select($"id".as("k"), ($"id" % 997).as("grp"),
               lit(-i.toDouble).as("price"))))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.DeltaRead
+import graft.sources.{DeltaRead, DeltaWrite}
 import org.apache.spark.sql.functions.{count, lit, sum, when}
 
 /** Delta-protocol log replay: adds, tombstones, time travel, and
@@ -12,13 +12,13 @@ class DeltaReadSpec extends SparkSuite {
     val table = java.nio.file.Files.createTempDirectory("graft-delta").toString
     val a = Seq((1L, "x"), (2L, "y")).toDF("id", "v")
     val b = Seq((3L, "z")).toDF("id", "v")
-    assert(DeltaRead.commit(a.coalesce(1), table) === 0L)
-    assert(DeltaRead.commit(b.coalesce(1), table) === 1L)
+    assert(DeltaWrite.append(a.coalesce(1), table) === 0L)
+    assert(DeltaWrite.append(b.coalesce(1), table) === 1L)
     assert(DeltaRead.read(spark, table).count() === 3)
     assert(DeltaRead.read(spark, table, Some(0L)).count() === 2)
     // tombstone commit 0's files; only commit 1's rows survive
     val v0 = DeltaRead.liveFiles(spark, table, Some(0L))
-    DeltaRead.commit(a.limit(0).coalesce(1), table, removePaths = v0)
+    DeltaWrite.append(a.limit(0).coalesce(1), table, removePaths = v0)
     val latest = DeltaRead.read(spark, table).select($"id").collect().map(_.getLong(0))
     assert(latest.toSet === Set(3L))
     assert(DeltaRead.versions(spark, table) === Seq(0L, 1L, 2L))
@@ -28,12 +28,12 @@ class DeltaReadSpec extends SparkSuite {
   }
 
   test("Lake write -> _delta_log export -> Delta read round trip") {
-    import graft.sources.{DeltaExport, Lake}
+    import graft.sources.{DeltaWrite, Lake}
     val table = java.nio.file.Files.createTempDirectory("graft-dexp").toString
     Lake.write(Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "p", "v"), table, Seq("p"))
     Lake.write(Seq((3L, "a", 30.0)).toDF("id", "p", "v"), table, Seq("p"), mode = "append")
     Lake.delete(spark, table, $"id" === 2L) // CoW rewrite drops a file
-    assert(DeltaExport.exportDeltaLog(spark, table) === 2L)
+    assert(DeltaWrite.exportLake(spark, table) === 2L)
     // latest: ids 1,3 with partition col recovered
     val latest = DeltaRead.read(spark, table).select($"id", $"p").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
@@ -43,7 +43,7 @@ class DeltaReadSpec extends SparkSuite {
     assert(DeltaRead.read(spark, table, Some(1L)).count() === 3)
     // idempotent + incremental: re-export after another commit
     Lake.write(Seq((4L, "c", 40.0)).toDF("id", "p", "v"), table, Seq("p"), mode = "append")
-    assert(DeltaExport.exportDeltaLog(spark, table) === 3L)
+    assert(DeltaWrite.exportLake(spark, table) === 3L)
     assert(DeltaRead.read(spark, table).count() === 3)
     assert(DeltaRead.versions(spark, table) === Seq(0L, 1L, 2L, 3L))
   }
@@ -207,7 +207,7 @@ class DeltaReadSpec extends SparkSuite {
     // checkpoint of the DV-LIVE version: descriptors ride in the add
     // struct (PROTOCOL.md §Checkpoints) — bootstrap from the parquet
     // alone equals the full JSON replay
-    val ck = DeltaRead.writeCheckpoint(spark, table)
+    val ck = DeltaWrite.checkpoint(spark, table)
     assert(ck === 1L)
     val viaLog = DeltaRead.read(spark, table).collect().map(_.getLong(0)).toSet
     // delete the JSON commits the checkpoint covers: replay must enter
@@ -236,7 +236,7 @@ class DeltaReadSpec extends SparkSuite {
   }
 
   test("changes: Delta CDF over an exported MoR table equals Lake.changes") {
-    import graft.sources.{DeltaExport, Lake}
+    import graft.sources.{DeltaWrite, Lake}
     val table = java.nio.file.Files.createTempDirectory("graft-dcdf").toString + "/t"
     Lake.write(spark.range(0, 500).select($"id".as("k"),
       ($"id" * 2).cast("double").as("x")).repartition(3), table, Nil) // v1
@@ -244,7 +244,7 @@ class DeltaReadSpec extends SparkSuite {
       when($"id" < 20, $"id").otherwise($"id" + 970).as("k"),
       lit(-1.0).as("x")), Seq("k"))                                   // v2
     Lake.deleteMor(spark, table, $"k" >= 400 && $"k" < 450)           // v3
-    DeltaExport.exportDeltaLog(spark, table)
+    DeltaWrite.exportLake(spark, table)
     val viaDelta = DeltaRead.changes(spark, table, 0L, 2L)
     val viaLake = Lake.changes(spark, table, 1, 3)
     def agg(df: org.apache.spark.sql.DataFrame) = df
@@ -266,7 +266,7 @@ class DeltaReadSpec extends SparkSuite {
   }
 
   test("changes: partitioned table attaches partition columns, typed from the log") {
-    import graft.sources.{DeltaExport, Lake}
+    import graft.sources.{DeltaWrite, Lake}
     val table = java.nio.file.Files.createTempDirectory("graft-dcdfp").toString + "/t"
     def mk(lo: Long, hi: Long) = spark.range(lo, hi).select($"id".as("k"),
       when($"id" % 2 === 0, "even").otherwise("odd").as("p"),
@@ -274,7 +274,7 @@ class DeltaReadSpec extends SparkSuite {
     Lake.write(mk(0, 200), table, Seq("p"))          // v1 -> Delta commit 0
     Lake.write(mk(200, 240), table, Seq("p"), mode = "append") // v2 -> commit 1
     Lake.deleteMor(spark, table, $"k" < 20)          // v3 -> commit 2
-    DeltaExport.exportDeltaLog(spark, table)
+    DeltaWrite.exportLake(spark, table)
     val viaDelta = DeltaRead.changes(spark, table, 0L, 2L)
     assert(viaDelta.columns.contains("p"),
       "partition column missing from the CDF rows")
@@ -338,7 +338,7 @@ class DeltaReadSpec extends SparkSuite {
   }
 
   test("CDF write side: cdc files replay row-for-row with Lake.changes; fold is an empty cdc; appends derive") {
-    import graft.sources.{DeltaExport, Lake}
+    import graft.sources.{DeltaWrite, Lake}
     val table = java.nio.file.Files.createTempDirectory("graft-dcdfw").toString + "/t"
     val f = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     Lake.write(spark.range(0, 300).select($"id".as("k"),
@@ -349,7 +349,7 @@ class DeltaReadSpec extends SparkSuite {
     Lake.foldDeletes(spark, table)                                     // v4 (maintenance)
     Lake.write(spark.range(300, 320).select($"id".as("k"),
       ($"id" * 2).cast("double").as("x")), table, Nil, mode = "append") // v5
-    DeltaExport.exportDeltaLog(spark, table, withCdf = true)
+    DeltaWrite.exportLake(spark, table, withCdf = true)
     def logText(v: Long): String = {
       val in = f.open(new org.apache.hadoop.fs.Path(f"$table/_delta_log/$v%020d.json"))
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
@@ -373,7 +373,7 @@ class DeltaReadSpec extends SparkSuite {
   }
 
   test("CDF write side, PARTITIONED: change files drop partition columns; cdc actions carry real partitionValues") {
-    import graft.sources.{DeltaExport, Lake}
+    import graft.sources.{DeltaWrite, Lake}
     val table = java.nio.file.Files.createTempDirectory("graft-dcdfpw").toString + "/t"
     val f = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     Lake.write(spark.range(0, 300).select($"id".as("k"),
@@ -383,7 +383,7 @@ class DeltaReadSpec extends SparkSuite {
     Lake.deleteMor(spark, table, $"k" >= 250)                        // v2
     Lake.mergeMor(spark, table, spark.range(0, 10).select($"id".as("k"),
       ($"id" % 3).cast("string").as("p"), lit(-7.0).as("x")), Seq("k")) // v3
-    DeltaExport.exportDeltaLog(spark, table, withCdf = true)
+    DeltaWrite.exportLake(spark, table, withCdf = true)
     // every cdc parquet: NO partition column in-file (protocol: change
     // files store data + _change_type only; partition comes from the
     // action), and its action records the real partition tuple
@@ -456,14 +456,14 @@ class DeltaReadSpec extends SparkSuite {
   }
 
   test("Delta-side CDC subscription: pollDelta windows chain over CDF, crash replays") {
-    import graft.sources.{DeltaExport, Lake}
+    import graft.sources.{DeltaWrite, Lake}
     import graft.streaming.ChangeFeed
     val table = java.nio.file.Files.createTempDirectory("graft-dpoll").toString + "/t"
     val ledger = table + "/../cursor"
     Lake.write(spark.range(0, 200).select($"id".as("k"),
       ($"id" * 2).cast("double").as("x")), table, Nil)            // v1 -> Delta 0
     Lake.deleteMor(spark, table, $"k" < 20)                       // v2 -> Delta 1
-    DeltaExport.exportDeltaLog(spark, table, withCdf = true)
+    DeltaWrite.exportLake(spark, table, withCdf = true)
     var seen = scala.collection.mutable.ArrayBuffer[(Int, Int, Long)]()
     def poll(fail: Boolean = false) =
       ChangeFeed.pollDelta(spark, table, ledger, failBeforeCommit = fail) {
@@ -474,7 +474,7 @@ class DeltaReadSpec extends SparkSuite {
     // new commit, crash between apply and cursor, then replay
     Lake.mergeMor(spark, table, spark.range(0, 5).select($"id".as("k"),
       lit(-1.0).as("x")), Seq("k"))                               // v3 -> Delta 2
-    DeltaExport.exportDeltaLog(spark, table, withCdf = true)
+    DeltaWrite.exportLake(spark, table, withCdf = true)
     intercept[IllegalStateException] { poll(fail = true) }
     assert(poll().contains((1, 2)))
     // the replayed window saw the same rows twice (at-least-once
@@ -486,7 +486,7 @@ class DeltaReadSpec extends SparkSuite {
   }
 
   test("export protocol: DV-free log is {1,2}; first DV commit upgrades in-place") {
-    import graft.sources.{DeltaExport, Lake}
+    import graft.sources.{DeltaWrite, Lake}
     val table = java.nio.file.Files.createTempDirectory("graft-dproto").toString + "/t"
     val f = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     def logText(v: Long): String = {
@@ -496,14 +496,14 @@ class DeltaReadSpec extends SparkSuite {
     Lake.write(spark.range(0, 100).select($"id".as("k")), table, Nil) // v1
     Lake.write(spark.range(100, 120).select($"id".as("k")), table, Nil,
       mode = "append")                                               // v2
-    DeltaExport.exportDeltaLog(spark, table)
+    DeltaWrite.exportLake(spark, table)
     // no deletion vectors anywhere: spec-baseline protocol, no features
     assert(logText(0L).contains(""""minReaderVersion":1"""))
     assert(!logText(0L).contains("deletionVectors"))
     assert(!logText(1L).contains("protocol"))
     // a MoR delete introduces DVs: the NEW commit upgrades the protocol
     Lake.deleteMor(spark, table, $"k" < 10)                          // v3
-    DeltaExport.exportDeltaLog(spark, table)
+    DeltaWrite.exportLake(spark, table)
     assert(logText(0L).contains(""""minReaderVersion":1"""),
       "already-exported commits must not be rewritten")
     assert(logText(2L).contains(""""minReaderVersion":3""") &&
@@ -544,17 +544,17 @@ class DeltaReadSpec extends SparkSuite {
   }
 
   test("V2 checkpoint: sidecar parquet + json manifest bootstrap; parquet-flavor manifest too") {
-    import graft.sources.{DeltaExport, Lake}
+    import graft.sources.{DeltaWrite, Lake}
     import org.apache.spark.sql.functions.col
     val table = java.nio.file.Files.createTempDirectory("graft-dck2").toString + "/t"
     val f = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     Lake.write(spark.range(0, 200).select($"id".as("k"),
       ($"id" * 2).cast("double").as("v")), table, Nil)
     Lake.deleteMor(spark, table, col("k") % 10 === 0) // DV-live version
-    DeltaExport.exportDeltaLog(spark, table)
+    DeltaWrite.exportLake(spark, table)
     val viaLog = DeltaRead.read(spark, table).collect()
       .map(_.getAs[Long]("k")).toSet
-    val ck = DeltaRead.writeCheckpointV2(spark, table)
+    val ck = DeltaWrite.checkpoint(spark, table, v2 = true)
     // layout: UUID-named json manifest + one sidecar parquet
     val names = f.listStatus(new org.apache.hadoop.fs.Path(s"$table/_delta_log"))
       .map(_.getPath.getName)
@@ -629,5 +629,41 @@ class DeltaReadSpec extends SparkSuite {
     // vacuumed log must still report a current version)
     assert(DeltaRead.versions(spark, table) === Seq(31L))
     assert(DeltaRead.checkpointVersions(spark, table) === Seq(30L))
+  }
+
+  test("racing appends: winners are visible, losers conflicted, no file is left unreferenced") {
+    val table = java.nio.file.Files.createTempDirectory("graft-drace").toString
+    DeltaWrite.append(Seq((0L, "seed")).toDF("id", "v").coalesce(1), table)
+    val results = race()(i => DeltaWrite.append(
+      Seq((i, s"r$i")).toDF("id", "v").coalesce(1), table))
+    val won = results.collect { case (i, scala.util.Success(_)) => i }.toSet
+    results.collect { case (_, scala.util.Failure(e)) => e }.foreach(e =>
+      assert(e.isInstanceOf[java.util.ConcurrentModificationException], e.toString))
+    assert(won.nonEmpty)
+    info(s"${won.size} of 4 racing appends committed")
+    assert(results.collect { case (_, scala.util.Success(v)) => v }.distinct.size === won.size)
+    assert(DeltaRead.read(spark, table).select($"id").as[Long].collect().toSet === won + 0L)
+    // the losers deleted their data files, and no staging dir survives
+    val names = new java.io.File(table).list().toSet
+    assert(!names.exists(_.startsWith("_staging")))
+    assert(names.filter(n => n.endsWith(".parquet") && !n.startsWith(".")) ===
+      DeltaRead.liveFiles(spark, table).toSet)
+  }
+
+  test("export checkpoints a DV-live version; it reads the same without the JSON commits it covers") {
+    import graft.sources.Lake
+    val table = java.nio.file.Files.createTempDirectory("graft-dckdv").toString + "/t"
+    val f = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    Lake.write(spark.range(0, 100).select($"id".as("k")), table, Nil)  // v1 -> Delta 0
+    (1L to 9L).foreach(i =>                                           // v2..v10
+      Lake.write(Seq(100L + i).toDF("k"), table, Nil, mode = "append"))
+    Lake.deleteMor(spark, table, $"k" % 10 === 3)                      // v11 -> Delta 10
+    assert(DeltaWrite.exportLake(spark, table) === 10L)
+    assert(DeltaRead.checkpointVersions(spark, table) === Seq(10L))
+    val viaLog = DeltaRead.read(spark, table).select($"k").as[Long].collect().toSet
+    assert(viaLog === ((0L until 100L) ++ (101L to 109L)).filterNot(_ % 10 == 3).toSet)
+    (0L to 10L).foreach(v => f.delete(new org.apache.hadoop.fs.Path(
+      f"$table/_delta_log/$v%020d.json"), false))
+    assert(DeltaRead.read(spark, table).select($"k").as[Long].collect().toSet === viaLog)
   }
 }

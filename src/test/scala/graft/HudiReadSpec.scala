@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.HudiRead
+import graft.sources.{HudiRead, HudiWrite}
 
 /** Hudi COW timeline replay: slice replacement, snapshot isolation. */
 class HudiReadSpec extends SparkSuite {
@@ -11,8 +11,8 @@ class HudiReadSpec extends SparkSuite {
     val g0a = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     val g1 = Seq((10L, "x")).toDF("id", "v")
     val g0b = Seq((3L, "c")).toDF("id", "v")
-    val i1 = HudiRead.commit(table, Map("g0" -> g0a, "g1" -> g1))
-    val i2 = HudiRead.commit(table, Map("g0" -> g0b))
+    val i1 = HudiWrite.commit(table, Map("g0" -> g0a, "g1" -> g1))
+    val i2 = HudiWrite.commit(table, Map("g0" -> g0b))
     assert(HudiRead.instants(spark, table) === Seq(i1, i2))
     // latest: g0 replaced, g1 untouched
     assert(HudiRead.read(spark, table).select($"id").collect()
@@ -26,12 +26,12 @@ class HudiReadSpec extends SparkSuite {
   }
 
   test("Lake write -> Hudi timeline export -> Hudi read round trip") {
-    import graft.sources.{HudiExport, Lake}
+    import graft.sources.{HudiWrite, Lake}
     val table = java.nio.file.Files.createTempDirectory("graft-hexp").toString
     Lake.write(Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v"), table, Nil)
     Lake.write(Seq((3L, 30.0)).toDF("id", "v"), table, Nil, mode = "append")
     Lake.delete(spark, table, $"id" === 2L) // CoW: retires a file group
-    val last = HudiExport.exportHudiTimeline(spark, table)
+    val last = HudiWrite.exportLake(spark, table)
     assert(last === f"${3}%014d")
     def ids(asOf: Option[String]) = HudiRead.read(spark, table, asOf)
       .select($"id").collect().map(_.getLong(0)).toSet
@@ -43,17 +43,17 @@ class HudiReadSpec extends SparkSuite {
     assert(f.exists(new org.apache.hadoop.fs.Path(s"$table/.hoodie/${f"${3}%014d"}.replacecommit")))
     // incremental + idempotent re-export after another commit
     Lake.write(Seq((4L, 40.0)).toDF("id", "v"), table, Nil, mode = "append")
-    assert(HudiExport.exportHudiTimeline(spark, table) === f"${4}%014d")
+    assert(HudiWrite.exportLake(spark, table) === f"${4}%014d")
     assert(ids(None) === Set(1L, 3L, 4L))
   }
 
   test("partitioned export: timeline-keyed partition restore + file pruning") {
-    import graft.sources.{HudiExport, HudiRead, Lake}
+    import graft.sources.{HudiRead, HudiWrite, Lake}
     val table = java.nio.file.Files.createTempDirectory("graft-hudipart").toString + "/t"
     Lake.write(Seq((1L, 10.0, "a"), (2L, 20.0, "a"), (3L, 30.0, "b"),
       (4L, 40.0, "b b")).toDF("id", "v", "p"), table, Seq("p"))
     Lake.write(Seq((5L, 50.0, "c")).toDF("id", "v", "p"), table, Seq("p"), mode = "append")
-    HudiExport.exportHudiTimeline(spark, table)
+    HudiWrite.exportLake(spark, table)
     // partitionPath keys carry the values (URL-encoded: "b b" round-trips)
     val slices = HudiRead.liveSliceDetails(spark, table)
     assert(slices.values.map(_.partitionPath).toSet
@@ -70,7 +70,7 @@ class HudiReadSpec extends SparkSuite {
     // CoW delete on a partitioned table still replays (replacecommit
     // retires the partition's file group; re-export is incremental)
     Lake.delete(spark, table, $"id" === 3L)
-    HudiExport.exportHudiTimeline(spark, table)
+    HudiWrite.exportLake(spark, table)
     assert(HudiRead.read(spark, table).select($"id").collect().map(_.getLong(0)).toSet
       === Set(1L, 2L, 4L, 5L))
   }
@@ -111,15 +111,15 @@ class HudiReadSpec extends SparkSuite {
       ($"id" * 2).cast("double").as("x"))
     val g1 = spark.range(100, 200).select($"id".as("k"),
       ($"id" * 2).cast("double").as("x"))
-    HudiRead.commit(table, Map("g0" -> g0, "g1" -> g1))
+    HudiWrite.commit(table, Map("g0" -> g0, "g1" -> g1))
     // delta 1: update k in [0,10), delete [90,95)
-    HudiRead.deltaCommit(table, "g0", "k",
+    HudiWrite.deltaCommit(table, "g0", "k",
       Some(spark.range(0, 10).select($"id".as("k"), org.apache.spark.sql
         .functions.lit(-1.0).as("x"))),
       (90L until 95L).map(_.toString))
     // delta 2 on the same group: re-insert a deleted key, delete an
     // updated one — block ORDER must win, not block type
-    HudiRead.deltaCommit(table, "g0", "k",
+    HudiWrite.deltaCommit(table, "g0", "k",
       Some(Seq((92L, 555.0)).toDF("k", "x")), Seq("3"))
     val got = HudiRead.read(spark, table) // auto-delegates to readMor
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -141,7 +141,7 @@ class HudiReadSpec extends SparkSuite {
     assert(HudiRead.read(spark, table, Some(i1)).count() === 200L)
     // a base rewrite (compaction shape) retires the group's logs
     val folded = HudiRead.read(spark, table).filter($"k" < 100 || $"k" >= 100)
-    HudiRead.commit(table, Map("g0" ->
+    HudiWrite.commit(table, Map("g0" ->
       HudiRead.read(spark, table).filter($"k" < 100)))
     val groups = HudiRead.liveGroups(spark, table)
     assert(groups("g0").logs.isEmpty, "base rewrite must retire logs")
@@ -149,12 +149,12 @@ class HudiReadSpec extends SparkSuite {
   }
 
   test("merge-on-read over a PARTITIONED table: partition columns restored from the timeline") {
-    import graft.sources.{HudiExport, Lake}
+    import graft.sources.{HudiWrite, Lake}
     val table = java.nio.file.Files.createTempDirectory("graft-hmorp").toString + "/t"
     Lake.write(spark.range(0, 300).select($"id".as("k"),
       ($"id" * 2).cast("double").as("x"),
       ($"id" % 3).cast("string").as("p")).coalesce(1), table, Seq("p"))
-    graft.sources.HudiExport.exportHudiTimeline(spark, table)
+    graft.sources.HudiWrite.exportLake(spark, table)
     val byPart = HudiRead.liveGroups(spark, table).toSeq
       .groupBy(_._2.base.partitionPath)
     assert(byPart.keySet === Set("p=0", "p=1", "p=2"))
@@ -164,9 +164,9 @@ class HudiReadSpec extends SparkSuite {
     val gA = byPart("p=0").head._1
     val gB = byPart("p=1").head._1
     // logs on TWO partitions: upserts + a delete on p=0, upsert on p=1
-    HudiRead.deltaCommit(table, gA, "k",
+    HudiWrite.deltaCommit(table, gA, "k",
       Some(Seq((0L, -1.0), (3L, -1.0), (6L, -1.0)).toDF("k", "x")), Seq("9"))
-    HudiRead.deltaCommit(table, gB, "k", Some(Seq((1L, -2.0)).toDF("k", "x")))
+    HudiWrite.deltaCommit(table, gB, "k", Some(Seq((1L, -2.0)).toDF("k", "x")))
     def readAll() = HudiRead.read(spark, table)
       .collect().map(r => r.getAs[Long]("k") ->
         ((r.getAs[Double]("x"), r.getAs[String]("p")))).toMap
@@ -229,7 +229,7 @@ class HudiReadSpec extends SparkSuite {
     assert(df.count() === 80L)
     assert(df.filter($"country" === "india").count() === 30L)
     // MoR: pending logs on one group — merge restores the same columns
-    HudiRead.deltaCommit(table, "gA", "k",
+    HudiWrite.deltaCommit(table, "gA", "k",
       Some(Seq((0L, -1.0), (99L, 5.0)).toDF("k", "x")), Seq("3"))
     val got = HudiRead.read(spark, table)
       .collect().map(r => r.getAs[Long]("k") ->
@@ -283,20 +283,84 @@ class HudiReadSpec extends SparkSuite {
 
   test("merge-on-read guards: stale-silent reads impossible, key required") {
     val table = java.nio.file.Files.createTempDirectory("graft-hmorg").toString
-    HudiRead.commit(table, Map("g0" ->
+    HudiWrite.commit(table, Map("g0" ->
       spark.range(0, 10).select($"id".as("k"), $"id".cast("double").as("x"))))
-    HudiRead.deltaCommit(table, "g0", "k",
+    HudiWrite.deltaCommit(table, "g0", "k",
       Some(Seq((0L, 9.9)).toDF("k", "x")))
     // plain read() reflects the log — never base-only
     assert(HudiRead.read(spark, table).filter($"k" === 0L)
       .head.getDouble(1) === 9.9)
     // conflicting key field refused
     intercept[IllegalArgumentException] {
-      HudiRead.deltaCommit(table, "g0", "x", Some(Seq((1L, 2.0)).toDF("k", "x")))
+      HudiWrite.deltaCommit(table, "g0", "x", Some(Seq((1L, 2.0)).toDF("k", "x")))
     }
     // unknown file group refused
     intercept[IllegalArgumentException] {
-      HudiRead.deltaCommit(table, "nope", "k", Some(Seq((1L, 2.0)).toDF("k", "x")))
+      HudiWrite.deltaCommit(table, "nope", "k", Some(Seq((1L, 2.0)).toDF("k", "x")))
     }
+  }
+
+  test("deltaCommit after an export with an instant gap takes the next free instant") {
+    import graft.sources.Lake
+    val table = java.nio.file.Files.createTempDirectory("graft-hgap").toString + "/t"
+    Lake.write(spark.range(0, 10).select($"id".as("k"),
+      ($"id" * 2).cast("double").as("x")).coalesce(1), table, Nil) // v1
+    Lake.deleteMor(spark, table, $"k" === 5L) // v2: pending delete vectors, not exported
+    Lake.foldDeletes(spark, table)            // v3
+    HudiWrite.exportLake(spark, table)
+    assert(HudiRead.instants(spark, table) === Seq(f"${1}%014d", f"${3}%014d"))
+    val groups = HudiRead.liveGroups(spark, table)
+    assert(groups.size === 1)
+    val instant = HudiWrite.deltaCommit(table, groups.head._1, "k",
+      Some(Seq((1L, -1.0)).toDF("k", "x")))
+    assert(instant === f"${4}%014d")
+    val all = HudiRead.instants(spark, table)
+    assert(all.distinct === all)
+    val got = HudiRead.read(spark, table).collect()
+      .map(r => r.getAs[Long]("k") -> r.getAs[Double]("x")).toMap
+    assert(got.size === 9 && got(1L) === -1.0 && !got.contains(5L))
+  }
+
+  test("racing commits and first delta batches: winners visible, losers conflicted, nothing unreferenced") {
+    import scala.jdk.CollectionConverters._
+    val table = java.nio.file.Files.createTempDirectory("graft-hrace").toString
+    HudiWrite.commit(table, Map("g0" -> Seq((0L, "seed")).toDF("id", "v")))
+    val results = race()(i => HudiWrite.commit(table,
+      Map(s"g$i" -> Seq((i, s"r$i")).toDF("id", "v"))))
+    val won = results.collect { case (i, scala.util.Success(_)) => i }.toSet
+    results.collect { case (_, scala.util.Failure(e)) => e }.foreach(e =>
+      assert(e.isInstanceOf[java.util.ConcurrentModificationException], e.toString))
+    assert(won.nonEmpty)
+    info(s"${won.size} of 4 racing commits published")
+    assert(results.collect { case (_, scala.util.Success(v)) => v }.distinct.size === won.size)
+    assert(HudiRead.read(spark, table).select($"id").as[Long].collect().toSet === won + 0L)
+    // racing FIRST delta batches also race to create hoodie.properties:
+    // a loser of that race re-reads the winner's key and carries on, so
+    // only the race for the instant may fail
+    val deltas = race()(i => HudiWrite.deltaCommit(table, "g0", "id",
+      Some(Seq((0L, s"d$i")).toDF("id", "v"))))
+    val wonD = deltas.collect { case (i, scala.util.Success(inst)) => inst -> i }
+    deltas.collect { case (_, scala.util.Failure(e)) => e }.foreach(e =>
+      assert(e.isInstanceOf[java.util.ConcurrentModificationException], e.toString))
+    assert(wonD.nonEmpty)
+    info(s"${wonD.size} of 4 racing delta batches published")
+    assert(HudiRead.recordKeyField(spark, table) === Some("id"))
+    val all = HudiRead.instants(spark, table)
+    assert(all.distinct === all && all.size === 1 + won.size + wonD.size)
+    // the newest winning batch is key 0's visible image
+    assert(HudiRead.read(spark, table).filter($"id" === 0L).select($"v").as[String]
+      .collect().toSeq === Seq(s"d${wonD.max._2}"))
+    // no staging dir survives, and the base and log files on disk are
+    // exactly those the timeline references
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val referenced = new java.io.File(s"$table/.hoodie").listFiles().toSeq
+      .filter(_.getName.matches(".*\\.(commit|deltacommit|replacecommit)"))
+      .flatMap(f => mapper.readTree(f).get("partitionToWriteStats").elements().asScala
+        .flatMap(_.elements().asScala).map(_.get("path").asText()))
+      .toSet
+    val names = new java.io.File(table).list().toSet
+    assert(!names.exists(_.startsWith("_staging")))
+    assert(names.filter(n => !n.endsWith(".crc") &&
+      (n.endsWith(".parquet") || n.contains(".log."))) === referenced)
   }
 }

@@ -129,30 +129,30 @@ class IcebergReadSpec extends SparkSuite {
   }
 
   test("Delta export emits deletion vectors for MoR snapshots; Hudi refuses dirty") {
-    import graft.sources.{DeltaExport, DeltaRead, HudiExport, Lake}
+    import graft.sources.{DeltaRead, DeltaWrite, HudiWrite, Lake}
     val table = java.nio.file.Files.createTempDirectory("graft-dmor").toString + "/t"
     Lake.write(spark.range(0, 100).select($"id".as("k"),
       ($"id" * 2).cast("double").as("x")), table, Nil)
     Lake.deleteMor(spark, table, $"k" < 10)          // v2 dirty
     // Delta expresses the MoR state as a DV-upgraded re-add — no fold
-    DeltaExport.exportDeltaLog(spark, table)
+    DeltaWrite.exportLake(spark, table)
     assert(DeltaRead.read(spark, table).count() === 90L)
     assert(DeltaRead.read(spark, table).filter($"k" < 10).count() === 0L)
     // Delta time travel: v0 (pre-delete) unmasked
     assert(DeltaRead.read(spark, table, Some(0L)).count() === 100L)
     // Hudi has no row-level encoding — dirty current still refuses
     intercept[IllegalArgumentException] {
-      HudiExport.exportHudiTimeline(spark, table)
+      HudiWrite.exportLake(spark, table)
     }
     // stacked MoR commits upgrade the vector again
     Lake.deleteMor(spark, table, $"k" >= 95)          // v3
-    DeltaExport.exportDeltaLog(spark, table)
+    DeltaWrite.exportLake(spark, table)
     assert(DeltaRead.read(spark, table).count() === 85L)
     // after a fold, the export returns to plain adds and Hudi works
     Lake.foldDeletes(spark, table)                    // v4
-    DeltaExport.exportDeltaLog(spark, table)
+    DeltaWrite.exportLake(spark, table)
     assert(DeltaRead.read(spark, table).count() === 85L)
-    HudiExport.exportHudiTimeline(spark, table)
+    HudiWrite.exportLake(spark, table)
     assert(graft.sources.HudiRead.read(spark, table).count() === 85L)
   }
 

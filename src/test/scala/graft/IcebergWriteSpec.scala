@@ -70,17 +70,8 @@ class IcebergWriteSpec extends SparkSuite {
   test("racing appends: every append that returned is visible, the others conflicted") {
     val table = tmp("graft-icerace")
     IcebergWrite.append(Seq((0L, "seed")).toDF("id", "v").coalesce(1), table)
-    val start = new java.util.concurrent.CountDownLatch(1)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    val results = try {
-      val fs = (1L to 4L).map(i => pool.submit(() => {
-        start.await()
-        scala.util.Try(IcebergWrite.append(
-          Seq((i, s"r$i")).toDF("id", "v").coalesce(1), table))
-      }))
-      start.countDown()
-      (1L to 4L).zip(fs.map(_.get()))
-    } finally pool.shutdown()
+    val results = race()(i => IcebergWrite.append(
+      Seq((i, s"r$i")).toDF("id", "v").coalesce(1), table))
     val won = results.collect { case (i, scala.util.Success(_)) => i }.toSet
     results.collect { case (_, scala.util.Failure(e)) => e }.foreach(e =>
       assert(e.isInstanceOf[java.util.ConcurrentModificationException], e.toString))

@@ -145,14 +145,14 @@ class LakeCdcStreamSpec extends SparkSuite {
   }
 
   test("graft-delta-cdc: version offsets from the v0 snapshot, CDF tail, restart resumes") {
-    import graft.sources.{DeltaExport, Lake}
+    import graft.sources.{DeltaWrite, Lake}
     val table = fresh("del")
     val ckpt = fresh("dckpt")
     val out = fresh("dout")
     Lake.write(spark.range(0, 80).select($"id".as("k"),
       ($"id" * 3).cast("double").as("v")), table, Nil)
     Lake.deleteMor(spark, table, col("k") % 8 === 0)
-    DeltaExport.exportDeltaLog(spark, table)
+    DeltaWrite.exportLake(spark, table)
     def run(): org.apache.spark.sql.DataFrame = {
       val q = spark.readStream.format("graft-delta-cdc")
         .option("table", table).load()
@@ -167,7 +167,7 @@ class LakeCdcStreamSpec extends SparkSuite {
     // another delta commit directly on the exported log; restart tails it
     val lastV = graft.sources.DeltaRead.versions(spark, table).last
     graft.sources.Lake.deleteMor(spark, table, col("k") === 33)
-    DeltaExport.exportDeltaLog(spark, table)
+    DeltaWrite.exportLake(spark, table)
     val total = run().collect()
     val tail = total.filter(_.getAs[Long]("__commit_version") > lastV)
     assert(total.length === first.length + tail.length,

@@ -411,17 +411,8 @@ class PaimonReadSpec extends SparkSuite {
   test("racing commits: every commit that returned is visible, the others conflicted, nothing is left unreferenced") {
     val dir = freshTable("race")
     PaimonRead.commitPk(Seq((0L, "seed")).toDF("k", "v"), dir, Seq("k"), numBuckets = 2)
-    val start = new java.util.concurrent.CountDownLatch(1)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    val results = try {
-      val fs = (1L to 4L).map(i => pool.submit(() => {
-        start.await()
-        scala.util.Try(PaimonRead.commitPk(Seq((i, s"r$i")).toDF("k", "v"), dir,
-          Seq("k"), assumeKeyUnique = true))
-      }))
-      start.countDown()
-      (1L to 4L).zip(fs.map(_.get()))
-    } finally pool.shutdown()
+    val results = race()(i => PaimonRead.commitPk(Seq((i, s"r$i")).toDF("k", "v"), dir,
+      Seq("k"), assumeKeyUnique = true))
     val won = results.collect { case (i, scala.util.Success(_)) => i }.toSet
     results.collect { case (_, scala.util.Failure(e)) => e }.foreach(e =>
       assert(e.isInstanceOf[java.util.ConcurrentModificationException], e.toString))
