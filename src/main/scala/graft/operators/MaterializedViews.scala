@@ -1,8 +1,11 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+
+import graft.sources.AtomicPublish
 
 /** Materialized views: precomputed results with full or incremental
   * refresh.
@@ -134,26 +137,28 @@ object MaterializedViews {
   def read(spark: SparkSession, baseDir: String, name: String): DataFrame =
     spark.read.parquet(path(baseDir, name))
 
+  /** The state version a [[maintainMinMaxMv]] MV's `_current` pointer
+    * names, or None before the first poll. */
+  private def mvPointer(spark: SparkSession, mvDir: String): Option[Int] =
+    AtomicPublish.read(spark, new Path(s"$mvDir/_current"))
+      .map(b => new String(b, "UTF-8").trim.toInt)
+
   /** Current state of a [[maintainMinMaxMv]] MV (pointer-resolved). */
   def readMinMaxMv(spark: SparkSession, mvDir: String): DataFrame = {
-    val f = new org.apache.hadoop.fs.Path(mvDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(s"$mvDir/_current")
-    require(f.exists(p), s"no maintained MV at $mvDir")
-    val in = f.open(p)
-    val v = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toInt
-      finally in.close()
-    spark.read.parquet(s"$mvDir/state-v$v")
+    val v = mvPointer(spark, mvDir)
+    require(v.isDefined, s"no maintained MV at $mvDir")
+    spark.read.parquet(s"$mvDir/state-v${v.get}")
   }
 
   /** STANDING min/max MV maintained from the Lake change-feed
     * subscription — [[applyDeltaMinMax]] composed with
     * [[graft.streaming.ChangeFeed.poll]]'s exactly-once ledger: one
     * poll applies the (cursor, current] retraction window to the MV
-    * state and publishes the new state KEYED BY the `to` version
-    * (state-v<N> directory + pointer-file swap), so a crash between
-    * apply and cursor commit replays into the same versioned
+    * state and publishes the new state KEYED BY the `to` version: it
+    * writes the state-v<N> directory, then replaces the `_current`
+    * pointer through [[AtomicPublish.replace]] (a reader sees the old
+    * or the new state, never a torn or missing pointer). A crash
+    * between apply and cursor commit replays into the same versioned
     * directory — idempotent, the exactly-once recipe the
     * stream_lake_cdc_poll gate proves for counts, now carrying
     * non-decomposable aggregates. First poll bootstraps the state
@@ -169,32 +174,23 @@ object MaterializedViews {
       gv: DataFrame => (org.apache.spark.sql.Column, org.apache.spark.sql.Column),
       failBeforeCommit: Boolean = false): Option[(Int, Int)] = {
     import org.apache.spark.sql.functions._
-    val f = new org.apache.hadoop.fs.Path(mvDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def statePath(v: Int) = s"$mvDir/state-v$v"
-    def pointer = new org.apache.hadoop.fs.Path(s"$mvDir/_current")
-    def readPointer: Option[Int] =
-      if (!f.exists(pointer)) None
-      else {
-        val in = f.open(pointer)
-        val b = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-        Some(new String(b, "UTF-8").trim.toInt)
-      }
+    def swapPointer(v: Int): Unit = AtomicPublish.replace(spark,
+      new Path(s"$mvDir/_current"), v.toString.getBytes("UTF-8"))
     def projGv(df: DataFrame): DataFrame = {
       val (g, v) = gv(df); df.select(g.as("g"), v.as("v"))
     }
     def aggAll(df: DataFrame): DataFrame = df.groupBy(col("g"))
       .agg(count(lit(1)).as("n"), sum(col("v")).as("s"),
         min(col("v")).as("mn"), max(col("v")).as("mx"))
-    readPointer match {
+    mvPointer(spark, mvDir) match {
       case None =>
         // bootstrap: full aggregate at the CURRENT version; the
         // ledger seeds there so the first real poll starts after it
         val cur = graft.sources.Lake.currentVersion(spark, table)
         aggAll(projGv(graft.sources.Lake.read(spark, table)))
           .write.mode("overwrite").parquet(statePath(cur))
-        val out = f.create(pointer, true)
-        try out.write(cur.toString.getBytes("UTF-8")) finally out.close()
+        swapPointer(cur)
         graft.streaming.ChangeFeed.commitCursor(spark, ledgerPath, cur)
         Some((0, cur))
       case Some(stateV) =>
@@ -210,8 +206,7 @@ object MaterializedViews {
           // versioned state + pointer swap: a replayed window rewrites
           // state-v<to> identically, never corrupts state-v<from>
           updated.write.mode("overwrite").parquet(statePath(to))
-          val out = f.create(pointer, true)
-          try out.write(to.toString.getBytes("UTF-8")) finally out.close()
+          swapPointer(to)
         }
     }
   }
@@ -304,10 +299,8 @@ object MaterializedViews {
     removed.foreach { p =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$mvPath/$partCol=$p"), true)
     }
-    val out = fs.create(manifestPath, true)
-    try out.write(graft.functions.JsonKernel.mapper
-      .writeValueAsBytes(current.asJava))
-    finally out.close()
+    AtomicPublish.replace(spark, manifestPath,
+      graft.functions.JsonKernel.mapper.writeValueAsBytes(current.asJava))
     PctReport(stale, removed, current.size - stale.size)
   }
 }

@@ -381,10 +381,10 @@ object DeltaWrite {
           manifest.map(_ + "\n").mkString.getBytes("UTF-8"))
         manifest.size + adds.size
       }
-    // `_last_checkpoint` is a hint that each checkpoint overwrites, not
+    // `_last_checkpoint` is a hint that each checkpoint replaces, not
     // a commit record; readers list the log instead of trusting it
-    val out = f.create(new Path(s"$log/_last_checkpoint"), true)
-    try out.write(s"""{"version":$v,"size":$size}""".getBytes("UTF-8")) finally out.close()
+    AtomicPublish.replace(spark, new Path(s"$log/_last_checkpoint"),
+      s"""{"version":$v,"size":$size}""".getBytes("UTF-8"))
     v
   }
 }

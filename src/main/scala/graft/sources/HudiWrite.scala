@@ -17,10 +17,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `ConcurrentModificationException`.
   *
   * One instant rule: a new instant is the largest existing instant of
-  * any kind (commit, deltacommit, replacecommit), plus 1 — a timeline
-  * with gaps never reuses one. [[exportLake]] instead stamps each
-  * instant with the Lake version it mirrors, so instant-as-of time
-  * travel replays the Lake's history.
+  * any kind (commit, deltacommit, replacecommit) or claim, plus 1 — a
+  * timeline with gaps never reuses one. Each instant is claimed once,
+  * whatever its action, before its action file publishes, so a racing
+  * `commit` and `deltaCommit` cannot both take one instant.
+  * [[exportLake]] instead stamps each instant with the Lake version it
+  * mirrors, so instant-as-of time travel replays the Lake's history.
   *
   * Entry points: [[commit]] (copy-on-write file groups),
   * [[deltaCommit]] (a merge-on-read log batch) and [[exportLake]] (a COW
@@ -60,16 +62,34 @@ object HudiWrite {
   private def instants(spark: SparkSession, table: String): Seq[String] =
     try HudiRead.instants(spark, table) catch { case _: IllegalArgumentException => Nil }
 
-  private def nextInstant(spark: SparkSession, table: String): String =
-    f"${instants(spark, table).map(_.toLong).maxOption.getOrElse(0L) + 1}%014d"
+  /** Where an instant's claim lives: `.hoodie/.aux/<instant>.claim`,
+    * which the timeline listing ignores. */
+  private def claimDir(table: String) = new Path(s"$table/.hoodie/.aux")
 
-  /** The commit core: publish `<instant>.<action>`; when a racing
-    * writer took the instant, delete `staged` and throw
+  private val Claim = "(\\d+)\\.claim".r
+
+  /** The largest instant completed or claimed, plus 1 — a claim a
+    * crashed writer left behind is a gap, which the timeline allows. */
+  private def nextInstant(spark: SparkSession, table: String): String = {
+    val f = fs(spark, table)
+    val claimed = if (!f.exists(claimDir(table))) Nil
+      else f.listStatus(claimDir(table)).toSeq.map(_.getPath.getName)
+        .collect { case Claim(i) => i }
+    f"${(instants(spark, table) ++ claimed).map(_.toLong).maxOption.getOrElse(0L) + 1}%014d"
+  }
+
+  /** The commit core: claim the instant, whatever the action, with an
+    * empty create-once `<instant>.claim`, then publish
+    * `<instant>.<action>`. When a racing writer took the instant —
+    * for any action — delete `staged` and throw
     * `ConcurrentModificationException`. */
   private def publish(spark: SparkSession, table: String, instant: String,
-      action: String, json: String, staged: Seq[Path]): Unit =
+      action: String, json: String, staged: Seq[Path]): Unit = {
+    AtomicPublish.publishOrDiscard(spark, new Path(claimDir(table), s"$instant.claim"),
+      Array.emptyByteArray, staged)
     AtomicPublish.publishOrDiscard(spark, new Path(s"$table/.hoodie/$instant.$action"),
       json.getBytes("UTF-8"), staged)
+  }
 
   /** One copy-on-write commit: each DataFrame of `groups` becomes (or
     * replaces) the base file of its file group. Returns the instant. */

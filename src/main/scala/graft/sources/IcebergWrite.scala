@@ -368,7 +368,6 @@ object IcebergWrite {
   private def commit(spark: SparkSession, table: String, schema: StructType,
       parts: Seq[Part], files: Seq[FileEntry], overwrite: Boolean,
       lakeVersion: Option[Long] = None): Long = {
-    val f = fs(spark, table)
     val pr = prior(spark, table)
     val v = pr.fold(1L)(_.version + 1)
     lakeVersion.foreach(l => require(l == v,
@@ -498,8 +497,8 @@ object IcebergWrite {
     AtomicPublish.publishOrDiscard(spark, new Path(s"$table/metadata/v$v.metadata.json"),
       json.getBytes("UTF-8"), (installed.map(_.path) ++
         listed.map(_.get("manifest_path").toString) :+ listPath).map(new Path(_)))
-    val hint = f.create(new Path(s"$table/metadata/version-hint.text"), true)
-    try hint.write(v.toString.getBytes("UTF-8")) finally hint.close()
+    AtomicPublish.replace(spark, new Path(s"$table/metadata/version-hint.text"),
+      v.toString.getBytes("UTF-8"))
     v
   }
 

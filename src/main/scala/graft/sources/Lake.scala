@@ -27,14 +27,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *                               cols, file list with partition values
   *                               + per-file stats (rows, bytes), pending
   *                               sidecars + their row/target-file record
-  *     metadata/VERSION          current version pointer (rename-commit)
+  *     metadata/VERSION          cache of the current version
   * }}}
   *
-  * Every commit writes a NEW data directory and a NEW manifest, then
-  * atomically swings the VERSION pointer (temp + rename) — readers see
-  * either the old or the new snapshot, never a mix, and old snapshots
-  * stay readable forever (time travel) because data files are
-  * immutable.
+  * Every commit writes a NEW data directory and a NEW manifest; the
+  * exclusive publish of the manifest IS the commit, and the VERSION
+  * cache is then replaced atomically (both in [[publishSnapshot]]) —
+  * readers see either the old or the new snapshot, never a mix, and
+  * old snapshots stay readable forever (time travel) because data
+  * files are immutable.
   *
   * Read path is the Delta/Iceberg integration shape: a custom
   * [[FileIndex]] whose file listing comes from the MANIFEST (no
@@ -46,9 +47,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * whole-stage codegen unchanged.
   *
   * Concurrency: optimistic — the version-numbered manifest is created
-  * with an EXCLUSIVE create, so racing writers conflict (second
-  * committer gets ConcurrentModificationException and retries) instead
-  * of losing updates; see [[writeJson]]. Row-level deletes/updates come
+  * with an EXCLUSIVE create, so racing writers conflict (the second
+  * committer deletes what it staged and gets
+  * ConcurrentModificationException) instead of losing updates; see
+  * [[publishSnapshot]]. Row-level deletes/updates come
   * in two shapes: copy-on-write rewrites of the touched files
   * ([[delete]]/[[update]]/[[merge]]) and merge-on-read delete vectors
   * that mask positions at read time until a fold
@@ -136,7 +138,7 @@ object Lake {
 
   /** Unique data staging dir for version v: racing committers must not
     * collide on the DATA path — the manifest publish is the only
-    * arbiter, and a loser's orphaned files are vacuum fodder. */
+    * arbiter, and a loser deletes its own directory. */
   private def stagingDir(table: String, v: Int): String =
     s"$table/data/commit-$v-${java.util.UUID.randomUUID().toString.take(8)}"
 
@@ -146,24 +148,15 @@ object Lake {
     *
     * The MANIFEST CHAIN is authoritative — the exclusive create of
     * `vN.json` is the commit point, so the highest N IS the current
-    * version. The VERSION file is only a cache: under racing
-    * committers its delete+rename update can lag or interleave, and
-    * trusting it alone would (a) show version 0 in the window between
-    * delete and rename and (b) let a slow older committer regress the
-    * table. max(hint, listed) closes both. */
+    * version. The VERSION file is only a cache: racing committers
+    * replace it in any order, so trusting it alone would let a slow
+    * older committer regress the table. Probing forward from it
+    * closes that; a missing or unparsable cache falls back to the
+    * manifest listing. */
   def currentVersion(spark: SparkSession, table: String): Int = {
     val f = fs(spark, table)
-    val hint =
-      if (!f.exists(versionFile(table))) 0
-      else {
-        val in = f.open(versionFile(table))
-        val text = try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim
-        finally in.close()
-        // the cache is written without coordination; a torn read of it
-        // must not fail the table — the manifest listing is authoritative
-        try text.toInt catch { case _: NumberFormatException => 0 }
-      }
+    val hint = AtomicPublish.read(spark, versionFile(table))
+      .flatMap(b => new String(b, "UTF-8").trim.toIntOption).getOrElse(0)
     // O(lag) probe forward from a valid hint (the common case is lag
     // 0-1: two existence checks); the full O(#versions) listing runs
     // only when the hint file is missing or garbage — keeping every
@@ -250,10 +243,7 @@ object Lake {
       partitionCols, files, inherited,
       prevSnap.map(_.dvFiles).getOrElse(Nil),
       prevSnap.map(_.dvRecords).getOrElse(Map.empty))
-    writeJson(spark, table, manifestFile(table, v), snapshotToJava(snap))
-
-    commitVersion(spark, table, v)
-    v
+    publishSnapshot(spark, table, snap, Seq(commitDir))
   }
 
   /** Sort-key clustered write — the reference's table sort key /
@@ -439,43 +429,6 @@ object Lake {
       .map { case (k, (mn, mx, _)) => k -> (mn, mx) }.toMap
   }
 
-  /** Commit point: VERSION rename — readers see old or new, never a mix. */
-  /** Refresh the VERSION cache file (the manifest publish that already
-    * happened IS the commit — see [[currentVersion]]). Best-effort:
-    * readers take max(hint, manifest chain), so a lost or lagging
-    * update is harmless. Each committer stages to its OWN temp file
-    * (a shared temp name was a stress-spec casualty) and publishes
-    * with an atomic replace; on local FS that goes through NIO so no
-    * stale Hadoop checksum file can poison later reads. */
-  private def commitVersion(spark: SparkSession, table: String, v: Int): Unit = {
-    val f = fs(spark, table)
-    f match {
-      case _: org.apache.hadoop.fs.LocalFileSystem =>
-        val dest = java.nio.file.Paths.get(versionFile(table).toUri.getPath)
-        java.nio.file.Files.createDirectories(dest.getParent)
-        // drop any checksum file a pre-NIO writer left for VERSION —
-        // an atomic replace below would otherwise mismatch it
-        java.nio.file.Files.deleteIfExists(dest.resolveSibling(".VERSION.crc"))
-        val tmp = java.nio.file.Files.createTempFile(dest.getParent, ".version", ".tmp")
-        try {
-          java.nio.file.Files.write(tmp, v.toString.getBytes("UTF-8"))
-          java.nio.file.Files.move(tmp, dest,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        } catch { case _: java.io.IOException => // cache refresh is best-effort
-        } finally { val _ = java.nio.file.Files.deleteIfExists(tmp) }
-      case _ =>
-        val tmp = new Path(s"$table/metadata/.VERSION-${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-        try {
-          val out = f.create(tmp, true)
-          try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-          f.delete(versionFile(table), false)
-          f.rename(tmp, versionFile(table))
-        } catch { case _: java.io.IOException => // best-effort
-        } finally { val _ = f.delete(tmp, false) }
-    }
-  }
-
   /** Copy-on-write UPDATE: SET-style column assignments applied to
     * rows matching `predicate`, by rewriting only the files that
     * contain at least one such row (same CoW shape and path handling
@@ -572,9 +525,7 @@ object Lake {
       createdAtMs = System.currentTimeMillis(),
       dvFiles = snap.dvFiles :+ sidecar,
       dvRecords = snap.dvRecords ++ rec.map(sidecar -> _))
-    writeJson(spark, table, manifestFile(table, v), snapshotToJava(snapNew))
-    commitVersion(spark, table, v)
-    v
+    publishSnapshot(spark, table, snapNew, Seq(sidecar))
   }
 
   /** Merge-on-read MERGE INTO (upsert) — the reference PRIMARY-KEY
@@ -758,9 +709,7 @@ object Lake {
       // load-provided columns carry arbitrary values (upserted and
       // inserted rows alike) — specs over them are no longer promises
       props = invalidateGeneratedSpecs(snap.props, provided.toSet))
-    writeJson(spark, table, manifestFile(table, v), snapshotToJava(snapNew))
-    commitVersion(spark, table, v)
-    v
+    publishSnapshot(spark, table, snapNew, Seq(sidecar, commitDir))
   }
 
   /** Merge-on-read UPDATE: rows matching `predicate` get their
@@ -820,9 +769,7 @@ object Lake {
       dvFiles = snap.dvFiles :+ sidecar,
       dvRecords = snap.dvRecords ++ rec.map(sidecar -> _),
       props = invalidateGeneratedSpecs(snap.props, assignments.keySet))
-    writeJson(spark, table, manifestFile(table, v), snapshotToJava(snapNew))
-    commitVersion(spark, table, v)
-    v
+    publishSnapshot(spark, table, snapNew, Seq(sidecar, commitDir))
   }
 
   /** Fold pending delete vectors into the data: rewrite ONLY the files
@@ -850,9 +797,7 @@ object Lake {
         createdAtMs = System.currentTimeMillis(), dvFiles = Nil,
         dvRecords = Map.empty,
         props = snap.props + (s"commit.op.v$v" -> "fold"))
-      writeJson(spark, table, manifestFile(table, v), snapshotToJava(snapNew))
-      commitVersion(spark, table, v)
-      return v
+      return publishSnapshot(spark, table, snapNew)
     }
     val commitDir = stagingDir(table, v)
     // read the dirty files through the SAME LakeFileIndex machinery the
@@ -870,9 +815,7 @@ object Lake {
     val snapNew = Snapshot(v, System.currentTimeMillis(), snap.schemaJson,
       snap.partitionCols, keep ++ listCommitFiles(spark, commitDir),
       snap.props + (s"commit.op.v$v" -> "fold"))
-    writeJson(spark, table, manifestFile(table, v), snapshotToJava(snapNew))
-    commitVersion(spark, table, v)
-    v
+    publishSnapshot(spark, table, snapNew, Seq(commitDir))
   }
 
   /** CoW operations and compaction read data files RAW (their file
@@ -999,9 +942,7 @@ object Lake {
       snap.partitionCols, listCommitFiles(spark, commitDir),
       snap.props.filterNot(_._1.startsWith("rename.")), snap.dvFiles,
       snap.dvRecords)
-    writeJson(spark, table, manifestFile(table, v), snapshotToJava(snapNew))
-    commitVersion(spark, table, v)
-    v
+    publishSnapshot(spark, table, snapNew, Seq(commitDir))
   }
 
   /** Copy-on-write MERGE INTO (full-row upsert semantics, the lake
@@ -1069,9 +1010,7 @@ object Lake {
       // whole-row replacement from the source: every column is
       // effectively assigned, so no generated spec survives
       invalidateGeneratedSpecs(snap.props, schema.fieldNames.toSet))
-    writeJson(spark, table, manifestFile(table, v), snapshotToJava(snapNew))
-    commitVersion(spark, table, v)
-    v
+    publishSnapshot(spark, table, snapNew, Seq(commitDir))
   }
 
   /** Small-file compaction (the reference's background compaction job,
@@ -1081,7 +1020,7 @@ object Lake {
     * partitions with only one small file — carry into the new snapshot
     * by reference. Pure manifest surgery + bounded rewrite: row data is
     * byte-identical, old snapshots stay readable, and readers flip at
-    * the VERSION rename like any commit. Returns the new version (or
+    * the manifest publish like any commit. Returns the new version (or
     * the current one when nothing needed compacting). */
   def compact(spark: SparkSession, table: String,
       smallFileBytes: Long = 32L << 20,
@@ -1120,9 +1059,7 @@ object Lake {
     val snapNew = Snapshot(v, System.currentTimeMillis(), snap.schemaJson,
       snap.partitionCols, keep ++ listCommitFiles(spark, commitDir),
       snap.props + (s"commit.op.v$v" -> "compact"))
-    writeJson(spark, table, manifestFile(table, v), snapshotToJava(snapNew))
-    commitVersion(spark, table, v)
-    v
+    publishSnapshot(spark, table, snapNew, Seq(commitDir))
   }
 
   /** A table's compaction debt, manifest/footer reads only (no data
@@ -1207,9 +1144,7 @@ object Lake {
     // ignores entries whose file left the snapshot.
     val snapNew = Snapshot(v, System.currentTimeMillis(), snap.schemaJson,
       snap.partitionCols, kept, snap.props, snap.dvFiles, snap.dvRecords)
-    writeJson(spark, table, manifestFile(table, v), snapshotToJava(snapNew))
-    commitVersion(spark, table, v)
-    v
+    publishSnapshot(spark, table, snapNew)
   }
 
   /** Vacuum: physically delete data files referenced by NO retained
@@ -1265,9 +1200,7 @@ object Lake {
     val v = current + 1
     val snapNew = Snapshot(v, System.currentTimeMillis(), snap.schemaJson,
       snap.partitionCols, snap.files, snap.props, snap.dvFiles, snap.dvRecords)
-    writeJson(spark, table, manifestFile(table, v), snapshotToJava(snapNew))
-    commitVersion(spark, table, v)
-    v
+    publishSnapshot(spark, table, snapNew)
   }
 
   /** Table clone (backup/restore): copy the CURRENT snapshot's data
@@ -1328,9 +1261,7 @@ object Lake {
     val snapNew = Snapshot(1, System.currentTimeMillis(), snap.schemaJson,
       snap.partitionCols, copied, snap.props, dvCopied.map(_._1),
       dvCopied.collect { case (out, Some(r)) => out -> r }.toMap)
-    writeJson(spark, dst, manifestFile(dst, 1), snapshotToJava(snapNew))
-    commitVersion(spark, dst, 1)
-    1
+    publishSnapshot(spark, dst, snapNew)
   }
 
   /** Identifier-boundary column-reference check for generated-spec
@@ -1412,9 +1343,7 @@ object Lake {
     val snapNew = Snapshot(v, System.currentTimeMillis(), snap.schemaJson,
       snap.partitionCols, keep ++ listCommitFiles(spark, commitDir),
       propsOut.getOrElse(snap.props))
-    writeJson(spark, table, manifestFile(table, v), snapshotToJava(snapNew))
-    commitVersion(spark, table, v)
-    v
+    publishSnapshot(spark, table, snapNew, Seq(commitDir))
   }
 
   private def snapshotToJava(s: Snapshot): java.util.Map[String, Object] = {
@@ -1462,19 +1391,27 @@ object Lake {
     m
   }
 
-  /** Manifest writes are EXCLUSIVE creates: the version-numbered
-    * manifest file doubles as the optimistic-concurrency lock — two
-    * writers racing to commit the same next version both compute
-    * v = current + 1, and the second create(v.json) fails instead of
-    * silently overwriting the first writer's commit (classic lost
-    * update). The loser rereads and retries against the new state —
-    * the same OCC contract every table-format catalog exposes. */
-  /** Exclusive-create commit record — see [[AtomicPublish]] for the
-    * torn-read-free publish semantics. */
-  private def writeJson(spark: SparkSession, table: String, p: Path,
-      value: Object): Unit =
-    AtomicPublish.publish(spark, p,
-      graft.functions.JsonKernel.mapper.writeValueAsBytes(value))
+  /** The one commit point. Publishes `snap` as `v<N>.json` through
+    * [[AtomicPublish.publishOrDiscard]]: the version-numbered manifest
+    * is the optimistic-concurrency lock — two writers racing for the
+    * same N both compute N = current + 1, the second publish fails
+    * instead of overwriting the first (a lost update), and the loser
+    * deletes `staged` (the uuid-named data directory and delete-vector
+    * sidecar it wrote for this commit) and throws
+    * `ConcurrentModificationException`. Then refreshes the VERSION
+    * cache ([[currentVersion]]) through [[AtomicPublish.replace]];
+    * that refresh is best-effort, because the commit has already
+    * happened and readers probe past a stale hint. Returns N. */
+  private def publishSnapshot(spark: SparkSession, table: String,
+      snap: Snapshot, staged: Seq[String] = Nil): Int = {
+    AtomicPublish.publishOrDiscard(spark, manifestFile(table, snap.version),
+      graft.functions.JsonKernel.mapper.writeValueAsBytes(snapshotToJava(snap)),
+      staged.map(new Path(_)))
+    try AtomicPublish.replace(spark, versionFile(table),
+      snap.version.toString.getBytes("UTF-8"))
+    catch { case _: java.io.IOException => }
+    snap.version
+  }
 
   def readSnapshot(spark: SparkSession, table: String, version: Int): Snapshot = {
     val f = fs(spark, table)
@@ -1530,9 +1467,7 @@ object Lake {
       s"concurrent commit: amending v${amended.version} but $table is at v$prev")
     val v = prev + 1
     val snap = amended.copy(version = v, createdAtMs = System.currentTimeMillis())
-    writeJson(spark, table, manifestFile(table, v), snapshotToJava(snap))
-    commitVersion(spark, table, v)
-    v
+    publishSnapshot(spark, table, snap)
   }
 
   /** Snapshot read with time travel; returns the DataFrame plus the

@@ -212,11 +212,8 @@ object PaimonRead {
     val f = fs(spark, table)
     val ids = snapshotIds(f, table)
     require(ids.nonEmpty, s"no snapshots under $table/snapshot")
-    val hinted = scala.util.Try {
-      val in = f.open(new Path(s"$table/snapshot/LATEST"))
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    }.toOption
+    val hinted = AtomicPublish.read(spark, new Path(s"$table/snapshot/LATEST"))
+      .flatMap(b => new String(b, "UTF-8").trim.toLongOption)
     val idSet = ids.toSet
     hinted.filter(idSet).map(h =>
       Iterator.iterate(h)(_ + 1).takeWhile(idSet).toSeq.last)
@@ -840,9 +837,8 @@ object PaimonRead {
       .filter(_.getName.startsWith("schema-"))
       .foreach(p => org.apache.hadoop.fs.FileUtil.copy(f, p, f,
         new Path(s"$br/schema/${p.getName}"), false, conf))
-    val hint = f.create(new Path(s"$br/snapshot/LATEST"), true)
-    try hint.write(snap.id.toString.getBytes("UTF-8"))
-    finally hint.close()
+    AtomicPublish.replace(spark, new Path(s"$br/snapshot/LATEST"),
+      snap.id.toString.getBytes("UTF-8"))
     snap.id
   }
 
@@ -1286,8 +1282,8 @@ object PaimonRead {
     AtomicPublish.publishOrDiscard(spark,
       new Path(s"$table/snapshot/snapshot-$id"), json.getBytes("UTF-8"),
       installed ++ written)
-    val hint = f.create(new Path(s"$table/snapshot/LATEST"), true)
-    try hint.write(id.toString.getBytes("UTF-8")) finally hint.close()
+    AtomicPublish.replace(spark, new Path(s"$table/snapshot/LATEST"),
+      id.toString.getBytes("UTF-8"))
     id
   }
 
@@ -1888,9 +1884,8 @@ object PaimonRead {
         })
       f.delete(new Path(s"$table/snapshot/snapshot-$id"), false)
     }
-    val hint = f.create(new Path(s"$table/snapshot/LATEST"), true)
-    try hint.write(snapshotId.toString.getBytes("UTF-8"))
-    finally hint.close()
+    AtomicPublish.replace(spark, new Path(s"$table/snapshot/LATEST"),
+      snapshotId.toString.getBytes("UTF-8"))
     rolled
   }
 

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.Lake
+import graft.sources.{AtomicPublish, Lake}
 
 /** Exactly-once incremental consumption of a Lake table's row-level
   * change feed ([[Lake.changes]]) — the downstream half of the
@@ -11,10 +11,13 @@ import graft.sources.Lake
   * ledger shape as [[RoutineLoad]]: a tiny cursor file records the
   * last APPLIED version; each [[poll]] hands the consumer the
   * `changes(cursor, current)` retraction rows and advances the cursor
-  * only AFTER the apply returns. A crash between apply and cursor
-  * commit replays the same (from, to] window — at-least-once apply +
-  * an idempotent consumer (write state keyed by the `to` version and
-  * pointer-swap, as the gate demonstrates) = exactly-once state.
+  * only AFTER the apply returns. The cursor is a pointer replaced
+  * through [[AtomicPublish.replace]], so a reader sees the old or the
+  * new value, never a torn or missing one. A crash between apply and
+  * cursor commit replays the same (from, to] window — at-least-once
+  * apply + an idempotent consumer (write state keyed by the `to`
+  * version and pointer-swap, as the gate demonstrates) = exactly-once
+  * state.
   *
   * Scale: each poll moves O(rows changed since the cursor) — the
   * feed is manifest-derived, so a poll against a 100 TB table that
@@ -27,36 +30,30 @@ import graft.sources.Lake
   * (missing manifest) rather than serving partial changes. */
 object ChangeFeed {
 
-  private def fs(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** Last applied version, or None before the first poll. */
+  def readCursor(spark: SparkSession, ledgerPath: String): Option[Long] =
+    AtomicPublish.read(spark, new Path(ledgerPath))
+      .map(b => new String(b, "UTF-8").trim.toLong)
 
-  /** Last applied version, or None before the first poll. A crash
-    * inside [[commitCursor]]'s delete-then-rename window leaves only
-    * the fully-written `.tmp` — recover from it rather than falling
-    * back to `initialVersion` and replaying all history (or failing
-    * on vacuumed versions). */
-  def readCursor(spark: SparkSession, ledgerPath: String): Option[Long] = {
-    val f = fs(spark, ledgerPath)
-    def slurp(p: Path): Option[Long] =
-      if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
-        val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-        Some(new String(bytes, "UTF-8").trim.toLong)
-      }
-    slurp(new Path(ledgerPath)).orElse(slurp(new Path(ledgerPath + ".tmp")))
-  }
+  def commitCursor(spark: SparkSession, ledgerPath: String, v: Long): Unit =
+    AtomicPublish.replace(spark, new Path(ledgerPath), v.toString.getBytes("UTF-8"))
 
-  def commitCursor(spark: SparkSession, ledgerPath: String, v: Long): Unit = {
-    val f = fs(spark, ledgerPath)
-    val tmp = new Path(ledgerPath + ".tmp")
-    // the tmp file is COMPLETE before the live file is deleted, so
-    // readCursor can always recover the newest committed value
-    val out = f.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    f.delete(new Path(ledgerPath), false)
-    if (!f.rename(tmp, new Path(ledgerPath)))
-      throw new IllegalStateException(s"cursor commit failed at $ledgerPath")
+  /** The poll discipline every source shares: read the cursor (or
+    * `initialVersion`), compare it with `latest`, hand `apply` the
+    * `changes` of (cursor, latest], then — unless `failBeforeCommit`
+    * simulates a crash — advance the cursor. */
+  private def pollWith(spark: SparkSession, ledgerPath: String,
+      initialVersion: Long, failBeforeCommit: Boolean, latest: => Long,
+      changes: (Long, Long) => DataFrame)(
+      apply: (DataFrame, Long, Long) => Unit): Option[(Long, Long)] = {
+    val cursor = readCursor(spark, ledgerPath).getOrElse(initialVersion)
+    val cur = latest
+    if (cur <= cursor) return None
+    apply(changes(cursor, cur), cursor, cur)
+    if (failBeforeCommit)
+      throw new IllegalStateException("simulated crash before cursor commit")
+    commitCursor(spark, ledgerPath, cur)
+    Some((cursor, cur))
   }
 
   /** One poll. `apply(changes, from, to)` receives the retraction
@@ -68,17 +65,12 @@ object ChangeFeed {
     * for the replay proof). */
   def poll(spark: SparkSession, table: String, ledgerPath: String,
       initialVersion: Int = 1, failBeforeCommit: Boolean = false)(
-      apply: (DataFrame, Int, Int) => Unit): Option[(Int, Int)] = {
-    val cursor = readCursor(spark, ledgerPath)
-      .map(_.toInt).getOrElse(initialVersion)
-    val cur = Lake.currentVersion(spark, table)
-    if (cur <= cursor) return None
-    apply(Lake.changes(spark, table, cursor, cur), cursor, cur)
-    if (failBeforeCommit)
-      throw new IllegalStateException("simulated crash before cursor commit")
-    commitCursor(spark, ledgerPath, cur)
-    Some((cursor, cur))
-  }
+      apply: (DataFrame, Int, Int) => Unit): Option[(Int, Int)] =
+    pollWith(spark, ledgerPath, initialVersion, failBeforeCommit,
+      Lake.currentVersion(spark, table),
+      (from, to) => Lake.changes(spark, table, from.toInt, to.toInt)) {
+      (changes, from, to) => apply(changes, from.toInt, to.toInt)
+    }.map { case (from, to) => (from.toInt, to.toInt) }
 
   /** [[poll]] against a DELTA table (any writer's — this repo's
     * export or a foreign one): the same ledger discipline over
@@ -90,36 +82,23 @@ object ChangeFeed {
     * rows are the baseline, not changes). */
   def pollDelta(spark: SparkSession, table: String, ledgerPath: String,
       initialVersion: Int = 0, failBeforeCommit: Boolean = false)(
-      apply: (DataFrame, Int, Int) => Unit): Option[(Int, Int)] = {
-    val cursor = readCursor(spark, ledgerPath)
-      .map(_.toInt).getOrElse(initialVersion)
-    val cur = graft.sources.DeltaRead.versions(spark, table).last.toInt
-    if (cur <= cursor) return None
-    apply(graft.sources.DeltaRead.changesCdf(spark, table, cursor.toLong,
-      cur.toLong), cursor, cur)
-    if (failBeforeCommit)
-      throw new IllegalStateException("simulated crash before cursor commit")
-    commitCursor(spark, ledgerPath, cur)
-    Some((cursor, cur))
-  }
+      apply: (DataFrame, Int, Int) => Unit): Option[(Int, Int)] =
+    pollWith(spark, ledgerPath, initialVersion, failBeforeCommit,
+      graft.sources.DeltaRead.versions(spark, table).last,
+      (from, to) => graft.sources.DeltaRead.changesCdf(spark, table, from, to)) {
+      (changes, from, to) => apply(changes, from.toInt, to.toInt)
+    }.map { case (from, to) => (from.toInt, to.toInt) }
 
   /** [[poll]] against a PAIMON table: the same ledger discipline over
     * [[graft.sources.PaimonRead.changes]] (PK tables emit the
     * retraction contract; COMPACT commits contribute nothing). The
     * cursor stores the last applied SNAPSHOT id — seed
-    * `initialVersion = 1` to treat snapshot 1 as the baseline. */
+    * `initialVersion = 1` to treat snapshot 1 as the baseline. Snapshot
+    * ids are Long end to end — a long-lived table outgrows Int. */
   def pollPaimon(spark: SparkSession, table: String, ledgerPath: String,
       initialVersion: Long = 1L, failBeforeCommit: Boolean = false)(
-      apply: (DataFrame, Long, Long) => Unit): Option[(Long, Long)] = {
-    val cursor = readCursor(spark, ledgerPath).getOrElse(initialVersion)
-    // snapshot ids are Long end to end — a long-lived table outgrows Int
-    val cur = graft.sources.PaimonRead.latestSnapshotId(spark, table)
-    if (cur <= cursor) return None
-    apply(graft.sources.PaimonRead.changes(spark, table, cursor, cur),
-      cursor, cur)
-    if (failBeforeCommit)
-      throw new IllegalStateException("simulated crash before cursor commit")
-    commitCursor(spark, ledgerPath, cur)
-    Some((cursor, cur))
-  }
+      apply: (DataFrame, Long, Long) => Unit): Option[(Long, Long)] =
+    pollWith(spark, ledgerPath, initialVersion, failBeforeCommit,
+      graft.sources.PaimonRead.latestSnapshotId(spark, table),
+      (from, to) => graft.sources.PaimonRead.changes(spark, table, from, to))(apply)
 }

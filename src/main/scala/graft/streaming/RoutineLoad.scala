@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.AtomicPublish
+
 /** Routine load with a seekable-offset ledger — the reference's Kafka
   * routine-load contract (`fe/.../load/routineload/KafkaRoutineLoadJob.java`,
   * `KafkaProgress.java`: per-partition committed offsets, consume from
@@ -26,9 +28,11 @@ import org.apache.spark.sql.functions._
   *     BATCH'S START OFFSETS — deterministic, so a replay after a
   *     crash overwrites the same directory instead of duplicating
   *     (idempotent sink = exactly-once effect);
-  *  4. commits the advanced ledger (temp + rename) ONLY after the sink
-  *     write succeeds. A crash between 3 and 4 re-runs the batch from
-  *     the same offsets on restart.
+  *  4. commits the advanced ledger ONLY after the sink write succeeds,
+  *     replacing it through [[AtomicPublish.replace]] (a reader sees the
+  *     old or the new offsets, never a torn or missing ledger). A crash
+  *     between 3 and 4 re-runs the batch from the same offsets on
+  *     restart.
   *
   * Scale notes: the ledger is O(partitions) KBs; the log scan pushes
   * `offset > committed` into the source (seek, not replay); the batch
@@ -36,35 +40,18 @@ import org.apache.spark.sql.functions._
   */
 object RoutineLoad {
 
-  private def fs(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Per-partition committed offsets; empty at first start. */
-  def readLedger(spark: SparkSession, ledgerPath: String): Map[Int, Long] = {
-    val f = fs(spark, ledgerPath)
-    val p = new Path(ledgerPath)
-    if (!f.exists(p)) Map.empty
-    else {
-      val in = f.open(p)
-      val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
+  def readLedger(spark: SparkSession, ledgerPath: String): Map[Int, Long] =
+    AtomicPublish.read(spark, new Path(ledgerPath)).fold(Map.empty[Int, Long])(bytes =>
       graft.functions.JsonKernel.mapper
         .readValue(bytes, classOf[java.util.Map[String, Number]])
-        .asScala.map { case (k, v) => k.toInt -> v.longValue() }.toMap
-    }
-  }
+        .asScala.map { case (k, v) => k.toInt -> v.longValue() }.toMap)
 
   def commitLedger(spark: SparkSession, ledgerPath: String,
-      offsets: Map[Int, Long]): Unit = {
-    val f = fs(spark, ledgerPath)
-    val tmp = new Path(ledgerPath + ".tmp")
-    val out = f.create(tmp, true)
-    try out.write(graft.functions.JsonKernel.mapper.writeValueAsBytes(
-      offsets.map { case (k, v) => k.toString -> Long.box(v) }.asJava))
-    finally out.close()
-    f.delete(new Path(ledgerPath), false)
-    if (!f.rename(tmp, new Path(ledgerPath)))
-      throw new IllegalStateException(s"ledger commit failed at $ledgerPath")
-  }
+      offsets: Map[Int, Long]): Unit =
+    AtomicPublish.replace(spark, new Path(ledgerPath),
+      graft.functions.JsonKernel.mapper.writeValueAsBytes(
+        offsets.map { case (k, v) => k.toString -> Long.box(v) }.asJava))
 
   /** One micro-batch. Returns the advanced offsets, or None when the
     * log is fully consumed. `failBeforeCommit` simulates a crash after

@@ -363,4 +363,25 @@ class HudiReadSpec extends SparkSuite {
     assert(names.filter(n => !n.endsWith(".crc") &&
       (n.endsWith(".parquet") || n.contains(".log."))) === referenced)
   }
+
+  test("a racing commit and first delta batch never share an instant") {
+    (1 to 10).foreach { round =>
+      val table = java.nio.file.Files.createTempDirectory("graft-hclaim").toString
+      HudiWrite.commit(table, Map("g0" -> Seq((0L, "seed")).toDF("id", "v")))
+      val results = race(2) {
+        case 1L => HudiWrite.commit(table, Map("g1" -> Seq((1L, "c")).toDF("id", "v")))
+        case _ => HudiWrite.deltaCommit(table, "g0", "id", Some(Seq((0L, "d")).toDF("id", "v")))
+      }
+      results.collect { case (_, scala.util.Failure(e)) => e }.foreach(e =>
+        assert(e.isInstanceOf[java.util.ConcurrentModificationException], s"round $round: $e"))
+      val won = results.collect { case (i, scala.util.Success(_)) => i }.toSet
+      val all = HudiRead.instants(spark, table)
+      assert(all.distinct === all, s"round $round: duplicate instant in $all")
+      assert(all.size === 1 + won.size, s"round $round")
+      val rows = HudiRead.read(spark, table).select($"id", $"v").as[(Long, String)]
+        .collect().toSet
+      assert(rows === Set(0L -> (if (won(2L)) "d" else "seed")) ++
+        (if (won(1L)) Set(1L -> "c") else Set.empty), s"round $round")
+    }
+  }
 }

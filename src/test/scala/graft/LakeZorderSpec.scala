@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import graft.sources.Lake
 
@@ -186,11 +188,32 @@ class LakeZorderSpec extends SparkSuite {
       "one version per commit: 1 base + 24 appends")
     // every intermediate version still time-travels (no torn manifests)
     (1 to 25).foreach { v => assert(Lake.read(spark, dir, Some(v)).count() === v) }
-    // losers' orphaned staging files are vacuum fodder; vacuum keeping
-    // all versions must delete ONLY orphans, never referenced files
+    // losers delete their own staging dirs; vacuum keeping all
+    // versions must still delete ONLY unreferenced files
     Lake.vacuum(spark, dir, retainLast = 25)
     assert(Lake.read(spark, dir).count() === 25)
     (1 to 25).foreach { v => assert(Lake.read(spark, dir, Some(v)).count() === v) }
+  }
+
+  test("racing appends: winners visible, losers conflicted, no file left unreferenced") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-lake-race").toString
+    Lake.write(Seq((0L, 0)).toDF("id", "w"), dir, Nil)
+    val results = race(4)(i =>
+      Lake.write(Seq((i, i.toInt)).toDF("id", "w"), dir, Nil, mode = "append"))
+    val won = results.collect { case (i, scala.util.Success(_)) => i }.toSet
+    results.collect { case (_, scala.util.Failure(e)) => e }.foreach(e =>
+      assert(e.isInstanceOf[java.util.ConcurrentModificationException], e.toString))
+    assert(won.nonEmpty)
+    info(s"${won.size} of 4 racing appends committed")
+    assert(results.collect { case (_, scala.util.Success(v)) => v }.distinct.size === won.size)
+    assert(Lake.read(spark, dir).select($"id").as[Long].collect().toSet === won + 0L)
+    // without vacuum: the parquet files under data/ are exactly the
+    // current snapshot's — every loser deleted its commit directory
+    val live = Lake.readSnapshot(spark, dir, Lake.currentVersion(spark, dir)).files
+      .map(fl => new org.apache.hadoop.fs.Path(fl.path).toUri.getPath).toSet
+    val onDisk = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/data"))
+      .iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSet
+    assert(onDisk === live)
   }
 
   test("multi-table tx: half-committed snapshots stay invisible") {
@@ -258,6 +281,42 @@ class LakeZorderSpec extends SparkSuite {
       assert(text.matches("""\{"writer":\d,"pad":"x{4096}"\}"""),
         s"round $round: torn or mixed content (${text.length} bytes)")
     }
+  }
+
+  test("AtomicPublish.replace: racing pointer swaps — every read is one writer's complete payload") {
+    import graft.sources.AtomicPublish
+    val dir = java.nio.file.Files.createTempDirectory("graft-replace").toString
+    val target = new org.apache.hadoop.fs.Path(s"$dir/pointer")
+    def payload(w: Int) = s"""{"writer":$w,"pad":"${"x" * 4096}"}"""
+    AtomicPublish.replace(spark, target, payload(0).getBytes("UTF-8"))
+    val writing = new java.util.concurrent.atomic.AtomicInteger(6)
+    val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+    // threads 1-6 each replace 50 times; threads 7-8 read until they stop
+    race(8) { i =>
+      if (i <= 6)
+        try (1 to 50).foreach(_ =>
+          AtomicPublish.replace(spark, target, payload(i.toInt).getBytes("UTF-8")))
+        finally { val _ = writing.decrementAndGet() }
+      else while (writing.get() > 0) {
+        AtomicPublish.read(spark, target).map(new String(_, "UTF-8")) match {
+          case Some(t) if t.matches("""\{"writer":\d,"pad":"x{4096}"\}""") =>
+          case other => bad.add(other.fold("missing")(t => s"${t.length} bytes"))
+        }
+        reads.incrementAndGet()
+      }
+    }.foreach { case (i, outcome) => assert(outcome.isSuccess, s"thread $i: $outcome") }
+    info(s"${reads.get()} reads during 300 replaces")
+    assert(bad.isEmpty, s"torn or missing reads: ${bad.asScala.take(5).mkString(", ")}")
+    // a pointer first written through Hadoop carries a .crc sibling;
+    // after a replace it must still open (no stale checksum mismatch)
+    val hadoopWritten = new org.apache.hadoop.fs.Path(s"$dir/hinted")
+    val fs = hadoopWritten.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(hadoopWritten, true)
+    try out.write("1".getBytes("UTF-8")) finally out.close()
+    assert(new java.io.File(s"$dir/.hinted.crc").exists())
+    AtomicPublish.replace(spark, hadoopWritten, "12345".getBytes("UTF-8"))
+    assert(AtomicPublish.read(spark, hadoopWritten).map(new String(_, "UTF-8")) === Some("12345"))
   }
 
   test("LakeTx stress: racing multi-table transactions retry to a consistent catalog") {
