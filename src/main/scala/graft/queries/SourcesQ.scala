@@ -1006,9 +1006,9 @@ object SourcesQ extends graft.QueryArea {
       val table = tmpDir(dir, "paimon_app")
       graft.sources.Formats.deleteDir(spark, table)
       val o = t(spark, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
-      val s1 = graft.sources.PaimonRead.commitAppend(
+      val s1 = graft.sources.PaimonWrite.commitAppend(
         o.filter(col("o_orderkey") % 3 <= 1), table)
-      graft.sources.PaimonRead.commitAppend(
+      graft.sources.PaimonWrite.commitAppend(
         o.filter(col("o_orderkey") % 3 === 2), table)
       val reads = Seq(1 -> Some(s1), 2 -> None).map { case (tag, snap) =>
         graft.sources.PaimonRead.read(spark, table, snap)
@@ -1030,15 +1030,15 @@ object SourcesQ extends graft.QueryArea {
       val o = t(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"),
           (col("o_orderkey") % 3).cast("string").as("p"))
-      graft.sources.PaimonRead.commitPk(o, table, Seq("o_orderkey"), Seq("p"),
+      graft.sources.PaimonWrite.commitPk(o, table, Seq("o_orderkey"), Seq("p"),
         assumeKeyUnique = true)
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 10 === 0).withColumn("o_totalprice", lit(0.0)),
         table, Seq("o_orderkey"), assumeKeyUnique = true)
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 10 === 4).select(col("o_orderkey"), col("p")),
         table, Seq("o_orderkey"), deletes = true, assumeKeyUnique = true)
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 20 === 4).withColumn("o_totalprice", lit(-1.0)),
         table, Seq("o_orderkey"), assumeKeyUnique = true)
       graft.sources.PaimonRead.read(spark, table)
@@ -1060,15 +1060,15 @@ object SourcesQ extends graft.QueryArea {
         .filter(col("o_orderkey") % 4 === 0)
         .select(col("o_orderkey"), col("o_totalprice"),
           (col("o_orderkey") % 3).cast("string").as("p"))
-      graft.sources.PaimonRead.commitPk(o, table, Seq("o_orderkey"), Seq("p"),
+      graft.sources.PaimonWrite.commitPk(o, table, Seq("o_orderkey"), Seq("p"),
         assumeKeyUnique = true)
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 10 === 0).withColumn("o_totalprice", lit(0.0)),
         table, Seq("o_orderkey"), assumeKeyUnique = true)
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 10 === 4).select(col("o_orderkey"), col("p")),
         table, Seq("o_orderkey"), deletes = true, assumeKeyUnique = true)
-      graft.sources.PaimonRead.compact(spark, table)
+      graft.sources.PaimonWrite.compact(spark, table)
       graft.sources.PaimonRead.read(spark, table)
         .groupBy(col("p")).agg(count(lit(1)).as("n"),
           sum(col("o_totalprice").cast("decimal(18,6)")).cast("double").as("total"))
@@ -1087,14 +1087,14 @@ object SourcesQ extends graft.QueryArea {
       val o = t(spark, dir, "orders")
         .filter(col("o_orderkey") % 4 === 2)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      graft.sources.PaimonRead.commitPk(o, table, Seq("o_orderkey"),
+      graft.sources.PaimonWrite.commitPk(o, table, Seq("o_orderkey"),
         assumeKeyUnique = true,
         options = Map("merge-engine" -> "partial-update"))
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 3 === 0)
           .select(col("o_orderkey"), lit(1.0).as("o_totalprice")),
         table, Seq("o_orderkey"), assumeKeyUnique = true)
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 5 === 0)
           .select(col("o_orderkey"), lit("0-RUSH").as("o_orderpriority")),
         table, Seq("o_orderkey"), assumeKeyUnique = true)
@@ -1114,15 +1114,15 @@ object SourcesQ extends graft.QueryArea {
       val o = t(spark, dir, "orders")
         .filter(col("o_orderkey") % 4 === 3)
         .select(col("o_orderkey"), col("o_totalprice").as("total"))
-      graft.sources.PaimonRead.commitPk(o, table, Seq("o_orderkey"),
+      graft.sources.PaimonWrite.commitPk(o, table, Seq("o_orderkey"),
         assumeKeyUnique = true,
         options = Map("merge-engine" -> "aggregation",
           "fields.total.aggregate-function" -> "sum"))
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 2 === 1), table, Seq("o_orderkey"),
         assumeKeyUnique = true)
-      graft.sources.PaimonRead.compact(spark, table)
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.compact(spark, table)
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 6 === 3), table, Seq("o_orderkey"),
         assumeKeyUnique = true)
       graft.sources.PaimonRead.read(spark, table)
@@ -1156,9 +1156,9 @@ object SourcesQ extends graft.QueryArea {
         .filter(col("o_orderkey") % 4 === 1)
         .select(col("o_orderkey"), col("o_totalprice"),
           (col("o_orderkey") % 3).cast("string").as("p"))
-      graft.sources.PaimonRead.commitPk(o, table, Seq("o_orderkey"), Seq("p"),
+      graft.sources.PaimonWrite.commitPk(o, table, Seq("o_orderkey"), Seq("p"),
         assumeKeyUnique = true)
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 7 === 1).withColumn("o_totalprice", lit(0.0)),
         table, Seq("o_orderkey"), assumeKeyUnique = true)
       graft.sources.PaimonRead.read(spark, table)
@@ -1170,14 +1170,14 @@ object SourcesQ extends graft.QueryArea {
       val table = tmpDir(dir, "paimon_chg")
       graft.sources.Formats.deleteDir(spark, table)
       val o = t(spark, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
-      graft.sources.PaimonRead.commitPk(o, table, Seq("o_orderkey"), assumeKeyUnique = true)
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(o, table, Seq("o_orderkey"), assumeKeyUnique = true)
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 10 === 0).withColumn("o_totalprice", lit(0.0)),
         table, Seq("o_orderkey"), assumeKeyUnique = true)
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 10 === 4).select(col("o_orderkey")),
         table, Seq("o_orderkey"), deletes = true, assumeKeyUnique = true)
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 20 === 4).withColumn("o_totalprice", lit(-1.0)),
         table, Seq("o_orderkey"), assumeKeyUnique = true)
       graft.sources.PaimonRead.changes(spark, table, 1L, 4L)
@@ -1201,7 +1201,7 @@ object SourcesQ extends graft.QueryArea {
       val table = tmpDir(dir, "paimon_cli")
       graft.sources.Formats.deleteDir(spark, table)
       val o = t(spark, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
-      (0 to 2).foreach(m => graft.sources.PaimonRead.commitPk(
+      (0 to 2).foreach(m => graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 3 === m), table, Seq("o_orderkey"),
         assumeKeyUnique = true,
         options = Map("changelog-producer" -> "input")))
@@ -1221,12 +1221,12 @@ object SourcesQ extends graft.QueryArea {
       val o = t(spark, dir, "orders")
         .filter(col("o_orderkey") % 6 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
-      graft.sources.PaimonRead.commitPk(o, table, Seq("o_orderkey"),
+      graft.sources.PaimonWrite.commitPk(o, table, Seq("o_orderkey"),
         numBuckets = -1, assumeKeyUnique = true,
         options = Map("dynamic-bucket.target-row-num" -> "16000"))
       // two commits (budget): create + sticky update; the delete-batch
       // and CDC paths are PaimonDynamicBucketSpec's job
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 5 === 2).withColumn("o_totalprice", lit(0.0)),
         table, Seq("o_orderkey"), assumeKeyUnique = true)
       graft.sources.PaimonRead.read(spark, table)
@@ -1246,15 +1246,15 @@ object SourcesQ extends graft.QueryArea {
       val o = t(spark, dir, "orders")
         .filter(col("o_orderkey") % 4 === 2)
         .select(col("o_orderkey"), col("o_totalprice"))
-      graft.sources.PaimonRead.commitPk(o, table, Seq("o_orderkey"),
+      graft.sources.PaimonWrite.commitPk(o, table, Seq("o_orderkey"),
         assumeKeyUnique = true)
-      graft.sources.PaimonRead.createBranch(spark, table, "dev", Some(1L))
+      graft.sources.PaimonWrite.createBranch(spark, table, "dev", Some(1L))
       // main moves on; the branch zeroes a slice instead
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 8 === 2)
           .withColumn("o_totalprice", col("o_totalprice") + 1000),
         table, Seq("o_orderkey"), assumeKeyUnique = true)
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 8 === 6).withColumn("o_totalprice", lit(0.0)),
         graft.sources.PaimonRead.branchRoot(table, "dev"), Seq("o_orderkey"),
         assumeKeyUnique = true)
@@ -1274,13 +1274,13 @@ object SourcesQ extends graft.QueryArea {
       val o = t(spark, dir, "orders")
         .filter(col("o_orderkey") % 4 === 1)
         .select(col("o_orderkey"), col("o_totalprice"))
-      graft.sources.PaimonRead.commitPk(o, table, Seq("o_orderkey"),
+      graft.sources.PaimonWrite.commitPk(o, table, Seq("o_orderkey"),
         assumeKeyUnique = true,
         options = Map("changelog-producer" -> "lookup"))
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 5 === 0).withColumn("o_totalprice", lit(0.0)),
         table, Seq("o_orderkey"), assumeKeyUnique = true)
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 9 === 4).select(col("o_orderkey")),
         table, Seq("o_orderkey"), deletes = true, assumeKeyUnique = true)
       graft.sources.PaimonRead.changes(spark, table, 1L, 3L)
@@ -1305,13 +1305,13 @@ object SourcesQ extends graft.QueryArea {
       val o = t(spark, dir, "orders")
         .filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
-      graft.sources.PaimonRead.commitPk(o, table, Seq("o_orderkey"),
+      graft.sources.PaimonWrite.commitPk(o, table, Seq("o_orderkey"),
         assumeKeyUnique = true)
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 11 === 1)
           .withColumn("o_totalprice", col("o_totalprice") + 10000000),
         table, Seq("o_orderkey"), assumeKeyUnique = true)
-      graft.sources.PaimonRead.deleteWhereDv(spark, table,
+      graft.sources.PaimonWrite.deleteWhereDv(spark, table,
         col("o_totalprice") > 5000000)
       graft.sources.PaimonRead.read(spark, table)
         .groupBy((col("o_orderkey") % 4).cast("int").as("g"))
@@ -1329,12 +1329,12 @@ object SourcesQ extends graft.QueryArea {
       val o = t(spark, dir, "orders")
         .filter(col("o_orderkey") % 3 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
-      graft.sources.PaimonRead.commitPk(o, table, Seq("o_orderkey"),
+      graft.sources.PaimonWrite.commitPk(o, table, Seq("o_orderkey"),
         assumeKeyUnique = true)
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 15 === 0).withColumn("o_totalprice", lit(0.0)),
         table, Seq("o_orderkey"), assumeKeyUnique = true)
-      graft.sources.PaimonRead.compact(spark, table)
+      graft.sources.PaimonWrite.compact(spark, table)
       val snaps = graft.sources.PaimonRead.systemTable(spark, table, "snapshots")
         .select(col("snapshot_id"), col("commit_kind"),
           col("delta_record_count").as("delta_rows"))
@@ -1353,12 +1353,12 @@ object SourcesQ extends graft.QueryArea {
       val o = t(spark, dir, "orders")
         .filter(col("o_orderkey") % 4 === 1)
         .select(col("o_orderkey"), col("o_totalprice"))
-      graft.sources.PaimonRead.commitPk(o, table, Seq("o_orderkey"),
+      graft.sources.PaimonWrite.commitPk(o, table, Seq("o_orderkey"),
         assumeKeyUnique = true)
-      graft.sources.PaimonRead.addColumn(spark, table,
+      graft.sources.PaimonWrite.addColumn(spark, table,
         org.apache.spark.sql.types.StructField("tag",
           org.apache.spark.sql.types.StringType))
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 6 === 1)
           .withColumn("o_totalprice", col("o_totalprice") * 2)
           .withColumn("tag", lit("boost")),
@@ -1380,13 +1380,13 @@ object SourcesQ extends graft.QueryArea {
       val o = t(spark, dir, "orders")
         .filter(col("o_orderkey") % 3 === 1)
         .select(col("o_orderkey"), col("o_totalprice"))
-      graft.sources.PaimonRead.commitPk(o, table, Seq("o_orderkey"),
+      graft.sources.PaimonWrite.commitPk(o, table, Seq("o_orderkey"),
         assumeKeyUnique = true)
-      graft.sources.PaimonRead.commitPk(
+      graft.sources.PaimonWrite.commitPk(
         o.filter(col("o_orderkey") % 7 === 2).withColumn("o_totalprice", lit(0.0)),
         table, Seq("o_orderkey"), assumeKeyUnique = true)
-      graft.sources.PaimonRead.compact(spark, table)
-      val expired = graft.sources.PaimonRead.expireSnapshots(spark, table, 2)
+      graft.sources.PaimonWrite.compact(spark, table)
+      val expired = graft.sources.PaimonWrite.expireSnapshots(spark, table, 2)
       require(expired == Seq(1L), s"expected to expire snapshot 1, got $expired")
       try { graft.sources.PaimonRead.read(spark, table, Some(1L)); require(false) }
       catch { case _: IllegalArgumentException => }

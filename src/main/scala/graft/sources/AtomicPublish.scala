@@ -21,8 +21,8 @@ import org.apache.spark.sql.SparkSession
   * versions, every Delta log version and V2 checkpoint manifest
   * ([[DeltaWrite]]), every Hudi instant, instant claim and
   * `hoodie.properties` ([[HudiWrite]]), every Iceberg metadata version
-  * ([[IcebergWrite]]), every Paimon snapshot ([[PaimonRead]]) and the
-  * VectorIndex model publish.
+  * ([[IcebergWrite]]), every Paimon snapshot, schema file, tag and
+  * branch copy ([[PaimonWrite]]) and the VectorIndex model publish.
   *
   * [[replace]] is for mutable pointers: the temp atomically replaces
   * the target, so a reader sees the old complete bytes or the new ones,

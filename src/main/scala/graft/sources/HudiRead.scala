@@ -48,7 +48,7 @@ object HudiRead {
   private val Completed = "(.+)\\.(commit|deltacommit|replacecommit)".r
 
   /** (instant, timeline file name) per completed instant, ascending. */
-  private def timeline(spark: SparkSession, table: String): Seq[(String, String)] = {
+  private[sources] def timeline(spark: SparkSession, table: String): Seq[(String, String)] = {
     val dir = new Path(s"$table/.hoodie")
     val f = fs(spark, table)
     if (!f.exists(dir)) throw new IllegalArgumentException(

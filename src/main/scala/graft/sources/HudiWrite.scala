@@ -21,8 +21,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * timeline with gaps never reuses one. Each instant is claimed once,
   * whatever its action, before its action file publishes, so a racing
   * `commit` and `deltaCommit` cannot both take one instant.
-  * [[exportLake]] instead stamps each instant with the Lake version it
-  * mirrors, so instant-as-of time travel replays the Lake's history.
+  * [[exportLake]] records in each instant it writes the Lake version
+  * that instant mirrors, and numbers it no lower than that version, so
+  * instant-as-of time travel replays the Lake's history.
   *
   * Entry points: [[commit]] (copy-on-write file groups),
   * [[deltaCommit]] (a merge-on-read log batch) and [[exportLake]] (a COW
@@ -44,9 +45,10 @@ object HudiWrite {
 
   /** An instant's commit metadata: `partitionToReplaceFileIds` (the
     * file groups a replacecommit retires, as (partitionPath, fileId))
-    * and `partitionToWriteStats`, both keyed by partitionPath. */
+    * and `partitionToWriteStats`, both keyed by partitionPath, and in
+    * `extraMetadata` the Lake version an exported instant mirrors. */
   private def instantJson(stats: Seq[WriteStat],
-      replaced: Seq[(String, String)] = Nil): String = {
+      replaced: Seq[(String, String)] = Nil, lakeVersion: Option[Int] = None): String = {
     def byPartition[A](xs: Seq[A])(pp: A => String)(render: A => String) =
       xs.groupBy(pp).toSeq.sortBy(_._1).map { case (p, g) =>
         s"${js(p)}:${g.map(render).mkString("[", ",", "]")}"
@@ -56,11 +58,12 @@ object HudiWrite {
       else s""""partitionToReplaceFileIds":${byPartition(replaced)(_._1)(r => js(r._2))},"""
     val writes = byPartition(stats)(_.partitionPath)(s =>
       s"""{"fileId":${js(s.fileId)},"path":${js(s.path)},"fileSizeInBytes":${s.size}}""")
-    s"""{$replace"partitionToWriteStats":$writes}"""
+    val extra = lakeVersion.fold("")(v => s"${js(LakeVersionKey)}:${js(v.toString)}")
+    s"""{$replace"partitionToWriteStats":$writes,"extraMetadata":{$extra}}"""
   }
 
-  private def instants(spark: SparkSession, table: String): Seq[String] =
-    try HudiRead.instants(spark, table) catch { case _: IllegalArgumentException => Nil }
+  private def timeline(spark: SparkSession, table: String): Seq[(String, String)] =
+    try HudiRead.timeline(spark, table) catch { case _: IllegalArgumentException => Nil }
 
   /** Where an instant's claim lives: `.hoodie/.aux/<instant>.claim`,
     * which the timeline listing ignores. */
@@ -75,7 +78,7 @@ object HudiWrite {
     val claimed = if (!f.exists(claimDir(table))) Nil
       else f.listStatus(claimDir(table)).toSeq.map(_.getPath.getName)
         .collect { case Claim(i) => i }
-    f"${(instants(spark, table) ++ claimed).map(_.toLong).maxOption.getOrElse(0L) + 1}%014d"
+    f"${(timeline(spark, table).map(_._1) ++ claimed).map(_.toLong).maxOption.getOrElse(0L) + 1}%014d"
   }
 
   /** The commit core: claim the instant, whatever the action, with an
@@ -185,17 +188,30 @@ object HudiWrite {
       c + "=" + enc
     }.mkString("/")
 
+  private val LakeVersionKey = "graft.lake.version"
+
+  /** The last exported Lake version and its instant: the newest
+    * instant that records a version (exports number ascending). */
+  private def lastExport(spark: SparkSession, table: String): Option[(Int, String)] =
+    timeline(spark, table).reverseIterator.flatMap { case (instant, name) =>
+      mapper.readTree(AtomicPublish.read(spark, new Path(s"$table/.hoodie/$name")).get)
+        .path("extraMetadata").path(LakeVersionKey).asText("").toIntOption
+        .map(_ -> instant)
+    }.nextOption()
+
   /** Export every not-yet-exported Lake snapshot as a timeline instant
     * over the SAME data files (each Lake data file is its own file
     * group, fileId = table-relative path): a `.commit` when files were
     * only added, a `.replacecommit` (Hudi's insert_overwrite/clustering
-    * action) when CoW delete/update/compact retired files. Instant i =
-    * Lake version i. Hudi CoW readers take every listed base file whole,
-    * so only DV-free snapshots export (diffed clean-to-clean; gaps are
-    * legal in a timeline) and the CURRENT snapshot must be clean — fold
-    * first. Incremental: instants already on the timeline are skipped;
-    * O(changed files) metadata, no data copies. Returns the latest
-    * instant. */
+    * action) when CoW delete/update/compact retired files. Hudi CoW
+    * readers take every listed base file whole, so only DV-free
+    * snapshots export (diffed clean-to-clean) and the CURRENT snapshot
+    * must be clean — fold first. Incremental: the versions after the
+    * last one recorded ([[LakeVersionKey]]) export, each at the next
+    * free instant no lower than its version (a `deltaCommit` may have
+    * taken that number) and diffed against the version exported before
+    * it. O(changed files) metadata, no data copies. Returns the
+    * instant of the current Lake version. */
   def exportLake(spark: SparkSession, table: String): String = {
     val cur = Lake.currentVersion(spark, table)
     require(cur > 0, s"no committed Lake version at $table")
@@ -213,24 +229,25 @@ object HudiWrite {
       s"current Lake snapshot v$cur carries pending delete vectors — " +
         s"run Lake.foldDeletes before Hudi export (or export via " +
         s"IcebergWrite.exportLake, which emits format v2 position deletes)")
-    val cleanVs = (1 to cur).filter(v => snapOf(v).dvFiles.isEmpty)
-    val have = instants(spark, table).toSet
-    cleanVs.zipWithIndex.foreach { case (v, i) =>
-      val instant = f"$v%014d"
-      if (!have(instant)) {
-        val partCols = snapOf(v).partitionCols
-        def statsOf(ver: Int): Map[String, WriteStat] = snapOf(ver).files.map { x =>
-          val r = rel(x.path)
-          r -> WriteStat(partitionPathOf(partCols, x.partitionValues), r, r, x.sizeBytes)
-        }.toMap
-        val now = statsOf(v)
-        val prev = if (i == 0) Map.empty[String, WriteStat] else statsOf(cleanVs(i - 1))
-        val added = (now.keySet -- prev.keySet).toSeq.sorted.map(now)
-        val removed = (prev.keySet -- now.keySet).toSeq.sorted.map(r => prev(r).partitionPath -> r)
-        publish(spark, table, instant, if (removed.isEmpty) "commit" else "replacecommit",
-          instantJson(added, removed), Nil)
-      }
+    val exported = lastExport(spark, table)
+    val todo = (exported.fold(0)(_._1) + 1 to cur).filter(v => snapOf(v).dvFiles.isEmpty)
+    // each new version diffs against the one exported before it
+    val bases: Seq[Option[Int]] = exported.map(_._1) +: todo.map(Some(_))
+    val published = todo.zip(bases).map { case (v, base) =>
+      val partCols = snapOf(v).partitionCols
+      def statsOf(ver: Int): Map[String, WriteStat] = snapOf(ver).files.map { x =>
+        val r = rel(x.path)
+        r -> WriteStat(partitionPathOf(partCols, x.partitionValues), r, r, x.sizeBytes)
+      }.toMap
+      val now = statsOf(v)
+      val prev = base.fold(Map.empty[String, WriteStat])(statsOf)
+      val added = (now.keySet -- prev.keySet).toSeq.sorted.map(now)
+      val removed = (prev.keySet -- now.keySet).toSeq.sorted.map(r => prev(r).partitionPath -> r)
+      val instant = Seq(nextInstant(spark, table), f"$v%014d").max
+      publish(spark, table, instant, if (removed.isEmpty) "commit" else "replacecommit",
+        instantJson(added, removed, Some(v)), Nil)
+      v -> instant
     }
-    f"${cleanVs.last}%014d"
+    (exported.toSeq ++ published).last._2
   }
 }

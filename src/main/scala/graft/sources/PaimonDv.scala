@@ -119,19 +119,15 @@ object PaimonDv {
 
   // per-JVM: each executor caches only the vectors its tasks consult;
   // bounded — a full clear past the cap beats an unbounded map. Keyed
-  // by (path, MODIFICATION TIME, offset): a table recreated at the
-  // same path reuses deterministic index names and offsets, so a
-  // (path, offset) key would serve a STALE bitmap from the previous
-  // incarnation. The mtimes are captured ON THE DRIVER at mask-column
-  // creation (one getFileStatus per distinct index file) and ride in
-  // the closure — executors pay no extra RPC.
+  // by (path, offset): index files are written once under per-commit
+  // uuid names, so a path never names two contents (a table recreated
+  // at the same path writes new names).
   private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), RoaringBitmap]()
+    (String, Long), RoaringBitmap]()
   private val CacheCap = 1024
 
-  private def cached(conf: Configuration, d: Desc,
-      mtime: Long): RoaringBitmap = {
-    val k = (d.indexPath, mtime, d.offset)
+  private def cached(conf: Configuration, d: Desc): RoaringBitmap = {
+    val k = (d.indexPath, d.offset)
     val hit = cache.get(k)
     if (hit != null) return hit
     val rb = readBitmap(conf, d)
@@ -149,19 +145,12 @@ object PaimonDv {
     val confB: Broadcast[SerializableConfiguration] =
       spark.sparkContext.broadcast(
         new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val mtimes: Map[String, Long] = dv.values.map(_.indexPath).toSet.map {
-      (p: String) =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        p -> hp.getFileSystem(hconf).getFileStatus(hp).getModificationTime
-    }.toMap
     val f = org.apache.spark.sql.functions.udf {
       (fname: String, pos: Long) =>
         dv.get(fname) match {
           case None => false
           case Some(d) =>
-            pos <= Int.MaxValue && cached(confB.value.value, d,
-              mtimes.getOrElse(d.indexPath, 0L)).contains(pos.toInt)
+            pos <= Int.MaxValue && cached(confB.value.value, d).contains(pos.toInt)
         }
     }
     f(fileNameCol, posCol)
@@ -216,7 +205,7 @@ object PaimonDv {
       r.put("_DELETIONS_VECTORS_RANGES", arr)
       r: GenericRecord
     }
-    PaimonRead.writeAvroFile(spark, s"$table/manifest/$name",
+    PaimonWrite.writeAvroFile(spark, s"$table/manifest/$name",
       indexEntrySchema, recs)
   }
 
@@ -225,7 +214,7 @@ object PaimonDv {
     * newer paimon appends cardinality, which is ignored). */
   def readIndexManifest(spark: SparkSession, table: String,
       name: String): Seq[IndexEntry] =
-    parseIndexRecords(PaimonRead.readAvroFile(spark,
+    parseIndexRecords(PaimonRead.readAvro(spark,
       PaimonRead.manifestPath(spark, table, name)), name)
 
   /** SparkSession-free twin over a RESOLVED path — callable from

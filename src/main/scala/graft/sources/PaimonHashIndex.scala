@@ -65,14 +65,13 @@ object PaimonHashIndex {
         e.fileName, e.rowCount))
 
   /** Assign a bucket to every row of `sys` (the system-column-staged
-    * batch) per the dynamic-bucket contract, and return the pending
-    * index delta: per changed (partition, bucket), the NEW key
-    * hashes. Call [[writeIndex]] with it after the data files stage. */
-  /** Returns (bucketed rows, index delta, cached lookup frame). The
-    * caller MUST unpersist the third element once the bucketed rows
-    * are materialized — the lookup (one distributed index join) is
-    * consumed by three downstream branches and would otherwise
-    * re-read and re-join the whole index per branch. */
+    * batch) per the dynamic-bucket contract. Returns (bucketed rows,
+    * index delta — per changed (partition, bucket), the NEW key hashes,
+    * for [[writeIndex]] once the data files stage — and the cached
+    * lookup frame). The caller MUST unpersist the third element once
+    * the bucketed rows are materialized — the lookup (one distributed
+    * index join) is consumed by three downstream branches and would
+    * otherwise re-read and re-join the whole index per branch. */
   def assignBuckets(spark: SparkSession, table: String,
       partitions: PaimonRead.RowCodec, sys: DataFrame, primaryKeys: Seq[String],
       targetRows: Long, snapshotIdPrior: Option[Long]):
@@ -188,17 +187,14 @@ object PaimonHashIndex {
     (out, delta, looked)
   }
 
-  /** Write the post-commit index files + FULL-STATE index manifest:
-    * changed (partition, bucket) groups get a rewritten hash file
-    * (old ∪ new hashes), unchanged HASH entries and every non-HASH
-    * entry (deletion vectors) carry forward verbatim. Returns the
-    * manifest name. */
-  def writeIndex(spark: SparkSession, table: String, id: Long,
+  /** Write the post-commit hash files and return the commit's FULL
+    * index state: changed (partition, bucket) groups get a rewritten
+    * hash file `index-<uuid>-<i>` (old ∪ new hashes); unchanged HASH
+    * entries and all non-HASH (deletion-vector) entries carry forward. */
+  def writeIndex(spark: SparkSession, table: String,
       priorManifest: Option[String],
-      delta: Map[(String, Int), Seq[Int]]): String = {
-    val f = new Path(table).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    f.mkdirs(new Path(s"${PaimonRead.dataRoot(table)}/index"))
+      delta: Map[(String, Int), Seq[Int]]): PaimonWrite.IndexState = {
+    val f = PaimonRead.fs(spark, table)
     val old = priorManifest
       .map(n => PaimonDv.readIndexManifest(spark, table, n)).getOrElse(Nil)
     val oldHash = old.filter(_.indexType == IndexType)
@@ -208,6 +204,7 @@ object PaimonHashIndex {
     val changedKeys = delta.keySet
     val kept = oldHash.filterNot(e => changedKeys.contains(
       (hex.formatHex(e.partitionBytes), e.bucket)))
+    val uid = java.util.UUID.randomUUID().toString
     val rewritten = delta.toSeq.sortBy(_._1.toString).zipWithIndex.map {
       case (((pj, bucket), newHashes), i) =>
         val oldHashes: Seq[Int] = oldByKey.get((pj, bucket))
@@ -215,20 +212,12 @@ object PaimonHashIndex {
             new Path(s"${PaimonRead.dataRoot(table)}/index/${e.fileName}")).toSeq)
           .getOrElse(Nil)
         val all = oldHashes ++ newHashes
-        // branch-tag the file name — a branch commit and a main commit
-        // share snapshot ids AND the shared index/ dir (the same
-        // collision data and DV files already avoid)
-        val branchTag = PaimonRead.branchNameOf(table)
-          .map(b => s"b$b-").getOrElse("")
-        val name = f"index-$branchTag$id%05d-$i"
-        writeHashFile(f, new Path(s"${PaimonRead.dataRoot(table)}/index/$name"), all)
+        val name = s"index-$uid-$i"
+        val path = new Path(s"${PaimonRead.dataRoot(table)}/index/$name")
+        writeHashFile(f, path, all)
         PaimonDv.IndexEntry(0, hex.parseHex(pj), bucket, IndexType,
-          name, f.getFileStatus(new Path(s"${PaimonRead.dataRoot(table)}/index/$name")).getLen,
-          all.size.toLong, Nil)
+          name, f.getFileStatus(path).getLen, all.size.toLong, Nil)
     }
-    val manifestName = f"index-manifest-$id%05d"
-    PaimonDv.writeIndexManifest(spark, table, manifestName,
-      others ++ kept ++ rewritten)
-    manifestName
+    PaimonWrite.IndexState(others ++ kept, rewritten)
   }
 }

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.Engine
-import graft.sources.{PaimonHashIndex, PaimonRead}
+import graft.sources.{PaimonHashIndex, PaimonRead, PaimonWrite}
 
 /** Dev tool: DYNAMIC-BUCKET ('bucket' = '-1') paimon commit cost
   * across a decade of base sizes. Claims under test:
@@ -40,21 +40,21 @@ object DynBucketScaleProbe {
         ($"id" * 31 % 100000).cast("double").as("price"))
       // target sized for ~8 buckets at the smallest decade, growing
       // bucket count with the data (the paimon deal)
-      val ingest = time(PaimonRead.commitPk(base, table, Seq("k"),
+      val ingest = time(PaimonWrite.commitPk(base, table, Seq("k"),
         numBuckets = -1, assumeKeyUnique = true,
         options = Map("dynamic-bucket.target-row-num" -> "125000")))
       val buckets = PaimonHashIndex.entriesAt(spark, table,
         PaimonRead.snapshotIndexManifest(spark, table, 1L)).size
       // fixed-size upsert: 15k existing + 5k new keys — the
       // assignment join's wall is the decade claim
-      val up = time(PaimonRead.commitPk(
+      val up = time(PaimonWrite.commitPk(
         spark.range(0, 20000).select(
           when($"id" < 15000, $"id").otherwise($"id" + n).as("k"),
           lit(-1.0).as("price")),
         table, Seq("k"), assumeKeyUnique = true))
       val rd = time(PaimonRead.read(spark, table)
         .agg(count(lit(1)), sum($"price")).collect())
-      PaimonRead.commitPk(Seq((42L, -9.0)).toDF("k", "price"),
+      PaimonWrite.commitPk(Seq((42L, -9.0)).toDF("k", "price"),
         table, Seq("k"), assumeKeyUnique = true)
       val chgOne = time(PaimonRead.changes(spark, table, 2, 3)
         .agg(count(lit(1))).collect())

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.Engine
-import graft.sources.PaimonRead
+import graft.sources.{PaimonRead, PaimonWrite}
 
 /** Dev tool: Paimon primary-key MERGE-ON-READ cost across a decade of
   * base sizes. The claim under test: the LSM merge is ONE
@@ -37,12 +37,12 @@ object PaimonScaleProbe {
         ($"id" % 7).cast("string").as("p"),
         ($"id" * 31 % 100000).cast("double").as("price"))
       val ingest = time {
-        PaimonRead.commitPk(base, table, Seq("k"), Seq("p"), numBuckets = 4)
+        PaimonWrite.commitPk(base, table, Seq("k"), Seq("p"), numBuckets = 4)
         // fixed-size delta: 20k upserts + 5k deletes
-        PaimonRead.commitPk(spark.range(0, 20000).select($"id".as("k"),
+        PaimonWrite.commitPk(spark.range(0, 20000).select($"id".as("k"),
           ($"id" % 7).cast("string").as("p"), lit(-1.0).as("price")),
           table, Seq("k"))
-        PaimonRead.commitPk(spark.range(20000, 25000).select($"id".as("k"),
+        PaimonWrite.commitPk(spark.range(20000, 25000).select($"id".as("k"),
           ($"id" % 7).cast("string").as("p")), table, Seq("k"), deletes = true)
       }
       def readWall(): Double = time(PaimonRead.read(spark, table)
@@ -52,16 +52,16 @@ object PaimonScaleProbe {
       // whose prior scan prunes to the ONE touched bucket's files
       val chgFull = time(PaimonRead.changes(spark, table, 1, 3)
         .agg(count(lit(1))).collect())
-      PaimonRead.commitPk(Seq((42L, "0", -9.0)).toDF("k", "p", "price"),
+      PaimonWrite.commitPk(Seq((42L, "0", -9.0)).toDF("k", "p", "price"),
         table, Seq("k"), assumeKeyUnique = true)
       val chgOne = time(PaimonRead.changes(spark, table, 3, 4)
         .agg(count(lit(1))).collect())
-      val comp = time(PaimonRead.compact(spark, table))
+      val comp = time(PaimonWrite.compact(spark, table))
       val post = readWall()
       // deletion vectors on the compacted table: mask a FIXED 10k-key
       // band (k in [30k, 40k)) — cost must track the touched rows +
       // one table scan, not grow super-linearly with base size
-      val dvDel = time(PaimonRead.deleteWhereDv(spark, table,
+      val dvDel = time(PaimonWrite.deleteWhereDv(spark, table,
         $"k" >= 30000L && $"k" < 40000L))
       val postDv = readWall()
       // BRANCH lifecycle (r12: branches are the newest metadata tree
@@ -73,8 +73,8 @@ object PaimonScaleProbe {
       val br = PaimonRead.branchRoot(table, "probe")
       val mainCount = PaimonRead.read(spark, table).count()
       val branch = time {
-        PaimonRead.createBranch(spark, table, "probe")
-        PaimonRead.commitPk(spark.range(n, n + 5000).select($"id".as("k"),
+        PaimonWrite.createBranch(spark, table, "probe")
+        PaimonWrite.commitPk(spark.range(n, n + 5000).select($"id".as("k"),
           ($"id" % 7).cast("string").as("p"), lit(7.5).as("price")),
           br, Seq("k"), assumeKeyUnique = true)
         PaimonRead.read(spark, br).agg(count(lit(1))).collect()
@@ -84,8 +84,8 @@ object PaimonScaleProbe {
       // + deletes as ONE Spark job over the leaf dirs) — wall must be
       // ≤ linear per decade, not driver-RPC-serial
       val gc = time {
-        PaimonRead.expireSnapshots(spark, table, retainLast = 1)
-        PaimonRead.removeOrphanFiles(spark, table, olderThanMillis = 0L)
+        PaimonWrite.expireSnapshots(spark, table, retainLast = 1)
+        PaimonWrite.removeOrphanFiles(spark, table, olderThanMillis = 0L)
       }
       val postGc = readWall()
       // the GC must have kept every branch-reachable file: the branch

@@ -47,6 +47,22 @@ class HudiReadSpec extends SparkSuite {
     assert(ids(None) === Set(1L, 3L, 4L))
   }
 
+  test("export after a deltaCommit: a later Lake version reaches the timeline and reads once") {
+    import graft.sources.Lake
+    val table = java.nio.file.Files.createTempDirectory("graft-hexpdc").toString
+    Lake.write(Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v"), table, Nil)
+    Lake.write(Seq((3L, 30.0)).toDF("id", "v"), table, Nil, mode = "append")
+    HudiWrite.exportLake(spark, table)
+    // the deltacommit takes the next instant, the number Lake v3 has
+    val group = HudiRead.liveGroups(spark, table).keys.min
+    HudiWrite.deltaCommit(table, group, "id", Some(Seq((9L, 90.0)).toDF("id", "v")))
+    Lake.write(Seq((4L, 40.0)).toDF("id", "v"), table, Nil, mode = "append")
+    val last = HudiWrite.exportLake(spark, table)
+    assert(last === HudiRead.instants(spark, table).last)
+    assert(HudiRead.read(spark, table).select($"id").as[Long].collect().sorted.toSeq
+      === Seq(1L, 2L, 3L, 4L, 9L))
+  }
+
   test("partitioned export: timeline-keyed partition restore + file pruning") {
     import graft.sources.{HudiRead, HudiWrite, Lake}
     val table = java.nio.file.Files.createTempDirectory("graft-hudipart").toString + "/t"

@@ -114,13 +114,13 @@ class LakeCdcStreamSpec extends SparkSuite {
   }
 
   test("graft-paimon-cdc: snapshot-id offsets, LSM retraction feed, restart resumes") {
-    import graft.sources.PaimonRead
+    import graft.sources.{PaimonRead, PaimonWrite}
     val table = fresh("pai")
     val ckpt = fresh("pckpt")
     val out = fresh("pout")
-    PaimonRead.commitPk(spark.range(0, 60).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 60).select($"id".as("k"),
       ($"id" * 2).cast("double").as("x")), table, Seq("k"), numBuckets = 2)
-    PaimonRead.commitPk(spark.range(0, 10).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 10).select($"id".as("k"),
       ($"id" + 900).cast("double").as("x")), table, Seq("k"), numBuckets = 2)
     def run(): org.apache.spark.sql.DataFrame = {
       val q = spark.readStream.format("graft-paimon-cdc")
@@ -135,7 +135,7 @@ class LakeCdcStreamSpec extends SparkSuite {
     assert(first.count(_.getAs[String]("__change_type") == "insert") === 70)
     assert(first.count(_.getAs[String]("__change_type") == "delete") === 10)
     // a DV delete commits s3; restart emits ONLY its retractions
-    PaimonRead.deleteWhereDv(spark, table, col("k") >= 55)
+    PaimonWrite.deleteWhereDv(spark, table, col("k") >= 55)
     val total = run().collect()
     val s3 = total.filter(_.getAs[Long]("__commit_version") == 3L)
     assert(total.length === first.length + s3.length,

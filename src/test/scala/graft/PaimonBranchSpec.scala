@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.PaimonRead
+import graft.sources.{PaimonRead, PaimonWrite}
 import org.apache.spark.sql.functions.{col, lit}
 
 /** Paimon BRANCHES: `branch/branch-<name>/` metadata trees forked from
@@ -15,15 +15,15 @@ class PaimonBranchSpec extends SparkSuite {
 
   test("create from snapshot: fork reads the fork point; branch and main commit independently") {
     val dir = fresh("fork")
-    PaimonRead.commitPk(spark.range(0, 40).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 40).select($"id".as("k"),
       ($"id" * 2.0).as("x")), dir, Seq("k"), numBuckets = 2)          // s1
-    PaimonRead.commitPk(spark.range(40, 60).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(40, 60).select($"id".as("k"),
       ($"id" * 2.0).as("x")), dir, Seq("k"), assumeKeyUnique = true)  // s2
-    val forked = PaimonRead.createBranch(spark, dir, "dev", Some(1L))
+    val forked = PaimonWrite.createBranch(spark, dir, "dev", Some(1L))
     assert(forked === 1L)
     assert(PaimonRead.branches(spark, dir) === Seq("dev"))
     intercept[IllegalArgumentException] { // duplicate refuses
-      PaimonRead.createBranch(spark, dir, "dev")
+      PaimonWrite.createBranch(spark, dir, "dev")
     }
     // the branch sees the fork point, not main's s2 — WITHOUT any
     // manifest copies (resolution falls back to main's manifest dir)
@@ -31,7 +31,7 @@ class PaimonBranchSpec extends SparkSuite {
     assert(PaimonRead.read(spark, dir).count() === 60)
     // commit to the BRANCH: main unchanged, branch diverges
     val br = PaimonRead.branchRoot(dir, "dev")
-    PaimonRead.commitPk(spark.range(0, 10).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 10).select($"id".as("k"),
       lit(-1.0).as("x")), br, Seq("k"), assumeKeyUnique = true)       // branch s2
     val b = PaimonRead.readBranch(spark, dir, "dev").orderBy($"k").collect()
     assert(b.length === 40)
@@ -52,31 +52,34 @@ class PaimonBranchSpec extends SparkSuite {
   test("dynamic-bucket branch: index files branch-tagged (no shared-dir collision); rollback refuses branches forked past the target") {
     val dir = fresh("dynbr")
     val opts = Map("dynamic-bucket.target-row-num" -> "16")
-    PaimonRead.commitPk(spark.range(0, 20).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 20).select($"id".as("k"),
       ($"id" * 2.0).as("x")), dir, Seq("k"), numBuckets = -1,
       options = opts)                                                 // s1
-    PaimonRead.createBranch(spark, dir, "dev", Some(1L))
+    PaimonWrite.createBranch(spark, dir, "dev", Some(1L))
     val br = PaimonRead.branchRoot(dir, "dev")
     // branch commit id 2 and main commit id 2 BOTH write new index
-    // files into the shared index/ dir — the branch tag keeps them
-    // apart (an untagged name would let one overwrite the other)
-    PaimonRead.commitPk(spark.range(100, 110).select($"id".as("k"),
+    // files into the shared index/ dir — per-commit uuid names keep
+    // them apart (an id-derived name would let one overwrite the other)
+    PaimonWrite.commitPk(spark.range(100, 110).select($"id".as("k"),
       lit(-1.0).as("x")), br, Seq("k"), assumeKeyUnique = true)       // branch s2
-    PaimonRead.commitPk(spark.range(200, 230).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(200, 230).select($"id".as("k"),
       lit(7.0).as("x")), dir, Seq("k"), assumeKeyUnique = true)       // main s2
-    val f = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val idxFiles = f.listStatus(new org.apache.hadoop.fs.Path(s"$dir/index"))
-      .map(_.getPath.getName).toSet
-    assert(idxFiles.exists(_.startsWith("index-bdev-")),
-      s"branch index files must be branch-tagged, got $idxFiles")
+    def indexFiles(root: String, id: Long): Set[String] =
+      PaimonRead.snapshotIndexManifest(spark, root, id).toSeq
+        .flatMap(graft.sources.PaimonDv.readIndexManifest(spark, root, _))
+        .map(_.fileName).toSet
+    val fork = indexFiles(dir, 1L)
+    val branchNew = indexFiles(br, 2L) -- fork
+    val mainNew = indexFiles(dir, 2L) -- fork
+    assert(branchNew.nonEmpty && mainNew.nonEmpty && (branchNew & mainNew).isEmpty,
+      s"branch $branchNew and main $mainNew must name disjoint index files")
     // both sides read their own state through their own indexes
     assert(PaimonRead.read(spark, dir).count() === 50)
     assert(PaimonRead.readBranch(spark, dir, "dev").count() === 30)
     // sticky follow-ups on both sides stay correct
-    PaimonRead.commitPk(spark.range(0, 5).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 5).select($"id".as("k"),
       lit(99.0).as("x")), dir, Seq("k"), assumeKeyUnique = true)
-    PaimonRead.commitPk(spark.range(100, 105).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(100, 105).select($"id".as("k"),
       lit(50.0).as("x")), br, Seq("k"), assumeKeyUnique = true)
     assert(PaimonRead.read(spark, dir).filter($"x" === 99.0).count() === 5)
     assert(PaimonRead.readBranch(spark, dir, "dev")
@@ -84,46 +87,46 @@ class PaimonBranchSpec extends SparkSuite {
     // rollback guard: a branch forked at s1 allows rolling to 1... but
     // main is AT-or-past its own commits; forked-past-target refusal:
     val dir2 = fresh("rbguard")
-    PaimonRead.commitPk(spark.range(0, 10).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 10).select($"id".as("k"),
       ($"id" * 1.0).as("x")), dir2, Seq("k"), numBuckets = 2)         // s1
-    PaimonRead.commitPk(spark.range(10, 20).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(10, 20).select($"id".as("k"),
       ($"id" * 1.0).as("x")), dir2, Seq("k"), assumeKeyUnique = true) // s2
-    PaimonRead.createBranch(spark, dir2, "late") // forks at s2
+    PaimonWrite.createBranch(spark, dir2, "late") // forks at s2
     intercept[IllegalArgumentException] {
-      PaimonRead.rollbackTo(spark, dir2, 1L) // would reclaim s2's files
+      PaimonWrite.rollbackTo(spark, dir2, 1L) // would reclaim s2's files
     }
-    PaimonRead.deleteBranch(spark, dir2, "late")
-    assert(PaimonRead.rollbackTo(spark, dir2, 1L) === Seq(2L))
+    PaimonWrite.deleteBranch(spark, dir2, "late")
+    assert(PaimonWrite.rollbackTo(spark, dir2, 1L) === Seq(2L))
     assert(PaimonRead.read(spark, dir2).count() === 10)
   }
 
   test("create from tag; branch survives main expiry; drop-branch debris becomes orphans") {
     val dir = fresh("tag")
-    PaimonRead.commitPk(spark.range(0, 30).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 30).select($"id".as("k"),
       ($"id" * 1.0).as("x")), dir, Seq("k"), numBuckets = 2)          // s1
-    PaimonRead.createTag(spark, dir, "v1", Some(1L))
-    PaimonRead.commitPk(spark.range(0, 30).select($"id".as("k"),
+    PaimonWrite.createTag(spark, dir, "v1", Some(1L))
+    PaimonWrite.commitPk(spark.range(0, 30).select($"id".as("k"),
       lit(9.0).as("x")), dir, Seq("k"), assumeKeyUnique = true)       // s2
-    PaimonRead.createBranch(spark, dir, "fix", fromTag = Some("v1"))
+    PaimonWrite.createBranch(spark, dir, "fix", fromTag = Some("v1"))
     val br = PaimonRead.branchRoot(dir, "fix")
-    PaimonRead.commitPk(spark.range(100, 110).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(100, 110).select($"id".as("k"),
       ($"id" * 1.0).as("x")), br, Seq("k"), assumeKeyUnique = true)
-    PaimonRead.compact(spark, dir)                                    // s3 main
+    PaimonWrite.compact(spark, dir)                                    // s3 main
     // expire main down to the latest: the branch still reads both its
     // fork-point rows (main s1 files) and its own commit
-    PaimonRead.expireSnapshots(spark, dir, retainLast = 1)
+    PaimonWrite.expireSnapshots(spark, dir, retainLast = 1)
     assert(PaimonRead.read(spark, dir).count() === 30)
     val b = PaimonRead.readBranch(spark, dir, "fix")
     assert(b.count() === 40)
     assert(b.filter($"k" >= 100).count() === 10)
     // orphan sweep keeps branch-reachable files
-    assert(PaimonRead.removeOrphanFiles(spark, dir, olderThanMillis = 0L)
+    assert(PaimonWrite.removeOrphanFiles(spark, dir, olderThanMillis = 0L)
       === Nil)
     assert(PaimonRead.readBranch(spark, dir, "fix").count() === 40)
     // drop the branch: its exclusive data files become orphans
-    PaimonRead.deleteBranch(spark, dir, "fix")
+    PaimonWrite.deleteBranch(spark, dir, "fix")
     assert(PaimonRead.branches(spark, dir) === Nil)
-    val orphans = PaimonRead.removeOrphanFiles(spark, dir,
+    val orphans = PaimonWrite.removeOrphanFiles(spark, dir,
       olderThanMillis = 0L)
     assert(orphans.nonEmpty, "the dropped branch's exclusive runs were orphans")
     assert(PaimonRead.read(spark, dir).orderBy($"k").collect()

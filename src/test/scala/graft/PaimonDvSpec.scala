@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{PaimonDv, PaimonRead}
+import graft.sources.{PaimonDv, PaimonRead, PaimonWrite}
 
 /** Paimon deletion vectors: the `.dv` byte layout pinned from the
   * reference BE (`be/src/formats/paimon/paimon_delete_file_builder.h`),
@@ -64,9 +64,9 @@ class PaimonDvSpec extends SparkSuite {
 
   test("append table: DV delete masks rows; time travel sees them; vectors union across commits") {
     val dir = freshTable("app")
-    PaimonRead.commitAppend(
+    PaimonWrite.commitAppend(
       spark.range(0, 1000).select($"id".as("k"), ($"id" % 7).as("m")), dir)
-    val s2 = PaimonRead.deleteWhereDv(spark, dir, col("m") === 3)
+    val s2 = PaimonWrite.deleteWhereDv(spark, dir, col("m") === 3)
     assert(s2 === 2L)
     val afterOne = PaimonRead.read(spark, dir)
     assert(afterOne.count() === (0L until 1000L).count(_ % 7 != 3))
@@ -74,7 +74,7 @@ class PaimonDvSpec extends SparkSuite {
     // snapshot 1 still sees every row (vectors are snapshot-scoped)
     assert(PaimonRead.read(spark, dir, Some(1L)).count() === 1000)
     // second delete UNIONS with the first file's existing vector
-    val s3 = PaimonRead.deleteWhereDv(spark, dir, col("m") === 5)
+    val s3 = PaimonWrite.deleteWhereDv(spark, dir, col("m") === 5)
     assert(s3 === 3L)
     val afterTwo = PaimonRead.read(spark, dir)
     assert(afterTwo.count() ===
@@ -82,30 +82,30 @@ class PaimonDvSpec extends SparkSuite {
     assert(PaimonRead.read(spark, dir, Some(2L)).count() ===
       (0L until 1000L).count(_ % 7 != 3))
     // nothing matched → no commit
-    assert(PaimonRead.deleteWhereDv(spark, dir, col("m") === 99) === 3L)
+    assert(PaimonWrite.deleteWhereDv(spark, dir, col("m") === 99) === 3L)
   }
 
   test("PK table: delete by CURRENT image — no resurrection of older images") {
     val dir = freshTable("pk")
     // v1: k in 0..99, x = k
-    PaimonRead.commitPk(spark.range(0, 100).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 100).select($"id".as("k"),
       $"id".cast("double").as("x")), dir, Seq("k"), numBuckets = 4)
     // v2: keys 0..49 overwritten with x = k + 1000
-    PaimonRead.commitPk(spark.range(0, 50).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 50).select($"id".as("k"),
       ($"id" + 1000).cast("double").as("x")), dir, Seq("k"), numBuckets = 4)
     // delete where x < 100: matches CURRENT images of keys 50..99 only.
     // Keys 0..49 have OLD images with x < 100 — those keys must survive
     // with their new images intact (masking only winning rows would
     // have resurrected the old ones; masking old rows of non-matching
     // keys would be harmless but these keys must not be deleted).
-    val s3 = PaimonRead.deleteWhereDv(spark, dir, col("x") < 100)
+    val s3 = PaimonWrite.deleteWhereDv(spark, dir, col("x") < 100)
     assert(s3 === 3L)
     val out = PaimonRead.read(spark, dir).orderBy($"k")
     assert(out.count() === 50)
     assert(out.select($"k").as[Long].collect().toSeq === (0L until 50L))
     assert(out.select($"x").as[Double].collect().forall(_ >= 1000))
     // upsert a deleted key back — new image wins over the masked runs
-    PaimonRead.commitPk(Seq((75L, 7.5)).toDF("k", "x"), dir, Seq("k"),
+    PaimonWrite.commitPk(Seq((75L, 7.5)).toDF("k", "x"), dir, Seq("k"),
       numBuckets = 4)
     val back = PaimonRead.read(spark, dir)
     assert(back.count() === 51)
@@ -114,11 +114,11 @@ class PaimonDvSpec extends SparkSuite {
 
   test("change feed: DV commit emits the prior winning images as deletes") {
     val dir = freshTable("cdc")
-    PaimonRead.commitPk(spark.range(0, 40).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 40).select($"id".as("k"),
       ($"id" * 2).cast("double").as("x")), dir, Seq("k"), numBuckets = 2)
-    PaimonRead.commitPk(spark.range(0, 10).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 10).select($"id".as("k"),
       ($"id" + 500).cast("double").as("x")), dir, Seq("k"), numBuckets = 2)
-    PaimonRead.deleteWhereDv(spark, dir, col("k") < 5) // v3: keys 0..4
+    PaimonWrite.deleteWhereDv(spark, dir, col("k") < 5) // v3: keys 0..4
     val feed = PaimonRead.changes(spark, dir, 2, 3)
       .orderBy($"k").collect()
     assert(feed.length === 5)
@@ -135,9 +135,9 @@ class PaimonDvSpec extends SparkSuite {
       PaimonRead.read(spark, dir).count())
     // append table DV deletes emit the masked rows themselves
     val adir = freshTable("cdcapp")
-    PaimonRead.commitAppend(
+    PaimonWrite.commitAppend(
       spark.range(0, 30).select($"id".as("k")), adir)
-    PaimonRead.deleteWhereDv(spark, adir, col("k") % 10 === 0)
+    PaimonWrite.deleteWhereDv(spark, adir, col("k") % 10 === 0)
     val afeed = PaimonRead.changes(spark, adir, 1, 2).collect()
     assert(afeed.length === 3)
     assert(afeed.map(_.getAs[Long]("k")).toSet === Set(0L, 10L, 20L))
@@ -146,12 +146,12 @@ class PaimonDvSpec extends SparkSuite {
 
   test("compaction applies vectors and clears the index manifest") {
     val dir = freshTable("cmp")
-    PaimonRead.commitPk(spark.range(0, 200).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 200).select($"id".as("k"),
       ($"id" % 4).cast("int").as("p"), ($"id" * 3).cast("double").as("x")),
       dir, Seq("k"), partitionKeys = Seq("p"), numBuckets = 2)
-    PaimonRead.deleteWhereDv(spark, dir, col("k") % 5 === 0)
+    PaimonWrite.deleteWhereDv(spark, dir, col("k") % 5 === 0)
     val pre = PaimonRead.read(spark, dir).orderBy($"k").collect()
-    val cid = PaimonRead.compact(spark, dir)
+    val cid = PaimonWrite.compact(spark, dir)
     // COMPACT snapshot carries no index manifest
     val snapTxt = {
       val in = hadoopFs.open(new org.apache.hadoop.fs.Path(
@@ -167,10 +167,10 @@ class PaimonDvSpec extends SparkSuite {
     assert(post.length === (0L until 200L).count(_ % 5 != 0))
     // an unrelated later commit INHERITS the manifest (pre-compact path)
     val dir2 = freshTable("inherit")
-    PaimonRead.commitPk(spark.range(0, 50).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 50).select($"id".as("k"),
       $"id".cast("double").as("x")), dir2, Seq("k"))
-    PaimonRead.deleteWhereDv(spark, dir2, col("k") < 10)
-    PaimonRead.commitPk(Seq((100L, 1.0)).toDF("k", "x"), dir2, Seq("k"))
+    PaimonWrite.deleteWhereDv(spark, dir2, col("k") < 10)
+    PaimonWrite.commitPk(Seq((100L, 1.0)).toDF("k", "x"), dir2, Seq("k"))
     assert(PaimonRead.read(spark, dir2).count() === 41)
   }
 
@@ -211,7 +211,7 @@ class PaimonDvSpec extends SparkSuite {
     rr.put("f0", "d.parquet"); rr.put("f1", 1); rr.put("f2", 64)
     rr.put("_CARDINALITY", 2L)
     rec.put("_DELETIONS_VECTORS_RANGES", java.util.Arrays.asList(rr))
-    graft.sources.PaimonRead.writeAvroFile(spark,
+    graft.sources.PaimonWrite.writeAvroFile(spark,
       s"$dir/manifest/index-manifest-2", entryExt, Seq(rec))
     val ext = PaimonDv.readIndexManifest(spark, dir, "index-manifest-2")
     assert(ext.head.ranges === Seq(("d.parquet", 1L, 64L)))
@@ -219,10 +219,10 @@ class PaimonDvSpec extends SparkSuite {
 
   test("real-flavor table: BinaryRow partition bytes in the index manifest") {
     val dir = freshTable("real")
-    PaimonRead.commitPk(spark.range(0, 120).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 120).select($"id".as("k"),
       ($"id" % 3).cast("int").as("p"), $"id".cast("double").as("x")),
       dir, Seq("k"), partitionKeys = Seq("p"), numBuckets = 2)
-    PaimonRead.deleteWhereDv(spark, dir, col("k") % 4 === 1)
+    PaimonWrite.deleteWhereDv(spark, dir, col("k") % 4 === 1)
     assert(PaimonRead.read(spark, dir).count() ===
       (0L until 120L).count(_ % 4 != 1))
     // the index manifest's partition field decodes as a BinaryRow

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{PaimonDv, PaimonHashIndex, PaimonRead}
+import graft.sources.{PaimonDv, PaimonHashIndex, PaimonRead, PaimonWrite}
 import org.apache.spark.sql.functions.{col, hash, lit}
 
 /** Dynamic-bucket ('bucket' = '-1') PK tables: sticky HASH-index
@@ -18,7 +18,7 @@ class PaimonDynamicBucketSpec extends SparkSuite {
 
   test("sticky assignment: buckets fill to target, existing keys keep their bucket, index manifest is full-state") {
     val dir = fresh("sticky")
-    PaimonRead.commitPk(batch(0L until 20L, 0.0), dir, Seq("k"),
+    PaimonWrite.commitPk(batch(0L until 20L, 0.0), dir, Seq("k"),
       numBuckets = -1,
       options = Map("dynamic-bucket.target-row-num" -> "8"))
     // 20 new keys at target 8 -> buckets 0 (8), 1 (8), 2 (4)
@@ -44,7 +44,7 @@ class PaimonDynamicBucketSpec extends SparkSuite {
     assert(assign1.size === 20)
     // commit 2: update 5 existing keys + 3 new -> existing keys stay
     // in their buckets, new keys continue filling bucket 2
-    PaimonRead.commitPk(batch(Seq(0L, 3L, 7L, 11L, 19L) ++ (20L until 23L),
+    PaimonWrite.commitPk(batch(Seq(0L, 3L, 7L, 11L, 19L) ++ (20L until 23L),
       100.0), dir, Seq("k"), assumeKeyUnique = true)
     val im2 = PaimonRead.snapshotIndexManifest(spark, dir, 2L)
     val assign2 = bucketOf(im2)
@@ -74,9 +74,9 @@ class PaimonDynamicBucketSpec extends SparkSuite {
     val dir = fresh("binrow")
     def rows(from: Long, until: Long, x: Double) = spark.range(from, until)
       .select($"id".as("k"), ($"id" % 3).cast("int").as("p"), (lit(x) + $"id").as("x"))
-    PaimonRead.commitPk(rows(0, 30, 0.0), dir, Seq("k"), Seq("p"), numBuckets = -1,
+    PaimonWrite.commitPk(rows(0, 30, 0.0), dir, Seq("k"), Seq("p"), numBuckets = -1,
       options = Map("dynamic-bucket.target-row-num" -> "4"))
-    PaimonRead.commitPk(rows(25, 35, 100.0), dir, Seq("k"), assumeKeyUnique = true)
+    PaimonWrite.commitPk(rows(25, 35, 100.0), dir, Seq("k"), assumeKeyUnique = true)
     val im = PaimonRead.snapshotIndexManifest(spark, dir, 2L)
     val hashEntries = PaimonDv.readIndexManifest(spark, dir, im.get)
       .filter(_.indexType == PaimonHashIndex.IndexType)
@@ -97,12 +97,12 @@ class PaimonDynamicBucketSpec extends SparkSuite {
   test("CDC: feed bit-equal to a fixed-bucket twin; prior set pruned to touched buckets") {
     val dirD = fresh("cdc-dyn"); val dirF = fresh("cdc-fix")
     def feed(dir: String, buckets: Int) = {
-      PaimonRead.commitPk(batch(0L until 16L, 0.0), dir, Seq("k"),
+      PaimonWrite.commitPk(batch(0L until 16L, 0.0), dir, Seq("k"),
         numBuckets = buckets,
         options = Map("dynamic-bucket.target-row-num" -> "6"))
-      PaimonRead.commitPk(batch(Seq(2L, 9L), 50.0), dir, Seq("k"),
+      PaimonWrite.commitPk(batch(Seq(2L, 9L), 50.0), dir, Seq("k"),
         assumeKeyUnique = true)
-      PaimonRead.commitPk(Seq(4L).toDF("k"), dir, Seq("k"),
+      PaimonWrite.commitPk(Seq(4L).toDF("k"), dir, Seq("k"),
         deletes = true, assumeKeyUnique = true)
       PaimonRead.changes(spark, dir, 1L, 3L)
         .select($"k", $"x", $"__change_type", $"__commit_version")
@@ -127,21 +127,21 @@ class PaimonDynamicBucketSpec extends SparkSuite {
 
   test("compaction keeps the HASH index; assignments stay sticky after it") {
     val dir = fresh("compact")
-    PaimonRead.commitPk(batch(0L until 12L, 0.0), dir, Seq("k"),
+    PaimonWrite.commitPk(batch(0L until 12L, 0.0), dir, Seq("k"),
       numBuckets = -1,
       options = Map("dynamic-bucket.target-row-num" -> "5"))
-    PaimonRead.commitPk(batch(Seq(1L, 6L), 10.0), dir, Seq("k"),
+    PaimonWrite.commitPk(batch(Seq(1L, 6L), 10.0), dir, Seq("k"),
       assumeKeyUnique = true)
     val before = PaimonRead.snapshotIndexManifest(spark, dir, 2L)
     val assignBefore = PaimonHashIndex.entriesAt(spark, dir, before)
       .map(e => e.bucket -> e.rowCount).sortBy(_._1)
-    val cid = PaimonRead.compact(spark, dir)
+    val cid = PaimonWrite.compact(spark, dir)
     val after = PaimonRead.snapshotIndexManifest(spark, dir, cid)
     assert(after.nonEmpty, "compaction dropped the hash index")
     assert(PaimonHashIndex.entriesAt(spark, dir, after)
       .map(e => e.bucket -> e.rowCount).sortBy(_._1) === assignBefore)
     // post-compaction update stays in the key's bucket and merges
-    PaimonRead.commitPk(batch(Seq(6L), 99.0), dir, Seq("k"),
+    PaimonWrite.commitPk(batch(Seq(6L), 99.0), dir, Seq("k"),
       assumeKeyUnique = true)
     val got = PaimonRead.read(spark, dir).filter($"k" === 6L).collect()
     assert(got.length === 1 && got.head.getDouble(1) === 105.0)
@@ -175,7 +175,7 @@ class PaimonDynamicBucketSpec extends SparkSuite {
     // bucket number
     val b1 = (0L until 8L).toDF("k")
       .withColumn("p", lit("a")).withColumn("x", col("k") * 1.0)
-    PaimonRead.commitPk(b1, dir, Seq("k"), partitionKeys = Seq("p"),
+    PaimonWrite.commitPk(b1, dir, Seq("k"), partitionKeys = Seq("p"),
       numBuckets = -1,
       options = Map("dynamic-bucket.target-row-num" -> "4"))
     // pick a key assigned OUTSIDE bucket 0 of partition a, so the new
@@ -187,7 +187,7 @@ class PaimonDynamicBucketSpec extends SparkSuite {
     val moved = (0L until 8L).find(k => assign1(keyHash(k)) != 0).get
     val b2 = Seq(moved).toDF("k")
       .withColumn("p", lit("b")).withColumn("x", lit(500.0))
-    PaimonRead.commitPk(b2, dir, Seq("k"), assumeKeyUnique = true)
+    PaimonWrite.commitPk(b2, dir, Seq("k"), assumeKeyUnique = true)
     val adds2 = PaimonRead.liveFiles(spark, dir, Some(2L))
       .filter(_.minSeq == 2L)
     assert(adds2.map(e => (e.partition("p"), e.bucket)).toSet ===
@@ -210,14 +210,14 @@ class PaimonDynamicBucketSpec extends SparkSuite {
 
   test("compact on dynamic + non-deduplicate keeps each key's RECORDED bucket (no collapse into bucket 0)") {
     val dir = fresh("pu-compact")
-    PaimonRead.commitPk(batch(0L until 10L, 0.0), dir, Seq("k"),
+    PaimonWrite.commitPk(batch(0L until 10L, 0.0), dir, Seq("k"),
       numBuckets = -1,
       options = Map("dynamic-bucket.target-row-num" -> "4",
         "merge-engine" -> "partial-update"))
-    PaimonRead.commitPk(batch(Seq(2L, 7L), 30.0), dir, Seq("k"),
+    PaimonWrite.commitPk(batch(Seq(2L, 7L), 30.0), dir, Seq("k"),
       assumeKeyUnique = true)
     val assignBefore = assignmentOf(dir, 2L)
-    val cid = PaimonRead.compact(spark, dir)
+    val cid = PaimonWrite.compact(spark, dir)
     // the rewritten data files live in the index's buckets, not all-0
     val files = PaimonRead.liveFiles(spark, dir, Some(cid))
     assert(files.map(_.bucket).toSet === assignBefore.values.toSet)
@@ -231,7 +231,7 @@ class PaimonDynamicBucketSpec extends SparkSuite {
       case (h, b) if b == assignBefore.values.max => h }.head
     val probeKey = (0L until 10L).find(k =>
       Seq(k).toDF("k").select(hash(col("k"))).head().getInt(0) == probe).get
-    PaimonRead.commitPk(batch(Seq(probeKey), 900.0), dir, Seq("k"),
+    PaimonWrite.commitPk(batch(Seq(probeKey), 900.0), dir, Seq("k"),
       assumeKeyUnique = true)
     val merged = PaimonRead.read(spark, dir)
       .filter($"k" === probeKey).collect()
@@ -242,10 +242,10 @@ class PaimonDynamicBucketSpec extends SparkSuite {
   test("forced paths: empty-prior skip and over-threshold shuffle join assign bit-identically to the broadcast path") {
     val dirA = fresh("force-a"); val dirB = fresh("force-b")
     def ingest(dir: String) = {
-      PaimonRead.commitPk(batch(0L until 15L, 0.0), dir, Seq("k"),
+      PaimonWrite.commitPk(batch(0L until 15L, 0.0), dir, Seq("k"),
         numBuckets = -1,
         options = Map("dynamic-bucket.target-row-num" -> "6"))
-      PaimonRead.commitPk(batch(Seq(3L, 8L) ++ (15L until 19L), 70.0), dir,
+      PaimonWrite.commitPk(batch(Seq(3L, 8L) ++ (15L until 19L), 70.0), dir,
         Seq("k"), assumeKeyUnique = true)
     }
     ingest(dirA) // default: empty-prior skip on c1, broadcast join on c2

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.PaimonRead
+import graft.sources.{PaimonRead, PaimonWrite}
 
 /** Paimon system tables (the reference reads them through the paimon
   * connector: PaimonMetadata.java:90 SnapshotsTable, :613 system-table
@@ -17,14 +17,14 @@ class PaimonMaintSpec extends SparkSuite {
 
   test("system tables: snapshots, schemas, files, manifests, options") {
     val dir = fresh("sys")
-    PaimonRead.commitPk(spark.range(0, 90).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 90).select($"id".as("k"),
       ($"id" % 3).cast("int").as("p"), $"id".cast("double").as("x")),
       dir, Seq("k"), partitionKeys = Seq("p"), numBuckets = 2,
       options = Map("custom.opt" -> "7"))
-    PaimonRead.commitPk(spark.range(0, 30).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 30).select($"id".as("k"),
       ($"id" % 3).cast("int").as("p"), lit(-1.0).as("x")), dir, Seq("k"),
       assumeKeyUnique = true)
-    PaimonRead.compact(spark, dir)
+    PaimonWrite.compact(spark, dir)
 
     val snaps = PaimonRead.systemTable(spark, dir, "snapshots")
       .orderBy($"snapshot_id").collect()
@@ -61,14 +61,14 @@ class PaimonMaintSpec extends SparkSuite {
   test("rollbackTo: newer snapshots die, their exclusive files reclaimed, next commit continues") {
     val dir = fresh("rb")
     val f = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    PaimonRead.commitPk(spark.range(0, 50).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 50).select($"id".as("k"),
       $"id".cast("double").as("x")), dir, Seq("k"), numBuckets = 2)
-    PaimonRead.commitPk(spark.range(0, 10).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 10).select($"id".as("k"),
       lit(-1.0).as("x")), dir, Seq("k"), assumeKeyUnique = true)
-    PaimonRead.deleteWhereDv(spark, dir, $"k" >= 45)         // s3 (DV)
-    PaimonRead.commitPk(spark.range(200, 220).select($"id".as("k"),
+    PaimonWrite.deleteWhereDv(spark, dir, $"k" >= 45)         // s3 (DV)
+    PaimonWrite.commitPk(spark.range(200, 220).select($"id".as("k"),
       $"id".cast("double").as("x")), dir, Seq("k"), assumeKeyUnique = true) // s4
-    val rolled = PaimonRead.rollbackTo(spark, dir, 2L)
+    val rolled = PaimonWrite.rollbackTo(spark, dir, 2L)
     assert(rolled === Seq(3L, 4L))
     assert(PaimonRead.latestSnapshotId(spark, dir) === 2L)
     val back = PaimonRead.read(spark, dir)
@@ -79,7 +79,7 @@ class PaimonMaintSpec extends SparkSuite {
     assert(!f.exists(new org.apache.hadoop.fs.Path(s"$dir/index")) ||
       f.listStatus(new org.apache.hadoop.fs.Path(s"$dir/index")).isEmpty)
     // the next commit continues from the target
-    PaimonRead.commitPk(spark.range(300, 305).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(300, 305).select($"id".as("k"),
       $"id".cast("double").as("x")), dir, Seq("k"), assumeKeyUnique = true)
     assert(PaimonRead.latestSnapshotId(spark, dir) === 3L)
     assert(PaimonRead.read(spark, dir).count() === 55)
@@ -89,35 +89,35 @@ class PaimonMaintSpec extends SparkSuite {
     // rollback past a tag would reuse snapshot ids and overwrite the
     // tag's retained deterministically-named files — must refuse
     val dir = fresh("rbtag")
-    PaimonRead.commitPk(spark.range(0, 20).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 20).select($"id".as("k"),
       $"id".cast("double").as("x")), dir, Seq("k"))
-    PaimonRead.commitPk(spark.range(0, 5).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 5).select($"id".as("k"),
       lit(9.0).as("x")), dir, Seq("k"), assumeKeyUnique = true)
-    PaimonRead.createTag(spark, dir, "keepme", Some(2L))
+    PaimonWrite.createTag(spark, dir, "keepme", Some(2L))
     intercept[IllegalArgumentException] {
-      PaimonRead.rollbackTo(spark, dir, 1L)
+      PaimonWrite.rollbackTo(spark, dir, 1L)
     }
-    PaimonRead.deleteTag(spark, dir, "keepme")
-    assert(PaimonRead.rollbackTo(spark, dir, 1L) === Seq(2L))
+    PaimonWrite.deleteTag(spark, dir, "keepme")
+    assert(PaimonWrite.rollbackTo(spark, dir, 1L) === Seq(2L))
     assert(PaimonRead.read(spark, dir).count() === 20)
 
     // a key-only partial-update table (no value columns) reads as the
     // key set instead of crashing on an empty aggregate list
     val dir2 = fresh("keyonly")
-    PaimonRead.commitPk(spark.range(0, 30).select($"id".as("k")),
+    PaimonWrite.commitPk(spark.range(0, 30).select($"id".as("k")),
       dir2, Seq("k"), options = Map("merge-engine" -> "partial-update"))
-    PaimonRead.commitPk(spark.range(25, 40).select($"id".as("k")),
+    PaimonWrite.commitPk(spark.range(25, 40).select($"id".as("k")),
       dir2, Seq("k"), assumeKeyUnique = true)
     assert(PaimonRead.read(spark, dir2).count() === 40)
 
     // real-flavor totalRecordCount is computed incrementally per
     // commit — adds minus retires must still equal the live row count
     val dir3 = fresh("totals")
-    PaimonRead.commitPk(spark.range(0, 60).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 60).select($"id".as("k"),
       $"id".cast("double").as("x")), dir3, Seq("k"))
-    PaimonRead.commitPk(spark.range(0, 10).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 10).select($"id".as("k"),
       lit(1.5).as("x")), dir3, Seq("k"), assumeKeyUnique = true)
-    PaimonRead.compact(spark, dir3)
+    PaimonWrite.compact(spark, dir3)
     val totals = PaimonRead.systemTable(spark, dir3, "snapshots")
       .orderBy($"snapshot_id")
       .select($"total_record_count").collect().map(_.getLong(0)).toSeq
@@ -128,22 +128,22 @@ class PaimonMaintSpec extends SparkSuite {
 
   test("tags: named snapshots survive expiry and read from their own copy") {
     val dir = fresh("tag")
-    PaimonRead.commitPk(spark.range(0, 60).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 60).select($"id".as("k"),
       $"id".cast("double").as("x")), dir, Seq("k"), numBuckets = 2)
-    PaimonRead.commitPk(spark.range(0, 20).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 20).select($"id".as("k"),
       lit(-5.0).as("x")), dir, Seq("k"), assumeKeyUnique = true)
-    val tagged = PaimonRead.createTag(spark, dir, "v1-release", Some(1L))
+    val tagged = PaimonWrite.createTag(spark, dir, "v1-release", Some(1L))
     assert(tagged === 1L)
     intercept[IllegalArgumentException] { // duplicate refuses
-      PaimonRead.createTag(spark, dir, "v1-release")
+      PaimonWrite.createTag(spark, dir, "v1-release")
     }
-    PaimonRead.compact(spark, dir)
-    PaimonRead.commitPk(spark.range(100, 110).select($"id".as("k"),
+    PaimonWrite.compact(spark, dir)
+    PaimonWrite.commitPk(spark.range(100, 110).select($"id".as("k"),
       $"id".cast("double").as("x")), dir, Seq("k"), assumeKeyUnique = true)
     // expire everything but the last snapshot — the tagged s1 must
     // still read from its own copy, with its ORIGINAL rows (untouched
     // by s2's overwrite), even though snapshot-1 is gone
-    val expired = PaimonRead.expireSnapshots(spark, dir, retainLast = 1)
+    val expired = PaimonWrite.expireSnapshots(spark, dir, retainLast = 1)
     assert(expired === Seq(1L, 2L, 3L))
     intercept[IllegalArgumentException] {
       PaimonRead.read(spark, dir, Some(1L))
@@ -158,8 +158,8 @@ class PaimonMaintSpec extends SparkSuite {
       Seq(("v1-release", 1L)))
     // delete the tag: its exclusive files are now true orphans (no
     // snapshot reaches them) — remove_orphan_files reclaims them
-    PaimonRead.deleteTag(spark, dir, "v1-release")
-    assert(PaimonRead.expireSnapshots(spark, dir, retainLast = 1) === Nil)
+    PaimonWrite.deleteTag(spark, dir, "v1-release")
+    assert(PaimonWrite.expireSnapshots(spark, dir, retainLast = 1) === Nil)
     intercept[IllegalArgumentException] {
       PaimonRead.readTag(spark, dir, "v1-release")
     }
@@ -167,15 +167,15 @@ class PaimonMaintSpec extends SparkSuite {
     // the default 1h olderThan guard protects fresh files — a
     // concurrent writer's staged-not-yet-committed output looks
     // exactly like these seconds-old orphans
-    assert(PaimonRead.removeOrphanFiles(spark, dir) === Nil)
+    assert(PaimonWrite.removeOrphanFiles(spark, dir) === Nil)
     // olderThanMillis = 0: this spec is the single writer, so the
     // concurrent-commit guard may be disabled to sweep fresh debris
-    val orphans = PaimonRead.removeOrphanFiles(spark, dir, olderThanMillis = 0L)
+    val orphans = PaimonWrite.removeOrphanFiles(spark, dir, olderThanMillis = 0L)
     assert(orphans.nonEmpty, "the dropped tag's exclusive runs were orphans")
     assert(PaimonRead.read(spark, dir).orderBy($"k").collect().toSeq ===
       before.toSeq)
     // a second sweep finds nothing
-    assert(PaimonRead.removeOrphanFiles(spark, dir, olderThanMillis = 0L) === Nil)
+    assert(PaimonWrite.removeOrphanFiles(spark, dir, olderThanMillis = 0L) === Nil)
   }
 
   test("distributed GC root walk (threshold 0) sweeps the same orphans as the serial walk, branches included") {
@@ -183,42 +183,42 @@ class PaimonMaintSpec extends SparkSuite {
     // deterministic: data-<id>-<i>), one swept serially, one through
     // the Spark-job root walk — the orphan RELATIVE paths must match
     def build(dir: String): Unit = {
-      PaimonRead.commitPk(spark.range(0, 40).select($"id".as("k"),
+      PaimonWrite.commitPk(spark.range(0, 40).select($"id".as("k"),
         $"id".cast("double").as("x")), dir, Seq("k"), numBuckets = 2)
-      PaimonRead.commitPk(spark.range(0, 10).select($"id".as("k"),
+      PaimonWrite.commitPk(spark.range(0, 10).select($"id".as("k"),
         lit(-1.0).as("x")), dir, Seq("k"), assumeKeyUnique = true)
-      PaimonRead.createTag(spark, dir, "keepme", Some(1L))
-      PaimonRead.createBranch(spark, dir, "dev", Some(2L))
-      PaimonRead.commitPk(spark.range(200, 210).select($"id".as("k"),
+      PaimonWrite.createTag(spark, dir, "keepme", Some(1L))
+      PaimonWrite.createBranch(spark, dir, "dev", Some(2L))
+      PaimonWrite.commitPk(spark.range(200, 210).select($"id".as("k"),
         $"id".cast("double").as("x")),
         PaimonRead.branchRoot(dir, "dev"), Seq("k"), assumeKeyUnique = true)
-      PaimonRead.compact(spark, dir)
+      PaimonWrite.compact(spark, dir)
       // drop the tag so its exclusive copies become orphans
-      PaimonRead.deleteTag(spark, dir, "keepme")
-      PaimonRead.expireSnapshots(spark, dir, retainLast = 1)
+      PaimonWrite.deleteTag(spark, dir, "keepme")
+      PaimonWrite.expireSnapshots(spark, dir, retainLast = 1)
     }
     val a = fresh("gc-serial"); val b = fresh("gc-dist")
     build(a); build(b)
     def rel(root: String)(p: String): String =
       p.substring(p.indexOf(root) + root.length)
-    val serial = PaimonRead.removeOrphanFiles(spark, a, olderThanMillis = 0L)
+    val serial = PaimonWrite.removeOrphanFiles(spark, a, olderThanMillis = 0L)
       .map(rel(a)).sorted
     val dist = Engine.withConf(spark, "spark.graft.paimon.gc.distributedRootWalkThreshold" -> "0") {
-      PaimonRead.removeOrphanFiles(spark, b, olderThanMillis = 0L).map(rel(b)).sorted
+      PaimonWrite.removeOrphanFiles(spark, b, olderThanMillis = 0L).map(rel(b)).sorted
     }
     assert(dist === serial, "distributed and serial sweeps diverged")
     // branch + main still read after the distributed sweep
     assert(PaimonRead.read(spark, b).count() === 40)
     assert(PaimonRead.read(spark,
       PaimonRead.branchRoot(b, "dev")).count() === 50)
-    assert(PaimonRead.removeOrphanFiles(spark, b, olderThanMillis = 0L) === Nil)
+    assert(PaimonWrite.removeOrphanFiles(spark, b, olderThanMillis = 0L) === Nil)
   }
 
   test("addColumn: ALTER TABLE ADD COLUMN — null-fill on old runs, evolved compaction, time travel keeps the old shape") {
     val dir = fresh("evo")
-    PaimonRead.commitPk(spark.range(0, 50).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 50).select($"id".as("k"),
       $"id".cast("double").as("x")), dir, Seq("k"), numBuckets = 2)
-    val sid = PaimonRead.addColumn(spark, dir,
+    val sid = PaimonWrite.addColumn(spark, dir,
       org.apache.spark.sql.types.StructField("tag",
         org.apache.spark.sql.types.StringType))
     assert(sid === 1L)
@@ -228,7 +228,7 @@ class PaimonMaintSpec extends SparkSuite {
     assert(altered.filter($"tag".isNotNull).count() === 0)
     // new-schema upsert: 10 keys get a tag; merge resolves across
     // mixed-schema runs (old file lacks the column entirely)
-    PaimonRead.commitPk(spark.range(0, 10).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 10).select($"id".as("k"),
       ($"id" + 100).cast("double").as("x"), lit("hot").as("tag")),
       dir, Seq("k"), assumeKeyUnique = true)
     val merged = PaimonRead.read(spark, dir).orderBy($"k")
@@ -236,10 +236,10 @@ class PaimonMaintSpec extends SparkSuite {
     assert(merged.filter($"tag" === "hot").count() === 10)
     assert(merged.filter($"k" >= 10 && $"tag".isNotNull).count() === 0)
     // a DV delete with a predicate over the ADDED column
-    PaimonRead.deleteWhereDv(spark, dir, $"tag" === "hot" && $"k" < 5)
+    PaimonWrite.deleteWhereDv(spark, dir, $"tag" === "hot" && $"k" < 5)
     assert(PaimonRead.read(spark, dir).count() === 45)
     // compaction rewrites under the evolved schema
-    PaimonRead.compact(spark, dir)
+    PaimonWrite.compact(spark, dir)
     val post = PaimonRead.read(spark, dir)
     assert(post.columns.toSeq === Seq("k", "x", "tag"))
     assert(post.count() === 45)
@@ -248,7 +248,7 @@ class PaimonMaintSpec extends SparkSuite {
     assert(PaimonRead.read(spark, dir, Some(1L)).columns.toSeq === Seq("k", "x"))
     // duplicate column refuses
     intercept[IllegalArgumentException] {
-      PaimonRead.addColumn(spark, dir,
+      PaimonWrite.addColumn(spark, dir,
         org.apache.spark.sql.types.StructField("x",
           org.apache.spark.sql.types.StringType))
     }
@@ -261,18 +261,18 @@ class PaimonMaintSpec extends SparkSuite {
       val p = new org.apache.hadoop.fs.Path(s"$dir/$sub")
       if (f.exists(p)) f.listStatus(p).length else 0
     }
-    PaimonRead.commitPk(spark.range(0, 100).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 100).select($"id".as("k"),
       $"id".cast("double").as("x")), dir, Seq("k"), numBuckets = 2)
-    PaimonRead.commitPk(spark.range(0, 40).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 40).select($"id".as("k"),
       lit(0.5).as("x")), dir, Seq("k"), assumeKeyUnique = true)
-    PaimonRead.commitPk(spark.range(100, 120).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(100, 120).select($"id".as("k"),
       $"id".cast("double").as("x")), dir, Seq("k"), assumeKeyUnique = true)
-    PaimonRead.compact(spark, dir) // s4 retires the s1-s3 runs
-    PaimonRead.deleteWhereDv(spark, dir, $"k" >= 110) // s5 with DVs
+    PaimonWrite.compact(spark, dir) // s4 retires the s1-s3 runs
+    PaimonWrite.deleteWhereDv(spark, dir, $"k" >= 110) // s5 with DVs
     val before = PaimonRead.read(spark, dir).orderBy($"k").collect()
     val manifestsBefore = countFiles("manifest")
 
-    val expired = PaimonRead.expireSnapshots(spark, dir, retainLast = 2)
+    val expired = PaimonWrite.expireSnapshots(spark, dir, retainLast = 2)
     assert(expired === Seq(1L, 2L, 3L))
     // expired ids refuse; retained read is bit-identical
     intercept[IllegalArgumentException] {
@@ -294,7 +294,7 @@ class PaimonMaintSpec extends SparkSuite {
     assert(dataFiles.forall(_.startsWith("data-00004")),
       s"pre-compaction runs survived expire: ${dataFiles.mkString(",")}")
     // idempotent; retaining more than exist is a no-op
-    assert(PaimonRead.expireSnapshots(spark, dir, retainLast = 2) === Nil)
+    assert(PaimonWrite.expireSnapshots(spark, dir, retainLast = 2) === Nil)
     // the DV index files survive (s5 references them — one per
     // touched bucket, and keys >= 110 hash into both buckets)
     assert(countFiles("index") === 2)

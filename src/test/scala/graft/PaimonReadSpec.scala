@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.PaimonRead
+import graft.sources.{PaimonRead, PaimonWrite}
 
 /** Paimon layout replay: snapshot chain, manifest add/delete fold,
   * append scans, primary-key LSM merge, compaction. */
@@ -16,9 +16,9 @@ class PaimonReadSpec extends SparkSuite {
 
   test("append-only: snapshot chain, time travel, LATEST hint") {
     val dir = freshTable("append")
-    val s1 = PaimonRead.commitAppend(
+    val s1 = PaimonWrite.commitAppend(
       spark.range(0, 100).select($"id".as("k"), ($"id" * 2).as("v")), dir)
-    val s2 = PaimonRead.commitAppend(
+    val s2 = PaimonWrite.commitAppend(
       spark.range(100, 150).select($"id".as("k"), ($"id" * 2).as("v")), dir)
     assert((s1, s2) === ((1L, 2L)))
     assert(PaimonRead.latestSnapshotId(spark, dir) === 2L)
@@ -48,7 +48,7 @@ class PaimonReadSpec extends SparkSuite {
 
   test("append-only partitioned: typed partition restore + static branch pruning") {
     val dir = freshTable("appart")
-    PaimonRead.commitAppend(
+    PaimonWrite.commitAppend(
       spark.range(0, 300).select($"id".as("k"),
         ($"id" % 3).cast("int").as("p"), ($"id" * 2).as("v")), dir, Seq("p"))
     val df = PaimonRead.read(spark, dir)
@@ -66,14 +66,14 @@ class PaimonReadSpec extends SparkSuite {
 
   test("primary-key LSM: upsert, delete, re-insert resolve to the newest image") {
     val dir = freshTable("pk")
-    PaimonRead.commitPk(spark.range(0, 100).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 100).select($"id".as("k"),
       ($"id" * 2).cast("double").as("x")), dir, Seq("k"))
     // overwrite k<10, delete 90..94, then re-insert 92
-    PaimonRead.commitPk(spark.range(0, 10).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 10).select($"id".as("k"),
       lit(-1.0).as("x")), dir, Seq("k"))
-    PaimonRead.commitPk((90L until 95L).toDF("k"), dir, Seq("k"),
+    PaimonWrite.commitPk((90L until 95L).toDF("k"), dir, Seq("k"),
       deletes = true)
-    PaimonRead.commitPk(Seq((92L, 555.0)).toDF("k", "x"), dir, Seq("k"))
+    PaimonWrite.commitPk(Seq((92L, 555.0)).toDF("k", "x"), dir, Seq("k"))
     val got = PaimonRead.read(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(got.size === 96, s"expected 96 live keys, got ${got.size}")
@@ -86,25 +86,25 @@ class PaimonReadSpec extends SparkSuite {
       .filter($"k" === 0L).head.getDouble(1) === -1.0)
     // key-unique batches enforced (sequence ties are undefined)
     intercept[IllegalArgumentException] {
-      PaimonRead.commitPk(Seq((1L, 1.0), (1L, 2.0)).toDF("k", "x"),
+      PaimonWrite.commitPk(Seq((1L, 1.0), (1L, 2.0)).toDF("k", "x"),
         dir, Seq("k"))
     }
   }
 
   test("primary-key partitioned + compaction retires absorbed runs") {
     val dir = freshTable("pkpart")
-    PaimonRead.commitPk(spark.range(0, 200).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 200).select($"id".as("k"),
       ($"id" % 2).cast("string").as("p"), ($"id" * 2).cast("double").as("x")),
       dir, Seq("k"), Seq("p"), numBuckets = 2)
-    PaimonRead.commitPk(spark.range(0, 5).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 5).select($"id".as("k"),
       ($"id" % 2).cast("string").as("p"), lit(-9.0).as("x")),
       dir, Seq("k"), Seq("p"))
     // deletes carry the partition column (the tombstone lands in the
     // key's partition — enforced, or compaction could resurrect rows)
-    PaimonRead.commitPk(spark.range(190, 200).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(190, 200).select($"id".as("k"),
       ($"id" % 2).cast("string").as("p")), dir, Seq("k"), deletes = true)
     intercept[IllegalArgumentException] {
-      PaimonRead.commitPk(Seq(5L).toDF("k"), dir, Seq("k"), deletes = true)
+      PaimonWrite.commitPk(Seq(5L).toDF("k"), dir, Seq("k"), deletes = true)
     }
     def state() = PaimonRead.read(spark, dir)
       .collect().map(r => (r.getAs[Long]("k"),
@@ -114,7 +114,7 @@ class PaimonReadSpec extends SparkSuite {
     assert(!before.contains(195L), "partitioned delete lost")
     assert(before(3L) === ((-9.0, "1")) && before(100L) === ((200.0, "0")))
     val preFiles = PaimonRead.liveFiles(spark, dir).size
-    val cid = PaimonRead.compact(spark, dir)
+    val cid = PaimonWrite.compact(spark, dir)
     assert(state() === before, "compaction changed the table's content")
     val postFiles = PaimonRead.liveFiles(spark, dir)
     assert(postFiles.size < preFiles,
@@ -125,7 +125,7 @@ class PaimonReadSpec extends SparkSuite {
       .collect().map(r => (r.getAs[Long]("k"),
         (r.getAs[Double]("x"), r.getAs[String]("p")))).toMap === before)
     // further upserts after compaction keep merging
-    PaimonRead.commitPk(Seq((100L, "0", 1.5)).toDF("k", "p", "x"),
+    PaimonWrite.commitPk(Seq((100L, "0", 1.5)).toDF("k", "p", "x"),
       dir, Seq("k"))
     assert(state()(100L) === ((1.5, "0")))
   }
@@ -152,7 +152,7 @@ class PaimonReadSpec extends SparkSuite {
       "timestamp_micros(1700000000000000 + id * 1000000) AS ts",
       "cast(id AS decimal(12,3)) / 7 AS dec",
       "id % 2 = 0 AS flag")
-    PaimonRead.commitAppend(df, dir)
+    PaimonWrite.commitAppend(df, dir)
     val back = PaimonRead.read(spark, dir)
     assert(back.schema("d").dataType === org.apache.spark.sql.types.DateType)
     assert(back.schema("ts").dataType === org.apache.spark.sql.types.TimestampType)
@@ -160,7 +160,7 @@ class PaimonReadSpec extends SparkSuite {
     assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
     // and as a PARTITION column: date literals restore typed
     val dir2 = freshTable("typespart")
-    PaimonRead.commitAppend(df, dir2, Seq("d"))
+    PaimonWrite.commitAppend(df, dir2, Seq("d"))
     val back2 = PaimonRead.read(spark, dir2)
     assert(back2.schema("d").dataType === org.apache.spark.sql.types.DateType)
     assert(back2.select("k", "d").exceptAll(df.select("k", "d")).isEmpty)
@@ -168,7 +168,7 @@ class PaimonReadSpec extends SparkSuite {
     // a TIMESTAMP partition: the staged directory and the manifest's
     // decoded value name the same file
     val dir3 = freshTable("typespartts")
-    PaimonRead.commitAppend(df, dir3, Seq("ts"))
+    PaimonWrite.commitAppend(df, dir3, Seq("ts"))
     val back3 = PaimonRead.read(spark, dir3)
     assert(back3.count() === 40)
     assert(back3.select("k", "ts").exceptAll(df.select("k", "ts")).isEmpty)
@@ -260,12 +260,12 @@ class PaimonReadSpec extends SparkSuite {
     val dReal = freshTable("realfl")
     val base = spark.range(0, 60).select($"id".as("k"),
       ($"id" % 3).cast("string").as("p"), ($"id" * 2.0).as("x"))
-    PaimonRead.commitPk(base, dReal, Seq("k"), Seq("p"), numBuckets = 2)
-    PaimonRead.commitPk(spark.range(0, 10).select($"id".as("k"),
+    PaimonWrite.commitPk(base, dReal, Seq("k"), Seq("p"), numBuckets = 2)
+    PaimonWrite.commitPk(spark.range(0, 10).select($"id".as("k"),
       ($"id" % 3).cast("string").as("p"), lit(-1.0).as("x")), dReal, Seq("k"))
-    PaimonRead.commitPk(spark.range(50, 55).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(50, 55).select($"id".as("k"),
       ($"id" % 3).cast("string").as("p")), dReal, Seq("k"), deletes = true)
-    PaimonRead.compact(spark, dReal)
+    PaimonWrite.compact(spark, dReal)
     // batch 1 writes k*2.0, batch 2 rewrites k < 10 to -1.0, batch 3
     // deletes 50..54
     def x(k: Long) = if (k < 10) -1.0 else k * 2.0
@@ -315,12 +315,12 @@ class PaimonReadSpec extends SparkSuite {
     import org.apache.spark.sql.types.LongType
     val dir = freshTable("overlap")
     // the same k lives in both partitions: (p, k) is the key
-    PaimonRead.commitPk(spark.range(0, 40).select(($"id" % 20).as("k"),
+    PaimonWrite.commitPk(spark.range(0, 40).select(($"id" % 20).as("k"),
       floor($"id" / 20).cast("string").as("p"), $"id".cast("double").as("x")),
       dir, Seq("p", "k"), Seq("p"), numBuckets = 2)
-    PaimonRead.commitPk(spark.range(0, 5).select($"id".as("k"), lit("1").as("p"),
+    PaimonWrite.commitPk(spark.range(0, 5).select($"id".as("k"), lit("1").as("p"),
       lit(-1.0).as("x")), dir, Seq("p", "k"))
-    PaimonRead.commitPk(spark.range(15, 20).select($"id".as("k"), lit("0").as("p")),
+    PaimonWrite.commitPk(spark.range(15, 20).select($"id".as("k"), lit("0").as("p")),
       dir, Seq("p", "k"), deletes = true)
     val expected = ((0L until 15L).map(k => ("0", k, k.toDouble)) ++
       (0L until 20L).map(k => ("1", k, if (k < 5) -1.0 else 20.0 + k))).toSet
@@ -347,18 +347,18 @@ class PaimonReadSpec extends SparkSuite {
       .map(r => (r.getAs[Long]("__commit_version"), r.getAs[String]("__change_type"),
         r.getAs[String]("p"), r.getAs[Long]("k"), r.getAs[Double]("x"))).toSet
     assert(feedOf(3) === feed)
-    PaimonRead.compact(spark, dir)
+    PaimonWrite.compact(spark, dir)
     assert(state() === expected)
     checkBounds()
     assert(feedOf(4) === feed, "COMPACT emits nothing")
-    PaimonRead.commitPk(Seq((3L, "0", 9.5)).toDF("k", "p", "x"), dir, Seq("p", "k"))
+    PaimonWrite.commitPk(Seq((3L, "0", 9.5)).toDF("k", "p", "x"), dir, Seq("p", "k"))
     assert(state() === expected - (("0", 3L, 3.0)) + (("0", 3L, 9.5)))
     // partial-update resolves per (p, k) too
     val dir2 = freshTable("overlappu")
-    PaimonRead.commitPk(Seq((1L, "a", 1.0, "x"), (1L, "b", 2.0, "y")).toDF("k", "p", "x", "s"),
+    PaimonWrite.commitPk(Seq((1L, "a", 1.0, "x"), (1L, "b", 2.0, "y")).toDF("k", "p", "x", "s"),
       dir2, Seq("p", "k"), Seq("p"),
       options = Map("merge-engine" -> "partial-update"))
-    PaimonRead.commitPk(Seq((1L, "a", 5.0)).toDF("k", "p", "x"), dir2, Seq("p", "k"))
+    PaimonWrite.commitPk(Seq((1L, "a", 5.0)).toDF("k", "p", "x"), dir2, Seq("p", "k"))
     assert(PaimonRead.read(spark, dir2).collect()
       .map(r => (r.getAs[String]("p"), r.getAs[Double]("x"), r.getAs[String]("s"))).toSet ===
       Set(("a", 5.0, "x"), ("b", 2.0, "y")))
@@ -376,7 +376,7 @@ class PaimonReadSpec extends SparkSuite {
       "timestamp_micros(1700000000000000 + id * 1500000 + 7) AS ts",
       "cast(id * 2 AS double) AS x")
     val keys = Seq("s", "d", "w", "ts")
-    PaimonRead.commitPk(df, dir, keys, numBuckets = 1)
+    PaimonWrite.commitPk(df, dir, keys, numBuckets = 1)
     val types = Seq(DecimalType(5, 2), DecimalType(12, 2), DecimalType(25, 4), TimestampType)
     val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
     def render(v: Any): String = v match {
@@ -397,9 +397,9 @@ class PaimonReadSpec extends SparkSuite {
       assert(decode(e.maxKey, types) === maxs)
     }
     // the keys still merge: an upsert and a delete by key resolve
-    PaimonRead.commitPk(df.filter($"x" < 10).withColumn("x", lit(-1.0)), dir, keys,
+    PaimonWrite.commitPk(df.filter($"x" < 10).withColumn("x", lit(-1.0)), dir, keys,
       assumeKeyUnique = true)
-    PaimonRead.commitPk(df.filter($"x" >= 90).select(keys.map(col): _*), dir, keys,
+    PaimonWrite.commitPk(df.filter($"x" >= 90).select(keys.map(col): _*), dir, keys,
       deletes = true)
     val back = PaimonRead.read(spark, dir)
     assert(back.count() === 45)
@@ -410,8 +410,8 @@ class PaimonReadSpec extends SparkSuite {
 
   test("racing commits: every commit that returned is visible, the others conflicted, nothing is left unreferenced") {
     val dir = freshTable("race")
-    PaimonRead.commitPk(Seq((0L, "seed")).toDF("k", "v"), dir, Seq("k"), numBuckets = 2)
-    val results = race()(i => PaimonRead.commitPk(Seq((i, s"r$i")).toDF("k", "v"), dir,
+    PaimonWrite.commitPk(Seq((0L, "seed")).toDF("k", "v"), dir, Seq("k"), numBuckets = 2)
+    val results = race()(i => PaimonWrite.commitPk(Seq((i, s"r$i")).toDF("k", "v"), dir,
       Seq("k"), assumeKeyUnique = true))
     val won = results.collect { case (i, scala.util.Success(_)) => i }.toSet
     results.collect { case (_, scala.util.Failure(e)) => e }.foreach(e =>
@@ -423,7 +423,7 @@ class PaimonReadSpec extends SparkSuite {
     // the losers deleted their data files, manifests and lists: an
     // orphan sweep without an age grace finds nothing, and no staging
     // directory survives
-    assert(PaimonRead.removeOrphanFiles(spark, dir, olderThanMillis = 0) === Nil)
+    assert(PaimonWrite.removeOrphanFiles(spark, dir, olderThanMillis = 0) === Nil)
     assert(!new java.io.File(dir).list().exists(_.startsWith("_staging")))
   }
 
@@ -431,9 +431,9 @@ class PaimonReadSpec extends SparkSuite {
     val dir = freshTable("pluspart")
     val df = Seq((1L, "a+b"), (2L, "c d"), (3L, "50%"), (4L, "a+b"))
       .toDF("k", "p")
-    PaimonRead.commitAppend(df, dir, Seq("p"))
+    PaimonWrite.commitAppend(df, dir, Seq("p"))
     // second commit: default Nil inherits the schema's partition keys
-    PaimonRead.commitAppend(Seq((5L, "a+b")).toDF("k", "p"), dir)
+    PaimonWrite.commitAppend(Seq((5L, "a+b")).toDF("k", "p"), dir)
     val back = PaimonRead.read(spark, dir)
     assert(back.filter($"p" === "a+b").select("k").as[Long].collect().sorted
       === Array(1L, 4L, 5L), "literal '+' must survive the dir round-trip")
@@ -444,21 +444,21 @@ class PaimonReadSpec extends SparkSuite {
       new java.io.File(s"$dir/$d").isDirectory))
     // mismatched keys on a later commit refuse instead of mis-staging
     intercept[IllegalArgumentException] {
-      PaimonRead.commitAppend(Seq((6L, "x")).toDF("k", "p"), dir, Seq("k"))
+      PaimonWrite.commitAppend(Seq((6L, "x")).toDF("k", "p"), dir, Seq("k"))
     }
   }
 
   test("merge-engine partial-update: last non-null per column; compaction resolves") {
     val dir = freshTable("mepu")
     val opts = Map("merge-engine" -> "partial-update")
-    PaimonRead.commitPk(spark.range(0, 20).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 20).select($"id".as("k"),
       ($"id" % 2).cast("string").as("p"), ($"id" * 1.0).as("a"), lit("init").as("b")),
       dir, Seq("k"), Seq("p"), options = opts)
     // update a ONLY for 0-9 (b omitted -> null -> "no update")
-    PaimonRead.commitPk(spark.range(0, 10).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 10).select($"id".as("k"),
       ($"id" % 2).cast("string").as("p"), lit(-1.0).as("a")), dir, Seq("k"))
     // update b ONLY for 5-14
-    PaimonRead.commitPk(spark.range(5, 15).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(5, 15).select($"id".as("k"),
       ($"id" % 2).cast("string").as("p"), lit("upd").as("b")), dir, Seq("k"))
     def state() = PaimonRead.read(spark, dir).collect()
       .map(r => r.getAs[Long]("k") ->
@@ -471,14 +471,14 @@ class PaimonReadSpec extends SparkSuite {
     assert(got(17L) === ((17.0, "init", "1")), "untouched")
     // deletes refuse on this engine
     intercept[IllegalArgumentException] {
-      PaimonRead.commitPk(Seq((1L, "1")).toDF("k", "p"), dir, Seq("k"),
+      PaimonWrite.commitPk(Seq((1L, "1")).toDF("k", "p"), dir, Seq("k"),
         deletes = true)
     }
     // compaction materializes the SAME resolution
-    PaimonRead.compact(spark, dir)
+    PaimonWrite.compact(spark, dir)
     assert(state() === got, "post-compact read differs")
     // a later partial update overlays the compacted image
-    PaimonRead.commitPk(Seq((3L, "1", 9.5)).toDF("k", "p", "a"), dir, Seq("k"))
+    PaimonWrite.commitPk(Seq((3L, "1", 9.5)).toDF("k", "p", "a"), dir, Seq("k"))
     assert(state()(3L) === ((9.5, "init", "1")))
   }
 
@@ -492,18 +492,18 @@ class PaimonReadSpec extends SparkSuite {
       spark.range(0, 10).select($"id".as("k"),
         lit(n * 1.0).as("total"), lit(n).as("hi"),
         tag.map(lit(_)).getOrElse(lit(null).cast("string")).as("tag"))
-    PaimonRead.commitPk(batch(1, Some("t1")), dir, Seq("k"), options = opts)
-    PaimonRead.commitPk(batch(5, None), dir, Seq("k"))
-    PaimonRead.commitPk(batch(3, Some("t3")), dir, Seq("k"))
+    PaimonWrite.commitPk(batch(1, Some("t1")), dir, Seq("k"), options = opts)
+    PaimonWrite.commitPk(batch(5, None), dir, Seq("k"))
+    PaimonWrite.commitPk(batch(3, Some("t3")), dir, Seq("k"))
     def state() = PaimonRead.read(spark, dir).collect()
       .map(r => r.getAs[Long]("k") ->
         ((r.getAs[Double]("total"), r.getAs[Int]("hi"), r.getAs[String]("tag")))).toMap
     val got = state()
     assert(got(4L) === ((9.0, 5, "t3")), "sum/max/last_non_null")
-    PaimonRead.compact(spark, dir)
+    PaimonWrite.compact(spark, dir)
     assert(state() === got, "post-compact read differs")
     // accumulation continues on top of the compacted value
-    PaimonRead.commitPk(batch(2, None), dir, Seq("k"))
+    PaimonWrite.commitPk(batch(2, None), dir, Seq("k"))
     assert(state()(4L) === ((11.0, 5, "t3")))
     // changes() without changelog files refuses (derived feed would
     // emit batch deltas, not resolved images)
@@ -514,9 +514,9 @@ class PaimonReadSpec extends SparkSuite {
 
   test("merge-engine first-row: first image per key wins") {
     val dir = freshTable("mefr")
-    PaimonRead.commitPk(spark.range(0, 10).select($"id".as("k"), lit("v1").as("v")),
+    PaimonWrite.commitPk(spark.range(0, 10).select($"id".as("k"), lit("v1").as("v")),
       dir, Seq("k"), options = Map("merge-engine" -> "first-row"))
-    PaimonRead.commitPk(spark.range(5, 15).select($"id".as("k"), lit("v2").as("v")),
+    PaimonWrite.commitPk(spark.range(5, 15).select($"id".as("k"), lit("v2").as("v")),
       dir, Seq("k"))
     val got = PaimonRead.read(spark, dir).collect()
       .map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
@@ -527,8 +527,8 @@ class PaimonReadSpec extends SparkSuite {
 
   test("changes: append-only snapshots emit pure inserts per window") {
     val dir = freshTable("achg")
-    PaimonRead.commitAppend(spark.range(0, 50).select($"id".as("k")), dir)
-    PaimonRead.commitAppend(spark.range(50, 70).select($"id".as("k")), dir)
+    PaimonWrite.commitAppend(spark.range(0, 50).select($"id".as("k")), dir)
+    PaimonWrite.commitAppend(spark.range(50, 70).select($"id".as("k")), dir)
     val w = PaimonRead.changes(spark, dir, 1, 2)
       .collect().map(r => (r.getAs[String]("__change_type"), r.getAs[Long]("k")))
     assert(w.forall(_._1 == "insert") && w.map(_._2).toSet === (50L until 70L).toSet)
@@ -563,9 +563,9 @@ class PaimonReadSpec extends SparkSuite {
     // the touched bucket holds 1/8 of the prior files, and the feed is
     // bit-equal to what the full derivation produced before pruning
     val dir = freshTable("bprune")
-    PaimonRead.commitPk(spark.range(0, 64).select($"id".as("k"), ($"id" * 2).as("v")),
+    PaimonWrite.commitPk(spark.range(0, 64).select($"id".as("k"), ($"id" * 2).as("v")),
       dir, Seq("k"), numBuckets = 8)
-    PaimonRead.commitPk(Seq((5L, -1L)).toDF("k", "v"), dir, Seq("k"))
+    PaimonWrite.commitPk(Seq((5L, -1L)).toDF("k", "v"), dir, Seq("k"))
     val w = PaimonRead.changes(spark, dir, 1, 2).collect()
       .map(r => (r.getAs[String]("__change_type"), r.getAs[Long]("k"), r.getAs[Long]("v")))
       .toSet
@@ -576,12 +576,12 @@ class PaimonReadSpec extends SparkSuite {
     val (dcl, ddr) = (freshTable("clog"), freshTable("clogref"))
     def build(dir: String, opts: Map[String, String]): Unit = {
       val base = spark.range(0, 40).select($"id".as("k"), ($"id" * 2.0).as("x"))
-      PaimonRead.commitPk(base, dir, Seq("k"), numBuckets = 2, options = opts) // s1
-      PaimonRead.commitPk(spark.range(0, 10).select($"id".as("k"), lit(-1.0).as("x")),
+      PaimonWrite.commitPk(base, dir, Seq("k"), numBuckets = 2, options = opts) // s1
+      PaimonWrite.commitPk(spark.range(0, 10).select($"id".as("k"), lit(-1.0).as("x")),
         dir, Seq("k"))                                                         // s2 update
-      PaimonRead.commitPk(spark.range(35, 45).select($"id".as("k")), dir, Seq("k"),
+      PaimonWrite.commitPk(spark.range(35, 45).select($"id".as("k")), dir, Seq("k"),
         deletes = true)                                                        // s3 delete (5 exist)
-      PaimonRead.commitPk(Seq((36L, 9.0), (100L, 1.0)).toDF("k", "x"),
+      PaimonWrite.commitPk(Seq((36L, 9.0), (100L, 1.0)).toDF("k", "x"),
         dir, Seq("k"))                                                         // s4 re-insert + fresh
     }
     build(dcl, Map("changelog-producer" -> "lookup"))
@@ -607,12 +607,12 @@ class PaimonReadSpec extends SparkSuite {
   test("changelog-producer=input: batch rows ARE the changelog; equals derived feed on disjoint appends; updates emit post-image only") {
     val (din, ddr) = (freshTable("clin"), freshTable("clinref"))
     def build(dir: String, opts: Map[String, String]): Unit = {
-      PaimonRead.commitPk(spark.range(0, 20).select($"id".as("k"),
+      PaimonWrite.commitPk(spark.range(0, 20).select($"id".as("k"),
         ($"id" * 2.0).as("x")), dir, Seq("k"), numBuckets = 2,
         options = opts)                                            // s1
-      PaimonRead.commitPk(spark.range(20, 30).select($"id".as("k"),
+      PaimonWrite.commitPk(spark.range(20, 30).select($"id".as("k"),
         ($"id" * 3.0).as("x")), dir, Seq("k"), assumeKeyUnique = true) // s2
-      PaimonRead.commitPk(spark.range(30, 35).select($"id".as("k"),
+      PaimonWrite.commitPk(spark.range(30, 35).select($"id".as("k"),
         lit(0.0).as("x")), dir, Seq("k"), assumeKeyUnique = true)  // s3
     }
     build(din, Map("changelog-producer" -> "input"))
@@ -631,7 +631,7 @@ class PaimonReadSpec extends SparkSuite {
     assert(snapText.contains("\"changelogManifestList\":\"manifest-list-"))
     // an UPDATE emits only its post-image under input (the documented
     // cheap-config contract), where derivation emits delete+insert
-    PaimonRead.commitPk(Seq((3L, -9.0)).toDF("k", "x"), din, Seq("k"),
+    PaimonWrite.commitPk(Seq((3L, -9.0)).toDF("k", "x"), din, Seq("k"),
       assumeKeyUnique = true)                                      // s4
     val upd = PaimonRead.changes(spark, din, 3, 4).collect()
       .map(r => (r.getAs[String]("__change_type"), r.getAs[Long]("k")))
@@ -645,14 +645,14 @@ class PaimonReadSpec extends SparkSuite {
   test("changes: retraction contract over PK snapshots; COMPACT emits nothing; poll subscribes") {
     import graft.streaming.ChangeFeed
     val dir = freshTable("chg")
-    PaimonRead.commitPk(spark.range(0, 100).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 100).select($"id".as("k"),
       ($"id" * 2).cast("double").as("x")), dir, Seq("k"))          // s1
-    PaimonRead.commitPk(spark.range(0, 5).select($"id".as("k"),
+    PaimonWrite.commitPk(spark.range(0, 5).select($"id".as("k"),
       lit(-1.0).as("x")), dir, Seq("k"))                           // s2: update 0..4
-    PaimonRead.commitPk((90L until 95L).toDF("k"), dir, Seq("k"),
+    PaimonWrite.commitPk((90L until 95L).toDF("k"), dir, Seq("k"),
       deletes = true)                                              // s3: delete 90..94
-    PaimonRead.compact(spark, dir)                                 // s4: physical only
-    PaimonRead.commitPk(Seq((92L, 7.0)).toDF("k", "x"), dir, Seq("k")) // s5: re-insert
+    PaimonWrite.compact(spark, dir)                                 // s4: physical only
+    PaimonWrite.commitPk(Seq((92L, 7.0)).toDF("k", "x"), dir, Seq("k")) // s5: re-insert
     def rows(from: Long, to: Long) = PaimonRead.changes(spark, dir, from, to)
       .collect().map(r => (r.getAs[String]("__change_type"),
         r.getAs[Long]("__commit_version"), r.getAs[Long]("k"),
@@ -678,7 +678,7 @@ class PaimonReadSpec extends SparkSuite {
       }
     assert(poll().contains((1, 5)))
     assert(seen.last === ((1, 5, 16L)), s"got ${seen.last}") // 10 + 5 + 0 + 1
-    PaimonRead.commitPk(Seq((1L, 9.0)).toDF("k", "x"), dir, Seq("k")) // s6
+    PaimonWrite.commitPk(Seq((1L, 9.0)).toDF("k", "x"), dir, Seq("k")) // s6
     intercept[IllegalStateException] { poll(fail = true) }
     assert(poll().contains((5, 6)))
     assert(seen.count(w => w._1 == 5 && w._2 == 6) === 2, "crash must replay")
